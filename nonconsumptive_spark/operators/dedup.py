@@ -22,9 +22,18 @@ Scale notes:
     50% near j≈0.55, matching the 0.5 near-dup threshold used here.
   * The all-pairs exact Jaccard operator is quadratic by design (it is the
     correctness oracle for LSH); at 100 TB only the LSH path runs.
+
+Threshold contract, shared by every Jaccard pair path (batch and
+incremental): a verified pair is output iff ``round(J, 4) >= t``, with J
+computed from exact shingle-set sizes by ``verify_pairs``.  Candidate
+pruning (the PPJoin prefix, length and positional bounds) runs against
+``t - 1/20000`` (``_prune_fraction``) — the smallest true J that rounds up
+to t — so no bound drops a pair the rounded output keeps.
 """
 
 from __future__ import annotations
+
+from fractions import Fraction
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -329,28 +338,53 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
     )
     sa = base.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = base.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
-    # Compute the intersection ONCE behind a checkpoint: a jaccard filter
-    # applied directly over the attach joins gets pushed into the join
-    # CONDITION, duplicating array_intersect per candidate row (r8 plan
-    # dump line 151: condition + projection = 2 codegen evaluations of
-    # the intersect — the built-in analog of guide §4.4's UDF
-    # duplication).  The checkpointed frame is |candidates| rows of ids
-    # and ints; the filter then runs on integers.
-    inter_df = materialize_once(
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
+    return verify_pairs(cands.join(sa, "doc_a").join(sb, "doc_b"),
+                        threshold, "mh_verify")
+
+
+def verify_pairs(pairs: DataFrame, threshold: float, name: str,
+                 a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+    """(a, b, jaccard) for candidate rows carrying their shingle arrays
+    ``sh_a``/``sh_b`` — the one verify kernel of every near-dup pair path,
+    applying the module's threshold contract ``round(J, 4) >= threshold``.
+
+    The set sizes and intersection are computed ONCE per candidate behind
+    a checkpoint named ``name``: a jaccard filter applied directly over
+    the attach joins is pushed into the join CONDITION, so the array
+    intersection would run twice per candidate row (condition +
+    projection — the built-in analog of a duplicated UDF).  The
+    checkpointed frame is |candidates| rows of ids and ints; the filter
+    then runs on integers."""
+    counts = materialize_once(
+        pairs.select(
+            a, b,
             F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
             F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
         ),
-        "mh_verify",
+        name,
     )
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     return (
-        inter_df.withColumn("jaccard", F.round(jac, 4))
+        counts.withColumn("jaccard", F.round(jac, 4))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .select(a, b, "jaccard")
+    )
+
+
+def best_match(verified: DataFrame, new: str, old: str) -> DataFrame:
+    """(new, old, jaccard): each ``new`` doc's best verified match — highest
+    jaccard, ties to the lowest ``old`` id.  min_by over (-jaccard, old)
+    needs no sort and keeps the tie-break in the id column's OWN ordering
+    (negating the id arithmetically would cast a string id to double ->
+    NULL and silently corrupt the match)."""
+    return (
+        verified.groupBy(new)
+        .agg(F.min_by(
+            F.struct(F.col(old).alias("oid"), F.col("jaccard")),
+            F.struct((-F.col("jaccard")).alias("nj"),
+                     F.col(old).alias("oid"))).alias("m"))
+        .select(new, F.col("m.oid").alias(old),
+                F.col("m.jaccard").alias("jaccard"))
     )
 
 
@@ -384,47 +418,21 @@ def dedup_against(new_docs: DataFrame, corpus_docs: DataFrame,
 
     sa = nb.select(F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_a"))
     sb = cb.select(F.col(id_col).alias("old_id"), F.col("shingles").alias("sh_b"))
-    # checkpoint before the jaccard filter — see minhash_dedup_pairs: an
-    # un-barriered filter is pushed into the attach-join condition and
-    # array_intersect runs twice per candidate
-    inter_df = materialize_once(
-        cands.join(sa, "new_id")
-        .join(sb, "old_id")
-        .select(
-            "new_id", "old_id",
-            F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-        ),
-        "da_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    verified = (
-        inter_df.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    # Best match = highest jaccard, ties -> lowest existing id.  min_by
-    # over (-jaccard, old_id) keeps the tie-break in the id column's OWN
-    # ordering (numeric negation of the id would cast a string id to
-    # double -> NULL and silently corrupt match_id — r3 ADVICE finding).
-    best = (
-        verified.groupBy("new_id")
-        .agg(F.min_by(
-            F.struct(F.col("old_id"), F.col("jaccard")),
-            F.struct((-F.col("jaccard")).alias("nj"),
-                     F.col("old_id").alias("oid"))).alias("m"))
-        .select(
-            "new_id",
-            F.col("m.old_id").alias("match_id"),
-            F.col("m.jaccard").alias("jaccard"),
-        )
-    )
+    verified = verify_pairs(cands.join(sa, "new_id").join(sb, "old_id"),
+                            threshold, "da_verify", "new_id", "old_id")
+    return _flag_new(new_docs, id_col, best_match(verified, "new_id", "old_id"))
+
+
+def _flag_new(new_docs: DataFrame, id_col: str, best: DataFrame) -> DataFrame:
+    """(id, is_dup, match_id, jaccard) for every new doc from its
+    ``best_match`` row (NULL match when clean)."""
     return (
         new_docs.select(F.col(id_col).alias("new_id"))
         .join(best, "new_id", "left")
         .select(
             F.col("new_id").alias(id_col),
-            F.col("match_id").isNotNull().alias("is_dup"),
-            "match_id",
+            F.col("old_id").isNotNull().alias("is_dup"),
+            F.col("old_id").alias("match_id"),
             "jaccard",
         )
     )
@@ -834,30 +842,24 @@ def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW,
         .filter((F.col("rb") > F.col("ra"))
                 & (F.col("rb") - F.col("ra") < window))
     )
-    # checkpoint before the jaccard filter — see minhash_dedup_pairs: an
-    # un-barriered filter is pushed into the bucket-join condition and
-    # array_intersect runs twice per within-window row
-    inter_df = materialize_once(
-        cands.select(
-            "doc_a", "doc_b",
-            F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-        ),
-        "snm_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter_df.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return verify_pairs(cands, threshold, "snm_verify")
 
 
-def _threshold_fraction(threshold: float) -> tuple[int, int]:
-    """threshold as an exact rational (p, q) — every PPJoin bound derives
-    from these integers, never from the float."""
-    from fractions import Fraction
+def _threshold_fraction(threshold) -> tuple[int, int]:
+    """threshold as an exact rational (p, q): the persisted PPJoin index
+    meta, and the form every pruning bound is derived from (never the
+    float)."""
     frac = Fraction(threshold).limit_denominator(1_000_000)
+    return frac.numerator, frac.denominator
+
+
+def _prune_fraction(threshold) -> tuple[int, int]:
+    """(p, q) = t - 1/20000 as an exact rational, floored at 0: the
+    smallest true Jaccard that ``round(J, 4)`` lifts to t.  Every PPJoin
+    pruning bound uses this, so pruning is conservative to the rounded
+    output contract (see the module docstring)."""
+    frac = max(Fraction(*_threshold_fraction(threshold)) - Fraction(1, 20_000),
+               Fraction(0))
     return frac.numerator, frac.denominator
 
 
@@ -865,13 +867,13 @@ def _ceil_div(a, q: int):
     """ceil over BIGINT columns with NO rounding exposure: a - a%q is an
     exact multiple of q, so the one double division is exact (integer
     result, representable) for a < 2^53 — far beyond any real shingle
-    count times a 1e6-bounded denominator."""
+    count times a pruning numerator (9999 at t = 0.5)."""
     num = a + F.lit(q - 1)
     return ((num - num % F.lit(q)) / F.lit(q)).cast("long")
 
 
 def _ceil_mul(x, tp: int, tq: int):
-    """ceil(threshold * x) from the exact rational (tp, tq)."""
+    """ceil(tp/tq * x) from the exact rational (tp, tq)."""
     return _ceil_div(F.lit(tp) * x, tq)
 
 
@@ -898,12 +900,13 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
     Plan: one df agg (shingle-vocab sized), one per-doc rank window
     (PARTITIONED by doc), prefix self-join on the shingle key, then a
     candidate-bounded verify join.  Nothing quadratic in the corpus."""
-    # All filter bounds use EXACT RATIONAL arithmetic (threshold = p/q):
-    # float expressions like ceil(0.2 * na) overstate the ceiling when the
-    # binary float sits above the decimal (0.2*5 -> 1.0000000000000002 ->
-    # ceil 2 instead of 1), which would shorten prefixes / tighten filters
-    # and silently DROP qualifying pairs.  See _threshold_fraction/_ceil_mul.
-    tp, tq = _threshold_fraction(threshold)
+    # All filter bounds use EXACT RATIONAL arithmetic on the pruning
+    # fraction p/q = t - 1/20000 (_prune_fraction): float expressions like
+    # ceil(0.2 * na) overstate the ceiling when the binary float sits above
+    # the decimal (0.2*5 -> 1.0000000000000002 -> ceil 2 instead of 1),
+    # which would shorten prefixes / tighten filters and silently DROP
+    # qualifying pairs.
+    pp, pq = _prune_fraction(threshold)
     sh = materialize_once(doc_shingles(docs, id_col, text_col), "pp_shingles")
     exploded = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     exploded = materialize_once(exploded, "pp_exploded")
@@ -917,7 +920,7 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
     # without a checkpoint Spark re-executes the count-window + rank-window
     # pipeline once per side (4 Window nodes in the plan).
     prefix = materialize_once(
-        _pp_rank_prefix(exploded, None, sizes, id_col, tp, tq), "pp_prefix"
+        _pp_rank_prefix(exploded, None, sizes, id_col, pp, pq), "pp_prefix"
     )
 
     pa = prefix.select(F.col(id_col).alias("doc_a"), "shingle",
@@ -932,7 +935,7 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
     # shrinks the distinct's shuffle.  The floor is exact integer
     # arithmetic too: ceil(p·(na+nb)/(p+q)).
     nanb = F.col("na") + F.col("nb")
-    overlap_floor = _ceil_div(F.lit(tp) * nanb, tp + tq)
+    overlap_floor = _ceil_div(F.lit(pp) * nanb, pp + pq)
     best_overlap = F.least(F.col("na") - F.col("pa"),
                            F.col("nb") - F.col("pb")) + 1
     # Aggregated positional bound (PPJoin's running-overlap filter, in
@@ -953,8 +956,8 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
         pa.join(pb, "shingle")
         .filter(
             (F.col("doc_a") < F.col("doc_b"))
-            & (F.col("nb") >= _ceil_mul(F.col("na"), tp, tq))
-            & (F.col("na") >= _ceil_mul(F.col("nb"), tp, tq))
+            & (F.col("nb") >= _ceil_mul(F.col("na"), pp, pq))
+            & (F.col("na") >= _ceil_mul(F.col("nb"), pp, pq))
             & (best_overlap >= overlap_floor)
         )
         .groupBy("doc_a", "doc_b", "na", "nb")
@@ -964,9 +967,9 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
             F.col("_c")
             + F.least(F.col("na") - F.col("_mpa"),
                       F.col("nb") - F.col("_mpb"))
-            >= _ceil_div(F.lit(tp) * (F.col("na") + F.col("nb")), tp + tq)
+            >= _ceil_div(F.lit(pp) * (F.col("na") + F.col("nb")), pp + pq)
         )
-        .select("doc_a", "doc_b", "na", "nb")
+        .select("doc_a", "doc_b")
     )
 
     # verify IN-ROW: join each candidate to the two full shingle ARRAYS
@@ -979,27 +982,8 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
                       F.col("shingles").alias("sh_a"))
     arr_b = sh.select(F.col(id_col).alias("doc_b"),
                       F.col("shingles").alias("sh_b"))
-    # checkpoint the intersection counts before the jaccard filter: an
-    # un-barriered filter over the attach joins is pushed into the join
-    # CONDITION, duplicating array_intersect per candidate row (r9 plan
-    # audit; the built-in analog of guide §4.4's UDF duplication — warm
-    # verify 2.33 -> ~1.5 s at sf0.1)
-    inter = materialize_once(
-        cands.join(arr_a, "doc_a")
-        .join(arr_b, "doc_b")
-        .select(
-            "doc_a", "doc_b", "na", "nb",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-             .alias("inter"),
-        ),
-        "pp_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return verify_pairs(cands.join(arr_a, "doc_a").join(arr_b, "doc_b"),
+                        threshold, "pp_verify")
 
 
 def _pp_rank_prefix(exploded: DataFrame, dfreq: DataFrame | None,
@@ -1047,7 +1031,8 @@ def ppjoin_index_write(docs: DataFrame, index_dir: str,
     sizes = sh.select(F.col(id_col), F.size("shingles").cast("long").alias("n"))
     dfreq = exploded.groupBy("shingle").agg(F.count("*").alias("df"))
     dfreq = materialize_once(dfreq, "ppw_df")
-    prefix = _pp_rank_prefix(exploded, dfreq, sizes, id_col, tp, tq)
+    prefix = _pp_rank_prefix(exploded, dfreq, sizes, id_col,
+                             *_prune_fraction(threshold))
 
     opts = {"compression": compression}
     sh.write.mode("overwrite").options(**opts).parquet(f"{index_dir}/arrays")
@@ -1088,7 +1073,9 @@ def ppjoin_against(batch: DataFrame, index_dir: str,
     bsh = materialize_once(doc_shingles(batch, id_col, text_col), "ppa_sh")
     bexp = bsh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     bsizes = bsh.select(F.col(id_col), F.size("shingles").cast("long").alias("n"))
-    bprefix = _pp_rank_prefix(bexp, idx_dfreq, bsizes, id_col, tp, tq)
+    # the indexed threshold governs (threshold=None is valid)
+    pp, pq = _prune_fraction(Fraction(tp, tq))
+    bprefix = _pp_rank_prefix(bexp, idx_dfreq, bsizes, id_col, pp, pq)
 
     pa = bprefix.select(F.col(id_col).alias("new_id"), "shingle",
                         F.col("n").alias("na"))
@@ -1096,49 +1083,18 @@ def ppjoin_against(batch: DataFrame, index_dir: str,
                            F.col("n").alias("nb"))
     cands = (
         pa.join(pb, "shingle")
-        .filter((F.col("nb") >= _ceil_mul(F.col("na"), tp, tq))
-                & (F.col("na") >= _ceil_mul(F.col("nb"), tp, tq)))
-        .select("new_id", "old_id", "na", "nb")
+        .filter((F.col("nb") >= _ceil_mul(F.col("na"), pp, pq))
+                & (F.col("na") >= _ceil_mul(F.col("nb"), pp, pq)))
+        .select("new_id", "old_id")
         .distinct()
     )
     arr_a = bsh.select(F.col(id_col).alias("new_id"),
                        F.col("shingles").alias("sh_a"))
     arr_b = idx_arrays.select(F.col(id_col).alias("old_id"),
                               F.col("shingles").alias("sh_b"))
-    # checkpoint before the jaccard filter — see ppjoin_pairs: an
-    # un-barriered filter is pushed into the attach-join condition and
-    # array_intersect runs twice per candidate
-    inter = materialize_once(
-        cands.join(arr_a, "new_id").join(arr_b, "old_id")
-        .select("new_id", "old_id", "na", "nb",
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-                 .alias("inter")),
-        "ppa_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    verified = (
-        inter.withColumn("jaccard", F.round(jac, 4))
-        # the indexed threshold governs (threshold=None is valid): compare
-        # against the exact rational, not the possibly-absent float arg
-        .filter(F.col("jaccard") >= F.lit(tp) / F.lit(tq))
-    )
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("new_id").orderBy(F.desc("jaccard"),
-                                             F.asc("old_id"))
-    best = (
-        verified.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("new_id", F.col("old_id").alias("match_id"), "jaccard")
-    )
-    return (
-        batch.select(id_col)
-        .join(best, F.col(id_col) == F.col("new_id"), "left")
-        .select(
-            id_col,
-            F.col("match_id").isNotNull().alias("is_dup"),
-            "match_id", "jaccard",
-        )
-    )
+    verified = verify_pairs(cands.join(arr_a, "new_id").join(arr_b, "old_id"),
+                            tp / tq, "ppa_verify", "new_id", "old_id")
+    return _flag_new(batch, id_col, best_match(verified, "new_id", "old_id"))
 
 
 def lsh_tune(threshold: float, n_perm: int = N_HASHES,

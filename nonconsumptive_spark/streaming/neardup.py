@@ -11,9 +11,10 @@ Per batch (foreachBatch, AvailableNow or continuous):
      short strings; the index side at scale is bucketed/partitioned by
      band so only matching buckets are read) → cross-batch candidates;
   3. an intra-batch band self-join catches dups arriving together;
-  4. candidates verify with exact Jaccard over the carried shingle sets;
-     each flagged doc records its best match (highest jaccard, then
-     lowest id);
+  4. candidates verify with exact Jaccard over the carried shingle sets
+     through the batch operators' kernel (``operators.dedup.verify_pairs``,
+     same threshold contract and checkpoint barrier); each flagged doc
+     records its ``best_match`` (highest jaccard, then lowest id);
   5. the batch's signatures append to the index; flags append to the
      flag table.  An epoch marker (same guard as the wordcount merge)
      makes replays no-ops, since both writes are appends.
@@ -30,24 +31,14 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from nonconsumptive_spark.operators.dedup import _band_rows, _sig_base
+from nonconsumptive_spark.operators.dedup import (
+    _band_rows,
+    _sig_base,
+    best_match,
+    verify_pairs,
+)
 from nonconsumptive_spark.streaming.corpus import _commit_epoch, applied_epoch
-
-def _verify(cands: DataFrame, left_sh: DataFrame, right_sh: DataFrame,
-            threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of (doc_id, dup_of) candidates using the
-    shingle sets carried on each side."""
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    uni = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cands.join(left_sh, "doc_id")
-        .join(right_sh, "dup_of")
-        .withColumn("jaccard", F.round(inter / uni, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "dup_of", "jaccard")
-    )
 
 
 def neardup_flag_batch(batch_base: DataFrame, index: DataFrame | None,
@@ -70,7 +61,7 @@ def neardup_flag_batch(batch_base: DataFrame, index: DataFrame | None,
     right_sh_batch = batch_base.select(
         F.col(id_col).alias("dup_of"), F.col("shingles").alias("sh_b")
     )
-    flagged = _verify(intra, left_sh, right_sh_batch, threshold)
+    cands = intra.join(right_sh_batch, "dup_of")
 
     if index is not None:
         idx_bands = _band_rows(index, id_col).select(
@@ -85,16 +76,11 @@ def neardup_flag_batch(batch_base: DataFrame, index: DataFrame | None,
         right_sh_idx = index.select(
             F.col(id_col).alias("dup_of"), F.col("shingles").alias("sh_b")
         )
-        flagged = flagged.unionByName(
-            _verify(cross, left_sh, right_sh_idx, threshold)
-        )
+        cands = cands.unionByName(cross.join(right_sh_idx, "dup_of"))
 
-    w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard"), F.asc("dup_of"))
-    return (
-        flagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    verified = verify_pairs(cands.join(left_sh, "doc_id"), threshold,
+                            "nd_verify", "doc_id", "dup_of")
+    return best_match(verified, "doc_id", "dup_of")
 
 
 def _committed_epoch_dirs(root: Path, marker_dir: str) -> list[str]:

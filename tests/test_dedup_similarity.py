@@ -364,15 +364,50 @@ def test_dedup_against_incremental(spark):
     assert not rows[3]["is_dup"] and rows[3]["match_id"] is None
 
 
-def test_dedup_against_best_match_ties(spark):
-    from nonconsumptive_spark.operators.dedup import dedup_against
+def _words(lo, hi):
+    """Distinct 4-letter words (letters only, so each is one token)."""
+    return ["".join(chr(97 + i // 26 ** k % 26) for k in range(4))
+            for i in range(lo, hi)]
 
-    t = "one two three four five six seven eight nine ten"
-    corpus = spark.createDataFrame([(10, t), (20, t)], ["doc_id", "text"])
-    new = spark.createDataFrame([(1, t)], ["doc_id", "text"])
-    r = dedup_against(new, corpus).collect()[0]
-    # equal jaccard 1.0 to both corpus docs -> lowest existing id wins
-    assert r["match_id"] == 10
+
+def _incremental_matches(path, new, corpus, tmp_path):
+    """(doc_id, match_id, jaccard) of the new docs flagged at threshold 0.5
+    by one of the three incremental near-dup paths."""
+    if path == "neardup_flag_batch":
+        from nonconsumptive_spark.streaming.neardup import neardup_flag_batch
+
+        def base(d):
+            return dd._sig_base(d, "doc_id", "text", keep_shingles=True)
+        return neardup_flag_batch(base(new), base(corpus), 0.5, "doc_id").select(
+            "doc_id", F.col("dup_of").alias("match_id"), "jaccard")
+    if path == "dedup_against":
+        out = dd.dedup_against(new, corpus, threshold=0.5)
+    else:
+        idx = str(tmp_path / "ppidx")
+        dd.ppjoin_index_write(corpus, idx, threshold=0.5)
+        out = dd.ppjoin_against(new, idx)
+    return out.filter("is_dup").select("doc_id", "match_id", "jaccard")
+
+
+@pytest.mark.parametrize("ids", [(1, 5, 20, 10),
+                                 ("batch-1", "doc-0", "doc-b", "doc-a")],
+                         ids=["int", "str"])
+@pytest.mark.parametrize("path", ["dedup_against", "ppjoin_against",
+                                  "neardup_flag_batch"])
+def test_dedup_against_best_match_ties(spark, tmp_path, path, ids):
+    """Every incremental path picks the same best match: highest jaccard
+    first, then the lowest existing id (in the id column's own order)."""
+    new_id, near_id, tie_hi, tie_lo = ids
+    t = _words(0, 30)
+    near = t[:-1] + _words(100, 101)  # 27 of 29 shingles: J = 0.931
+    corpus = spark.createDataFrame(
+        [(near_id, " ".join(near)), (tie_hi, " ".join(t)),
+         (tie_lo, " ".join(t))], ["doc_id", "text"])
+    new = spark.createDataFrame([(new_id, " ".join(t))], ["doc_id", "text"])
+    # the lowest id has the lower jaccard; of the two 1.0 ties the lower
+    # id wins
+    got = _incremental_matches(path, new, corpus, tmp_path).collect()
+    assert [(r["match_id"], r["jaccard"]) for r in got] == [(tie_lo, 1.0)]
 
 
 def test_dedup_against_string_ids(spark):
@@ -618,3 +653,56 @@ def test_ivf_append_equals_rebuild(spark, tmp_path):
          sim.knn_ivf_index(spark, full_dir, queries, k=5,
                            n_centroids=16).collect()}
     assert a == b and len(a) > 0
+
+
+def _boundary_docs(spark):
+    """Doc 0 has 7502 distinct words -> 7500 shingles.  Doc 1 is its first
+    5002 words plus 2501 new ones: nb=7501, inter=5000, J = 5000/10001 =
+    0.49995, which rounds to 0.5.  Doc 2 is its first 5001 words plus 2501
+    new ones: nb=7500, inter=4999, J = 4999/10001 = 0.49985 -> 0.4999
+    (and 4999/10002 -> 0.4998 against doc 1)."""
+    a = _words(0, 7502)
+    b = a[:5002] + _words(10_000, 12_501)
+    c = a[:5001] + _words(20_000, 22_501)
+    return spark.createDataFrame(
+        [(0, " ".join(a)), (1, " ".join(b)), (2, " ".join(c))],
+        ["doc_id", "text"])
+
+
+def _boundary_pairs(path, docs, tmp_path):
+    """{(lower id, higher id, jaccard)} reported by one pair path at 0.5."""
+    def pairs(df, a="doc_a", b="doc_b"):
+        return {(min(r[a], r[b]), max(r[a], r[b]), r["jaccard"])
+                for r in df.collect()}
+
+    if path in ("jaccard_pairs", "ppjoin_pairs", "snm_pairs",
+                "minhash_dedup_pairs"):
+        return pairs(getattr(dd, path)(docs, threshold=0.5))
+    if path in ("ppjoin_against", "dedup_against", "neardup_flag_batch"):
+        old, new = docs.filter("doc_id = 0"), docs.filter("doc_id > 0")
+        return pairs(_incremental_matches(path, new, old, tmp_path),
+                     "match_id", "doc_id")
+    # the kernel itself on explicit candidates: covers the LSH paths,
+    # whose banding need not propose the pair
+    sh = dd.doc_shingles(docs)
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    cands = sa.crossJoin(sb).filter("doc_a < doc_b")
+    return pairs(dd.verify_pairs(cands, 0.5, "boundary_verify"))
+
+
+@pytest.mark.parametrize("path", [
+    "jaccard_pairs", "ppjoin_pairs", "snm_pairs", "ppjoin_against",
+    "verify_pairs", "minhash_dedup_pairs", "dedup_against",
+    "neardup_flag_batch"])
+def test_rounded_threshold_boundary_same_on_every_path(spark, tmp_path, path):
+    """The 4-decimal contract round(J, 4) >= t holds on every pair path:
+    true J = 0.49995 rounds up to 0.5 and is kept (PPJoin's bounds prune
+    at t - 1/20000, not at t), J = 0.49985 rounds to 0.4999 and is not.
+    The LSH paths may miss the pair by banding, never report the other."""
+    got = _boundary_pairs(path, _boundary_docs(spark), tmp_path)
+    want = {(0, 1, 0.5)}
+    if path in ("minhash_dedup_pairs", "dedup_against", "neardup_flag_batch"):
+        assert got <= want
+    else:
+        assert got == want
