@@ -129,12 +129,11 @@ def quantized_vectors(
     sweep) build this once and pass it via ``q_df`` so each run reads the
     materialized partitions instead of re-quantizing the corpus.
 
-    Session-shared (r9): every clustering-family consumer (kmeans /
-    semdedup / silhouette / representatives / elbow / mmr / kcenter)
-    quantizes with the same expression, so the frame is built at most
-    once per (session, corpus, grid) — the ranker-cache policy; an
-    un-fingerprintable source still materializes per call (the pre-r9
-    contract)."""
+    Session-shared: every clustering-family consumer (kmeans / semdedup
+    / silhouette / representatives / elbow / mmr / kcenter) quantizes
+    with the same expression, so the frame is built at most once per
+    (session, corpus, grid) (policy: plans/ranker_cache.py); an
+    un-stampable source still materializes per call."""
     from nonconsumptive_spark.plans.ranker_cache import shared_frame
 
     def build() -> DataFrame:
@@ -179,8 +178,8 @@ def _kmeans_core(
         # (corpus, k, n_iter, grid): seeds are the k lowest ids, every
         # update is exact integer arithmetic.  Four registry queries run
         # this same loop (assign / semdedup / silhouette / representatives)
-        # — share it per session (r9, ranker-cache policy).  An explicit
-        # q_df bypasses the cache: the caller owns consistency then.
+        # — share it per session (policy: plans/ranker_cache.py).  An
+        # explicit q_df bypasses the cache: the caller owns consistency.
         cents = shared_value(
             "km_cents", (k, n_iter, grid, id_col, vec_col), (emb,), run_lloyd
         )

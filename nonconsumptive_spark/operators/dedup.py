@@ -464,11 +464,10 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame | None = None,
     if pairs is None:
         # 4 registry queries (clusters, dedup_stats, leakage_safe_split,
         # dedup_rate_by_source) run this identical LSH + min-label-CC
-        # pipeline on the same corpus — build it once per session (r9,
-        # ranker-cache policy; the result is a deterministic pure
-        # function of (corpus, threshold): md5-banded signatures,
-        # monotone label propagation to a fixpoint).  Caller-supplied
-        # ``pairs`` bypasses the cache — the caller owns that graph.
+        # pipeline, a deterministic function of (corpus, threshold) —
+        # built once per session (policy: plans/ranker_cache.py).
+        # Caller-supplied ``pairs`` bypasses the cache — the caller owns
+        # that graph.
         from nonconsumptive_spark.plans.ranker_cache import shared_frame
 
         return shared_frame(

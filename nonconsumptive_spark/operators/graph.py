@@ -34,10 +34,10 @@ def bigram_edges(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     13 graph registry queries (pagerank/HITS/BFS/k-core/k-truss/CC/
     harmonic/adamic-adar/link-prediction/...) derive from this same
-    edge list; it is a deterministic pure function of the corpus, so it
-    is built at most once per (session, corpus) via the ranker cache
-    (r9) — each consumer then reads the checkpoint instead of paying
-    tokenize + explode + distinct again."""
+    edge list, a deterministic pure function of the corpus, built at
+    most once per session (policy: plans/ranker_cache.py) — each
+    consumer reads the checkpoint instead of paying tokenize + explode
+    + distinct again."""
     from nonconsumptive_spark.plans.ranker_cache import shared_frame
 
     def build() -> DataFrame:

@@ -104,8 +104,7 @@ def lexical_topn(docs: DataFrame, n_queries: int, top_n: int = LEX_TOP,
 
     The 7 hybrid-eval registry queries all rank with the same parameters,
     so the ≤ n_queries×top_n result frame is built at most once per
-    (session, corpus, params) via the ranker cache (r9; token-cache
-    precedent — see plans/ranker_cache.py for the key and the policy)."""
+    (session, corpus, params) (policy: plans/ranker_cache.py)."""
     def build() -> DataFrame:
         postings = materialize_once(
             _shingle_postings(docs, id_col, text_col), "hybrid_postings"

@@ -45,9 +45,9 @@ def doc_token_counts(docs: DataFrame, id_col: str = "doc_id",
     fold — no shuffle (see ngram_counts; same kernel at n=1).  The
     explode+groupBy fallback shuffles one row per distinct (doc, token).
 
-    ``tokens_col``: read pre-tokenized arrays (the session token cache,
-    plans/token_cache.py) instead of running tokenize(text_col) — same
-    expression either way, so results are identical."""
+    ``tokens_col``: read pre-tokenized arrays (plans/token_cache.py;
+    policy: plans/ranker_cache.py) instead of running tokenize(text_col)
+    — same expression either way, so results are identical."""
     src = F.col(tokens_col) if tokens_col else tokenize(text_col)
     if not fused:
         toks = docs.select(id_col, F.explode(src).alias("token"))

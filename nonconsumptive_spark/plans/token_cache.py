@@ -1,95 +1,36 @@
-"""Session-scoped tokenization cache: tokenize the corpus ONCE per
-(session, corpus) and let every token-spine query read the materialized
-(doc_id, toks) frame.
-
-This is the Spark rendering of the reference's cached ``tokenization``
-transform (reference ``data_storage.py:154-161`` cache_set +
-``transformations.py`` Tokenization): the reference tokenizes each
-bookstack once, persists the token arrays, and every downstream
-transformation (wordcounts, ngrams, encoding) reads the cached arrays
-instead of re-running the tokenizer.  Here the headline text queries
-(q_encoded_unigrams, q_vocabulary, q_bigram_counts, ...) previously
-re-tokenized ``documents`` from parquet on every call — correct, but at
-100 TB the regex tokenize is the dominant per-query CPU cost and it was
-being paid once per query instead of once per corpus.
+"""Session-scoped tokenization: tokenize the corpus ONCE per (session,
+corpus) and let every token-spine query read the materialized
+(doc_id, toks) frame — the reference's cached ``tokenization`` transform
+(``transformations.py`` Tokenization).  Without it, each headline text
+query (q_encoded_unigrams, q_vocabulary, q_bigram_counts, ...) would pay
+the regex tokenize, the dominant per-query CPU cost, again.
 
 Semantics are exactly ``load(documents).select(doc_id, tokenize(text))``
-— the cached frame stores the same expression the un-cached plans
-inlined (NULL text stays NULL; every consumer's null handling is
-unchanged), so cached and uncached runs are result-identical (asserted
-by tests/test_wordcount.py::test_token_cache_transparent).
-
-Scale story: materialization goes through ``materialize_once``, i.e.
-executor-local checkpoint on local[n] and durable zstd parquet under the
-``parquet_materialization`` policy a multi-executor cluster runs with.
-The cache is keyed by (applicationId, corpus path, file mtime+size) and
-holds at most ``_MAX_ENTRIES`` corpora (FIFO eviction) so alternating-SF
-test runs don't pin unbounded executor storage.
+(NULL text stays NULL), so cached and uncached runs are result-identical
+(tests/test_wordcount.py::test_token_cache_transparent).  Keying,
+bound and eviction are the session cache's (plans/ranker_cache.py).
 """
 
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
-_MAX_ENTRIES = 4
-_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-
-
-def _corpus_key(spark: SparkSession, sf_dir: str):
-    """(appId, path, mtime_ns, size) for a stat-able corpus; ``None``
-    when the path can't be stat-ed (hdfs/s3/unmounted).  A None key
-    DISABLES caching for that corpus rather than keying on a constant
-    stamp — a remote rewrite of the same path within one session must
-    never be served stale tokenized arrays."""
-    path = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (spark.sparkContext.applicationId, path,
-            st.st_mtime_ns, st.st_size)
-
-
-def _evict(df: DataFrame) -> None:
-    """Release an evicted entry's executor storage.  materialize_once
-    returns a localCheckpoint-backed frame on local mode (unpersist
-    frees the blocks) and a parquet-backed scan under the durable
-    policy (unpersist is a harmless no-op); either way eviction must
-    not raise."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+# the store is the session cache's; the traced benchmark reads it here
+from nonconsumptive_spark.plans.ranker_cache import _CACHE, shared_frame  # noqa: F401
 
 
 def tokenized_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, toks) for the sf_dir documents table, tokenized at most
-    once per session+corpus; toks is exactly ``tokenize(text)`` (F1)."""
+    once per session+corpus; toks is exactly ``tokenize(text)`` (F1).
+    Keyed on the file's stat, so a hit loads no table."""
     from nonconsumptive_spark.functions.text import tokenize
-    from nonconsumptive_spark.plans.checkpoint import materialize_once
     from nonconsumptive_spark.queries import load
 
-    key = _corpus_key(spark, sf_dir)
-    if key is not None:
-        hit = _CACHE.get(key)
-        if hit is not None:
-            _CACHE.move_to_end(key)
-            return hit
-    docs = load(spark, sf_dir, "documents")
-    toks = materialize_once(
-        docs.select("doc_id", tokenize("text").alias("toks")),
-        "tokenized_documents",
+    return shared_frame(
+        "tokenized_documents", (), (os.path.join(sf_dir, "documents.parquet"),),
+        lambda: load(spark, sf_dir, "documents").select(
+            "doc_id", tokenize("text").alias("toks")),
+        materialize_fallback=True,
     )
-    if key is not None:
-        _CACHE[key] = toks
-        while len(_CACHE) > _MAX_ENTRIES:
-            _evict(_CACHE.popitem(last=False)[1])
-    return toks
-
-
-def clear_token_cache() -> None:
-    while _CACHE:
-        _evict(_CACHE.popitem(last=False)[1])

@@ -700,10 +700,10 @@ def q_lm_interp_tune(spark, sf_dir):
     from nonconsumptive_spark.plans.checkpoint import materialize_once
     from nonconsumptive_spark.plans.token_cache import tokenized_documents
 
-    # the session token cache replaces THREE tokenize corpus scans
-    # (train bigrams, train unigrams, held bigrams) with checkpoint
-    # reads (r9).  NULL-text equivalence: the cache stores
-    # tokenize(text) (NULL stays NULL) where this query tokenized
+    # the session token cache (policy: plans/ranker_cache.py) replaces
+    # THREE tokenize corpus scans (train bigrams, train unigrams, held
+    # bigrams) with checkpoint reads.  NULL-text equivalence: the cache
+    # stores tokenize(text) (NULL stays NULL) where this query tokenized
     # coalesce(text, '') (NULL became []); both explode to zero
     # bigram/unigram rows, so every aggregate below is unchanged.
     toksdf = tokenized_documents(spark, sf_dir)

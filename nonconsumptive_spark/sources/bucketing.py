@@ -16,7 +16,7 @@ bookstacks are single-process arrow files); in Spark it is the standard
 economy the IVF index gives ANN probes (operators/similarity.py).
 
 Tables are registered per (corpus path, mtime, size, bucket count) —
-content-addressed like the session token cache (plans/token_cache.py) —
+the session cache's file stamp (plans/ranker_cache.py) —
 written once under ``root`` and reused by every later query in the
 session (or any session sharing the warehouse dir and catalog).
 """
@@ -27,6 +27,8 @@ import hashlib
 import os
 
 from pyspark.sql import SparkSession
+
+from nonconsumptive_spark.plans.ranker_cache import file_stamp
 
 DEFAULT_BUCKETS = 8
 # Resolved per-session under spark.sql.warehouse.dir (see _default_root):
@@ -46,14 +48,17 @@ def _default_root(spark: SparkSession) -> str:
 
 
 def _corpus_tag(sf_dir: str, buckets: int) -> str:
+    """Content address of the layout; a table that cannot be stat-ed
+    (remote, missing) has no address, so it raises rather than reusing
+    whatever layout was registered under its bare path."""
     parts = []
     for t in ("orders", "lineitem"):
-        p = os.path.realpath(os.path.join(sf_dir, f"{t}.parquet"))
-        try:
-            st = os.stat(p)
-            parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
-        except OSError:
-            parts.append(p)
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        stamp = file_stamp(p)
+        if stamp is None:
+            raise ValueError(
+                f"bucketed layout needs a local, stat-able {t} table: {p}")
+        parts.append("%s:%d:%d" % stamp)
     parts.append(str(buckets))
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 

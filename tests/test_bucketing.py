@@ -110,6 +110,40 @@ def test_bucketed_fact_tables_join_eliminates_shuffle_and_sort(spark):
         o_raw, li_raw.l_orderkey == o_raw.o_orderkey).count() > 0
 
 
+@pytest.mark.parametrize("sf_dir", ["s3a://bucket/sf0.001", "/nonexistent/sf"])
+def test_bucketed_fact_tables_rejects_unstatable_input(spark, monkeypatch,
+                                                       sf_dir):
+    """A table that cannot be stat-ed has no content address: the helper
+    raises, naming the input, before reading anything — it must not key
+    on the bare path and reuse a stale layout registered under it."""
+    import nonconsumptive_spark.queries as queries
+    from nonconsumptive_spark.sources.bucketing import bucketed_fact_tables
+
+    def no_read(*a, **kw):
+        raise AssertionError("read before the stat check")
+
+    monkeypatch.setattr(queries, "load", no_read)
+    with pytest.raises(ValueError, match="orders.parquet"):
+        bucketed_fact_tables(spark, sf_dir)
+
+
+def test_corpus_tag_keeps_stat_string_format():
+    """Existing layouts stay addressable: the tag is still the md5 of
+    ``realpath:mtime_ns:size`` per table plus the bucket count."""
+    import hashlib
+    import os
+
+    from nonconsumptive_spark.sources.bucketing import _corpus_tag
+
+    parts = []
+    for t in ("orders", "lineitem"):
+        p = os.path.realpath(os.path.join(SF_SMALL, f"{t}.parquet"))
+        st = os.stat(p)
+        parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
+    want = hashlib.md5("|".join(parts + ["8"]).encode()).hexdigest()[:12]
+    assert _corpus_tag(SF_SMALL, 8) == want
+
+
 def test_staged_bucketed_join_revenue_plan(spark):
     from nonconsumptive_spark.queries.promoted_r8 import STAGED
 

@@ -166,19 +166,22 @@ def test_shared_lloyd_result_identity(spark):
     cleared, and the cached centroids are reused across consumers of
     the same (corpus, k, n_iter, grid)."""
     from nonconsumptive_spark.plans.ranker_cache import (
-        _VALUES, clear_ranker_cache)
+        _CACHE, clear_session_cache)
     from nonconsumptive_spark.queries import load
 
+    def n_cents():
+        return sum(tag == "km_cents" for _, tag, _ in _CACHE)
+
     emb = load(spark, SF_SMALL, "embeddings")
-    clear_ranker_cache()
+    clear_session_cache()
     fresh = sorted(map(tuple,
                        cl.kmeans(emb, k=4, n_iter=3).collect()))
-    assert len(_VALUES) == 1  # centroids cached under the stat key
+    assert n_cents() == 1  # centroids cached under the stat key
     cached = sorted(map(tuple,
                         cl.kmeans(emb, k=4, n_iter=3).collect()))
     assert cached == fresh
-    assert len(_VALUES) == 1  # second run was a hit, not a new entry
+    assert n_cents() == 1  # second run was a hit, not a new entry
     # a different k is a different key — no stale reuse
     cl.kmeans(emb, k=3, n_iter=3).collect()
-    assert len(_VALUES) == 2
-    clear_ranker_cache()
+    assert n_cents() == 2
+    clear_session_cache()

@@ -125,7 +125,7 @@ def test_ranker_cache_result_identity(spark):
 
     from nonconsumptive_spark.operators.hybrid import semantic_topk
     from nonconsumptive_spark.plans.ranker_cache import (
-        _CACHE, clear_ranker_cache)
+        _CACHE, clear_session_cache)
     from nonconsumptive_spark.queries import load
     from tests.conftest import SF_SMALL
 
@@ -138,7 +138,7 @@ def test_ranker_cache_result_identity(spark):
                 os.path.join(tmp, "embeddings.parquet"))
     docs, emb = load(spark, tmp, "documents"), load(spark, tmp, "embeddings")
 
-    clear_ranker_cache()
+    clear_session_cache()
     lex1 = lexical_topn(docs, n_queries=3, top_n=5)
     sem1 = semantic_topk(emb, n_queries=3, k=5)
     lex_rows = sorted(map(tuple, lex1.collect()))
@@ -151,7 +151,7 @@ def test_ranker_cache_result_identity(spark):
     assert semantic_topk(emb, n_queries=3, k=5) is sem1
 
     # uncached rebuild (cleared cache) produces identical rows
-    clear_ranker_cache()
+    clear_session_cache()
     assert sorted(map(tuple,
                       lexical_topn(docs, n_queries=3, top_n=5).collect())) \
         == lex_rows
@@ -171,7 +171,7 @@ def test_ranker_cache_result_identity(spark):
     docs2 = load(spark, tmp, "documents")
     after = lexical_topn(docs2, n_queries=3, top_n=5)
     assert after is not before
-    clear_ranker_cache()
+    clear_session_cache()
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -180,9 +180,9 @@ def test_ranker_cache_disabled_for_inmemory_frames(spark):
     DISABLED (fresh build every call), never keyed on a constant."""
     from nonconsumptive_spark.operators.hybrid import semantic_topk
     from nonconsumptive_spark.plans.ranker_cache import (
-        _CACHE, clear_ranker_cache)
+        _CACHE, clear_session_cache)
 
-    clear_ranker_cache()
+    clear_session_cache()
     emb = _emb(spark, [
         (0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (3, [0.1, 0.9]),
     ])

@@ -254,8 +254,8 @@ def test_token_cache_transparent(spark, tmp_path):
     import time as _time
 
     from nonconsumptive_spark.operators import wordcount as wc
-    from nonconsumptive_spark.plans.token_cache import (
-        clear_token_cache, tokenized_documents)
+    from nonconsumptive_spark.plans.ranker_cache import clear_session_cache
+    from nonconsumptive_spark.plans.token_cache import tokenized_documents
     from nonconsumptive_spark.queries import load
 
     d = str(tmp_path)
@@ -263,7 +263,7 @@ def test_token_cache_transparent(spark, tmp_path):
             (3, "cat cat CAT tie-break"), (4, "  padded   spaces  ")]
     spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.mode(
         "overwrite").parquet(d + "/documents.parquet")
-    clear_token_cache()
+    clear_session_cache()
     toks = tokenized_documents(spark, d)
     assert tokenized_documents(spark, d) is toks  # cache hit
 
@@ -285,4 +285,4 @@ def test_token_cache_transparent(spark, tmp_path):
     toks2 = tokenized_documents(spark, d)
     assert toks2 is not toks
     assert [r["toks"] for r in toks2.collect()] == [["new", "corpus"]]
-    clear_token_cache()
+    clear_session_cache()
