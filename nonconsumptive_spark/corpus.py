@@ -138,8 +138,11 @@ class CorpusSession:
             "tokenization": lambda: docs.select(
                 "@id", "nc:id", tokenize(tcol).alias("tokenization")
             ),
+            # NULL text counts as empty, as in wc.document_lengths: array_size
+            # is NULL (not size's legacy -1) for a NULL array
             "document_lengths": lambda: self.run("tokenization").select(
-                "nc:id", F.size("tokenization").cast("long").alias("nwords")
+                "nc:id", F.coalesce(F.array_size("tokenization"), F.lit(0))
+                .cast("long").alias("nwords")
             ),
             "unigrams": lambda: wc.token_counts_from_tokens(self.run("tokenization")),
             "bigrams": ngrams(2),

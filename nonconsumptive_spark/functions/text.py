@@ -3,7 +3,10 @@
 Parity target: the reference's regex tokenizer, which splits text on runs of
 non-letter characters (reference ``nonconsumptive/transformations.py:32-33``,
 the no-blingfire path).  Everything here is built-in column expressions —
-JVM-side, whole-stage-codegen'd, zero Python in the hot path.
+JVM-side, zero Python in the hot path.  The higher-order functions
+(``transform``, ``filter``, ``zip_with``, ``aggregate``) are
+``CodegenFallback`` on Spark 4.1: they are evaluated interpreted, per
+element, inside an otherwise whole-stage-codegen'd stage.
 
 Scale notes: tokenization is a narrow map (no shuffle).  N-grams are built
 *inside the token array* with ``transform(sequence(...))`` rather than with
@@ -132,7 +135,8 @@ def ngram_structs(tokens: Column | str, n: int) -> Column:
 
     Equivalent to the reference's polars shift(-i).over(doc) construction
     (reference transformations.py:229-240) but expressed as a Catalyst
-    higher-order function so it stays in whole-stage codegen.
+    higher-order function, so it is a narrow per-row map (interpreted —
+    ``transform`` is CodegenFallback — but linear in the tokens).
     """
     col = _as_col(tokens)
 

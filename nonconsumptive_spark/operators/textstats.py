@@ -1192,9 +1192,10 @@ def char_diversity(df: DataFrame, id_col: str = "doc_id",
       per-doc accumulation is an order-independent BIGINT sum.
 
     Plan: explode chars into the whole-stage-codegen'd hash aggregate.
-    A/B vs the in-row sort+RLE fold (doc_token_counts' kernel): the fold
-    is zero-shuffle but runs the interpreted-HOF path per CHARACTER and
-    measured 2.4x slower (1.33s vs 0.56s warm at sf0.01) — and the
+    A/B vs the in-row sort+RLE fold (doc_token_counts' kernel when it
+    was an ``aggregate`` fold): the fold is zero-shuffle but runs the
+    interpreted-HOF path per CHARACTER and measured 2.4x slower (1.33s
+    vs 0.56s warm at sf0.01) — and the
     explode form's shuffles are histogram-sized anyway: partial hash agg
     collapses each doc to <= |alphabet| rows map-side before either
     exchange, so bytes-on-the-wire ~= final histogram, not the char
@@ -1693,14 +1694,14 @@ def token_entropy(docs: DataFrame, id_col: str = "doc_id",
     """(id, n_tokens, n_types, entropy_nats): Shannon entropy of each
     document's token distribution, H = ln(n) - (1/n) * sum_i c_i ln c_i.
 
-    ZERO-shuffle: the sorted-token RLE fold (the q_doc_token_counts
-    kernel) runs in-row, and both aggregates fold over the run-length
-    array in the same row — the operator is a pure projection of the
-    documents scan, so it runs at scan throughput on 100 TB.  Hash
-    parity: per-run terms c_i * round(ln(c_i) * 1e9) are exact BIGINTs
-    (ln of a small positive integer is engine-identical IEEE), the sums
-    are exact, and the only float math is one identical final expression
-    over two exact integers.
+    ZERO-shuffle: the sorted-token run-length encode (the
+    q_doc_token_counts kernel) runs in-row, and both aggregates fold over
+    the run-length array in the same row — the operator is a pure
+    projection of the documents scan, so it runs at scan throughput on
+    100 TB.  Hash parity: per-run terms c_i * round(ln(c_i) * 1e9) are
+    exact BIGINTs (ln of a small positive integer is engine-identical
+    IEEE), the sums are exact, and the only float math is one identical
+    final expression over two exact integers.
     """
     from nonconsumptive_spark.operators.wordcount import _rle_counts
 

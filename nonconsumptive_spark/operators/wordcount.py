@@ -7,11 +7,13 @@ preservation invariant the reference tests
 (reference ``tests/test_throughput.py:100-108``).
 
 Scale design:
-  * Per-doc counts: ``explode -> groupBy(doc, token)`` — Spark's hash
-    aggregate does map-side partial aggregation, so the shuffle carries one
-    row per *distinct* (doc, token), not one per token occurrence.  This is
-    the same economy the reference gets from per-batch polars groupbys
-    (reference ``wordcounting.py:57-68``) but distributed.
+  * Per-doc counts (default, ``fused=True``): sort the token (or gram)
+    array in-row and run-length encode it (``_rle_counts``) — a narrow map
+    with no shuffle, linear in the tokens after the sort.  This is the
+    per-batch counting the reference does with polars groupbys (reference
+    ``wordcounting.py:57-68``), per row.  ``fused=False`` keeps
+    ``explode -> groupBy(doc, token)``: map-side partial aggregation, so
+    the shuffle carries one row per *distinct* (doc, token).
   * Global counts: second partial/final hash agg on token.  Spark's
     spill-capable exact agg replaces the reference's 4 GB count-min sketch
     (reference ``corpus.py:198-228``) — exact, no approximation error.
@@ -41,8 +43,8 @@ def doc_token_counts(docs: DataFrame, id_col: str = "doc_id",
                      tokens_col: str | None = None) -> DataFrame:
     """A1: (doc, token, count) — one row per distinct token per document.
 
-    Fused (default): sort the token array and run-length encode in one
-    fold — no shuffle (see ngram_counts; same kernel at n=1).  The
+    Fused (default): sort the token array and run-length encode it in
+    the row — no shuffle (see ngram_counts; same kernel at n=1).  The
     explode+groupBy fallback shuffles one row per distinct (doc, token).
 
     ``tokens_col``: read pre-tokenized arrays (plans/token_cache.py;
@@ -75,7 +77,7 @@ def token_counts_from_tokens(tokens_df: DataFrame, id_col: str = "nc:id",
 def ngram_counts_from_tokens(tokens_df: DataFrame, n: int, id_col: str = "nc:id",
                              tokens_col: str = "tokenization") -> DataFrame:
     """A2 over a pre-tokenized frame — same zero-shuffle fused kernel as
-    ngram_counts (sort-in-array + run-length fold)."""
+    ngram_counts (sort-in-array + run-length encode)."""
     joined = F.transform(
         ngram_structs(F.col(tokens_col), n),
         lambda g: F.concat_ws(_GRAM_SEP, *[g[f"w{j}"] for j in range(n)]),
@@ -329,35 +331,34 @@ _GRAM_SEP = " "  # tokens are letter-only ([^\p{L}]+ split) — space is unambig
 
 
 def _rle_counts(arr):
-    """array<string> (sorted) -> array<struct<g,c>> run-length counts, in
-    one ``aggregate`` fold — per-row counting with NO shuffle."""
-    init = F.named_struct(
-        F.lit("out"), F.array().cast("array<struct<g:string,c:bigint>>"),
-        F.lit("cur"), F.lit(None).cast("string"),
-        F.lit("n"), F.lit(0).cast("bigint"),
+    """array<string> (sorted) -> array<struct<g,c>> run-length counts —
+    per-row counting with NO shuffle, linear in the array length.
+
+    Run starts are the 1-based positions i with i = 1 or a[i] <> a[i-1];
+    each run's count is the next start minus its own (the last run ends
+    at n + 1).  An empty or NULL array gives an empty result.
+
+    ``arr`` MUST be a bound lambda variable (``let(sorted_expr,
+    _rle_counts)``): it is referenced once per element, and an unbound
+    expression would be re-evaluated — re-sorted — at every reference."""
+    n = F.size(arr)
+    starts = F.filter(
+        F.sequence(F.lit(1), n),
+        # get() is 0-based and NULL out of range, so i = 1 compares to NULL
+        lambda i: (i == 1) | (F.get(arr, i - 1) != F.get(arr, i - 2)),
     )
 
-    def step(acc, g):
-        return (
-            F.when(acc["cur"].isNull(),
-                   F.named_struct(F.lit("out"), acc["out"], F.lit("cur"), g,
-                                  F.lit("n"), F.lit(1).cast("bigint")))
-            .when(g == acc["cur"],
-                  F.named_struct(F.lit("out"), acc["out"], F.lit("cur"), acc["cur"],
-                                 F.lit("n"), acc["n"] + 1))
-            .otherwise(F.named_struct(
-                F.lit("out"),
-                F.concat(acc["out"], F.array(F.named_struct(
-                    F.lit("g"), acc["cur"], F.lit("c"), acc["n"]))),
-                F.lit("cur"), g, F.lit("n"), F.lit(1).cast("bigint")))
+    def runs(s):
+        # zip_with pads the shifted starts with one trailing NULL
+        return F.zip_with(
+            s, F.slice(s, 2, F.size(s)),
+            lambda b, e: F.named_struct(
+                F.lit("g"), F.get(arr, b - 1),
+                F.lit("c"), (F.coalesce(e, n + 1) - b).cast("bigint")),
         )
 
-    def fin(acc):
-        return F.when(acc["cur"].isNull(), acc["out"]).otherwise(
-            F.concat(acc["out"], F.array(F.named_struct(
-                F.lit("g"), acc["cur"], F.lit("c"), acc["n"]))))
-
-    return F.aggregate(arr, init, step, fin)
+    return F.when(n > 0, let(starts, runs)).otherwise(
+        F.array().cast("array<struct<g:string,c:bigint>>"))
 
 
 def ngram_counts(docs: DataFrame, n: int, id_col: str = "doc_id",
@@ -366,15 +367,17 @@ def ngram_counts(docs: DataFrame, n: int, id_col: str = "doc_id",
     """A2: per-doc adjacent n-gram counts, columns (doc, w0..w{n-1}, count).
 
     ``fused=True`` (default) counts WITHOUT any shuffle: grams are built
-    and sorted inside the token array, then run-length encoded in a single
-    ``aggregate`` fold — the whole operator is a narrow map (the SURVEY §4
-    "fused per-doc kernel", realized with HOFs instead of mapInArrow, so
-    it stays inside codegen).  Per-doc counting is embarrassingly parallel
-    — the reference exploits exactly this with per-batch polars groupbys —
-    and the explode+groupBy form shuffles one row per distinct gram per
-    document, which at corpus scale is the dominant exchange.  Verified
-    set-equal to the groupBy form at sf0.1 (256k rows) and against the
-    DuckDB oracle.
+    and sorted inside the token array, then run-length encoded
+    (``_rle_counts``: run starts by ``filter``, counts by ``zip_with``) —
+    the whole operator is a narrow map (the SURVEY §4 "fused per-doc
+    kernel", realized with HOFs instead of mapInArrow: no Python worker,
+    but the HOFs are CodegenFallback, evaluated interpreted per element,
+    so the kernel is kept linear in the grams).  Per-doc counting is
+    embarrassingly parallel — the reference exploits exactly this with
+    per-batch polars groupbys — and the explode+groupBy form shuffles one
+    row per distinct gram per document, which at corpus scale is the
+    dominant exchange.  Set-equal to the groupBy form (tests/
+    test_wordcount.py) and checked against the DuckDB oracle.
 
     ``fused=False`` keeps the explode → partial/final hash-agg form (the
     baseline, and the shape to prefer if grams-per-doc ever exceed memory
@@ -414,7 +417,7 @@ def chunked_wordcounts(docs: DataFrame, chunk_size: int = 10_000,
 
     Zero-shuffle form (same fused kernel as doc_token_counts): the chunk id
     is prepended to each token inside an indexed ``transform``, the tagged
-    array is sorted and run-length encoded in one fold, and the tag split
+    array is sorted and run-length encoded, and the tag split
     back off — the whole operator is a narrow map.  (RLE only needs equal
     elements adjacent; any total order of the tagged strings works.)
 

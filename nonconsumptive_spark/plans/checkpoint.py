@@ -10,6 +10,18 @@ Cache invalidation is by explicit fingerprint (content hash / source mtime
 composed by the caller) stored in a small manifest JSON next to the data —
 Spark has no native mtime story (SURVEY §7 hard-point 7; reference
 invalidates on source mtime at metadata.py:43-56).
+
+The manifest, ``<root>/<name>/_nc_manifest.json``, beside ``data/``:
+
+  * ``name``        — the transform name
+  * ``fingerprint`` — the caller's freshness key ("" when none was given)
+  * ``schema``      — the read-back frame's schema as Spark JSON
+                      (``StructType.jsonValue()``, partition columns last)
+
+A hit reads ``data/`` with that schema, which skips the footer-reading
+job that parquet schema inference launches.  A manifest without
+``schema`` is stale: the checkpoint is rebuilt once and the new manifest
+carries it.
 """
 
 from __future__ import annotations
@@ -19,6 +31,7 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_nc_manifest.json"
 
@@ -119,32 +132,45 @@ class CheckpointCache:
         """Public location of a named checkpoint (exists iff materialized)."""
         return self._dir(name)
 
-    def is_cached(self, name: str, fingerprint: str | None = None) -> bool:
-        d = self._dir(name)
-        mf = d / MANIFEST
+    def _fresh_manifest(self, name: str, fingerprint: str | None) -> dict | None:
+        """The manifest of a usable checkpoint, else None: missing, without
+        a recorded schema (written before schemas were recorded), or with
+        a different fingerprint all count as stale."""
+        mf = self._dir(name) / MANIFEST
         if not mf.exists():
-            return False
+            return None
         meta = json.loads(mf.read_text())
-        return fingerprint is None or meta.get("fingerprint") == fingerprint
+        if "schema" not in meta:
+            return None
+        if fingerprint is not None and meta.get("fingerprint") != fingerprint:
+            return None
+        return meta
+
+    def is_cached(self, name: str, fingerprint: str | None = None) -> bool:
+        return self._fresh_manifest(name, fingerprint) is not None
 
     def materialize(self, spark: SparkSession, name: str, df: DataFrame,
                     fingerprint: str = "", partition_by: list[str] | None = None) -> DataFrame:
-        """Apply the cache policy to one named transform."""
+        """Apply the cache policy to one named transform.  A hit reads with
+        the manifest's schema, so it launches no Spark job."""
         if name not in self.cache_set:
             return df
         d = self._dir(name)
-        if self.is_cached(name, fingerprint or None):
-            return spark.read.parquet(str(d / "data"))
+        data = str(d / "data")
+        meta = self._fresh_manifest(name, fingerprint or None)
+        if meta is not None:
+            return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(data)
         if d.exists():  # stale / corrupt → rebuild (reference repairs likewise)
             shutil.rmtree(d)
         writer = df.write.mode("overwrite").option("compression", self.compression)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(d / "data"))
-        (d / MANIFEST).write_text(
-            json.dumps({"name": name, "fingerprint": fingerprint})
-        )
-        return spark.read.parquet(str(d / "data"))
+        writer.parquet(data)
+        out = spark.read.parquet(data)
+        (d / MANIFEST).write_text(json.dumps(
+            {"name": name, "fingerprint": fingerprint, "schema": out.schema.jsonValue()}
+        ))
+        return out
 
     def cached_names(self) -> list[str]:
         return sorted(

@@ -37,7 +37,8 @@ _DUCK_TOKEN_POS_ROWS = f"""
     FROM ({_DUCK_TOKEN_ROWS})
     GROUP BY doc_id, token
     """,
-    doc="A1: per-document wordcount (explode + partial/final hash agg).",
+    doc="A1: per-document wordcount (in-row sort + run-length encode, no "
+        "shuffle; wc.doc_token_counts' fused kernel).",
 )
 def q_doc_token_counts(spark, sf_dir):
     return wc.doc_token_counts(load(spark, sf_dir, "documents"))

@@ -1867,7 +1867,7 @@ def q_hapax_stats(spark, sf_dir):
     """,
     doc="Per-document Shannon token entropy H = ln(n) - (1/n) sum c ln c "
         "— the diversity/boilerplate signal in Gopher-style quality rule "
-        "sets.  ZERO-shuffle on the Spark side: the RLE fold and both "
+        "sets.  ZERO-shuffle on the Spark side: the run-length encode and both "
         "entropy aggregates run in-row, so the query is a projection of "
         "the documents scan (operators/textstats.py:token_entropy); "
         "ln-counts quantized to exact 1e-9-nat BIGINTs for hash parity.",

@@ -180,6 +180,65 @@ def test_checkpoint_policy(spark, tmp_path):
     assert out3.count() == 5
     assert cache.is_cached("t1", "f2")
 
+    def jobs_of(fn, group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a hit reads with the manifest's schema: no inference job, and the
+    # same schema a plain parquet read infers
+    hit, jobs = jobs_of(lambda: cache.materialize(spark, "t1", df, fingerprint="f2"),
+                        "cp-hit")
+    assert jobs == 0
+    assert hit.schema == spark.read.parquet(str(cache.path_for("t1") / "data")).schema
+    assert hit.count() == 5
+    # a manifest without a schema is stale: rebuilt once, then a hit
+    mf = cache.path_for("t1") / "_nc_manifest.json"
+    mf.write_text(json.dumps({"name": "t1", "fingerprint": "f2"}))
+    assert not cache.is_cached("t1", "f2")
+    assert cache.materialize(spark, "t1", df.limit(3), fingerprint="f2").count() == 3
+    assert "schema" in json.loads(mf.read_text())
+    hit, jobs = jobs_of(lambda: cache.materialize(spark, "t1", df, fingerprint="f2"),
+                        "cp-rebuilt-hit")
+    assert jobs == 0 and hit.count() == 3
+    # partitioned checkpoints round-trip on a hit (partition column last)
+    parts = CheckpointCache(tmp_path / "cp", cache_set={"t3"})
+    pdf = df.withColumn("p", (F.col("x") % 3).cast("string"))
+    built = parts.materialize(spark, "t3", pdf, fingerprint="f1", partition_by=["p"])
+    hit, jobs = jobs_of(
+        lambda: parts.materialize(spark, "t3", pdf, fingerprint="f1", partition_by=["p"]),
+        "cp-partitioned-hit")
+    assert jobs == 0
+    # the partition value's type is the one the read-back inferred
+    assert hit.schema == built.schema
+    assert hit.columns == ["x", "p"]
+    assert sorted(map(tuple, hit.collect())) == sorted(map(tuple, built.collect())) \
+        == [(x, x % 3) for x in range(10)]
+
+
+def test_document_lengths_null_text_matches_query_path(spark, tmp_path):
+    """CorpusSession's document_lengths follows wc.document_lengths'
+    convention: NULL text counts as empty (0 words, not size's -1)."""
+    from nonconsumptive_spark.operators import wordcount as wc
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stacks = tmp_path / "stacks"
+    stacks.mkdir()
+    pq.write_table(pa.table({"@id": ["n", "e", "t"], "nc:text": [None, "", "two words"]}),
+                   stacks / "s0.parquet")
+    cs = CorpusSession(spark, bookstacks=str(stacks), cache_dir=tmp_path / "cache")
+    got = {tuple(r) for r in cs.run("document_lengths").collect()}
+    want = {tuple(r) for r in
+            wc.document_lengths(cs.run("documents"), "nc:id", "nc:text").collect()}
+    assert got == want
+    assert sorted(n for _, n in got) == [0, 0, 2]
+
 
 def test_flat_catalog_export(spark, corpus_dir, tmp_path):
     cs = CorpusSession(

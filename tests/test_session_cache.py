@@ -78,3 +78,33 @@ def test_traced_benchmark_counts_token_cache_hits(spark, monkeypatch):
     finally:
         tracer.uninstall()
     assert tracer.count_totals(["op"])["plans.session_cache.hits"] >= 1
+
+
+def test_traced_benchmark_counts_checkpoint_builds_and_hits(spark, monkeypatch, tmp_path):
+    """perfbench's Tracer wraps CheckpointCache.materialize, passing
+    (spark, name, df, fingerprint, partition_by) positionally, and calls
+    is_cached(name, fingerprint) and path_for(name); a change to any of
+    them must fail here rather than silently break ``--trace 1``."""
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from spans import Tracer
+
+    from nonconsumptive_spark.corpus import CorpusSession
+
+    texts = tmp_path / "texts"
+    texts.mkdir()
+    for k, v in {"a": "the cat sat", "b": "the dog ran far"}.items():
+        (texts / f"{k}.txt").write_text(v)
+    tracer = Tracer(spark)
+    tracer.install()
+    try:
+        tracer.begin_op("op")
+        sess = CorpusSession(spark, texts=str(texts), cache_dir=tmp_path / "cache",
+                             cache_set={"tokenization", "document_lengths"})
+        assert sess.run("document_lengths").count() == 2
+        assert sess.run("document_lengths").count() == 2
+        tracer.end_op()
+    finally:
+        tracer.uninstall()
+    totals = tracer.count_totals(["op"])
+    assert totals["plans.checkpoint.builds"] == 2
+    assert totals["plans.checkpoint.hits"] >= 1

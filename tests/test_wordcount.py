@@ -4,6 +4,7 @@ edge-case documents."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.operators import wordcount as wc
@@ -135,6 +136,49 @@ def test_ngrams_edges(spark):
     assert {(r["doc_id"], r["w0"], r["w1"]) for r in bi} == {(1, "a", "b"), (1, "b", "c")}
     tri = wc.ngram_counts(docs, 3).collect()
     assert {(r["w0"], r["w1"], r["w2"]) for r in tri} == {("a", "b", "c")}
+
+
+def _word(i):
+    """A distinct letter-only token per i (tokens split on non-letters)."""
+    out = ""
+    for _ in range(4):
+        i, r = divmod(i, 26)
+        out += chr(ord("a") + r)
+    return out
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_fused_kernel_matches_groupby_path(spark, ansi):
+    """The run-length kernel (fused=True) against explode+groupBy on the
+    edge docs: NULL, empty, one token, one token 50 times, shorter than
+    n, and 6,000 tokens over 5,000 distinct ones.  Under ANSI, size(NULL)
+    is NULL rather than -1; both must give no rows."""
+    from nonconsumptive_spark.operators import textstats as ts
+
+    big = " ".join(_word(i % 5000) for i in range(6000))
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "solo"), (4, " ".join(["echo"] * 50)),
+         (5, "two words"), (6, big)], "doc_id long, text string")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        fused = rows(wc.doc_token_counts(docs))
+        assert fused == rows(wc.doc_token_counts(docs, fused=False))
+        assert sum(1 for r in fused if r[0] == 6) == 5000
+        assert {r[1:] for r in fused if r[0] == 4} == {("echo", 50)}
+        for n in range(1, 5):
+            assert rows(wc.ngram_counts(docs, n)) == \
+                rows(wc.ngram_counts(docs, n, fused=False)), n
+        ent = {r["doc_id"]: (r["n_tokens"], r["n_types"])
+               for r in ts.token_entropy(docs).collect()}
+        assert ent[1] == ent[2] == (0, 0)
+        assert ent[6] == (6000, 5000)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_document_lengths_empty_doc(spark):
