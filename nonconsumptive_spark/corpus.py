@@ -22,7 +22,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nonconsumptive_spark.functions.embeddings import srp_bits, srp_embed_arrow
+from nonconsumptive_spark.functions.embeddings import srp_bits, srp_embed_tokens
 from nonconsumptive_spark.functions.text import tokenize
 from nonconsumptive_spark.operators import wordcount as wc
 from nonconsumptive_spark.plans.checkpoint import CheckpointCache
@@ -153,9 +153,10 @@ class CorpusSession:
                 F.broadcast(self.run("total_wordcounts").select("token", "wordid")),
                 "token", "inner",
             ).select("nc:id", "wordid", "count"),
-            "srp": lambda: srp_embed_arrow(docs, id_col="nc:id", text_col=tcol),
+            "srp": lambda: srp_embed_tokens(
+                self.run("tokenization").select("nc:id", "tokenization")),
             # consume srp THROUGH run() so a cached embedding replays from
-            # its checkpoint instead of re-running the pandas UDF
+            # its checkpoint instead of re-embedding every document
             "srp_bits": lambda: srp_bits(self.run("srp"), id_col="nc:id"),
             # curation extensions as named transforms — the LLM-pipeline
             # surface a user reaches through the same DAG/cache machinery

@@ -3,14 +3,20 @@ F15/F16 (``transformations.py:134-189``, ``extensions.py:12-66``),
 re-implemented deterministically and library-free.
 
 Semantics: each distinct token hashes to a stable ±1 vector of ``dim``
-entries; a document's embedding is the count-weighted sum over its tokens
-(log1p-weighted variant available).  The sign bit-pack (F16) crushes the
-float vector 64× into ``dim/8`` bytes for Hamming-distance search.
+entries; a document's embedding is the log1p(count)-weighted sum of its
+distinct tokens' vectors.  The sign bit-pack (F16) crushes the float32
+vector 32× into ``dim/8`` bytes for Hamming-distance search.
 
-Execution: a Pandas UDF over Arrow batches (the sanctioned slow path —
-per-token RNG work cannot be expressed with built-ins).  The per-executor
-token→vector cache makes cost proportional to *distinct* tokens per batch,
-mirroring the reference's SRP cache.
+Accumulation order (the bit-identity contract): a row starts from float64
+zero and adds its (distinct token, log1p count) pairs in ``np.unique``
+order, then is cast to float32 once.  Every row sums alone, so a
+document's floats never depend on which other documents share its Arrow
+batch, on the batch size, or on ``_BLOCK_ROWS``.
+
+Execution: ``mapInArrow`` over (id, tokens) batches — per-token RNG work
+cannot be expressed with built-ins.  The per-partition token→signs cache
+makes RNG cost proportional to *distinct* tokens, mirroring the
+reference's SRP cache.
 """
 
 from __future__ import annotations
@@ -18,14 +24,16 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, FloatType
+from pyspark.sql.types import ArrayType, BinaryType, FloatType, StructField, StructType
 
 from nonconsumptive_spark.functions.text import tokenize
 
 SRP_DIM = 1280  # reference transformations.py:147
+# rows accumulated together: scratch is _BLOCK_ROWS × dim float64
+# whatever the Arrow batch size
+_BLOCK_ROWS = 256
 
 
 def _token_signs(token: str, dim: int) -> np.ndarray:
@@ -36,121 +44,107 @@ def _token_signs(token: str, dim: int) -> np.ndarray:
     return rng.integers(0, 2, size=dim, dtype=np.int8) * 2 - 1
 
 
-def srp_embed(docs: DataFrame, dim: int = SRP_DIM, log_weight: bool = True,
-              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, srp: array<float>[dim]) per document.
+def _srp_rows(lengths: np.ndarray, flat, dim: int, cache: dict) -> np.ndarray:
+    """(rows × dim) float32 embeddings of one batch: row i holds the next
+    ``lengths[i]`` tokens of ``flat``.  ``cache`` maps token → int8 signs
+    and is shared by a partition's batches.  No float64 array larger than
+    _BLOCK_ROWS × dim is built."""
+    nrows = len(lengths)
+    out = np.zeros((nrows, dim), dtype=np.float32)
+    if not len(flat):
+        return out
+    uniq, inv = np.unique(np.asarray(flat, dtype=object), return_inverse=True)
+    for t in uniq:
+        if t not in cache:
+            cache[t] = _token_signs(t, dim)
+    signs = np.stack([cache[t] for t in uniq])  # int8: w × ±1 is exact in float64
+    row = np.repeat(np.arange(nrows, dtype=np.int64), lengths)
+    pair, counts = np.unique(row * len(uniq) + inv, return_counts=True)
+    prow, ptok = np.divmod(pair, len(uniq))
+    w = np.log1p(counts)
+    npairs = np.bincount(prow, minlength=nrows)
+    first = np.cumsum(npairs) - npairs
+    for b0 in range(0, nrows, _BLOCK_ROWS):
+        n, s = npairs[b0:b0 + _BLOCK_ROWS], first[b0:b0 + _BLOCK_ROWS]
+        acc = np.zeros((len(n), dim))
+        for k in range(n.max()):  # step k adds each row's k-th pair
+            live = np.flatnonzero(n > k)
+            p = s[live] + k
+            acc[live] += w[p, None] * signs[ptok[p]]
+        out[b0:b0 + len(n)] = acc
+    return out
 
-    Empty documents produce the zero vector (the reference emits a
-    sqrt(dim) constant vector for empty text, transformations.py:163-165 —
-    an artifact of its hash pipeline we do not replicate; documented
-    deviation)."""
 
-    @F.pandas_udf(ArrayType(FloatType()))
-    def srp_udf(tokens: pd.Series) -> pd.Series:
-        cache: dict[str, np.ndarray] = {}
-        out = []
-        for toks in tokens:
-            acc = np.zeros(dim, dtype=np.float64)
-            if toks is not None and len(toks):
-                vals, counts = np.unique(np.asarray(toks, dtype=object),
-                                         return_counts=True)
-                w = np.log1p(counts) if log_weight else counts.astype(np.float64)
-                for t, c in zip(vals, w):
-                    v = cache.get(t)
-                    if v is None:
-                        v = _token_signs(t, dim)
-                        cache[t] = v
-                    acc += c * v
-            out.append(acc.astype(np.float32))
-        return pd.Series(out)
-
-    return docs.select(id_col, srp_udf(tokenize(text_col)).alias("srp"))
-
-
-def srp_embed_arrow(docs: DataFrame, dim: int = SRP_DIM, log_weight: bool = True,
+def srp_embed_arrow(docs: DataFrame, dim: int = SRP_DIM,
                     id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """F15 via ``mapInArrow`` — same embedding as :func:`srp_embed`
-    bit-for-bit (asserted in tests), but the Python boundary is raw Arrow
-    RecordBatches: no pandas Series materialization and no pandas import
-    in the worker (the measured multi-second pandas-worker cold spawn),
-    and the accumulation is batch-vectorized instead of per-row.
+    """F15: (id, srp: array<float>[dim]) per document of (id, text).
 
-    Per batch: flatten all token lists, one ``np.unique`` over the batch,
-    count per (row, distinct-token) pair, then one ``np.add.at`` scatter
-    of weight × sign-vector into the (rows × dim) accumulator.  Python
-    cost scales with distinct tokens per batch, not total tokens."""
-    import pyarrow as pa
-    from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
+    Token-less documents (NULL/empty/whitespace) embed to the zero vector
+    (the reference emits a sqrt(dim) constant vector for empty text,
+    transformations.py:163-165 — an artifact of its hash pipeline we do
+    not replicate; documented deviation)."""
+    return srp_embed_tokens(docs.select(id_col, tokenize(text_col)), dim)
 
-    inp = docs.select(id_col, tokenize(text_col).alias("__toks"))
+
+def srp_embed_tokens(toks: DataFrame, dim: int = SRP_DIM) -> DataFrame:
+    """F15 over an already tokenized (id, tokens: array<string>) frame —
+    the entry point for a cached tokenization.  The Python boundary is
+    raw Arrow RecordBatches: no pandas in the worker."""
     out_schema = StructType(
-        [inp.schema[0], StructField("srp", ArrayType(FloatType()))]
+        [toks.schema[0], StructField("srp", ArrayType(FloatType()))]
     )
 
     def gen(batches):
+        import pyarrow as pa
         import pyarrow.compute as pc
 
         cache: dict[str, np.ndarray] = {}
         for b in batches:
-            ids = b.column(0)
-            toks = b.column(1)
-            nrows = len(b)
-            lengths = pc.fill_null(pc.list_value_length(toks), 0).to_numpy(
-                zero_copy_only=False
-            )
-            flat = pc.list_flatten(toks).to_pylist()
-            acc = np.zeros((nrows, dim), dtype=np.float64)
-            if flat:
-                row_idx = np.repeat(np.arange(nrows), lengths)
-                uniq, inv = np.unique(np.asarray(flat, dtype=object),
-                                      return_inverse=True)
-                for t in uniq:
-                    if t not in cache:
-                        cache[t] = _token_signs(t, dim)
-                M = np.stack([cache[t] for t in uniq]).astype(np.float64)
-                pair = row_idx.astype(np.int64) * len(uniq) + inv
-                pair_ids, counts = np.unique(pair, return_counts=True)
-                prow, ptok = pair_ids // len(uniq), pair_ids % len(uniq)
-                w = np.log1p(counts) if log_weight else counts.astype(np.float64)
-                np.add.at(acc, prow, w[:, None] * M[ptok])
-            vals = pa.array(acc.astype(np.float32).ravel(), type=pa.float32())
-            offs = pa.array(np.arange(nrows + 1, dtype=np.int32) * dim)
-            srp = pa.ListArray.from_arrays(offs, vals)
-            yield pa.RecordBatch.from_arrays([ids, srp], names=[id_col, "srp"])
+            tokens = b.column(1)
+            lengths = pc.fill_null(pc.list_value_length(tokens), 0).to_numpy()
+            emb = _srp_rows(lengths, pc.list_flatten(tokens).to_pylist(), dim, cache)
+            offs = pa.array(np.arange(len(b) + 1, dtype=np.int32) * dim)
+            srp = pa.ListArray.from_arrays(offs, pa.array(emb.ravel()))
+            yield pa.RecordBatch.from_arrays([b.column(0), srp],
+                                             names=[out_schema[0].name, "srp"])
 
-    return inp.mapInArrow(gen, schema=out_schema)
+    return toks.mapInArrow(gen, schema=out_schema)
 
 
 def srp_bits(df: DataFrame, vec_col: str = "srp", id_col: str = "doc_id",
              keep_vec: bool = False) -> DataFrame:
-    """F16: sign bit-pack — array<float>[dim] → binary[dim/8]
-    (reference transformations.py:176-189: 1280 floats → 160 bytes).
-    ``keep_vec=True`` carries the float vector through for invariant
-    checks (bit_count(packed) == count of positive floats)."""
-
-    @F.pandas_udf(BinaryType())
-    def pack_udf(vecs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                bytes(np.packbits((np.asarray(v, dtype=np.float32) > 0).astype(np.uint8)))
-                if v is not None else None
-                for v in vecs
-            ]
-        )
-
+    """F16: sign bit-pack — array<float>[dim] → binary[ceil(dim/8)]
+    (reference transformations.py:176-189: 1280 floats → 160 bytes), bit
+    set where the float is > 0; a NULL vector packs to NULL.  Vectors in
+    one batch must share a length.  ``keep_vec=True`` carries the float
+    vector through for invariant checks (bit_count(packed) == count of
+    positive floats)."""
     cols = [id_col, vec_col] if keep_vec else [id_col]
-    return df.select(*cols, pack_udf(F.col(vec_col)).alias("srp_bits"))
-
-
-def popcount_binary(c):
-    """Total set bits in a BinaryType column, fully JVM-side (hex-split to
-    a byte array, bit_count per byte, fold)."""
-    parts = F.filter(F.split(F.hex(c), "(?<=\\G..)"), lambda h: h != F.lit(""))
-    return F.aggregate(
-        F.transform(parts, lambda h: F.bit_count(F.conv(h, 16, 10).cast("int"))),
-        F.lit(0),
-        lambda acc, v: acc + v,
+    out_schema = StructType(
+        [df.schema[c] for c in cols] + [StructField("srp_bits", BinaryType())]
     )
+
+    def gen(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for b in batches:
+            vecs = b.column(vec_col)
+            valid = vecs.is_valid().to_numpy(zero_copy_only=False)
+            lengths = pc.fill_null(pc.list_value_length(vecs), 0).to_numpy()[valid]
+            dim = int(lengths.max(initial=0))
+            if (lengths != dim).any():
+                raise ValueError(f"srp_bits: {vec_col} vectors in one batch differ in length")
+            flat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
+            packed = np.packbits(flat.reshape(len(lengths), dim) > 0, axis=1)
+            bits = [None] * len(b)
+            for i, row in zip(np.flatnonzero(valid), packed):
+                bits[i] = row.tobytes()
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c) for c in cols] + [pa.array(bits, type=pa.binary())],
+                names=cols + ["srp_bits"])
+
+    return df.select(id_col, vec_col).mapInArrow(gen, schema=out_schema)
 
 
 def hamming_binary(a, b):

@@ -215,14 +215,6 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     )
 
 
-def lsh_band_keys(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc, band, band_key): signature split into LSH_BANDS bands of
-    LSH_ROWS values; band_key joins the band's rows in hash order (built
-    structurally from the signature array — not a collect_list whose order
-    would be nondeterministic)."""
-    return _band_rows(_sig_base(docs, id_col, text_col), id_col)
-
-
 def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
                         shingles_df: DataFrame | None = None) -> DataFrame:

@@ -222,11 +222,7 @@ def q_approx_distinct(spark, sf_dir):
         "every row.",
 )
 def q_srp_stats(spark, sf_dir):
-    from nonconsumptive_spark.functions.embeddings import (
-        popcount_binary,
-        srp_bits,
-        srp_embed_arrow,
-    )
+    from nonconsumptive_spark.functions.embeddings import srp_bits, srp_embed_arrow
 
     docs = load(spark, sf_dir, "documents")
     emb = srp_bits(srp_embed_arrow(docs, dim=128), keep_vec=True)
@@ -240,7 +236,7 @@ def q_srp_stats(spark, sf_dir):
         F.count("*").alias("n_docs"),
         F.count(F.when(norm_sq > 0, 1)).alias("n_nonzero_norm"),
         F.count(
-            F.when(popcount_binary(F.col("srp_bits")) == pos_floats, 1)
+            F.when(F.bitmap_count("srp_bits") == pos_floats, 1)
         ).alias("n_bits_match"),
     )
 

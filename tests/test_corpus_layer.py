@@ -240,6 +240,33 @@ def test_document_lengths_null_text_matches_query_path(spark, tmp_path):
     assert sorted(n for _, n in got) == [0, 0, 2]
 
 
+@pytest.mark.parametrize("cache_set", [set(), {"tokenization"}], ids=["lazy", "cached"])
+def test_corpus_session_srp_reads_tokenization(spark, tmp_path, cache_set):
+    """srp embeds the session's tokenization (cached or lazy) and equals
+    srp_embed_arrow over the raw documents exactly; srp_bits is the sign
+    pack of each vector."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nonconsumptive_spark.functions.embeddings import srp_embed_arrow
+
+    stacks = tmp_path / "stacks"
+    stacks.mkdir()
+    pq.write_table(pa.table({"@id": ["n", "e", "t", "u"],
+                             "nc:text": [None, "", "two words two", "Unicode café ok"]}),
+                   stacks / "s0.parquet")
+    cs = CorpusSession(spark, bookstacks=str(stacks), cache_dir=tmp_path / "cache",
+                       cache_set=set(cache_set))
+    got = {r["nc:id"]: r["srp"] for r in cs.run("srp").collect()}
+    want = {r["nc:id"]: r["srp"] for r in srp_embed_arrow(
+        cs.run("documents"), id_col="nc:id", text_col="nc:text").collect()}
+    assert got == want and len(got) == 4
+    assert cs.cache.path_for("tokenization").exists() == bool(cache_set)
+    bits = {r["nc:id"]: r["srp_bits"] for r in cs.run("srp_bits").collect()}
+    assert bits == {k: np.packbits(np.asarray(v) > 0).tobytes() for k, v in got.items()}
+
+
 def test_flat_catalog_export(spark, corpus_dir, tmp_path):
     cs = CorpusSession(
         spark,

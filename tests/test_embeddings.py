@@ -3,14 +3,18 @@ binary Hamming distance."""
 
 from __future__ import annotations
 
+import tracemalloc
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.functions.embeddings import (
     SRP_DIM,
+    _srp_rows,
+    _token_signs,
     hamming_binary,
     srp_bits,
-    srp_embed,
+    srp_embed_arrow,
 )
 
 
@@ -21,9 +25,31 @@ def _docs(spark):
     )
 
 
+def _reference_rows(token_lists, dim):
+    """Per-row reference embedding: float64 zero, plus log1p(count) × signs
+    for each distinct token in np.unique order, cast to float32 once."""
+    out = []
+    for toks in token_lists:
+        acc = np.zeros(dim, dtype=np.float64)
+        if toks:
+            vals, counts = np.unique(np.asarray(toks, dtype=object), return_counts=True)
+            for t, w in zip(vals, np.log1p(counts)):
+                acc += w * _token_signs(t, dim)
+        out.append(acc.astype(np.float32))
+    return out
+
+
+def _reference(docs, dim):
+    from nonconsumptive_spark.functions.text import tokenize
+
+    rows = docs.select("doc_id", tokenize("text").alias("t")).collect()
+    vecs = _reference_rows([r["t"] for r in rows], dim)
+    return {r["doc_id"]: v.tolist() for r, v in zip(rows, vecs)}
+
+
 def test_srp_shape_and_determinism(spark):
-    a = {r["doc_id"]: r["srp"] for r in srp_embed(_docs(spark), dim=64).collect()}
-    b = {r["doc_id"]: r["srp"] for r in srp_embed(_docs(spark), dim=64).collect()}
+    a = {r["doc_id"]: r["srp"] for r in srp_embed_arrow(_docs(spark), dim=64).collect()}
+    b = {r["doc_id"]: r["srp"] for r in srp_embed_arrow(_docs(spark), dim=64).collect()}
     assert all(len(v) == 64 for v in a.values())
     for k in a:
         assert np.allclose(a[k], b[k])
@@ -33,21 +59,20 @@ def test_srp_shape_and_determinism(spark):
     assert not np.allclose(a[1], a[2])
 
 
-def test_srp_arrow_matches_pandas_udf(spark):
-    """The mapInArrow fast path must reproduce the pandas_udf reference
-    embedding bit-for-bit (same accumulation order: rows ascending, then
-    distinct tokens in np.unique's lexicographic order)."""
-    from nonconsumptive_spark.functions.embeddings import srp_embed_arrow
+def test_srp_arrow_matches_reference(spark):
+    """The mapInArrow path must reproduce the per-row reference embedding
+    bit-for-bit (same accumulation order: each row alone, distinct tokens
+    in np.unique's lexicographic order)."""
     from tests.conftest import SF_SMALL
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(60)
-    ref = {r["doc_id"]: r["srp"] for r in srp_embed(docs, dim=64).collect()}
+    ref = _reference(docs, 64)
     fast = {r["doc_id"]: r["srp"] for r in srp_embed_arrow(docs, dim=64).collect()}
     assert set(ref) == set(fast)
     for k in ref:
         assert ref[k] == fast[k], k  # exact float32 equality, not allclose
     # empty/edge docs too
-    e_ref = {r["doc_id"]: r["srp"] for r in srp_embed(_docs(spark), dim=32).collect()}
+    e_ref = _reference(_docs(spark), 32)
     e_fast = {
         r["doc_id"]: r["srp"]
         for r in srp_embed_arrow(_docs(spark), dim=32).collect()
@@ -55,19 +80,44 @@ def test_srp_arrow_matches_pandas_udf(spark):
     assert e_ref == e_fast
 
 
+def test_srp_rows_memory_is_bounded_by_block():
+    """2,000 rows of the same 50 distinct tokens at dim 128: the kernel's
+    peak allocation stays O(block × dim).  The earlier formulation built
+    ``w[:, None] * M[ptok]`` — one float64 row of dim values per
+    (row, distinct token) pair — and peaked above 200 MB on this input."""
+    rows = [[f"w{i}" for i in range(50)] for _ in range(2000)]
+    lengths = np.full(len(rows), 50)
+    flat = [t for r in rows for t in r]
+    tracemalloc.start()
+    try:
+        got = _srp_rows(lengths, flat, 128, {})
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 * 2**20, peak
+    assert np.array_equal(got, np.stack(_reference_rows(rows, 128)))
+
+
 def test_srp_default_dim(spark):
-    one = srp_embed(_docs(spark).limit(1)).first()
+    one = srp_embed_arrow(_docs(spark).limit(1)).first()
     assert len(one["srp"]) == SRP_DIM  # 1280, reference transformations.py:147
 
 
 def test_srp_bits_packing(spark):
-    emb = srp_embed(_docs(spark), dim=64)
+    emb = srp_embed_arrow(_docs(spark), dim=64)
     bits = {r["doc_id"]: r["srp_bits"] for r in srp_bits(emb).collect()}
     assert all(len(v) == 8 for v in bits.values())  # 64 bits -> 8 bytes
     # recompute expected packing for doc 1
     vec = {r["doc_id"]: r["srp"] for r in emb.collect()}[1]
     expected = bytes(np.packbits((np.asarray(vec) > 0).astype(np.uint8)))
     assert bits[1] == expected
+    # a NULL vector packs to NULL; keep_vec carries every vector through
+    vecs = spark.createDataFrame(
+        [(1, vec), (2, None), (3, [0.0] * 64)], "doc_id long, srp array<float>")
+    kept = {r["doc_id"]: r for r in srp_bits(vecs, keep_vec=True).collect()}
+    assert kept[1]["srp"] == vec and kept[1]["srp_bits"] == expected
+    assert kept[2]["srp"] is None and kept[2]["srp_bits"] is None
+    assert kept[3]["srp_bits"] == bytes(8)
 
 
 def test_hamming_binary(spark):
@@ -81,7 +131,7 @@ def test_hamming_binary(spark):
 
 
 def test_hamming_on_srp_bits(spark):
-    emb = srp_bits(srp_embed(_docs(spark), dim=128))
+    emb = srp_bits(srp_embed_arrow(_docs(spark), dim=128))
     a = emb.select(F.col("doc_id").alias("ia"), F.col("srp_bits").alias("ba"))
     b = emb.select(F.col("doc_id").alias("ib"), F.col("srp_bits").alias("bb"))
     pairs = a.crossJoin(b).filter(F.col("ia") < F.col("ib")).select(

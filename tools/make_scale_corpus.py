@@ -23,6 +23,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import re
 from pathlib import Path
 
 import pyarrow as pa
@@ -68,17 +69,19 @@ def _remap_text(text: str | None, k: int) -> str | None:
     if text is None:
         return None
     pre = f"q{_alpha(k)}q"
-    # prefix each whitespace token: length grows by a constant per token,
-    # token count and per-doc structure are preserved, vocab is disjoint
-    return " ".join(pre + t if t else t for t in text.split(" "))
+    # prefix each whitespace-delimited run, separators (tabs, newlines,
+    # repeated spaces) kept as they are: length grows by a constant per
+    # token, token count and per-doc structure are preserved, vocab is
+    # disjoint
+    return re.sub(r"\S+", lambda m: pre + m.group(), text)
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--replicas", type=int, default=32)
     ap.add_argument("--out", default="/tmp/scale/sf3.2")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     src, out, R = Path(args.src), Path(args.out), args.replicas
 
     tables = {p.stem: pq.read_table(p) for p in sorted(src.glob("*.parquet"))}
@@ -88,6 +91,14 @@ def main() -> None:
             if col.endswith(("key", "_id")) and pa.types.is_integer(
                     tbl.schema.field(col).type):
                 strides[f"{tname}:{col}"] = pc.max(tbl[col]).as_py() + 1
+    for tname in tables:
+        for col, auth in OFFSET_GROUPS.get(tname, []):
+            if auth not in strides:
+                atab, acol = auth.split(":")
+                raise ValueError(
+                    f"{src}: {tname}.{col} takes its key stride from {auth}, "
+                    f"but {atab}.parquet with an integer {acol} column is "
+                    "not in the source dir")
 
     for tname, tbl in tables.items():
         tdir = out / f"{tname}.parquet"
