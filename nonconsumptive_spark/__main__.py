@@ -3,8 +3,10 @@
 UX parity with the reference's ``nonconsumptive build --targets ...``
 console script (commander.py:10-116).  The reference's multiprocess
 machinery (greedy stack packing, subprocess Corpus clones,
-corpus.py:363-379) has no counterpart here on purpose: ``df.write`` over a
-partitioned DataFrame IS the parallel path (SURVEY §3.3).
+corpus.py:363-379) has its counterpart in ``CorpusSession.build``: each
+target's Spark jobs run from their own thread, so independent
+targets overlap, and within one job ``df.write`` over a partitioned
+DataFrame is the parallel path (SURVEY §3.3).
 
 Commands:
   build      materialize transform targets into the checkpoint cache

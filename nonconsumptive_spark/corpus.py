@@ -8,19 +8,34 @@ catalog, and a checkpoint cache — the Spark rendering of the reference's
 The transform registry mirrors the reference's named-reservoir DAG
 (``transformations.py:385-399``): each transform is a ``DataFrame →
 DataFrame`` function; ``run(name)`` resolves the chain, applies the
-checkpoint policy per node, and returns a lazy DataFrame.  Where the
-reference walks stacks sequentially (corpus.py:282-295), Spark's task
-scheduler fans every stage across the cluster.
+checkpoint policy per node, and returns a lazy DataFrame.
+
+Concurrency and laziness (stated here once):
+
+  * ``build(targets)`` runs every target's ``run`` on its own Python
+    thread, so independent targets' Spark jobs overlap — the counterpart
+    of the reference packing stacks onto subprocess ``Corpus`` clones
+    (corpus.py:363-379).  A shared upstream is written once: the
+    checkpoint cache serializes each name behind its own lock, and the
+    threads that wait read the checkpoint the first one wrote.
+  * the metadata catalog is read, inferred, checked for duplicate ids and
+    joined to the documents on first use (the ``catalog`` transform,
+    ``column_plans``, ``export_catalog``, ``document``), not in the
+    constructor — building text features launches no catalog job, and a
+    duplicate-id catalog raises when something first reads it.
 """
 
 from __future__ import annotations
 
 import hashlib
+from concurrent.futures import ThreadPoolExecutor
+from functools import cached_property
 from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from nonconsumptive_spark.functions.embeddings import srp_bits, srp_embed_tokens
 from nonconsumptive_spark.functions.text import tokenize
@@ -85,21 +100,27 @@ class CorpusSession:
                 "stack", F.expr(f"`nc:id` div {stack_size}").cast("int")
             )
         self._docs = docs
+        self._metadata = metadata
+        self._id_field = id_field
 
-        if metadata:
-            raw = readers.read_catalog(spark, metadata)
-            plans = infer_column_plans(raw, id_field=id_field)
-            cat = apply_plans(raw, plans)
-            check_unique_ids(cat)
-            self._catalog = cat.join(
-                docs.select("@id", "nc:id", "stack"), "@id", "left"
-            )
-            self.column_plans = plans
-        else:
+    @cached_property
+    def _catalog_and_plans(self) -> tuple[DataFrame, list]:
+        """(catalog joined to the documents' ids, column plans), computed on
+        first use; raises ValueError on a duplicate catalog id."""
+        ids = self._docs.select("@id", "nc:id", "stack")
+        if not self._metadata:
             # no metadata ⇒ @id-only catalog from the source (reference
             # corpus.py:91-96, metadata.py:33-35)
-            self._catalog = docs.select("@id", "nc:id", "stack")
-            self.column_plans = []
+            return ids, []
+        raw = readers.read_catalog(self.spark, self._metadata)
+        plans = infer_column_plans(raw, id_field=self._id_field)
+        cat = apply_plans(raw, plans)
+        check_unique_ids(cat)
+        return cat.join(ids, "@id", "left"), plans
+
+    @property
+    def column_plans(self) -> list:
+        return self._catalog_and_plans[1]
 
     @staticmethod
     def _source_fingerprint(*paths: str | None) -> str:
@@ -134,7 +155,7 @@ class CorpusSession:
 
         return {
             "documents": lambda: docs,
-            "catalog": lambda: self._catalog,
+            "catalog": lambda: self._catalog_and_plans[0],
             "tokenization": lambda: docs.select(
                 "@id", "nc:id", tokenize(tcol).alias("tokenization")
             ),
@@ -208,10 +229,21 @@ class CorpusSession:
 
     def build(self, targets: list[str]) -> None:
         """CLI-parity batch build (reference commander.py): force-materialize
-        each target through the cache."""
-        for t in targets:
-            self.cache.cache_set.add(t)
-            self.run(t)
+        every target through the cache, each on its own thread.
+
+        Every target joins ``cache_set`` before any thread starts, so a
+        target that another one reads as an upstream is checkpointed, never
+        computed inline.  Each thread inherits the caller's job group and
+        local properties.  If targets fail, the others still finish; then
+        the first failure in ``targets`` order is raised."""
+        self.cache.cache_set.update(targets)
+        with ThreadPoolExecutor(max_workers=max(len(targets), 1)) as pool:
+            # wrap per target, in this thread: each wrapper clones the
+            # caller's local properties for its own thread
+            futures = [pool.submit(inheritable_thread_target(self.spark)(self.run), t)
+                       for t in targets]
+        for f in futures:
+            f.result()
 
     def export_catalog(self, out_dir) -> dict[str, dict]:
         """Write the catalog with persisted per-field statistics
@@ -220,8 +252,9 @@ class CorpusSession:
         from nonconsumptive_spark.sources import writers
         from nonconsumptive_spark.sources.inference import field_metadata
 
-        meta = field_metadata(self._catalog, self.column_plans)
-        writers.export_catalog(self._catalog, out_dir, field_meta=meta)
+        catalog, plans = self._catalog_and_plans
+        meta = field_metadata(catalog, plans)
+        writers.export_catalog(catalog, out_dir, field_meta=meta)
         return meta
 
     # -- document accessor (reference document.py:39-77) ------------------
@@ -230,7 +263,7 @@ class CorpusSession:
         if row is None:
             raise KeyError(doc_id)
         d = row.asDict()
-        meta = self._catalog.filter(F.col("@id") == doc_id).first()
+        meta = self._catalog_and_plans[0].filter(F.col("@id") == doc_id).first()
         if meta is not None:
             d.update({k: v for k, v in meta.asDict().items() if k not in d})
         return d

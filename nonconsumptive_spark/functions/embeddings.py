@@ -148,18 +148,26 @@ def srp_bits(df: DataFrame, vec_col: str = "srp", id_col: str = "doc_id",
 
 
 def hamming_binary(a, b):
-    """F17 over BinaryType columns: XOR + popcount, fully JVM-side — unpack
-    bytes to an int array and fold bit_count over the pair."""
-    def hex_bytes(c):
-        parts = F.filter(F.split(F.hex(c), "(?<=\\G..)"), lambda h: h != F.lit(""))
-        return F.transform(parts, lambda h: F.conv(h, 16, 10).cast("int"))
+    """F17 over BinaryType columns: XOR + popcount, fully JVM-side.  Bytes
+    8i+1..8i+8 of each side are read as one signed bigint (``conv`` of
+    their hex to base -10) and ``bit_count(x ^ y)`` is summed over the
+    chunks; a short last chunk lines up because both sides have the same
+    length.  NULL when either side is NULL or the lengths differ, 0 for
+    two empty values."""
+    from nonconsumptive_spark.functions.text import _as_col
 
-    ai, bi = hex_bytes(a), hex_bytes(b)
-    return F.aggregate(
-        F.zip_with(ai, bi, lambda x, y: F.bit_count(x.bitwiseXOR(y))),
+    a, b = _as_col(a), _as_col(b)
+    n = F.length(a)
+
+    def chunk(c, i):
+        return F.conv(F.hex(F.substring(c, i * 8 + 1, 8)), 16, -10).cast("bigint")
+
+    ham = F.aggregate(
+        F.sequence(F.lit(0), F.floor((n - 1) / 8).cast("int")),
         F.lit(0),
-        lambda acc, v: acc + v,
+        lambda acc, i: acc + F.bit_count(chunk(a, i).bitwiseXOR(chunk(b, i))),
     )
+    return F.when(n == F.length(b), F.when(n == 0, F.lit(0)).otherwise(ham))
 
 
 # ---------------------------------------------------------------------------

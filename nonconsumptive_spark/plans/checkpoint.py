@@ -22,12 +22,20 @@ A hit reads ``data/`` with that schema, which skips the footer-reading
 job that parquet schema inference launches.  A manifest without
 ``schema`` is stale: the checkpoint is rebuilt once and the new manifest
 carries it.
+
+The policy runs under one lock per name, so threads that materialize
+the same name concurrently (``CorpusSession.build``) write it once: the
+first writes, the others wait and then read the fresh checkpoint.  A
+caller must not hold one name's lock while it materializes another —
+``CorpusSession.run`` resolves upstreams before it materializes — so no
+lock-order deadlock can arise.
 """
 
 from __future__ import annotations
 
 import json
 import shutil
+import threading
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,7 +66,7 @@ _MAT_SEQ = 0
 # Callers may materialize from worker threads (e.g. the concurrent
 # elbow runs in q_kmeans_elbow); the sequence must stay collision-free
 # or two frames would overwrite one parquet path.
-_MAT_SEQ_LOCK = __import__("threading").Lock()
+_MAT_SEQ_LOCK = threading.Lock()
 
 
 def set_materialization(mode: str, root: str | Path | None = None) -> None:
@@ -124,6 +132,8 @@ class CheckpointCache:
         self.cache_set = set(cache_set or ())
         self.compression = compression
         self.root.mkdir(parents=True, exist_ok=True)
+        self._locks: dict[str, threading.Lock] = {}
+        self._locks_lock = threading.Lock()
 
     def _dir(self, name: str) -> Path:
         return self.root / name
@@ -149,28 +159,34 @@ class CheckpointCache:
     def is_cached(self, name: str, fingerprint: str | None = None) -> bool:
         return self._fresh_manifest(name, fingerprint) is not None
 
+    def _lock(self, name: str) -> threading.Lock:
+        with self._locks_lock:
+            return self._locks.setdefault(name, threading.Lock())
+
     def materialize(self, spark: SparkSession, name: str, df: DataFrame,
                     fingerprint: str = "", partition_by: list[str] | None = None) -> DataFrame:
-        """Apply the cache policy to one named transform.  A hit reads with
-        the manifest's schema, so it launches no Spark job."""
+        """Apply the cache policy to one named transform, under that name's
+        lock.  A hit reads with the manifest's schema, so it launches no
+        Spark job."""
         if name not in self.cache_set:
             return df
-        d = self._dir(name)
-        data = str(d / "data")
-        meta = self._fresh_manifest(name, fingerprint or None)
-        if meta is not None:
-            return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(data)
-        if d.exists():  # stale / corrupt → rebuild (reference repairs likewise)
-            shutil.rmtree(d)
-        writer = df.write.mode("overwrite").option("compression", self.compression)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data)
-        out = spark.read.parquet(data)
-        (d / MANIFEST).write_text(json.dumps(
-            {"name": name, "fingerprint": fingerprint, "schema": out.schema.jsonValue()}
-        ))
-        return out
+        with self._lock(name):
+            d = self._dir(name)
+            data = str(d / "data")
+            meta = self._fresh_manifest(name, fingerprint or None)
+            if meta is not None:
+                return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(data)
+            if d.exists():  # stale / corrupt → rebuild (reference repairs likewise)
+                shutil.rmtree(d)
+            writer = df.write.mode("overwrite").option("compression", self.compression)
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(data)
+            out = spark.read.parquet(data)
+            (d / MANIFEST).write_text(json.dumps(
+                {"name": name, "fingerprint": fingerprint, "schema": out.schema.jsonValue()}
+            ))
+            return out
 
     def cached_names(self) -> list[str]:
         return sorted(

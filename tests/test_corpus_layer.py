@@ -7,7 +7,11 @@ from __future__ import annotations
 
 import gzip
 import json
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,6 +54,59 @@ def corpus_dir(tmp_path_factory):
     cat.write_text("\n".join(json.dumps(r, ensure_ascii=False) for r in rows),
                    encoding="utf-8")
     return root
+
+
+# the reference feature set a batch build materializes (perfbench's
+# feature_build targets)
+FEATURES = ["tokenization", "unigrams", "bigrams", "total_wordcounts",
+            "encoded_unigrams", "document_lengths", "srp_bits"]
+
+
+def _jobs_of(spark, fn, group):
+    """(fn(), number of Spark jobs it launched under job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    """Order-free digest of a frame: its rows' reprs, sorted."""
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.fixture
+def mixed_stacks(tmp_path):
+    """Two bookstacks holding a NULL, an empty and three normal texts."""
+    stacks = tmp_path / "stacks"
+    stacks.mkdir()
+    pq.write_table(pa.table({"@id": ["n", "e", "t"],
+                             "nc:text": [None, "", "two words two"]}),
+                   stacks / "s0.parquet")
+    pq.write_table(pa.table({"@id": ["u", "v"],
+                             "nc:text": ["Unicode café ok ok",
+                                         "the quick brown fox saw the quick dog"]}),
+                   stacks / "s1.parquet")
+    return stacks
+
+
+@pytest.fixture
+def parquet_writes(monkeypatch):
+    """Every path a DataFrameWriter writes parquet to, in call order."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    seen: list[str] = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        seen.append(str(path))
+        return write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return seen
 
 
 def test_folder_input(spark, corpus_dir):
@@ -180,18 +237,9 @@ def test_checkpoint_policy(spark, tmp_path):
     assert out3.count() == 5
     assert cache.is_cached("t1", "f2")
 
-    def jobs_of(fn, group):
-        sc = spark.sparkContext
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     # a hit reads with the manifest's schema: no inference job, and the
     # same schema a plain parquet read infers
-    hit, jobs = jobs_of(lambda: cache.materialize(spark, "t1", df, fingerprint="f2"),
+    hit, jobs = _jobs_of(spark, lambda: cache.materialize(spark, "t1", df, fingerprint="f2"),
                         "cp-hit")
     assert jobs == 0
     assert hit.schema == spark.read.parquet(str(cache.path_for("t1") / "data")).schema
@@ -202,15 +250,15 @@ def test_checkpoint_policy(spark, tmp_path):
     assert not cache.is_cached("t1", "f2")
     assert cache.materialize(spark, "t1", df.limit(3), fingerprint="f2").count() == 3
     assert "schema" in json.loads(mf.read_text())
-    hit, jobs = jobs_of(lambda: cache.materialize(spark, "t1", df, fingerprint="f2"),
+    hit, jobs = _jobs_of(spark, lambda: cache.materialize(spark, "t1", df, fingerprint="f2"),
                         "cp-rebuilt-hit")
     assert jobs == 0 and hit.count() == 3
     # partitioned checkpoints round-trip on a hit (partition column last)
     parts = CheckpointCache(tmp_path / "cp", cache_set={"t3"})
     pdf = df.withColumn("p", (F.col("x") % 3).cast("string"))
     built = parts.materialize(spark, "t3", pdf, fingerprint="f1", partition_by=["p"])
-    hit, jobs = jobs_of(
-        lambda: parts.materialize(spark, "t3", pdf, fingerprint="f1", partition_by=["p"]),
+    hit, jobs = _jobs_of(
+        spark, lambda: parts.materialize(spark, "t3", pdf, fingerprint="f1", partition_by=["p"]),
         "cp-partitioned-hit")
     assert jobs == 0
     # the partition value's type is the one the read-back inferred
@@ -224,9 +272,6 @@ def test_document_lengths_null_text_matches_query_path(spark, tmp_path):
     """CorpusSession's document_lengths follows wc.document_lengths'
     convention: NULL text counts as empty (0 words, not size's -1)."""
     from nonconsumptive_spark.operators import wordcount as wc
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     stacks = tmp_path / "stacks"
     stacks.mkdir()
@@ -246,8 +291,6 @@ def test_corpus_session_srp_reads_tokenization(spark, tmp_path, cache_set):
     srp_embed_arrow over the raw documents exactly; srp_bits is the sign
     pack of each vector."""
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from nonconsumptive_spark.functions.embeddings import srp_embed_arrow
 
@@ -265,6 +308,115 @@ def test_corpus_session_srp_reads_tokenization(spark, tmp_path, cache_set):
     assert cs.cache.path_for("tokenization").exists() == bool(cache_set)
     bits = {r["nc:id"]: r["srp_bits"] for r in cs.run("srp_bits").collect()}
     assert bits == {k: np.packbits(np.asarray(v) > 0).tobytes() for k, v in got.items()}
+
+
+def test_checkpoint_same_name_race_writes_once(spark, tmp_path, parquet_writes):
+    """Two threads materialize one name at once: the first writes, the
+    second waits for the name's lock and reads the fresh checkpoint."""
+    cache = CheckpointCache(tmp_path / "cp", cache_set={"t"})
+    df = spark.range(500).selectExpr("id AS x", "id % 7 AS y")
+    gate = threading.Barrier(2)
+
+    def materialize():
+        gate.wait()
+        out = cache.materialize(spark, "t", df, "f1")
+        return sorted(map(tuple, out.collect()))
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(materialize) for _ in range(2)]
+    a, b = (f.result() for f in futures)
+    assert parquet_writes == [str(cache.path_for("t") / "data")]
+    assert a == b == [(x, x % 7) for x in range(500)]
+
+
+def test_concurrent_build_matches_lazy_transforms(spark, tmp_path, mixed_stacks,
+                                                  parquet_writes):
+    """build() of the feature set equals every transform's lazy frame, and
+    writes each checkpoint once although several targets share the
+    tokenization and unigrams upstreams."""
+    built = CorpusSession(spark, bookstacks=str(mixed_stacks),
+                          cache_dir=tmp_path / "built")
+    built.build(FEATURES)
+    assert built.cache.cached_names() == sorted(FEATURES)
+    assert sorted(parquet_writes) == sorted(
+        str(built.cache.path_for(t) / "data") for t in FEATURES)
+    lazy = CorpusSession(spark, bookstacks=str(mixed_stacks),
+                         cache_dir=tmp_path / "lazy")
+    for t in FEATURES:
+        assert _rows(built.run(t)) == _rows(lazy.run(t)), t
+    assert len(parquet_writes) == len(FEATURES)  # the lazy session wrote nothing
+
+
+def test_concurrent_build_keeps_callers_job_group(spark, tmp_path, mixed_stacks):
+    """Build threads inherit the caller's job group: every job the build
+    launches is counted in it (plain pool threads would count 0)."""
+    sc = spark.sparkContext
+    cs = CorpusSession(spark, bookstacks=str(mixed_stacks), cache_dir=tmp_path / "cache")
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    _, jobs = _jobs_of(spark, lambda: cs.build(FEATURES), "nc-concurrent-build")
+    assert jobs >= len(FEATURES)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_build_finishes_other_targets_and_raises_first_failure(spark, tmp_path,
+                                                               mixed_stacks):
+    cs = CorpusSession(spark, bookstacks=str(mixed_stacks), cache_dir=tmp_path / "cache")
+    with pytest.raises(KeyError, match="no_such_a"):
+        cs.build(["no_such_a", "document_lengths", "no_such_b"])
+    assert cs.cache.cached_names() == ["document_lengths"]
+
+
+def _write_catalog(path, ids):
+    path.write_text("\n".join(json.dumps({"@id": i, "year": str(1900 + k)})
+                              for k, i in enumerate(ids)))
+    return str(path)
+
+
+def test_constructor_launches_no_catalog_job(spark, tmp_path, mixed_stacks):
+    """The catalog is read and inferred on first use: constructing a
+    session over bookstacks and a catalog launches at most the bookstack
+    schema read."""
+    cat = _write_catalog(tmp_path / "catalog.ndjson", "netuv")
+    cs, jobs = _jobs_of(
+        spark, lambda: CorpusSession(spark, bookstacks=str(mixed_stacks), metadata=cat,
+                                     cache_dir=tmp_path / "cache"),
+        "nc-ctor")
+    assert jobs <= 1
+    assert {p.name: p.target for p in cs.column_plans}["year"] == "smallint"
+
+
+def test_lazy_catalog_matches_eager_pipeline(spark, corpus_dir, tmp_path):
+    """run("catalog") and column_plans equal the read → infer → apply →
+    join pipeline the constructor used to run."""
+    cs = CorpusSession(spark, texts=str(corpus_dir / "texts"),
+                       metadata=str(corpus_dir / "catalog.ndjson"),
+                       cache_dir=tmp_path / "cache")
+    raw = readers.read_catalog(spark, str(corpus_dir / "catalog.ndjson"))
+    plans = infer_column_plans(raw)
+    want = apply_plans(raw, plans).join(
+        cs.run("documents").select("@id", "nc:id", "stack"), "@id", "left")
+    assert cs.column_plans == plans
+    got = cs.run("catalog")
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+    bare = CorpusSession(spark, texts=str(corpus_dir / "texts"),
+                         cache_dir=tmp_path / "cache_bare")
+    assert bare.column_plans == []
+    assert bare.run("catalog").columns == ["@id", "nc:id", "stack"]
+
+
+def test_duplicate_id_catalog_raises_on_first_use(spark, tmp_path, mixed_stacks):
+    cat = _write_catalog(tmp_path / "catalog.ndjson", "nettuv")
+    cs = CorpusSession(spark, bookstacks=str(mixed_stacks), metadata=cat,
+                       cache_dir=tmp_path / "cache")
+    cs.build(["unigrams"])
+    assert cs.cache.is_cached("unigrams")
+    with pytest.raises(ValueError, match="duplicate id"):
+        cs.run("catalog")
+    with pytest.raises(ValueError, match="duplicate id"):
+        cs.column_plans
+    with pytest.raises(ValueError, match="duplicate id"):
+        cs.export_catalog(tmp_path / "out")
 
 
 def test_flat_catalog_export(spark, corpus_dir, tmp_path):
@@ -303,14 +455,17 @@ def test_cli_build_and_query(corpus_dir, tmp_path):
     from nonconsumptive_spark.__main__ import main
 
     cache = tmp_path / "cli_cache"
+    targets = ["document_lengths", "unigrams", "bigrams", "srp_bits"]
     rc = main([
         "build",
         "--texts", str(corpus_dir / "texts"),
+        "--metadata", str(corpus_dir / "catalog.ndjson"),
         "--cache-dir", str(cache),
-        "--targets", "document_lengths",
+        "--targets", *targets,
     ])
     assert rc == 0
-    assert (cache / "document_lengths" / "_nc_manifest.json").exists()
+    for t in targets:
+        assert (cache / t / "_nc_manifest.json").exists()
     assert main(["query", "list"]) == 0
     assert main(["query", "nope_not_a_query"]) == 2
 

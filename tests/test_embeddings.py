@@ -126,8 +126,35 @@ def test_hamming_binary(spark):
          (bytearray(b"\x00\x00"), bytearray(b"\x00\x00"))],
         ["a", "b"],
     )
-    got = [r["h"] for r in df.select(hamming_binary("a", "b").alias("h")).collect()]
-    assert got == [4, 0]
+    # lengths on both sides of each 8-byte chunk boundary, all-ones
+    # against all-zeros (a chunk whose bigint is -1), NULLs, unequal
+    # lengths (NULL) and two empty values (0)
+    rnd = np.random.default_rng(3)
+    pairs = [(rnd.bytes(n), rnd.bytes(n)) for n in (1, 3, 7, 8, 9, 16, 17, 160, 256)]
+    pairs += [(b"\xff" * n, bytes(n)) for n in (1, 8, 9, 160)]
+    pairs += [(b"", b""), (None, b"ab"), (b"ab", None), (None, None), (b"abc", b"ab"),
+              (b"", b"a")]
+
+    def popcount_xor(a, b):
+        if a is None or b is None or len(a) != len(b):
+            return None
+        return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
+
+    edge = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, a binary, b binary")
+    want = {i: popcount_xor(a, b) for i, (a, b) in enumerate(pairs)}
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = [r["h"] for r in
+                   df.select(hamming_binary("a", "b").alias("h")).collect()]
+            assert got == [4, 0], ansi
+            out = edge.select("i", hamming_binary(F.col("a"), F.col("b")).alias("h"))
+            assert out.schema["h"].dataType.typeName() == "integer", ansi
+            assert dict(map(tuple, out.collect())) == want, ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_hamming_on_srp_bits(spark):
