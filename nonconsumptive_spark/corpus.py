@@ -37,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from nonconsumptive_spark.functions.embeddings import srp_bits, srp_embed_tokens
+from nonconsumptive_spark.functions.embeddings import (
+    srp_bits,
+    srp_bits_tokens,
+    srp_embed_tokens,
+)
 from nonconsumptive_spark.functions.text import tokenize
 from nonconsumptive_spark.operators import wordcount as wc
 from nonconsumptive_spark.plans.checkpoint import CheckpointCache
@@ -146,6 +150,10 @@ class CorpusSession:
     # Every node consumes its upstream THROUGH self.run(), so a cached
     # upstream materializes exactly once and is replayed by all consumers —
     # the reference's Reservoir tee semantics (data_storage.py:154-161).
+    # A node reads the tokenization directly where an intermediate node
+    # would only lengthen its chain: total_wordcounts counts tokens beside
+    # unigrams rather than after it, and srp_bits embeds and packs in one
+    # pass unless srp itself is cached.
     def _transforms(self) -> dict[str, Callable[[], DataFrame]]:
         docs = self._docs
         tcol = readers.TEXT_COL
@@ -169,16 +177,24 @@ class CorpusSession:
             "bigrams": ngrams(2),
             "trigrams": ngrams(3),
             "quadgrams": ngrams(4),
-            "total_wordcounts": lambda: self._rank_vocab(self.run("unigrams")),
+            # the query path's vocabulary (exact A3 counts, wc.rank_vocab)
+            "total_wordcounts": lambda: wc.vocabulary(
+                self.run("tokenization"), tokens_col="tokenization"),
             "encoded_unigrams": lambda: self.run("unigrams").join(
                 F.broadcast(self.run("total_wordcounts").select("token", "wordid")),
                 "token", "inner",
             ).select("nc:id", "wordid", "count"),
             "srp": lambda: srp_embed_tokens(
                 self.run("tokenization").select("nc:id", "tokenization")),
-            # consume srp THROUGH run() so a cached embedding replays from
-            # its checkpoint instead of re-embedding every document
-            "srp_bits": lambda: srp_bits(self.run("srp"), id_col="nc:id"),
+            # a cached srp replays from its checkpoint instead of
+            # re-embedding every document; otherwise one Python pass over
+            # the tokenization embeds and packs, with no float vectors
+            # between two passes
+            "srp_bits": lambda: (
+                srp_bits(self.run("srp"), id_col="nc:id")
+                if "srp" in self.cache.cache_set
+                else srp_bits_tokens(
+                    self.run("tokenization").select("nc:id", "tokenization"))),
             # curation extensions as named transforms — the LLM-pipeline
             # surface a user reaches through the same DAG/cache machinery
             # as the reference-parity nodes
@@ -204,14 +220,6 @@ class CorpusSession:
             # code-likeness markers (prose/code routing signal)
             "code_score": lambda: _ts().code_score(docs, "nc:id", tcol),
         }
-
-    @staticmethod
-    def _rank_vocab(unigrams: DataFrame, cap: int = wc.VOCAB_CAP) -> DataFrame:
-        # delegate to the registry's ranking step so a tie-break or cap
-        # change can never diverge CorpusSession's vocabulary from the
-        # query path's
-        counts = unigrams.groupBy("token").agg(F.sum("count").alias("count"))
-        return wc.rank_vocab(counts, cap)
 
     def transforms(self) -> list[str]:
         return sorted(self._transforms())

@@ -16,7 +16,8 @@ batch, on the batch size, or on ``_BLOCK_ROWS``.
 Execution: ``mapInArrow`` over (id, tokens) batches — per-token RNG work
 cannot be expressed with built-ins.  The per-partition token→signs cache
 makes RNG cost proportional to *distinct* tokens, mirroring the
-reference's SRP cache.
+reference's SRP cache.  ``srp_bits_tokens`` packs the sign bits in the
+same pass, so bits need no second Python pass over the float vectors.
 """
 
 from __future__ import annotations
@@ -86,6 +87,18 @@ def srp_embed_arrow(docs: DataFrame, dim: int = SRP_DIM,
     return srp_embed_tokens(docs.select(id_col, tokenize(text_col)), dim)
 
 
+def _embedded_batches(batches, dim: int):
+    """(batch, float32 embeddings) for each Arrow batch of (id, tokens);
+    the token→signs cache is shared by all the batches of one partition."""
+    import pyarrow.compute as pc
+
+    cache: dict[str, np.ndarray] = {}
+    for b in batches:
+        tokens = b.column(1)
+        lengths = pc.fill_null(pc.list_value_length(tokens), 0).to_numpy()
+        yield b, _srp_rows(lengths, pc.list_flatten(tokens).to_pylist(), dim, cache)
+
+
 def srp_embed_tokens(toks: DataFrame, dim: int = SRP_DIM) -> DataFrame:
     """F15 over an already tokenized (id, tokens: array<string>) frame —
     the entry point for a cached tokenization.  The Python boundary is
@@ -96,17 +109,34 @@ def srp_embed_tokens(toks: DataFrame, dim: int = SRP_DIM) -> DataFrame:
 
     def gen(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        cache: dict[str, np.ndarray] = {}
-        for b in batches:
-            tokens = b.column(1)
-            lengths = pc.fill_null(pc.list_value_length(tokens), 0).to_numpy()
-            emb = _srp_rows(lengths, pc.list_flatten(tokens).to_pylist(), dim, cache)
+        for b, emb in _embedded_batches(batches, dim):
             offs = pa.array(np.arange(len(b) + 1, dtype=np.int32) * dim)
             srp = pa.ListArray.from_arrays(offs, pa.array(emb.ravel()))
             yield pa.RecordBatch.from_arrays([b.column(0), srp],
                                              names=[out_schema[0].name, "srp"])
+
+    return toks.mapInArrow(gen, schema=out_schema)
+
+
+def srp_bits_tokens(toks: DataFrame, dim: int = SRP_DIM) -> DataFrame:
+    """F15 then F16 in one pass over a tokenized (id, tokens) frame:
+    (id, srp_bits) equal to ``srp_bits(srp_embed_tokens(toks, dim))``,
+    without a second Python pass over the float vectors."""
+    out_schema = StructType(
+        [toks.schema[0], StructField("srp_bits", BinaryType())]
+    )
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b, emb in _embedded_batches(batches, dim):
+            packed = np.packbits(emb > 0, axis=1)
+            offs = np.arange(len(b) + 1, dtype=np.int32) * packed.shape[1]
+            bits = pa.Array.from_buffers(
+                pa.binary(), len(b), [None, pa.py_buffer(offs), pa.py_buffer(packed)])
+            yield pa.RecordBatch.from_arrays([b.column(0), bits],
+                                             names=[out_schema[0].name, "srp_bits"])
 
     return toks.mapInArrow(gen, schema=out_schema)
 

@@ -16,7 +16,8 @@ every exploded token on doc_id; the array formulation shuffles nothing.
 
 from __future__ import annotations
 
-import pandas as pd
+import inspect
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -27,6 +28,20 @@ TOKEN_REGEX = r"[^\p{L}]+"
 
 def _as_col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def _series_udf(return_type, fn):
+    """``pandas_udf`` of a one-argument Series → Series function.  pandas
+    is imported here, when a UDF is built, not with this module: Python
+    workers import the module to unpickle mapInArrow code and do not need
+    pandas.  The hints are set as objects, since string hints would
+    resolve against module globals, where ``pd`` is not."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    (arg,) = inspect.signature(fn).parameters
+    fn.__annotations__ = {arg: pd.Series, "return": pd.Series}
+    return pandas_udf(fn, return_type)
 
 
 def let(col: Column, fn) -> Column:
@@ -92,13 +107,12 @@ def tokenize_blingfire(text: Column | str) -> Column:
         )
     from pyspark.sql.types import ArrayType, StringType
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def bf_udf(texts: pd.Series) -> pd.Series:
+    def bf_udf(texts):
         return texts.map(
             lambda t: _blingfire.text_to_words(t).split(" ") if t else []
         )
 
-    return bf_udf(_as_col(text))
+    return _series_udf(ArrayType(StringType()), bf_udf)(_as_col(text))
 
 
 def nfc_normalize(text: Column | str) -> Column:
@@ -110,13 +124,12 @@ def nfc_normalize(text: Column | str) -> Column:
     the oracle)."""
     import unicodedata
 
-    @F.pandas_udf("string")
-    def nfc_udf(texts: pd.Series) -> pd.Series:
+    def nfc_udf(texts):
         return texts.map(
             lambda t: unicodedata.normalize("NFC", t) if t is not None else None
         )
 
-    return nfc_udf(_as_col(text))
+    return _series_udf("string", nfc_udf)(_as_col(text))
 
 
 def tokens_with_pos(df, id_col: str, text_col: str, pos_col: str = "pos", token_col: str = "token"):
@@ -169,17 +182,14 @@ def normalize_unicode(text: Column | str, form: str = "NFC") -> Column:
     """
     if form not in ("NFC", "NFD", "NFKC", "NFKD"):
         raise ValueError(f"unknown normalization form {form!r}")
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
+    def _norm(s):
         import unicodedata
 
         return s.map(lambda v: None if v is None
                      else unicodedata.normalize(form, v))
 
-    return _norm(_as_col(text))
+    return _series_udf("string", _norm)(_as_col(text))
 
 
 def strip_accents(text: Column | str) -> Column:
@@ -188,11 +198,8 @@ def strip_accents(text: Column | str) -> Column:
     ``strip_accents`` on composed input, which keeps the cross-engine
     oracle honest.  Same Arrow-batched pandas_udf path as
     ``normalize_unicode``; NULLs pass through."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("string")
-    def _strip(s: pd.Series) -> pd.Series:
+    def _strip(s):
         import unicodedata
 
         def one(v):
@@ -205,4 +212,4 @@ def strip_accents(text: Column | str) -> Column:
 
         return s.map(one)
 
-    return _strip(_as_col(text))
+    return _series_udf("string", _strip)(_as_col(text))

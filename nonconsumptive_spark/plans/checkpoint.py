@@ -5,6 +5,7 @@ the reference's Reservoir ``cache_set`` execution policy
   * name ∉ cache_set      → pass the (lazy) DataFrame through untouched
   * cached & fingerprint fresh → read the parquet checkpoint
   * else                  → write checkpoint (zstd parquet), read it back
+                            with the written schema (no inference job)
 
 Cache invalidation is by explicit fingerprint (content hash / source mtime
 composed by the caller) stored in a small manifest JSON next to the data —
@@ -18,8 +19,13 @@ The manifest, ``<root>/<name>/_nc_manifest.json``, beside ``data/``:
   * ``schema``      — the read-back frame's schema as Spark JSON
                       (``StructType.jsonValue()``, partition columns last)
 
-A hit reads ``data/`` with that schema, which skips the footer-reading
-job that parquet schema inference launches.  A manifest without
+A write reads ``data/`` back with the written frame's schema made
+nullable — the schema a parquet read infers — and a hit reads it with
+the manifest's schema; either way the footer-reading job that parquet
+schema inference launches is skipped.  A partitioned checkpoint is the
+exception on its write: its partition columns read back with the types
+discovery infers from the directory names (a string ``p`` of digits
+reads as an int), so that read-back infers.  A manifest without
 ``schema`` is stale: the checkpoint is rebuilt once and the new manifest
 carries it.
 
@@ -39,9 +45,31 @@ import threading
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 MANIFEST = "_nc_manifest.json"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and map value nullable — what
+    Spark writes to parquet for any frame (Scala ``DataType.asNullable``),
+    hence what a parquet read of it returns."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _read_written(df: DataFrame, path: str) -> DataFrame:
+    """Read back the unpartitioned parquet that ``df`` was just written to
+    at ``path``, with the schema a parquet read would infer: launches no
+    Spark job."""
+    return df.sparkSession.read.schema(_nullable(df.schema)).parquet(path)
+
 
 # ---------------------------------------------------------------------------
 # Materialization policy for in-query reuse points (dedup signatures,
@@ -106,7 +134,7 @@ def materialize_once(df: DataFrame, name: str = "mat") -> DataFrame:
         seq = _MAT_SEQ
     path = str(Path(_MAT_POLICY["root"]) / f"{name}-{seq:04d}")
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return _read_written(df, path)
 
 
 class parquet_materialization:
@@ -166,8 +194,8 @@ class CheckpointCache:
     def materialize(self, spark: SparkSession, name: str, df: DataFrame,
                     fingerprint: str = "", partition_by: list[str] | None = None) -> DataFrame:
         """Apply the cache policy to one named transform, under that name's
-        lock.  A hit reads with the manifest's schema, so it launches no
-        Spark job."""
+        lock.  A hit launches no Spark job, and a miss none beyond its
+        write (a partitioned one adds its inferring read-back)."""
         if name not in self.cache_set:
             return df
         with self._lock(name):
@@ -182,7 +210,7 @@ class CheckpointCache:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(data)
-            out = spark.read.parquet(data)
+            out = spark.read.parquet(data) if partition_by else _read_written(df, data)
             (d / MANIFEST).write_text(json.dumps(
                 {"name": name, "fingerprint": fingerprint, "schema": out.schema.jsonValue()}
             ))

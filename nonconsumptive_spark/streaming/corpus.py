@@ -29,10 +29,12 @@ from nonconsumptive_spark.operators import wordcount as wc
 
 
 def stream_documents(spark: SparkSession, path: str,
-                     max_files_per_trigger: int = 4) -> DataFrame:
-    """File-source stream over a documents/bookstack parquet directory;
-    schema frozen from a batch peek (streaming reads require one)."""
-    schema = spark.read.parquet(path).schema
+                     max_files_per_trigger: int = 4, schema=None) -> DataFrame:
+    """File-source stream over a documents/bookstack parquet directory.
+    Streaming reads need a schema: ``schema`` when given, else one frozen
+    from a batch peek (a schema-inference job)."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     return (
         spark.readStream.format("parquet")
         .schema(schema)

@@ -21,20 +21,12 @@ inherently cross-batch state and stays with the neardup/upsert machinery
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.operators.dedup import doc_shingles, shingle_array
 from nonconsumptive_spark.functions.text import tokenize
 from nonconsumptive_spark.operators.textstats import quality_keep_expr, split_expr
-
-
-def stream_documents(spark: SparkSession, path: str,
-                     schema=None) -> DataFrame:
-    src = spark.readStream
-    if schema is not None:
-        src = src.schema(schema)
-    return src.parquet(path)
 
 
 def eval_shingle_table(eval_docs: DataFrame) -> DataFrame:

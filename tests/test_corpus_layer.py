@@ -358,6 +358,71 @@ def test_concurrent_build_keeps_callers_job_group(spark, tmp_path, mixed_stacks)
     assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
 
 
+def test_checkpoint_miss_launches_only_its_write(spark, tmp_path):
+    """A miss reads its write back with the written schema: it launches
+    the jobs of a plain write of the frame, and no inference job."""
+    df = spark.range(50).selectExpr("id AS x", "CAST(id AS string) AS s",
+                                    "array(CAST(id AS int)) AS a")
+    plain = str(tmp_path / "plain")
+    _, write_jobs = _jobs_of(spark, lambda: df.write.parquet(plain), "cp-plain-write")
+    cache = CheckpointCache(tmp_path / "cp", cache_set={"t"})
+    out, jobs = _jobs_of(spark, lambda: cache.materialize(spark, "t", df, "f1"), "cp-miss")
+    assert jobs == write_jobs >= 1
+    assert out.schema == spark.read.parquet(plain).schema
+    assert _rows(out) == _rows(df)
+
+
+def test_cold_build_manifests_hold_the_inferred_schema(spark, tmp_path, mixed_stacks):
+    """Each feature checkpoint of a cold build (string, bigint,
+    array<string> and binary columns) records the schema a plain parquet
+    read of its data infers, and the build runs no inference job."""
+    cs = CorpusSession(spark, bookstacks=str(mixed_stacks), cache_dir=tmp_path / "cache")
+    _, jobs = _jobs_of(spark, lambda: cs.build(FEATURES), "nc-cold-build")
+    types = set()
+    for t in FEATURES:
+        d = cs.cache.path_for(t)
+        inferred = spark.read.parquet(str(d / "data")).schema
+        assert json.loads((d / "_nc_manifest.json").read_text())["schema"] \
+            == inferred.jsonValue(), t
+        types |= {f.dataType.simpleString() for f in inferred.fields}
+    assert types == {"string", "bigint", "array<string>", "binary"}
+    assert jobs <= 11
+
+
+def test_total_wordcounts_ranks_unigram_sums(spark, tmp_path, mixed_stacks):
+    """total_wordcounts, counted from the tokenization, equals the
+    vocabulary ranked over the unigrams' per-token sums, lazy or cached."""
+    from nonconsumptive_spark.operators import wordcount as wc
+
+    for cache_set in (set(), set(FEATURES)):
+        cs = CorpusSession(spark, bookstacks=str(mixed_stacks), cache_set=cache_set,
+                           cache_dir=tmp_path / f"cache{len(cache_set)}")
+        want = wc.rank_vocab(cs.run("unigrams").groupBy("token")
+                             .agg(F.sum("count").alias("count")))
+        got = _rows(cs.run("total_wordcounts"))
+        assert got == _rows(want) and len(got) == 11
+
+
+def test_cached_srp_is_replayed_by_srp_bits(spark, tmp_path, mixed_stacks,
+                                            parquet_writes):
+    """With srp in cache_set, srp_bits packs the srp checkpoint, written
+    once, and its bits equal the one-pass bits of an uncached session."""
+    cs = CorpusSession(spark, bookstacks=str(mixed_stacks),
+                       cache_dir=tmp_path / "cached", cache_set={"srp"})
+    replayed = cs.run("srp_bits")
+    srp_data = cs.cache.path_for("srp") / "data"
+    assert replayed.inputFiles()
+    assert all(str(srp_data) in f for f in replayed.inputFiles())
+    cs.run("srp")
+    cs.run("srp_bits")
+    assert parquet_writes == [str(srp_data)]
+    one_pass = CorpusSession(spark, bookstacks=str(mixed_stacks),
+                             cache_dir=tmp_path / "one_pass").run("srp_bits")
+    assert all(str(mixed_stacks) in f for f in one_pass.inputFiles())
+    got = _rows(replayed)
+    assert got == _rows(one_pass) and len(got) == 5
+
+
 def test_build_finishes_other_targets_and_raises_first_failure(spark, tmp_path,
                                                                mixed_stacks):
     cs = CorpusSession(spark, bookstacks=str(mixed_stacks), cache_dir=tmp_path / "cache")

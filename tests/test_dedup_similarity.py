@@ -77,6 +77,29 @@ def test_dedup_pipeline_under_parquet_materialization(spark, tmp_path):
     # the signature/shingle reuse points actually hit parquet
     written = list((tmp_path / "mat").iterdir())
     assert written, "parquet materialization wrote nothing"
+    # the policy reads its write back with the written schema: no job
+    # beyond the write's own
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    small = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    plain = str(tmp_path / "plain")
+    _, write_jobs = jobs_of("mat-plain-write", lambda: small.write.parquet(plain))
+    with parquet_materialization(tmp_path / "mat"):
+        out, jobs = jobs_of("mat-policy-write",
+                            lambda: materialize_once(small, "readback"))
+    assert jobs == write_jobs >= 1
+    assert out.schema == spark.read.parquet(plain).schema
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, small.collect()))
 
 
 def test_lsh_recall_vs_exact(spark):

@@ -14,7 +14,9 @@ from nonconsumptive_spark.functions.embeddings import (
     _token_signs,
     hamming_binary,
     srp_bits,
+    srp_bits_tokens,
     srp_embed_arrow,
+    srp_embed_tokens,
 )
 
 
@@ -118,6 +120,40 @@ def test_srp_bits_packing(spark):
     assert kept[1]["srp"] == vec and kept[1]["srp_bits"] == expected
     assert kept[2]["srp"] is None and kept[2]["srp_bits"] is None
     assert kept[3]["srp_bits"] == bytes(8)
+
+
+def test_srp_bits_tokens_equals_two_passes(spark):
+    """The one-pass embed-and-pack gives the bits of the embedding pass
+    then the packing pass, for NULL, empty and normal token arrays, across
+    batch boundaries."""
+    toks = spark.createDataFrame(
+        [(i, None if i % 7 == 0 else [f"t{j}" for j in range(i % 5)] + ["x"] * (i % 3))
+         for i in range(60)], "doc_id long, toks array<string>").repartition(3)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
+    try:
+        for dim in (64, 100):
+            one = {r["doc_id"]: r["srp_bits"] for r in srp_bits_tokens(toks, dim).collect()}
+            two = {r["doc_id"]: r["srp_bits"] for r in
+                   srp_bits(srp_embed_tokens(toks, dim)).collect()}
+            assert one == two and len(one) == 60
+            assert {len(v) for v in one.values()} == {-(-dim // 8)}
+            assert one[0] == bytes(-(-dim // 8))  # NULL tokens: the zero vector
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+
+
+def test_worker_imports_of_srp_code_load_no_pandas():
+    """A Python worker unpickling the SRP mapInArrow code imports this
+    package's functions modules; none of them may load pandas."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = ("import sys, pyspark.worker, nonconsumptive_spark.functions.embeddings; "
+            "print('pandas' in sys.modules)")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                         check=True, cwd=Path(__file__).resolve().parents[1])
+    assert out.stdout.strip() == "False"
 
 
 def test_hamming_binary(spark):

@@ -480,13 +480,14 @@ def test_curation_gate_stream_equals_batch(spark, tmp_path):
     """The streaming curation gate (stateless rules + stream-static
     contamination join) must produce exactly the batch verdicts."""
     from nonconsumptive_spark.streaming import curation as cur
+    from nonconsumptive_spark.streaming.corpus import stream_documents
 
     docs = load(spark, SF_SMALL, "documents")
     d = tmp_path / "docs_stream"
     docs.repartition(3).write.mode("overwrite").parquet(str(d))
 
     eval_sh = cur.eval_shingle_table(docs.filter(F.col("doc_id") < 5))
-    stream = cur.stream_documents(spark, str(d), schema=docs.schema)
+    stream = stream_documents(spark, str(d), schema=docs.schema)
     got = st.run_available_now(
         cur.curation_gate(stream, eval_sh), "t_curation", mode="complete")
 
