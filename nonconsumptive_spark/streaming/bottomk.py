@@ -30,12 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+    committed_table, fold_epoch, start_fold)
 
 
 def _bottom_k(df: DataFrame, k: int, key_col: str) -> DataFrame:
@@ -51,25 +46,16 @@ def merge_bottom_k(batch: DataFrame, table_dir: str, k: int,
                    key_col: str = "doc_id", epoch_id: int = 0) -> bool:
     """Fold one micro-batch into the committed k-row sample.  Returns
     False (no-op) when ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch.sparkSession
     incoming = _bottom_k(batch, k, key_col)
-    current = committed_table(spark, table_dir)
-    if current is not None:
+
+    def merge(current):
+        if current is None:
+            return incoming.distinct()
         # distinct: a key replayed across epochs (at-least-once file
         # source) must not occupy two sample slots
-        merged = _bottom_k(
-            current.unionByName(incoming).distinct(), k, key_col)
-    else:
-        merged = incoming.distinct()
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+        return _bottom_k(current.unionByName(incoming).distinct(), k, key_col)
+
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def sample(spark: SparkSession, table_dir: str) -> DataFrame | None:
@@ -84,12 +70,7 @@ def start_incremental_sample(stream: DataFrame, table_dir: str,
     def fold(batch, epoch_id):
         merge_bottom_k(batch, table_dir, k, key_col, epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, fold, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -130,24 +111,15 @@ def merge_top_priority(batch: DataFrame, table_dir: str, k: int,
                        epoch_id: int = 0) -> bool:
     """Fold one micro-batch into the committed (k+1)-row priority state.
     Returns False (no-op) when ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch.sparkSession
     incoming = _top_priority(batch, k + 1, key_col, weight_col)
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = _top_priority(
-            current.unionByName(incoming).distinct(), k + 1,
-            key_col, weight_col)
-    else:
-        merged = incoming.distinct()
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+
+    def merge(current):
+        if current is None:
+            return incoming.distinct()
+        return _top_priority(current.unionByName(incoming).distinct(),
+                             k + 1, key_col, weight_col)
+
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def priority_sample(spark: SparkSession, table_dir: str, k: int,

@@ -9,8 +9,8 @@ State discipline: counters merge ADDITIVELY per epoch (a batch only
 increments the types it carries), so chunked == batch equality is exact
 integer arithmetic; the committed table stores the per-type counters
 plus an append-only (ts, event_id) watermark.  Event-time discipline and
-exactly-once (epoch guard + versioned commits) follow streaming/holt.py
-verbatim.
+exactly-once are streaming/holt.py's: the shared ``_fresh_events`` /
+``_add_counters`` pair and ``fold_epoch`` (streaming/corpus.py).
 
 Scale notes: per-epoch work is one broadcast join (the #types-row
 calibration) + one type-keyed agg over the batch; state is one row per
@@ -23,11 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
+    _add_counters,
+    _fresh_events,
     committed_table,
+    fold_epoch,
+    start_fold,
 )
 
 CONF_ALPHA_NUM, CONF_ALPHA_DEN = 9, 10  # 1 - alpha = 0.9
@@ -95,56 +95,12 @@ def merge_coverage(batch: DataFrame, table_dir: str, calib_rows,
     """Fold one micro-batch of (event_id, ts, event_type, value) rows
     into the committed coverage counters.  Returns False (no-op) when
     ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    batch = batch.dropDuplicates(["event_id"])
-    current = committed_table(batch.sparkSession, table_dir)
-    if current is not None:
-        wm = current.agg(
-            F.max("wm_ts").alias("wm_ts"),
-            F.max("wm_eid").alias("wm_eid")).collect()[0]
-        if wm["wm_ts"] is None:
-            fresh = batch
-        else:
-            fresh = batch.filter(
-                (F.col("ts") > F.lit(wm["wm_ts"]))
-                | ((F.col("ts") == F.lit(wm["wm_ts"]))
-                   & (F.col("event_id") > F.lit(wm["wm_eid"])))
-            )
-    else:
-        fresh = batch
-    counts = coverage_counts(fresh, calib_rows, q_hat_q)
-    new_wm = fresh.agg(
-        F.max(F.struct("ts", "event_id")).alias("m")).select(
-        F.col("m.ts").alias("nw_ts"), F.col("m.event_id").alias("nw_eid"))
-    if current is not None:
-        merged_counts = (
-            current.select("event_type", "n_test", "n_covered")
-            .unionByName(counts)
-            .groupBy("event_type")
-            .agg(F.sum("n_test").cast("long").alias("n_test"),
-                 F.sum("n_covered").cast("long").alias("n_covered"))
-        )
-        prev_wm = current.select(F.col("wm_ts").alias("nw_ts"),
-                                 F.col("wm_eid").alias("nw_eid")).limit(1)
-        wm_frame = (
-            new_wm.unionByName(prev_wm)
-            .agg(F.max(F.struct("nw_ts", "nw_eid")).alias("m"))
-            .select(F.col("m.nw_ts").alias("wm_ts"),
-                    F.col("m.nw_eid").alias("wm_eid"))
-        )
-    else:
-        merged_counts = counts
-        wm_frame = new_wm.select(F.col("nw_ts").alias("wm_ts"),
-                                 F.col("nw_eid").alias("wm_eid"))
-    merged = merged_counts.crossJoin(F.broadcast(wm_frame))
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+    def merge(current):
+        fresh = _fresh_events(batch, current)
+        counts = coverage_counts(fresh, calib_rows, q_hat_q)
+        return _add_counters(current, counts, fresh, "event_type")
+
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def monitor(spark: SparkSession, table_dir: str,
@@ -170,15 +126,9 @@ def monitor(spark: SparkSession, table_dir: str,
 def start_incremental_coverage(event_stream: DataFrame, table_dir: str,
                                checkpoint_dir: str, calib_rows,
                                q_hat_q: int):
-    """foreachBatch wiring, AvailableNow trigger (the backlog-draining
-    form every incremental sink here uses)."""
+    """foreachBatch wiring, AvailableNow trigger (``start_fold``)."""
     def fold(batch, epoch_id):
         merge_coverage(batch, table_dir, calib_rows, q_hat_q,
                        epoch_id=epoch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(event_stream, fold, checkpoint_dir)

@@ -12,6 +12,12 @@ last-applied epoch in a sidecar marker and skips any batch with
 ``epoch_id <= applied``; that makes re-application a no-op and the final
 table equal to the batch computation over all files (asserted in tests).
 
+Every running-table sink in this package commits through ``fold_epoch``
+(the one statement of the versioned-commit protocol), and every
+incremental sink is wired by ``start_fold`` (foreachBatch + AvailableNow).
+The delta-shaped sinks (streaming/neardup.py, streaming/indexstream.py)
+append per-epoch directories and share only the marker.
+
 Scale notes: per-batch counting is the narrow fused kernel (no shuffle);
 the merge aggregates (token, count) — the running table is vocabulary-
 sized, not corpus-sized, so the rewrite cost is bounded by distinct
@@ -21,6 +27,7 @@ tokens (cap it with the vocabulary top-K if needed).
 from __future__ import annotations
 
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,46 +112,117 @@ def committed_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     the previous version.  The returned DataFrame is lazy and remains
     readable across exactly ONE subsequent commit (see _prune_versions);
     long-lived readers should materialize promptly."""
-    applied = applied_epoch(table_dir)
-    if applied < 0:
-        return None
-    return spark.read.parquet(str(_version_dir(table_dir, applied)))
+    return _read_version(spark, table_dir, applied_epoch(table_dir))
+
+
+def _read_version(spark: SparkSession, table_dir: str,
+                  epoch: int) -> DataFrame | None:
+    return (spark.read.parquet(str(_version_dir(table_dir, epoch)))
+            if epoch >= 0 else None)
+
+
+def fold_epoch(spark: SparkSession, table_dir: str, epoch_id: int,
+               merge: Callable[[DataFrame | None], DataFrame]) -> bool:
+    """Fold one epoch into the running table at ``table_dir`` exactly
+    once — the versioned-commit protocol every running-table sink shares.
+
+      1. guard: an ``epoch_id`` at or below the marker was already
+         applied (foreachBatch is at-least-once and replays an epoch
+         whose streaming checkpoint did not commit) — return False and
+         touch nothing;
+      2. write ``merge(current)`` to ``table_dir/v{epoch_id}``, where
+         ``current`` is the last COMMITTED version (None before the
+         first commit);
+      3. commit: atomically rename the marker to ``epoch_id``;
+      4. prune versions older than the one just superseded, which is
+         kept so a lazy reader of it survives this commit.
+
+    A crash anywhere before step 3 leaves the marker, and every reader,
+    on the previous version, so the replay rebuilds ``v{epoch_id}`` from
+    the same committed input: idempotent, no double count, and a partial
+    version is never read.  A crash in step 4 comes after the commit, so
+    the epoch counts as applied and the replay is refused; the next
+    commit prunes what was left.  Additive merges (counts, moments,
+    bins) need the guard for exactly-once; semilattice merges (max,
+    bottom-k, skyline) would converge without it."""
+    prev = applied_epoch(table_dir)
+    if epoch_id <= prev:
+        return False
+    merged = merge(_read_version(spark, table_dir, prev))
+    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, epoch_id)))
+    _commit_epoch(table_dir, epoch_id)
+    if prev >= 0:
+        _prune_versions(table_dir, prev)
+    return True
+
+
+def start_fold(stream: DataFrame, fold: Callable[[DataFrame, int], None],
+               checkpoint_dir: str, query_name: str | None = None):
+    """Run ``fold(batch_df, epoch_id)`` on every micro-batch of ``stream``
+    through foreachBatch with the AvailableNow trigger (drain the backlog,
+    then stop) — the wiring every incremental sink uses."""
+    writer = (stream.writeStream.foreachBatch(fold)
+              .option("checkpointLocation", checkpoint_dir))
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    return writer.trigger(availableNow=True).start()
+
+
+def _fresh_events(batch: DataFrame, current: DataFrame | None) -> DataFrame:
+    """The rows of an (event_id, ts, ...) batch that an append-only
+    event-time table has not counted: one row per event_id, strictly after
+    the committed (wm_ts, wm_eid) watermark.  A replayed or late row is
+    dropped, so an already-merged event never counts twice."""
+    batch = batch.dropDuplicates(["event_id"])
+    if current is None:
+        return batch
+    wm = current.agg(F.max("wm_ts").alias("wm_ts"),
+                     F.max("wm_eid").alias("wm_eid")).collect()[0]
+    if wm["wm_ts"] is None:  # committed table exists but is empty
+        return batch
+    return batch.filter(
+        (F.col("ts") > F.lit(wm["wm_ts"]))
+        | ((F.col("ts") == F.lit(wm["wm_ts"]))
+           & (F.col("event_id") > F.lit(wm["wm_eid"])))
+    )
+
+
+def _add_counters(current: DataFrame | None, counts: DataFrame,
+                  fresh: DataFrame, key: str) -> DataFrame:
+    """The next version of a watermarked counter table: ``counts`` (one
+    row per ``key``, BIGINT counters) added to the committed counters,
+    every row stamped with the max of the committed watermark and the
+    newest fresh (ts, event_id)."""
+    wm = fresh.agg(F.max(F.struct("ts", "event_id")).alias("m")).select(
+        F.col("m.ts").alias("wm_ts"), F.col("m.event_id").alias("wm_eid"))
+    if current is not None:
+        cols = [c for c in counts.columns if c != key]
+        counts = (
+            current.select(key, *cols).unionByName(counts)
+            .groupBy(key)
+            .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+        )
+        wm = (
+            wm.unionByName(current.select("wm_ts", "wm_eid").limit(1))
+            .agg(F.max(F.struct("wm_ts", "wm_eid")).alias("m"))
+            .select("m.wm_ts", "m.wm_eid")
+        )
+    return counts.crossJoin(F.broadcast(wm))
 
 
 def merge_wordcounts(batch_counts: DataFrame, table_dir: str,
                      epoch_id: int = 0) -> bool:
     """Fold one micro-batch's (token, count) into the running table:
-    additive on collision.  Returns False (and does nothing) when
-    ``epoch_id`` was already applied — additive merges MUST be guarded
-    this way under foreachBatch's at-least-once contract, or a replayed
-    epoch double-counts every token.
+    additive on collision, through ``fold_epoch`` (False when
+    ``epoch_id`` was already applied — without that guard a replayed
+    epoch would double-count every token)."""
+    def merge(current):
+        if current is None:
+            return batch_counts
+        return (current.unionByName(batch_counts)
+                .groupBy("token").agg(F.sum("count").alias("count")))
 
-    Crash-safe by versioned commit: epoch e's merge reads the last
-    COMMITTED version (the marker), writes ``table_dir/v{e}``, then
-    atomically renames the marker.  A crash anywhere before the rename
-    leaves the marker on the previous version, so the replay rebuilds
-    v{e} from the same committed input — idempotent, no double count, and
-    a partial v{e} is never read (the marker still points at v{e-1})."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch_counts.sparkSession
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = (
-            current.unionByName(batch_counts)
-            .groupBy("token")
-            .agg(F.sum("count").alias("count"))
-        )
-    else:
-        merged = batch_counts
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    # post-commit prune: keep the newly superseded version (live lazy
-    # readers), drop anything older
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+    return fold_epoch(batch_counts.sparkSession, table_dir, epoch_id, merge)
 
 
 def start_incremental_wordcounts(stream: DataFrame, table_dir: str,
@@ -160,10 +238,4 @@ def start_incremental_wordcounts(stream: DataFrame, table_dir: str,
         )
         merge_wordcounts(counts, table_dir, epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_wordcounts")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, body, checkpoint_dir, "incremental_wordcounts")

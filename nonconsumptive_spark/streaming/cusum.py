@@ -17,10 +17,10 @@ Event-time discipline: the monitor is APPEND-ONLY in event time — a
 batch row with d <= the last committed day is a replayed or late
 observation and is dropped (CUSUM is order-defined; re-folding an old
 day would corrupt every subsequent s_i).  Exactly-once across
-foreachBatch's at-least-once replays comes from the shared epoch guard +
-versioned-commit scheme (streaming/corpus.py): a crash anywhere before
-the marker rename leaves the previous version committed and the replay
-rebuilds the same rows from the same committed input.
+foreachBatch's at-least-once replays comes from the shared versioned
+commit (``streaming/corpus.fold_epoch``).  A committed series that is
+still empty (the upstream window count emits empty batches before its
+first window closes) is zero state, like no series at all.
 
 Scale notes: per-epoch work is O(committed series + batch) rows — the
 DAILY spine, not the event stream; the raw events aggregate to (d, c)
@@ -35,12 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+    committed_table, fold_epoch, start_fold)
 
 OUT_COLS = ("d", "c", "cum", "rmin", "rmax",
             "cusum_pos", "cusum_neg", "flagged")
@@ -86,30 +81,24 @@ def merge_cusum(batch_daily: DataFrame, table_dir: str, target_num: int,
                 target_den: int, h_scaled: int, epoch_id: int = 0) -> bool:
     """Fold one micro-batch of NEW days into the committed series.
     Returns False (no-op) when ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch_daily.sparkSession
-    current = committed_table(spark, table_dir)
-    if current is not None:
+    def merge(current):
         # state = the last committed row; the series table is day-spine
         # sized, so the 1-row collect is bounded by definition
-        last = current.orderBy(F.desc("d")).limit(1).collect()[0]
-        cum0, rmin0, rmax0 = last["cum"], last["rmin"], last["rmax"]
-        fresh = batch_daily.filter(F.col("d") > F.lit(last["d"]))
-    else:
-        cum0 = rmin0 = rmax0 = 0
-        fresh = batch_daily
-    extended = _extend(fresh.select("d", "c"), target_num, target_den,
-                       h_scaled, cum0, rmin0, rmax0)
-    merged = (current.select(*OUT_COLS).unionByName(extended)
-              if current is not None else extended)
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+        rows = (current.orderBy(F.desc("d")).limit(1).collect()
+                if current is not None else [])
+        if rows:
+            last = rows[0]
+            cum0, rmin0, rmax0 = last["cum"], last["rmin"], last["rmax"]
+            fresh = batch_daily.filter(F.col("d") > F.lit(last["d"]))
+        else:
+            cum0 = rmin0 = rmax0 = 0
+            fresh = batch_daily
+        extended = _extend(fresh.select("d", "c"), target_num, target_den,
+                           h_scaled, cum0, rmin0, rmax0)
+        return (current.select(*OUT_COLS).unionByName(extended)
+                if current is not None else extended)
+
+    return fold_epoch(batch_daily.sparkSession, table_dir, epoch_id, merge)
 
 
 def series(spark: SparkSession, table_dir: str) -> DataFrame | None:
@@ -121,15 +110,9 @@ def start_incremental_cusum(daily_stream: DataFrame, table_dir: str,
                             checkpoint_dir: str, target_num: int,
                             target_den: int, h_scaled: int):
     """foreachBatch wiring: fold each micro-batch of (d, c) rows into the
-    committed series, AvailableNow trigger (the backlog-draining form
-    every incremental sink here uses)."""
+    committed series, AvailableNow trigger (``start_fold``)."""
     def fold(batch, epoch_id):
         merge_cusum(batch, table_dir, target_num, target_den, h_scaled,
                     epoch_id=epoch_id)
 
-    return (
-        daily_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(daily_stream, fold, checkpoint_dir)

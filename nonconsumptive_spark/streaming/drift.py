@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from nonconsumptive_spark.operators import wordcount as wc
 from nonconsumptive_spark.operators.textstats import counts_jsd
 from nonconsumptive_spark.streaming.corpus import (
-    applied_epoch, committed_table, merge_wordcounts)
+    applied_epoch, committed_table, merge_wordcounts, start_fold)
 
 
 def _log_epoch(spark, log_dir: str, epoch_id: int, row: dict) -> None:
@@ -74,10 +74,4 @@ def start_drift_monitor(stream: DataFrame, table_dir: str, log_dir: str,
                 _log_epoch(spark, log_dir, epoch_id, rows[0].asDict())
         merge_wordcounts(counts, table_dir, epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("drift_monitor")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, body, checkpoint_dir, "drift_monitor")

@@ -16,8 +16,8 @@ Event-time discipline: append-only per user — a batch row at or before
 the user's last committed (ts, event_id) is a replayed or late
 observation and is dropped (EWMA is order-defined; re-folding an old
 event would corrupt every subsequent value).  Exactly-once across
-foreachBatch's at-least-once replays comes from the shared epoch guard +
-versioned-commit scheme (streaming/corpus.py).
+foreachBatch's at-least-once replays comes from the shared versioned
+commit (``streaming/corpus.fold_epoch``).
 
 Scale notes: per-epoch work is one state agg over the committed table,
 one broadcast-able state join onto the batch, and the same user-keyed
@@ -33,12 +33,7 @@ from pyspark.sql import functions as F
 
 from nonconsumptive_spark.operators.grouped import EWMA_ALPHA, EWMA_SPIKE
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+    committed_table, fold_epoch, start_fold)
 
 OUT_COLS = ("event_id", "user_id", "ts", "value",
             "raw_ewma", "ewma", "is_spike")
@@ -101,15 +96,17 @@ def merge_ewma(batch: DataFrame, table_dir: str,
     """Fold one micro-batch of (event_id, user_id, ts, value) rows into
     the committed per-event monitor table.  Returns False (no-op) when
     ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
     # The epoch guard only drops CROSS-epoch replays; an at-least-once
     # source can also duplicate a row WITHIN one micro-batch, and the
     # fold would count it twice — event_id is the series key, so one
     # row per id.
     batch = batch.dropDuplicates(["event_id"])
-    current = committed_table(batch.sparkSession, table_dir)
-    if current is not None:
+
+    def merge(current):
+        if current is None:
+            return _fold_chunk(
+                batch.withColumn("raw0", F.lit(None).cast("double")),
+                alpha, spike)
         state = (
             current.groupBy("user_id")
             .agg(F.max(F.struct("ts", "event_id", "raw_ewma")).alias("s"))
@@ -127,18 +124,10 @@ def merge_ewma(batch: DataFrame, table_dir: str,
             | ((F.col("ts") == F.col("last_ts"))
                & (F.col("event_id") > F.col("last_eid")))
         )
-    else:
-        fresh = batch.withColumn("raw0", F.lit(None).cast("double"))
-    folded = _fold_chunk(fresh, alpha, spike)
-    merged = (current.select(*OUT_COLS).unionByName(folded)
-              if current is not None else folded)
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+        return current.select(*OUT_COLS).unionByName(
+            _fold_chunk(fresh, alpha, spike))
+
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def monitor(spark: SparkSession, table_dir: str) -> DataFrame | None:
@@ -151,14 +140,8 @@ def start_incremental_ewma(event_stream: DataFrame, table_dir: str,
                            alpha: float = EWMA_ALPHA,
                            spike: float = EWMA_SPIKE):
     """foreachBatch wiring: fold each micro-batch of events into the
-    committed monitor, AvailableNow trigger (the backlog-draining form
-    every incremental sink here uses)."""
+    committed monitor, AvailableNow trigger (``start_fold``)."""
     def fold(batch, epoch_id):
         merge_ewma(batch, table_dir, alpha, spike, epoch_id=epoch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(event_stream, fold, checkpoint_dir)

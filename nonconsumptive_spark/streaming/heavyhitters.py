@@ -17,8 +17,10 @@ fold is
 
 where ``floor`` is the classic SpaceSaving minimum-count bound,
 denormalized onto every row so the scalar commits ATOMICALLY with the
-summary under the shared versioned-commit scheme (a sidecar would race
-the marker).  Guarantees carried by construction (asserted in tests):
+summary under the shared versioned commit
+(``streaming/corpus.fold_epoch``; a sidecar would race the marker).  A
+committed summary with no rows has floor 0, like no summary at all.
+Guarantees carried by construction (asserted in tests):
 
   * true_count <= est <= true_count + err,  err <= floor
   * any token with true count > floor is IN the summary — so with
@@ -41,12 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+    committed_table, fold_epoch, start_fold)
 
 
 def merge_heavy_hitters(batch_counts: DataFrame, table_dir: str,
@@ -54,53 +51,47 @@ def merge_heavy_hitters(batch_counts: DataFrame, table_dir: str,
     """Fold one micro-batch's exact (token, count) aggregate into the
     committed SpaceSaving summary.  Returns False (no-op) when
     ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch_counts.sparkSession
     batch = batch_counts.select(
         "token", F.col("count").cast("long").alias("cnt"))
-    current = committed_table(spark, table_dir)
-    if current is None:
-        merged = batch.select(
-            "token", F.col("cnt").alias("est"),
-            F.lit(0).cast("long").alias("err"),
-            F.lit(0).cast("long").alias("floor"),
-        )
-    else:
-        floor_col = F.max("floor").over(Window.partitionBy())
-        merged = (
-            current.select("token", "est", "err", "floor")
-            .join(batch, "token", "full_outer")
-            .withColumn("floor", floor_col)
-            .select(
-                "token",
-                F.when(
-                    F.col("est").isNotNull(),
-                    F.col("est") + F.coalesce("cnt", F.lit(0)),
-                ).otherwise(F.col("cnt") + F.col("floor"))
-                .cast("long").alias("est"),
-                F.coalesce("err", F.col("floor")).cast("long").alias("err"),
-                F.col("floor"),
+
+    def merge(current):
+        if current is None:
+            merged = batch.select(
+                "token", F.col("cnt").alias("est"),
+                F.lit(0).cast("long").alias("err"),
+                F.lit(0).cast("long").alias("floor"),
             )
+        else:
+            floor_col = F.coalesce(
+                F.max("floor").over(Window.partitionBy()), F.lit(0))
+            merged = (
+                current.select("token", "est", "err", "floor")
+                .join(batch, "token", "full_outer")
+                .withColumn("floor", floor_col)
+                .select(
+                    "token",
+                    F.when(
+                        F.col("est").isNotNull(),
+                        F.col("est") + F.coalesce("cnt", F.lit(0)),
+                    ).otherwise(F.col("cnt") + F.col("floor"))
+                    .cast("long").alias("est"),
+                    F.coalesce("err", F.col("floor")).cast("long").alias("err"),
+                    F.col("floor"),
+                )
+            )
+        # the cut + new floor: both over the bounded summary-sized frame
+        w = Window.orderBy(F.desc("est"), F.asc("token"))
+        ranked = merged.withColumn("rn", F.row_number().over(w))
+        new_floor = F.max(
+            F.when(F.col("rn") > cap, F.col("est")).otherwise(F.col("floor"))
+        ).over(Window.partitionBy())
+        return (
+            ranked.withColumn("floor", new_floor)
+            .filter(F.col("rn") <= cap)
+            .select("token", "est", "err", "floor")
         )
-    # the cut + new floor: both over the bounded summary-sized frame
-    w = Window.orderBy(F.desc("est"), F.asc("token"))
-    ranked = merged.withColumn("rn", F.row_number().over(w))
-    new_floor = F.max(
-        F.when(F.col("rn") > cap, F.col("est")).otherwise(F.col("floor"))
-    ).over(Window.partitionBy())
-    summary = (
-        ranked.withColumn("floor", new_floor)
-        .filter(F.col("rn") <= cap)
-        .select("token", "est", "err", "floor")
-    )
-    prev = applied_epoch(table_dir)
-    summary.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+
+    return fold_epoch(batch_counts.sparkSession, table_dir, epoch_id, merge)
 
 
 def heavy_hitters(spark: SparkSession, table_dir: str,
@@ -122,9 +113,4 @@ def start_incremental_heavy_hitters(counts_stream: DataFrame,
         agg = batch.groupBy("token").agg(F.count("*").alias("count"))
         merge_heavy_hitters(agg, table_dir, cap=cap, epoch_id=epoch_id)
 
-    return (
-        counts_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(counts_stream, fold, checkpoint_dir)

@@ -2,10 +2,11 @@
 registers into a committed running sketch — corpus-lifetime distinct-token
 cardinality at fixed 2^p memory, updated per epoch.
 
-Why this composes so cleanly with the versioned-commit infrastructure
-(``streaming/corpus.py``): register merge is MAX, which is monotone and
-idempotent — unlike the additive wordcount fold, replaying an epoch's
-registers into a state that already absorbed them cannot change anything.
+Why this composes so cleanly with the versioned commit
+(``streaming/corpus.fold_epoch``): register merge is MAX, which is
+monotone and idempotent — unlike the additive wordcount fold, replaying
+an epoch's registers into a state that already absorbed them cannot
+change anything.
 The epoch guard is still kept (skipping a replayed epoch skips its
 recompute, and uniform behavior across sinks keeps the at-least-once
 reasoning local), but correctness does not depend on it: the merge
@@ -21,63 +22,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nonconsumptive_spark.functions.text import tokenize
 from nonconsumptive_spark.operators.wordcount import (
     HLL_EST_SQL,
     HLL_M,
     hll_register_sums,
-    hll_registers,
 )
-from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+from nonconsumptive_spark.streaming.corpus import committed_table, fold_epoch
 
 
 def merge_hll_registers(batch_regs: DataFrame, table_dir: str,
                         epoch_id: int = 0) -> bool:
     """Fold one micro-batch's sparse (j, mr) registers into the running
-    sketch: max on collision.  Same versioned-commit shape as
-    ``merge_wordcounts`` (write v{e}, atomic marker rename, prune v{e-2});
-    returns False when ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch_regs.sparkSession
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = (
-            current.unionByName(batch_regs)
-            .groupBy("j")
-            .agg(F.max("mr").alias("mr"))
-        )
-    else:
-        merged = batch_regs
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+    sketch through ``fold_epoch``: max on collision; returns False when
+    ``epoch_id`` was already applied."""
+    def merge(current):
+        if current is None:
+            return batch_regs
+        return (current.unionByName(batch_regs)
+                .groupBy("j").agg(F.max("mr").alias("mr")))
 
-
-def start_incremental_hll(stream: DataFrame, table_dir: str,
-                          checkpoint_dir: str,
-                          text_col: str = "text"):
-    """Wire a document stream into a running HLL register table."""
-    def body(batch_df: DataFrame, epoch_id: int) -> None:
-        tok = batch_df.select(F.explode(tokenize(text_col)).alias("token"))
-        merge_hll_registers(hll_registers(tok), table_dir, epoch_id=epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_hll")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_epoch(batch_regs.sparkSession, table_dir, epoch_id, merge)
 
 
 def hll_estimate(spark: SparkSession, table_dir: str) -> DataFrame | None:
@@ -99,24 +63,13 @@ def merge_hll_registers_grouped(batch_regs: DataFrame, table_dir: str,
     """Grouped form: fold (grp, j, mr) register rows — "distinct users
     per event type, live".  Still a semilattice join (max per (grp, j)),
     so replay-idempotent; state is ≤ groups x HLL_M rows forever."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch_regs.sparkSession
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = (
-            current.unionByName(batch_regs)
-            .groupBy("grp", "j")
-            .agg(F.max("mr").alias("mr"))
-        )
-    else:
-        merged = batch_regs
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+    def merge(current):
+        if current is None:
+            return batch_regs
+        return (current.unionByName(batch_regs)
+                .groupBy("grp", "j").agg(F.max("mr").alias("mr")))
+
+    return fold_epoch(batch_regs.sparkSession, table_dir, epoch_id, merge)
 
 
 def hll_estimate_grouped(spark: SparkSession,

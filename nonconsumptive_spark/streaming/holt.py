@@ -14,9 +14,11 @@ SAME (day, n_events) frame through the SAME kernel.
 Event-time discipline: append-only — a batch row at or before the
 committed (ts, event_id) watermark is a replayed or late observation and
 is dropped (an already-merged day must never double-count).  Duplicate
-event_ids within one micro-batch are dropped before counting.
-Exactly-once across foreachBatch's at-least-once replays comes from the
-shared epoch guard + versioned-commit scheme (streaming/corpus.py).
+event_ids within one micro-batch are dropped before counting.  The
+watermark filter and the counter merge are the shared
+``streaming/corpus._fresh_events`` / ``_add_counters`` pair, and
+exactly-once across foreachBatch's at-least-once replays comes from the
+shared versioned commit (``streaming/corpus.fold_epoch``).
 
 Scale notes: per-epoch work is one day agg over the batch, one union
 with the committed spine, one day agg over the (tiny) union; state is
@@ -34,11 +36,11 @@ from nonconsumptive_spark.operators.grouped import (
     holt_from_day_counts,
 )
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
+    _add_counters,
+    _fresh_events,
     committed_table,
+    fold_epoch,
+    start_fold,
 )
 
 STATE_COLS = ("day", "n_events", "wm_ts", "wm_eid")
@@ -49,58 +51,15 @@ def merge_holt_days(batch: DataFrame, table_dir: str,
     """Fold one micro-batch of (event_id, ts) rows into the committed
     day-count spine.  Returns False (no-op) when ``epoch_id`` was
     already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    batch = batch.dropDuplicates(["event_id"])
-    current = committed_table(batch.sparkSession, table_dir)
-    if current is not None:
-        wm = current.agg(
-            F.max("wm_ts").alias("wm_ts"),
-            F.max("wm_eid").alias("wm_eid")).collect()[0]
-        if wm["wm_ts"] is None:  # committed spine exists but is empty
-            fresh = batch
-        else:
-            fresh = batch.filter(
-                (F.col("ts") > F.lit(wm["wm_ts"]))
-                | ((F.col("ts") == F.lit(wm["wm_ts"]))
-                   & (F.col("event_id") > F.lit(wm["wm_eid"])))
-            )
-    else:
-        fresh = batch
-    days = (
-        fresh.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .agg(F.count("*").cast("long").alias("n_events"))
-    )
-    new_wm = fresh.agg(
-        F.max(F.struct("ts", "event_id")).alias("m")).select(
-        F.col("m.ts").alias("nw_ts"), F.col("m.event_id").alias("nw_eid"))
-    if current is not None:
-        merged_days = (
-            current.select("day", "n_events")
-            .unionByName(days.select("day", "n_events"))
-            .groupBy("day")
-            .agg(F.sum("n_events").cast("long").alias("n_events"))
+    def merge(current):
+        fresh = _fresh_events(batch, current)
+        days = (
+            fresh.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+            .agg(F.count("*").cast("long").alias("n_events"))
         )
-        prev_wm = current.select(F.col("wm_ts").alias("nw_ts"),
-                                 F.col("wm_eid").alias("nw_eid")).limit(1)
-        wm_frame = (
-            new_wm.unionByName(prev_wm)
-            .agg(F.max(F.struct("nw_ts", "nw_eid")).alias("m"))
-            .select(F.col("m.nw_ts").alias("wm_ts"),
-                    F.col("m.nw_eid").alias("wm_eid"))
-        )
-    else:
-        merged_days = days.select("day", "n_events")
-        wm_frame = new_wm.select(F.col("nw_ts").alias("wm_ts"),
-                                 F.col("nw_eid").alias("wm_eid"))
-    merged = merged_days.crossJoin(F.broadcast(wm_frame))
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+        return _add_counters(current, days, fresh, "day")
+
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def monitor(spark: SparkSession, table_dir: str,
@@ -120,14 +79,8 @@ def monitor(spark: SparkSession, table_dir: str,
 def start_incremental_holt(event_stream: DataFrame, table_dir: str,
                            checkpoint_dir: str):
     """foreachBatch wiring: fold each micro-batch into the committed day
-    spine, AvailableNow trigger (the backlog-draining form every
-    incremental sink here uses)."""
+    spine, AvailableNow trigger (``start_fold``)."""
     def fold(batch, epoch_id):
         merge_holt_days(batch, table_dir, epoch_id=epoch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(event_stream, fold, checkpoint_dir)

@@ -30,7 +30,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nonconsumptive_spark.streaming.corpus import _commit_epoch, applied_epoch
+from nonconsumptive_spark.streaming.corpus import (
+    _commit_epoch, applied_epoch, start_fold)
 
 
 def _delta_dir(table_dir: str, epoch_id: int) -> Path:
@@ -92,13 +93,7 @@ def start_incremental_index(stream: DataFrame, table_dir: str,
         merge_postings(batch_df, table_dir, id_col, text_col,
                        epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_index")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, body, checkpoint_dir, "incremental_index")
 
 
 def live_phrase_search(spark: SparkSession, table_dir: str,

@@ -5,8 +5,8 @@ edges), at #groups-sized memory forever.
 
 Moments are ADDITIVE (like the wordcount fold, unlike HLL's max), so the
 epoch guard is load-bearing here: a replayed epoch must be skipped or it
-double-counts.  The versioned-commit scheme supplies that (same contract
-and tests as merge_wordcounts).
+double-counts.  ``streaming/corpus.fold_epoch`` supplies that (same
+contract and tests as merge_wordcounts).
 
 The read side (`welch_from_moments`) reuses the SAME mirrored Welch
 expressions the batch query interpolates (`queries/textstats.py`), so a
@@ -19,13 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+from nonconsumptive_spark.streaming.corpus import committed_table, fold_epoch
 
 
 def batch_moments(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -42,45 +36,13 @@ def merge_moments(batch: DataFrame, table_dir: str, epoch_id: int = 0) -> bool:
     """Fold one micro-batch's moment rows into the running table:
     componentwise sum on group collision.  Returns False (no-op) when
     ``epoch_id`` was already applied — the additive-merge guard."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch.sparkSession
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = (
-            current.unionByName(batch)
-            .groupBy("grp")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s").cast("long").alias("s"),
-                F.sum("ss").cast("long").alias("ss"),
-            )
-        )
-    else:
-        merged = batch
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+    def merge(current):
+        if current is None:
+            return batch
+        return current.unionByName(batch).groupBy("grp").agg(
+            *[F.sum(c).cast("long").alias(c) for c in ("n", "s", "ss")])
 
-
-def start_incremental_moments(stream: DataFrame, table_dir: str,
-                              checkpoint_dir: str, group_col: str,
-                              value_col: str):
-    """Wire a stream into a running per-group moment table."""
-    def body(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_moments(batch_moments(batch_df, group_col, value_col),
-                      table_dir, epoch_id=epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_moments")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def welch_from_moments(spark: SparkSession,

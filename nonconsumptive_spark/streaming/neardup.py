@@ -38,7 +38,8 @@ from nonconsumptive_spark.operators.dedup import (
     best_match,
     verify_pairs,
 )
-from nonconsumptive_spark.streaming.corpus import _commit_epoch, applied_epoch
+from nonconsumptive_spark.streaming.corpus import (
+    _commit_epoch, applied_epoch, start_fold)
 
 
 def neardup_flag_batch(batch_base: DataFrame, index: DataFrame | None,
@@ -106,8 +107,6 @@ def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
                          checkpoint_dir: str, threshold: float = 0.5,
                          id_col: str = "doc_id", text_col: str = "text"):
     """Wire a document stream into the incremental near-dup flagger."""
-    index_path = Path(index_dir)
-
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id <= applied_epoch(flags_dir):
             return  # replayed epoch: already committed, skip entirely
@@ -117,12 +116,7 @@ def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
         # read only COMMITTED epoch partitions of the index: a crashed
         # attempt's partial e{epoch} dir must not feed candidate lookup
         # (it would contain this very batch's own docs)
-        applied = applied_epoch(flags_dir)
-        committed = [
-            str(p) for p in sorted(index_path.glob("e*"))
-            if int(p.name[1:]) <= applied
-        ] if index_path.exists() else []
-        index = spark.read.parquet(*committed) if committed else None
+        index = read_index(spark, index_dir, flags_dir)
         flags = neardup_flag_batch(base, index, threshold, id_col)
         # per-epoch OVERWRITE, not a bare append: a crash between these
         # writes and the marker replays the epoch, and overwrite makes
@@ -130,14 +124,8 @@ def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
         # appending duplicate flag/index rows
         flags.write.mode("overwrite").parquet(f"{flags_dir}/e{epoch_id}")
         base.select(id_col, "shingles", "sig").write.mode("overwrite").parquet(
-            str(index_path / f"e{epoch_id}")
+            str(Path(index_dir) / f"e{epoch_id}")
         )
         _commit_epoch(flags_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("neardup_ingest")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, body, checkpoint_dir, "neardup_ingest")

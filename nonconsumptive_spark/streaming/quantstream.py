@@ -6,7 +6,7 @@ stream covers mean/variance but says nothing about tails).
 Design: values bucket into fixed integer-edge bins (edges are plan-time
 constants, the classic production choice for latency/size metrics whose
 dynamic range is known); per-epoch bin counts merge ADDITIVELY into the
-committed histogram under the versioned-commit scheme — the same
+committed histogram through ``streaming/corpus.fold_epoch`` — the same
 at-least-once discipline as the wordcount fold, epoch guard required.
 A quantile read is then exact-within-bin-resolution: find the first bin
 whose cumulative count crosses ceil(q·N) (integer arithmetic — the
@@ -24,13 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+from nonconsumptive_spark.streaming.corpus import committed_table, fold_epoch
 
 
 def bin_counts(batch: DataFrame, edges: list[float],
@@ -54,24 +48,13 @@ def merge_histogram(batch_bins: DataFrame, table_dir: str,
     """Fold one micro-batch's (bin, n) counts into the running
     histogram: additive on collision — MUST be epoch-guarded (a replayed
     epoch would double-count, the wordcount-fold rule)."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch_bins.sparkSession
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = (
-            current.unionByName(batch_bins)
-            .groupBy("bin").agg(F.sum("n").cast("long").alias("n"))
-        )
-    else:
-        merged = batch_bins
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(
-        str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+    def merge(current):
+        if current is None:
+            return batch_bins
+        return (current.unionByName(batch_bins)
+                .groupBy("bin").agg(F.sum("n").cast("long").alias("n")))
+
+    return fold_epoch(batch_bins.sparkSession, table_dir, epoch_id, merge)
 
 
 def quantiles(spark: SparkSession, table_dir: str, edges: list[float],

@@ -3,14 +3,11 @@ arbitrary batch code with an epoch id.  The upsert sink maintains a
 keyed running table (last-write-wins per key) under foreachBatch's
 at-least-once contract.
 
-Durability: versioned commit, same scheme as streaming/corpus.py — each
-apply reads the last COMMITTED version, writes a NEW version directory,
-then atomically renames the marker.  A crash anywhere before the rename
-leaves the marker (and every reader) on the previous version; the replay
-rebuilds the new version from the same committed input.  Upsert is
-idempotent per key, so even a replay applied twice converges — the
-versioning additionally guarantees readers never observe a half-written
-table, which a delete-then-overwrite of one directory cannot.
+Durability: every apply commits through ``streaming/corpus.fold_epoch``
+(versioned commit).  Upsert is idempotent per key, so even a replay
+applied twice converges — the versioning additionally guarantees readers
+never observe a half-written table, which a delete-then-overwrite of one
+directory cannot.
 """
 
 from __future__ import annotations
@@ -18,12 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+    applied_epoch, fold_epoch, start_fold)
 
 
 def upsert_parquet(batch_df: DataFrame, table_dir: str, keys: list[str],
@@ -31,23 +23,17 @@ def upsert_parquet(batch_df: DataFrame, table_dir: str, keys: list[str],
     """Batch-side upsert body (usable directly or from foreachBatch).
     Without an ``epoch_id`` the version counter simply advances by one
     per call (direct batch use); with one, replayed epochs are skipped."""
-    spark = batch_df.sparkSession
-    applied = applied_epoch(table_dir)
-    if epoch_id is not None and epoch_id <= applied:
-        return
-    version = epoch_id if epoch_id is not None else applied + 1
+    if epoch_id is None:
+        epoch_id = applied_epoch(table_dir) + 1
     dedup = batch_df.dropDuplicates(keys)  # last-write-wins inside a batch
-    current = committed_table(spark, table_dir)
-    if current is not None:
+
+    def merge(current):
+        if current is None:
+            return dedup
         kept = current.join(dedup.select(*keys), keys, "left_anti")
-        merged = kept.unionByName(dedup)
-    else:
-        merged = dedup
-    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, version)))
-    _commit_epoch(table_dir, version)
-    # keep the newly superseded version for live lazy readers; drop older
-    if applied >= 0:
-        _prune_versions(table_dir, applied)
+        return kept.unionByName(dedup)
+
+    fold_epoch(batch_df.sparkSession, table_dir, epoch_id, merge)
 
 
 def start_upsert_sink(stream: DataFrame, table_dir: str, keys: list[str],
@@ -57,10 +43,4 @@ def start_upsert_sink(stream: DataFrame, table_dir: str, keys: list[str],
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         upsert_parquet(batch_df, table_dir, keys, epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, body, checkpoint_dir, query_name)

@@ -17,8 +17,8 @@ merge is ``skyline(distinct(state ∪ skyline(batch)))``:
     over a superset implies dominance over the union — so pruning state
     eagerly is safe, no tombstones needed.
 
-Commits go through the versioned-commit scheme (streaming/corpus.py), so
-readers only ever observe a fully-written frontier.
+Commits go through ``streaming/corpus.fold_epoch``, so readers only ever
+observe a fully-written frontier.
 """
 
 from __future__ import annotations
@@ -27,37 +27,23 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nonconsumptive_spark.operators.skyline import skyline
 from nonconsumptive_spark.streaming.corpus import (
-    _commit_epoch,
-    _prune_versions,
-    _version_dir,
-    applied_epoch,
-    committed_table,
-)
+    committed_table, fold_epoch, start_fold)
 
 
 def merge_skyline(batch: DataFrame, table_dir: str, xcol: str, ycol: str,
                   epoch_id: int = 0) -> bool:
     """Fold one micro-batch into the committed frontier.  Returns False
     (no-op) when ``epoch_id`` was already applied."""
-    if epoch_id <= applied_epoch(table_dir):
-        return False
-    spark = batch.sparkSession
     # batch-local skyline first: the state join sees frontier-sized
     # frames on both sides, never the raw batch
     incoming = skyline(batch, xcol, ycol)
-    current = committed_table(spark, table_dir)
-    if current is not None:
-        merged = skyline(
-            current.unionByName(incoming).distinct(), xcol, ycol
-        )
-    else:
-        merged = incoming.distinct()
-    prev = applied_epoch(table_dir)
-    merged.write.mode("overwrite").parquet(str(_version_dir(table_dir, epoch_id)))
-    _commit_epoch(table_dir, epoch_id)
-    if prev >= 0:
-        _prune_versions(table_dir, prev)
-    return True
+
+    def merge(current):
+        if current is None:
+            return incoming.distinct()
+        return skyline(current.unionByName(incoming).distinct(), xcol, ycol)
+
+    return fold_epoch(batch.sparkSession, table_dir, epoch_id, merge)
 
 
 def start_incremental_skyline(stream: DataFrame, table_dir: str,
@@ -66,13 +52,7 @@ def start_incremental_skyline(stream: DataFrame, table_dir: str,
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         merge_skyline(batch_df, table_dir, xcol, ycol, epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_skyline")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(stream, body, checkpoint_dir, "incremental_skyline")
 
 
 def frontier(spark: SparkSession, table_dir: str) -> DataFrame | None:

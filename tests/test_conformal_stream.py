@@ -112,11 +112,11 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, calib,
             def boom(table_dir, epoch_id):
                 raise RuntimeError("injected crash")
 
-            monkeypatch.setattr(cf, "_commit_epoch", boom)
+            monkeypatch.setattr(cp, "_commit_epoch", boom)
             with pytest.raises(RuntimeError):
                 cf.merge_coverage(_events(spark, lo, hi), table,
                                   calib_rows, q_hat_q, epoch_id=e)
-            monkeypatch.setattr(cf, "_commit_epoch", real_commit)
+            monkeypatch.setattr(cp, "_commit_epoch", real_commit)
         assert cf.merge_coverage(_events(spark, lo, hi), table,
                                  calib_rows, q_hat_q, epoch_id=e) is True
     assert _out_rows(cf.monitor(spark, table)

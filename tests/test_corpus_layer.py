@@ -501,6 +501,20 @@ def test_flat_catalog_export(spark, corpus_dir, tmp_path):
     fast_cols = family["fastcat"].columns
     assert "nc:id" in fast_cols and "year" in fast_cols
 
+    # S11 export writes one parquet table per family member
+    out = tmp_path / "flat"
+    written = writers.export_flat_catalog(fixed, out)
+    assert written == sorted(family)
+    assert sorted(p.name for p in out.iterdir()) == written
+    assert spark.read.parquet(str(out / "keywords")).count() == 4
+    # S12 export: the @id -> nc:id pairs, read back unchanged
+    writers.export_id_index(fixed, tmp_path / "ids")
+    back = spark.read.parquet(str(tmp_path / "ids"))
+    assert back.columns == ["@id", "nc:id"]
+    pairs = sorted(map(tuple, cat.select("@id", "nc:id").collect()))
+    assert len(pairs) == 3
+    assert sorted(map(tuple, back.collect())) == pairs
+
 
 def test_export_stacked_layout(spark, corpus_dir, tmp_path):
     cs = CorpusSession(spark, texts=str(corpus_dir / "texts"),

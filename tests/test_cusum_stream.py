@@ -36,9 +36,15 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_chunked_fold_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize("chunks", [
+    [(0, 4), (4, 5), (5, 11), (11, 15)],
+    # a windowed upstream emits an empty batch before its first window
+    # closes: epoch 0 commits an empty series, which is zero state
+    [(0, 0), (0, 4), (4, 5), (5, 11), (11, 15)],
+], ids=["plain", "empty_first_epoch"])
+def test_chunked_fold_equals_batch(spark, tmp_path, chunks):
     table = str(tmp_path / "cusum")
-    for e, (lo, hi) in enumerate([(0, 4), (4, 5), (5, 11), (11, 15)]):
+    for e, (lo, hi) in enumerate(chunks):
         assert merge_cusum(_daily(spark, lo, hi), table, *TARGET, H,
                            epoch_id=e) is True
     batch = cusum_series(_daily(spark, 0, len(COUNTS)), *TARGET, H)
@@ -73,15 +79,13 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, crash_epoch,
         if e == crash_epoch:
             # crash AFTER the version write, BEFORE the marker rename —
             # the at-least-once worst case foreachBatch can replay into
-            import nonconsumptive_spark.streaming.cusum as cs
-
             def boom(table_dir, epoch_id):
                 raise RuntimeError("injected crash")
 
-            monkeypatch.setattr(cs, "_commit_epoch", boom)
+            monkeypatch.setattr(cp, "_commit_epoch", boom)
             with pytest.raises(RuntimeError):
                 merge_cusum(_daily(spark, lo, hi), table, *TARGET, H, e)
-            monkeypatch.setattr(cs, "_commit_epoch", real_commit)
+            monkeypatch.setattr(cp, "_commit_epoch", real_commit)
         # the replay (and every later epoch) folds normally
         assert merge_cusum(_daily(spark, lo, hi), table, *TARGET, H,
                            epoch_id=e) is True

@@ -73,15 +73,13 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, crash_epoch,
         if e == crash_epoch:
             # crash AFTER the version write, BEFORE the marker rename —
             # the at-least-once worst case foreachBatch can replay into
-            import nonconsumptive_spark.streaming.ewma as ew
-
             def boom(table_dir, epoch_id):
                 raise RuntimeError("injected crash")
 
-            monkeypatch.setattr(ew, "_commit_epoch", boom)
+            monkeypatch.setattr(cp, "_commit_epoch", boom)
             with pytest.raises(RuntimeError):
                 merge_ewma(_events(spark, lo, hi), table, epoch_id=e)
-            monkeypatch.setattr(ew, "_commit_epoch", real_commit)
+            monkeypatch.setattr(cp, "_commit_epoch", real_commit)
         assert merge_ewma(_events(spark, lo, hi), table, epoch_id=e) is True
     assert _out_rows(monitor(spark, table)) == _out_rows(
         ewma_anomalies(_events(spark, 0, 60)))

@@ -41,8 +41,8 @@ def _truth(upto):
     return true
 
 
-def _fold_all(spark, table, cap=CAP):
-    for e, epoch in enumerate(EPOCHS):
+def _fold_all(spark, table, cap=CAP, epochs=EPOCHS):
+    for e, epoch in enumerate(epochs):
         assert merge_heavy_hitters(_counts(spark, epoch), table,
                                    cap=cap, epoch_id=e) is True
 
@@ -66,9 +66,12 @@ def test_bounds_and_frequent_items_guarantee(spark, tmp_path):
     assert {"the", "of"} <= set(rows)
 
 
-def test_exact_when_cap_exceeds_vocabulary(spark, tmp_path):
+# an empty first epoch commits a summary with no rows, whose floor is 0
+@pytest.mark.parametrize("epochs", [EPOCHS, [{}] + EPOCHS],
+                         ids=["plain", "empty_first_epoch"])
+def test_exact_when_cap_exceeds_vocabulary(spark, tmp_path, epochs):
     table = str(tmp_path / "hh")
-    _fold_all(spark, table, cap=100)
+    _fold_all(spark, table, cap=100, epochs=epochs)
     rows = {r["token"]: r for r in heavy_hitters(spark, table).collect()}
     true = _truth(3)
     assert set(rows) == set(true)
@@ -89,8 +92,6 @@ def test_replay_is_refused(spark, tmp_path):
 @pytest.mark.parametrize("crash_epoch", [0, 1, 2])
 def test_crash_before_commit_replays_exactly(spark, tmp_path, monkeypatch,
                                              crash_epoch):
-    import nonconsumptive_spark.streaming.heavyhitters as hh
-
     clean = str(tmp_path / "clean")
     crashed = str(tmp_path / "crashed")
     _fold_all(spark, clean)
@@ -99,12 +100,12 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, monkeypatch,
     for e, epoch in enumerate(EPOCHS):
         if e == crash_epoch:
             monkeypatch.setattr(
-                hh, "_commit_epoch",
+                cp, "_commit_epoch",
                 lambda *a: (_ for _ in ()).throw(RuntimeError("crash")))
             with pytest.raises(RuntimeError):
                 merge_heavy_hitters(_counts(spark, epoch), crashed,
                                     cap=CAP, epoch_id=e)
-            monkeypatch.setattr(hh, "_commit_epoch", real)
+            monkeypatch.setattr(cp, "_commit_epoch", real)
         assert merge_heavy_hitters(_counts(spark, epoch), crashed,
                                    cap=CAP, epoch_id=e) is True
     a = sorted(map(tuple, heavy_hitters(spark, clean).collect()))

@@ -74,15 +74,13 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, crash_epoch,
     real_commit = cp._commit_epoch
     for e, (lo, hi) in enumerate(chunks):
         if e == crash_epoch:
-            import nonconsumptive_spark.streaming.holt as hs
-
             def boom(table_dir, epoch_id):
                 raise RuntimeError("injected crash")
 
-            monkeypatch.setattr(hs, "_commit_epoch", boom)
+            monkeypatch.setattr(cp, "_commit_epoch", boom)
             with pytest.raises(RuntimeError):
                 merge_holt_days(_events(spark, lo, hi), table, epoch_id=e)
-            monkeypatch.setattr(hs, "_commit_epoch", real_commit)
+            monkeypatch.setattr(cp, "_commit_epoch", real_commit)
         assert merge_holt_days(_events(spark, lo, hi), table,
                                epoch_id=e) is True
     assert _out_rows(monitor(spark, table)) == _out_rows(

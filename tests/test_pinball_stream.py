@@ -108,11 +108,11 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, calib,
             def boom(table_dir, epoch_id):
                 raise RuntimeError("injected crash")
 
-            monkeypatch.setattr(pb, "_commit_epoch", boom)
+            monkeypatch.setattr(cp, "_commit_epoch", boom)
             with pytest.raises(RuntimeError):
                 pb.merge_loss(_events(spark, lo, hi), table, calib,
                               epoch_id=e)
-            monkeypatch.setattr(pb, "_commit_epoch", real_commit)
+            monkeypatch.setattr(cp, "_commit_epoch", real_commit)
         assert pb.merge_loss(_events(spark, lo, hi), table, calib,
                              epoch_id=e) is True
     assert _out_rows(pb.monitor(spark, table, calib)

@@ -84,7 +84,6 @@ def test_replay_is_refused(spark, tmp_path):
 @pytest.mark.parametrize("crash_epoch", [0, 1, 2])
 def test_crash_before_commit_replays_exactly(spark, tmp_path, monkeypatch,
                                              crash_epoch):
-    import nonconsumptive_spark.streaming.quantstream as qst
     from nonconsumptive_spark.streaming import corpus as cp
 
     ev = _events(spark)
@@ -100,11 +99,11 @@ def test_crash_before_commit_replays_exactly(spark, tmp_path, monkeypatch,
         part = ev.filter((ev.event_id >= lo) & (ev.event_id < hi))
         if e == crash_epoch:
             monkeypatch.setattr(
-                qst, "_commit_epoch",
+                cp, "_commit_epoch",
                 lambda *a: (_ for _ in ()).throw(RuntimeError("crash")))
             with pytest.raises(RuntimeError):
                 merge_histogram(bin_counts(part, EDGES), crashed, epoch_id=e)
-            monkeypatch.setattr(qst, "_commit_epoch", real)
+            monkeypatch.setattr(cp, "_commit_epoch", real)
         assert merge_histogram(bin_counts(part, EDGES), crashed,
                                epoch_id=e) is True
     a = sorted(map(tuple, spark.read.parquet(f"{clean}/v2").collect()))

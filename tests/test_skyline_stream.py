@@ -93,20 +93,20 @@ def test_skyline_kill_points_converge(spark, tmp_path, monkeypatch,
     (Unlike the additive wordcount fold, the skyline merge is a lattice
     reduction, so even a DOUBLE-applied epoch could not corrupt state —
     this test pins the stronger end-state equality anyway.)"""
-    from nonconsumptive_spark.streaming import skylinestream as ss
+    from nonconsumptive_spark.streaming import corpus as cp
 
     table = str(tmp_path / "sky")
     target = "_commit_epoch" if kill_point == "marker" else "_prune_versions"
-    real = getattr(ss, target)
+    real = getattr(cp, target)
 
     for e, rows in enumerate(EPOCHS):
         if e == kill_epoch:
             def dying(*a, **k):
                 raise _Boom()
-            monkeypatch.setattr(ss, target, dying)
+            monkeypatch.setattr(cp, target, dying)
             with contextlib.suppress(_Boom):
                 merge_skyline(_pts(spark, rows), table, "x", "y", epoch_id=e)
-            monkeypatch.setattr(ss, target, real)
+            monkeypatch.setattr(cp, target, real)
             merge_skyline(_pts(spark, rows), table, "x", "y", epoch_id=e)
         else:
             assert merge_skyline(_pts(spark, rows), table, "x", "y",

@@ -398,18 +398,18 @@ def test_upsert_kill_points_exactly_once(
     def batch(e):
         return spark.createDataFrame([("k", e), (f"k{e}", e)], ["key", "val"])
 
-    # sinks.py imports the helpers into its own namespace — patch there
+    # the commit runs in corpus.fold_epoch — patch there
     target = "_commit_epoch" if kill_point == "marker" else "_prune_versions"
-    real = getattr(s, target)
+    real = getattr(c, target)
 
     for e in range(n_epochs):
         if e == kill_epoch:
             def dying(*a, **k):
                 raise _Boom()
-            monkeypatch.setattr(s, target, dying)
+            monkeypatch.setattr(c, target, dying)
             with contextlib.suppress(_Boom):
                 s.upsert_parquet(batch(e), table, ["key"], epoch_id=e)
-            monkeypatch.setattr(s, target, real)
+            monkeypatch.setattr(c, target, real)
             s.upsert_parquet(batch(e), table, ["key"], epoch_id=e)
         else:
             s.upsert_parquet(batch(e), table, ["key"], epoch_id=e)
