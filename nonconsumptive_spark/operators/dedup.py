@@ -346,7 +346,13 @@ def verify_pairs(pairs: DataFrame, threshold: float, name: str,
     intersection would run twice per candidate row (condition +
     projection — the built-in analog of a duplicated UDF).  The
     checkpointed frame is |candidates| rows of ids and ints; the filter
-    then runs on integers."""
+    then runs on integers.
+
+    The barrier makes the caller eager: building even the lazy
+    ``localCheckpoint`` executes the physical plan, and AQE runs every
+    shuffle and broadcast stage under it then (4 jobs inside
+    ``q_minhash_dedup_pairs``' ``spark_fn`` at sf0.001, 2 with AQE off).
+    It stays: without it the intersection runs twice per candidate."""
     counts = materialize_once(
         pairs.select(
             a, b,

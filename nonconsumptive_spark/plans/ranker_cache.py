@@ -16,9 +16,10 @@ Policy (stated here once; callers point at it):
   * key = (applicationId, stamps of every source, tag, params).  A
     source is a frame — stamped by its canonicalized analyzed plan plus
     every input file's (path, mtime_ns, size) — or a local path, stamped
-    by (realpath, mtime_ns, size) alone, so a hit costs a stat rather
-    than a table load.  The plan tells apart two frames over the same
-    files (a projection must never hit the full-corpus entry);
+    by (realpath, mtime_ns, size) alone (a directory by that of every
+    data file under it), so a hit costs a stat rather than a table
+    load.  The plan tells apart two frames over the same files (a
+    projection must never hit the full-corpus entry);
     canonicalization normalizes expression ids, so two loads of one
     table share an entry.  A corpus rewrite changes the stat and misses.
   * a source that cannot be stamped (no input files, a remote URI, an
@@ -33,6 +34,15 @@ Policy (stated here once; callers point at it):
     ContextCleaner once the frame is unreachable and the JVM collects
     garbage (``unpersist`` does not free them); under the parquet policy
     the files stay under the policy root, as for any ``materialize_once``.
+  * inferred parquet schemas (``shared_schema``, the memo behind
+    ``sources.readers.read_parquet`` and so behind every ``queries.load``)
+    live in a map of their own under the same lock, keyed by (applicationId,
+    the path's stamps, the reader confs that change an inferred type), so
+    they never take one of the frame slots: a session that loads every
+    sf table keeps its token-spine frames.  A hit reads with the stored
+    schema and launches no inference job; a rewritten, added or removed
+    data file changes the stamps and infers again.  The map is an LRU of
+    ``_MAX_SCHEMAS`` schemas; an evicted one costs one inference.
   * nothing persists across processes: a cold process pays one build.
     The durable cross-process cache is ``CorpusSession``'s
     ``CheckpointCache``, kept separate by the round-8 policy ruling.
@@ -47,25 +57,30 @@ from typing import Callable, Sequence
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 _MAX_ENTRIES = 12
 _CACHE: "OrderedDict[tuple, object]" = OrderedDict()
+_MAX_SCHEMAS = 64
+_SCHEMAS: "OrderedDict[tuple, StructType]" = OrderedDict()
 # store access is locked (q_kmeans_elbow materializes from worker threads);
 # builders run OUTSIDE the lock — a racing duplicate build is harmless
 # (result-identical by construction, last write wins)
 _LOCK = threading.Lock()
 
 
-def file_stamp(path: str):
-    """(realpath, mtime_ns, size) of a local file or ``file:`` URI; None
-    for a remote URI or a path that cannot be stat-ed."""
+def _local_path(path: str) -> str | None:
+    """The realpath of a local path or ``file:`` URI; None for a remote URI."""
     if path.startswith("file://"):
         path = path[len("file://"):]
     elif path.startswith("file:"):
         path = path[len("file:"):]
     if "://" in path:
         return None
-    path = os.path.realpath(path)
+    return os.path.realpath(path)
+
+
+def _stat(path: str):
     try:
         st = os.stat(path)
     except OSError:
@@ -73,10 +88,45 @@ def file_stamp(path: str):
     return (path, st.st_mtime_ns, st.st_size)
 
 
+def file_stamp(path: str):
+    """(realpath, mtime_ns, size) of a local file or ``file:`` URI; None
+    for a remote URI or a path that cannot be stat-ed."""
+    path = _local_path(path)
+    return None if path is None else _stat(path)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file listing skips these names (``_SUCCESS``, ``.crc``,
+    ``_temporary``) but keeps ``_col=v`` partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def path_stamps(path: str):
+    """Stamps of a local path: ``[file_stamp]`` of a file, or the stamp
+    of every data file under a directory, so a rewritten, added or
+    removed file changes them.  None for a remote URI, a path that
+    cannot be stat-ed, or a directory with no data file."""
+    path = _local_path(path)
+    if path is None:
+        return None
+    if not os.path.isdir(path):
+        stamp = _stat(path)
+        return None if stamp is None else [stamp]
+    stamps = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for f in sorted(files):
+            if not _hidden(f):
+                stamp = _stat(os.path.join(root, f))
+                if stamp is None:
+                    return None
+                stamps.append(stamp)
+    return stamps or None
+
+
 def _source_stamps(src: DataFrame | str):
     if isinstance(src, str):
-        stamp = file_stamp(src)
-        return None if stamp is None else [stamp]
+        return path_stamps(src)
     try:
         plan = src._jdf.queryExecution().analyzed().canonicalized().toString()
         files = src.inputFiles()
@@ -150,6 +200,31 @@ def shared_value(tag: str, params: tuple, sources: Sequence[DataFrame | str],
     return _shared((base, tag, params), compute)
 
 
+def shared_schema(path: str, params: tuple,
+                  read: Callable[[StructType | None], DataFrame]) -> DataFrame:
+    """``read(schema)`` for the schema an earlier ``read(None)`` inferred
+    over the same (session, stamps of ``path``, params); on a miss, or
+    when ``path`` cannot be stamped, ``read(None)`` itself.  ``params``
+    carries the reader confs that change an inferred type."""
+    base = _key([path])
+    if base is None:
+        return read(None)
+    key = (base, params)
+    with _LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return read(schema)
+    df = read(None)
+    with _LOCK:
+        _SCHEMAS[key] = df.schema
+        if len(_SCHEMAS) > _MAX_SCHEMAS:
+            _SCHEMAS.popitem(last=False)
+    return df
+
+
 def clear_session_cache() -> None:
     with _LOCK:
         _CACHE.clear()
+        _SCHEMAS.clear()

@@ -43,13 +43,22 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a test table.  The driver's ``events.parquet`` carries
     nanosecond-precision timestamps, which Spark's parquet reader rejects;
     read them as raw int64 nanos and truncate to microseconds (exactly what
-    DuckDB's reader does, so the oracle agrees)."""
-    path = f"{sf_dir}/{table}.parquet"
+    DuckDB's reader does, so the oracle agrees).
+
+    ``nanosAsLong`` is set before ANY table is read, not only events, so
+    it is constant over the session: no other sf table has a nanosecond
+    column, and the schema memo below is keyed by the flag, so a flag
+    that flipped at the first events load would miss every table read
+    before it once more.  The read is ``sources.readers.read_parquet``:
+    each table's schema is inferred once per session and file state, and
+    a later load launches no Spark job."""
+    from nonconsumptive_spark.sources.readers import NANOS_AS_LONG, read_parquet
+
+    spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, f"{sf_dir}/{table}.parquet")
     if table == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         # NO fan-out here: events queries are window/agg-shaped, so their
@@ -58,7 +67,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # events_session 0.57 -> 1.0s, decayed_engagement 0.23 -> 0.66s;
         # behavior_pairs, the one CPU-heavy scan, was a wash).
         return df
-    df = spark.read.parquet(path)
     if table in ("documents", "embeddings"):
         df = _fan_out(spark, df)
     return df

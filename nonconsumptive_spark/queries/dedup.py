@@ -135,6 +135,8 @@ def q_lsh_candidates(spark, sf_dir):
         "would diverge for j in [0.49995, 0.5)).",
 )
 def q_minhash_dedup_pairs(spark, sf_dir):
+    """Eager at plan time by design: ``verify_pairs``' checkpoint barrier
+    runs the signature and band-join stages when the frame is built."""
     return dd.minhash_dedup_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
 
 

@@ -197,11 +197,32 @@ def read_feather_catalog(spark: SparkSession, path: str) -> DataFrame:
         return spark.createDataFrame(tb.to_pandas())
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per session
+    and file state: later reads of the unchanged path pass the stored
+    schema and launch no footer-reading job (the reference likewise skips
+    re-inference of its own typed caches, ``feather_is_nonconsumptive``).
+    The memo is the session cache's (``plans/ranker_cache.shared_schema``);
+    its key carries ``nanosAsLong``, which changes the type inferred for
+    a nanosecond timestamp."""
+    from nonconsumptive_spark.plans.ranker_cache import shared_schema
+
+    def read(schema):
+        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+    return shared_schema(path, (spark.conf.get(NANOS_AS_LONG, "false"),), read)
+
+
 def read_parquet_bookstacks(spark: SparkSession, path: str) -> DataFrame:
     """S7: directory of parquet files = pre-partitioned corpus; lexicographic
     file order defines doc order (reference bookstack.py:123-127); adds
-    ``nc:id`` and a ``stack`` column derived from the source file."""
-    df = spark.read.parquet(path).withColumn(
+    ``nc:id`` and a ``stack`` column derived from the source file.  The
+    directory's schema is inferred once per session and file state
+    (``read_parquet``)."""
+    df = read_parquet(spark, path).withColumn(
         "stack",
         F.regexp_extract(F.input_file_name(), r"([^/]+)\.parquet$", 1),
     )

@@ -109,13 +109,17 @@ def live_phrase_search(spark: SparkSession, table_dir: str,
     return phrase_search_indexed(idx, phrase, id_col=id_col)
 
 
+def _bases(table_dir: str) -> dict[Path, str]:
+    """Every ``base=*`` directory and the text after its ``=``."""
+    return {p: p.name.split("=", 1)[1] for p in Path(table_dir).glob("base=*")
+            if p.is_dir()}
+
+
 def _base_epoch(table_dir: str) -> int:
-    """Highest committed base compaction (-1 if none)."""
-    bases = [
-        int(p.name.split("=", 1)[1]) for p in Path(table_dir).glob("base=*")
-        if p.is_dir() and p.name.split("=", 1)[1].isdigit()
-    ]
-    return max(bases, default=-1)
+    """Highest committed base compaction (-1 if none); an uncommitted
+    ``base=N.tmp`` is not one."""
+    return max((int(e) for e in _bases(table_dir).values() if e.isdigit()),
+               default=-1)
 
 
 def optimize_index(spark: SparkSession, table_dir: str,
@@ -126,9 +130,11 @@ def optimize_index(spark: SparkSession, table_dir: str,
 
       1. write the union to ``base={applied}.tmp`` (invisible);
       2. atomic rename to ``base={applied}`` — the commit point;
-      3. delete superseded deltas and older bases — a crash mid-delete
-         leaves garbage that readers already ignore (``committed_index``
-         reads only epochs ABOVE the newest base).
+      3. delete superseded deltas, older bases and any ``base=N.tmp``
+         left at or below ``applied`` by a crash before an earlier
+         rename — a crash mid-delete leaves garbage that readers already
+         ignore (``committed_index`` reads only epochs ABOVE the newest
+         base).
 
     Returns False when there is nothing to compact."""
     import shutil
@@ -148,7 +154,9 @@ def optimize_index(spark: SparkSession, table_dir: str,
     for p in Path(table_dir).glob("epoch=*"):
         if p.is_dir() and int(p.name.split("=", 1)[1]) <= applied:
             shutil.rmtree(p, ignore_errors=True)
-    for p in Path(table_dir).glob("base=*"):
-        if p.is_dir() and int(p.name.split("=", 1)[1]) < applied:
+    for p, e in _bases(table_dir).items():
+        stale = (int(e) < applied if e.isdigit() else
+                 e.endswith(".tmp") and e[:-4].isdigit() and int(e[:-4]) <= applied)
+        if stale:
             shutil.rmtree(p, ignore_errors=True)
     return True

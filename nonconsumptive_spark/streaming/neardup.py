@@ -31,6 +31,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nonconsumptive_spark.operators.dedup import (
     _band_rows,
@@ -38,6 +39,7 @@ from nonconsumptive_spark.operators.dedup import (
     best_match,
     verify_pairs,
 )
+from nonconsumptive_spark.plans.checkpoint import _nullable
 from nonconsumptive_spark.streaming.corpus import (
     _commit_epoch, applied_epoch, start_fold)
 
@@ -91,16 +93,24 @@ def _committed_epoch_dirs(root: Path, marker_dir: str) -> list[str]:
     return [str(p) for p in sorted(root.glob("e*")) if int(p.name[1:]) <= applied]
 
 
+def _read_committed(spark, root: str, flags_dir: str,
+                    schema: StructType | None = None) -> DataFrame | None:
+    """The committed ``e*`` dirs under ``root``, read with ``schema`` when
+    the caller knows it (no inference job) or inferred otherwise."""
+    dirs = _committed_epoch_dirs(Path(root), flags_dir)
+    if not dirs:
+        return None
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(*dirs)
+
+
 def read_flags(spark, flags_dir: str) -> DataFrame | None:
     """Committed flag rows (crashed, uncommitted epochs invisible)."""
-    dirs = _committed_epoch_dirs(Path(flags_dir), flags_dir)
-    return spark.read.parquet(*dirs) if dirs else None
+    return _read_committed(spark, flags_dir, flags_dir)
 
 
 def read_index(spark, index_dir: str, flags_dir: str) -> DataFrame | None:
     """Committed signature-index rows (commit marker lives with flags)."""
-    dirs = _committed_epoch_dirs(Path(index_dir), flags_dir)
-    return spark.read.parquet(*dirs) if dirs else None
+    return _read_committed(spark, index_dir, flags_dir)
 
 
 def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
@@ -113,19 +123,20 @@ def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
         spark = batch_df.sparkSession
         base = _sig_base(batch_df, id_col, text_col, keep_shingles=True,
                          materialize=True)
+        entries = base.select(id_col, "shingles", "sig")
         # read only COMMITTED epoch partitions of the index: a crashed
         # attempt's partial e{epoch} dir must not feed candidate lookup
-        # (it would contain this very batch's own docs)
-        index = read_index(spark, index_dir, flags_dir)
+        # (it would contain this very batch's own docs).  Every epoch
+        # wrote ``entries``' schema, so it is read back with that schema
+        # made nullable (checkpoint._read_written's rule): no inference job
+        index = _read_committed(spark, index_dir, flags_dir, _nullable(entries.schema))
         flags = neardup_flag_batch(base, index, threshold, id_col)
         # per-epoch OVERWRITE, not a bare append: a crash between these
         # writes and the marker replays the epoch, and overwrite makes
         # the replay rewrite the same epoch partition instead of
         # appending duplicate flag/index rows
         flags.write.mode("overwrite").parquet(f"{flags_dir}/e{epoch_id}")
-        base.select(id_col, "shingles", "sig").write.mode("overwrite").parquet(
-            str(Path(index_dir) / f"e{epoch_id}")
-        )
+        entries.write.mode("overwrite").parquet(str(Path(index_dir) / f"e{epoch_id}"))
         _commit_epoch(flags_dir, epoch_id)
 
     return start_fold(stream, body, checkpoint_dir, "neardup_ingest")

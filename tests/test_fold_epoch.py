@@ -100,3 +100,36 @@ def test_lazy_reader_survives_exactly_one_commit(spark, tmp_path):
     with pytest.raises(Exception, match="FILE_NOT_EXIST"):
         reader.collect()  # two commits later its files are gone
     assert _rows(spark, table) == _expected(3)
+
+
+def test_optimize_index_recovers_from_crash_before_rename(spark, tmp_path, monkeypatch):
+    """The append-only half of the commit scheme (streaming/indexstream):
+    a compaction that crashes between its base write and the rename
+    leaves ``base=0.tmp``; after one more committed epoch the next
+    compaction commits a new base and removes the stale tmp dir."""
+    from pathlib import Path
+
+    from nonconsumptive_spark.streaming import indexstream as ix
+
+    table = str(tmp_path / "idx")
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def postings():
+        return sorted(tuple(r) for r in ix.committed_index(spark, table).collect())
+
+    assert ix.merge_postings(docs([(0, "a b a")]), table, epoch_id=0) is True
+    monkeypatch.setattr(Path, "rename", _boom)
+    with pytest.raises(RuntimeError):
+        ix.optimize_index(spark, table)
+    monkeypatch.undo()
+    assert (tmp_path / "idx" / "base=0.tmp").is_dir()
+    assert ix._base_epoch(table) == -1  # the tmp dir is not a base
+    assert ix.merge_postings(docs([(1, "b c")]), table, epoch_id=1) is True
+    before = postings()
+    assert ix.optimize_index(spark, table) is True
+    assert sorted(p.name for p in (tmp_path / "idx").iterdir()
+                  if p.name.startswith(("base=", "epoch="))) == ["base=1"]
+    assert postings() == before
+    assert ix.optimize_index(spark, table) is False

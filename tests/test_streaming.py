@@ -163,11 +163,22 @@ def test_stream_stream_join_equals_batch(spark, events_dir):
     assert g == b and len(b) > 0
 
 
-def test_foreach_batch_upsert_converges(spark, events_dir, tmp_path):
+def test_foreach_batch_upsert_converges(spark, events_dir, tmp_path, monkeypatch):
+    from nonconsumptive_spark.streaming import sinks
+    from nonconsumptive_spark.streaming.corpus import applied_epoch
     from nonconsumptive_spark.streaming.events import EVENTS_SCHEMA
-    from nonconsumptive_spark.streaming.sinks import start_upsert_sink
+    from nonconsumptive_spark.streaming.sinks import start_upsert_sink, upsert_parquet
 
     table = str(tmp_path / "profiles")
+    folds = []
+    fold_epoch = sinks.fold_epoch
+
+    def spy(spark_, table_dir, epoch_id, merge):
+        applied = fold_epoch(spark_, table_dir, epoch_id, merge)
+        folds.append((epoch_id, applied))
+        return applied
+
+    monkeypatch.setattr(sinks, "fold_epoch", spy)
 
     def run(cp):
         src = (
@@ -188,12 +199,24 @@ def test_foreach_batch_upsert_converges(spark, events_dir, tmp_path):
     first = {tuple(r) for r in committed_table(spark, table).collect()}
     n_src = spark.read.parquet(events_dir).count()
     assert len(first) == n_src  # every event upserted exactly once
+    assert folds and all(applied for _, applied in folds)
+    marker = applied_epoch(table)
 
-    # full replay with a fresh checkpoint: reprocessing the same input
-    # must converge to the identical table (idempotent upsert)
+    # a fresh checkpoint restarts epoch ids at 0: every replayed epoch is
+    # at or below the marker, so the guard refuses it and the table stays
+    folds.clear()
     run("cp2")
+    assert folds and not any(applied for _, applied in folds)
+    assert applied_epoch(table) == marker
+    assert {tuple(r) for r in committed_table(spark, table).collect()} == first
+
+    # a real replay: upserting the whole input again as one new version
+    # must converge to the identical table (idempotent upsert)
+    src = spark.read.parquet(events_dir).select("event_id", "user_id", "event_type", "value")
+    upsert_parquet(src, table, keys=["event_id"])
+    assert folds[-1] == (marker + 1, True)
     second = {tuple(r) for r in committed_table(spark, table).collect()}
-    assert second == first
+    assert len(second) == n_src and second == first
 
 
 def test_incremental_wordcounts_equal_batch(spark, tmp_path):
@@ -221,16 +244,30 @@ def test_incremental_wordcounts_equal_batch(spark, tmp_path):
     assert got == expect and len(expect) > 0
 
 
-def test_neardup_ingest_stream_equals_batch(spark, tmp_path):
+def test_neardup_ingest_stream_equals_batch(spark, tmp_path, monkeypatch):
     """Crawl-ingest dedup: streaming each file against the growing
     signature index flags exactly the docs that batch LSH pair-mining
     pairs as the LARGER id (arrival order == id order here), regardless
-    of which batch the two sides arrived in."""
+    of which batch the two sides arrived in.  Each batch reads the index
+    back with the schema it writes, which is the schema inference gives."""
     import time
 
     from nonconsumptive_spark.operators import dedup as dd
+    from nonconsumptive_spark.streaming import neardup as nd
     from nonconsumptive_spark.streaming.corpus import stream_documents
     from nonconsumptive_spark.streaming.neardup import start_neardup_ingest
+
+    index_reads = []
+    read_committed = nd._read_committed
+
+    def spy(spark_, root, flags_dir, schema=None):
+        out = read_committed(spark_, root, flags_dir, schema)
+        if out is not None and schema is not None:
+            inferred = read_committed(spark_, root, flags_dir)
+            index_reads.append((schema, out.schema, inferred.schema))
+        return out
+
+    monkeypatch.setattr(nd, "_read_committed", spy)
 
     docs = load(spark, SF_SMALL, "documents")
     src = tmp_path / "docs_in"
@@ -281,6 +318,10 @@ def test_neardup_ingest_stream_equals_batch(spark, tmp_path):
     # the signature index now covers the whole corpus
     assert read_index(spark, str(tmp_path / "index"),
                       str(tmp_path / "flags")).count() == docs.count()
+    # batches 1-3 read the index, each with the written schema
+    assert len(index_reads) == 3
+    for given, got, inferred in index_reads:
+        assert given == got == inferred
 
 
 def test_merge_wordcounts_epoch_replay_is_noop(spark, tmp_path):

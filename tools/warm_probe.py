@@ -1,15 +1,20 @@
 """Warm-timing + plan-capture probe for optimization work (guide §1).
 
-Times each named registry query with an untimed warm-up pass then
-min-of-2 timed passes against the noop sink (same methodology as
-bench.py's headline protocol), and optionally writes
-``explain("formatted")`` to ``plans/<round>/<name>_<tag>.txt``.
+Times each named registry query (every registered query when none is
+named) with an untimed warm-up pass then min-of-2 timed passes against
+the noop sink (same methodology as bench.py's headline protocol), and
+optionally writes ``explain("formatted")`` to
+``plans/<round>/<name>_<tag>.txt``.  Each timed pass also times the
+``spark_fn`` call alone (plan time) and counts the Spark jobs that call
+launched (the status tracker's job ids before and after it): a warm
+query that plans without running anything reports 0.
 
 Usage:
-  python tools/warm_probe.py [--plans r08 --tag before] q_a q_b ...
+  python tools/warm_probe.py [--plans r08 --tag before] [q_a q_b ...]
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/warm_probe.py ...
 
-Prints one JSON line: {"timings": {name: sec}, "sf_dir": ...}.
+Prints one JSON line: {"timings": {name: sec}, "plan_s": {name: sec},
+"plan_jobs": {name: jobs in the last timed spark_fn call}, "sf_dir": ...}.
 """
 
 from __future__ import annotations
@@ -41,9 +46,16 @@ def main(argv: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("nc-warm-probe")
     registry = all_queries()
+    names = names or sorted(registry)
     spark.range(1000).selectExpr("sum(id)").collect()
+    tracker = spark.sparkContext.statusTracker()
+
+    def job_ids() -> set[int]:
+        return set(tracker.getJobIdsForGroup(None))
 
     timings: dict[str, float] = {}
+    plan_s: dict[str, float] = {}
+    plan_jobs: dict[str, int] = {}
     for name in names:
         q = registry[name]
         spark.sparkContext.setJobDescription(f"warm_probe:{name}")
@@ -61,14 +73,21 @@ def main(argv: list[str]) -> None:
             (plans_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
         # untimed warm-up + min-of-2 timed
         q.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
+        best = best_plan = float("inf")
         for _ in range(2):
+            before = job_ids()
             t0 = time.time()
-            q.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = q.spark_fn(spark, sf_dir)
+            t_plan = time.time() - t0
+            plan_jobs[name] = len(job_ids() - before)
+            df.write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
+            best_plan = min(best_plan, t_plan)
         timings[name] = round(best, 3)
+        plan_s[name] = round(best_plan, 3)
         spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"timings": timings, "sf_dir": sf_dir}))
+    print(json.dumps({"timings": timings, "plan_s": plan_s, "plan_jobs": plan_jobs,
+                      "sf_dir": sf_dir}))
 
 
 if __name__ == "__main__":
