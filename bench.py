@@ -52,272 +52,13 @@ def _minhash_pairs_xxhash64(spark, sf_dir):
                                threshold=0.5, hash_fn="xxhash64")
 
 
-# Extra timed-but-not-judged entries: reported under "extra_queries",
-# excluded from the headline total so round-over-round comparisons hold.
-def _ppjoin(spark, sf_dir):
-    from nonconsumptive_spark.queries import all_queries
-    return all_queries()["q_ppjoin_pairs"].spark_fn(spark, sf_dir)
-
-
-def _cooccurrence(spark, sf_dir):
-    from nonconsumptive_spark.queries import all_queries
-    return all_queries()["q_cooccurrence_window"].spark_fn(spark, sf_dir)
-
-
-def _registry(name):
-    def run(spark, sf_dir):
-        from nonconsumptive_spark.queries import all_queries
-        return all_queries()[name].spark_fn(spark, sf_dir)
-    return run
-
-
-
-
-def _blocklist_indexed(spark, sf_dir):
-    """Index-side multi-phrase decontamination (not yet registry-judged:
-    r5 queue) — timed so the anchor-vote join's scale path can't rot."""
-    from nonconsumptive_spark.operators.retrieval import (
-        blocklist_match, build_positional_index)
-    from nonconsumptive_spark.queries import load
-
-    idx = build_positional_index(load(spark, sf_dir, "documents"))
-    return blocklist_match(idx, [["table", "table"], ["bad", "word"],
-                                 ["spark", "query"], ["data"]])
-
-
-def _postings_stats(spark, sf_dir):
-    from nonconsumptive_spark.operators.retrieval import (
-        build_positional_index, postings_size_stats)
-    from nonconsumptive_spark.queries import load
-
-    return postings_size_stats(
-        build_positional_index(load(spark, sf_dir, "documents")))
-
-
-def _staged(name):
-    """Timed-but-not-judged staged entry (see queries/staging.py)."""
-    def run(spark, sf_dir):
-        from nonconsumptive_spark.queries.staging import STAGED
-        return STAGED[name][0](spark, sf_dir)
-    return run
-
-
+# Extra timed-but-not-judged entries, reported under "extra_queries" and
+# excluded from the headline total so round-over-round comparisons hold:
+# the xxhash64 variant, then every registered query outside the headline.
 EXTRA = {
     "q_minhash_dedup_pairs[xxhash64]": _minhash_pairs_xxhash64,
-    "q_ppjoin_pairs": _ppjoin,
-    "q_cooccurrence_window": _cooccurrence,
-    # round-4d additions: timed every round so their scale paths can't rot
-    "q_nb_lang_confusion": _registry("q_nb_lang_confusion"),
-    "q_bloom_novelty": _registry("q_bloom_novelty"),
-    "q_cdc_duplicate_chunks": _registry("q_cdc_duplicate_chunks"),
-    "q_rake_keywords": _registry("q_rake_keywords"),
-    "q_psi_drift": _registry("q_psi_drift"),
-    "q_edit_distance_pairs": _registry("q_edit_distance_pairs"),
-    "q_logreg_train": _registry("q_logreg_train"),
-    # round-4e additions
-    "q_rrf_fusion": _registry("q_rrf_fusion"),
-    "q_hard_negatives": _registry("q_hard_negatives"),
-    "q_rbo_rankers": _registry("q_rbo_rankers"),
-    "q_decayed_engagement": _registry("q_decayed_engagement"),
-    "q_ks_length_sources": _registry("q_ks_length_sources"),
-    "q_user_behavior_pairs": _registry("q_user_behavior_pairs"),
-    "q_sliding_chunks": _registry("q_sliding_chunks"),
-    # round-4f additions
-    "q_phrase_search": _registry("q_phrase_search"),
-    "q_phrase_search_indexed": _registry("q_phrase_search_indexed"),
-    "q_skyline_docs": _registry("q_skyline_docs"),
-    "q_burrows_delta": _registry("q_burrows_delta"),
-    "q_zorder_curve": _registry("q_zorder_curve"),
-    "q_seasonal_residuals": _registry("q_seasonal_residuals"),
-    "q_gini_tokens": _registry("q_gini_tokens"),
-    # round-4g additions
-    "q_bfs_distances": _registry("q_bfs_distances"),
-    "q_degree_assortativity": _registry("q_degree_assortativity"),
-    "q_weighted_sample": _registry("q_weighted_sample"),
-    # round-4h/4i additions
-    "q_min_span_proximity": _registry("q_min_span_proximity"),
-    "q_skyline_kd": _registry("q_skyline_kd"),
-    "q_hll_by_group": _registry("q_hll_by_group"),
-    "q_priority_sample_group": _registry("q_priority_sample_group"),
-    "q_blocklist_match[indexed]": _blocklist_indexed,
-    "q_postings_size_stats": _postings_stats,
-    # round-4j..4m additions (promoted to the registry in round 5)
-    "q_query_likelihood": _registry("q_query_likelihood"),
-    "q_cusum_daily": _registry("q_cusum_daily"),
-    "q_kaplan_meier": _registry("q_kaplan_meier"),
-    "q_ndcg_eval": _registry("q_ndcg_eval"),
-    "q_code_score": _registry("q_code_score"),
-    "q_label_propagation": _registry("q_label_propagation"),
-    "q_top_component": _registry("q_top_component"),
-    "q_abtt_residuals": _registry("q_abtt_residuals"),
-    "q_hits_scores": _registry("q_hits_scores"),
-    "q_markov_stationary": _registry("q_markov_stationary"),
-    "q_cusum_by_type": _registry("q_cusum_by_type"),
-    "q_kaplan_meier_cohorts": _registry("q_kaplan_meier_cohorts"),
-    "q_lexical_cohesion": _registry("q_lexical_cohesion"),
-    # round-4 continuation additions
-    "q_silhouette": _registry("q_silhouette"),
-    "q_kcenter_select": _registry("q_kcenter_select"),
-    "q_bitext_margin": _registry("q_bitext_margin"),
-    "q_fs_link_scores": _registry("q_fs_link_scores"),
-    # round-4k additions (evaluation / link prediction / anomalies)
-    "q_auc_eval": _registry("q_auc_eval"),
-    "q_benford_deviation": _registry("q_benford_deviation"),
-    "q_bleu_pairs": _registry("q_bleu_pairs"),
-    "q_adamic_adar": _registry("q_adamic_adar"),
-    "q_kcore": _registry("q_kcore"),
-    "q_ewma_anomalies": _registry("q_ewma_anomalies"),
-    "q_event_sequences": _registry("q_event_sequences"),
-    "q_leakage_safe_split": _registry("q_leakage_safe_split"),
-    "q_jaro_winkler_links": _registry("q_jaro_winkler_links"),
-    "q_mrr_map_eval": _registry("q_mrr_map_eval"),
-    "q_good_turing": _registry("q_good_turing"),
-    "q_token_burstiness": _registry("q_token_burstiness"),
-    "q_calibration_bins": _registry("q_calibration_bins"),
-    "q_l_diversity": _registry("q_l_diversity"),
-    "q_ams_f2": _registry("q_ams_f2"),
-    "q_ppr_tokens": _registry("q_ppr_tokens"),
-    "q_clustering_coefficient": _registry("q_clustering_coefficient"),
-    "q_lm_hit_at_k": _registry("q_lm_hit_at_k"),
-    "q_rbp_eval": _registry("q_rbp_eval"),
-    "q_source_kl": _registry("q_source_kl"),
-    "q_mann_kendall": _registry("q_mann_kendall"),
-    "q_neyman_allocation": _registry("q_neyman_allocation"),
-    "q_kendall_tau_b": _registry("q_kendall_tau_b"),
-    "q_cohens_kappa": _registry("q_cohens_kappa"),
-    "q_yules_k": _registry("q_yules_k"),
-    "q_chao1_richness": _registry("q_chao1_richness"),
-    "q_flesch_reading": _registry("q_flesch_reading"),
-    "q_kruskal_wallis": _registry("q_kruskal_wallis"),
-    "q_levene_bf": _registry("q_levene_bf"),
-    "q_t_closeness": _registry("q_t_closeness"),
-    "q_jackknife_ratio": _registry("q_jackknife_ratio"),
-    "q_rouge2_pairs": _registry("q_rouge2_pairs"),
-    "q_modularity": _registry("q_modularity"),
-    "q_wilson_ci": _registry("q_wilson_ci"),
-    "q_theil_index": _registry("q_theil_index"),
-    "q_truncation_loss": _registry("q_truncation_loss"),
-    "q_span_corruption": _registry("q_span_corruption"),
-    "q_binseg_daily": _registry("q_binseg_daily"),
-    "q_runs_test": _registry("q_runs_test"),
-    "q_dedup_rate_by_source": _registry("q_dedup_rate_by_source"),
-    "q_cooks_distance": _registry("q_cooks_distance"),
-    "q_sax_daily": _registry("q_sax_daily"),
-    "q_seasonality_strength": _registry("q_seasonality_strength"),
-    "q_mattr": _registry("q_mattr"),
-    "q_interarrival_stats": _registry("q_interarrival_stats"),
-    "q_embedding_isotropy": _registry("q_embedding_isotropy"),
-    "q_cohort_value": _registry("q_cohort_value"),
-    "q_rfm_segments": _registry("q_rfm_segments"),
-    "q_split_balance": _registry("q_split_balance"),
-    "q_anova_oneway": _registry("q_anova_oneway"),
-    "q_cramers_v": _registry("q_cramers_v"),
-    "q_vocab_coverage": _registry("q_vocab_coverage"),
-    "q_ktruss": _registry("q_ktruss"),
-    "q_event_type_overlap": _registry("q_event_type_overlap"),
-    "q_higher_moments": _registry("q_higher_moments"),
-    "q_daily_mix_entropy": _registry("q_daily_mix_entropy"),
-    "q_lorenz_curve": _registry("q_lorenz_curve"),
-    "q_event_entropy_rate": _registry("q_event_entropy_rate"),
-    "q_hhi_concentration": _registry("q_hhi_concentration"),
-    "q_jaccard_histogram": _registry("q_jaccard_histogram"),
-    "q_growth_accounting": _registry("q_growth_accounting"),
-    "q_stickiness": _registry("q_stickiness"),
-    "q_return_time_hist": _registry("q_return_time_hist"),
-    "q_char_entropy": _registry("q_char_entropy"),
-    "q_word_length_profile": _registry("q_word_length_profile"),
-    "q_oov_by_source": _registry("q_oov_by_source"),
-    "q_hill_tail": _registry("q_hill_tail"),
-    "q_daily_bands": _registry("q_daily_bands"),
-    "q_nn_label_agreement": _registry("q_nn_label_agreement"),
-    "q_common_prefix": _registry("q_common_prefix"),
-    "q_term_position_bias": _registry("q_term_position_bias"),
-    "q_type_user_hhi": _registry("q_type_user_hhi"),
-    "q_cluster_representatives": _registry("q_cluster_representatives"),
-    "q_kmeans_elbow": _registry("q_kmeans_elbow"),
-    "q_xcorr_types": _registry("q_xcorr_types"),
-    # round-5 additions
-    "q_encoded_quadgrams": _registry("q_encoded_quadgrams"),
-    "q_g2_collocations": _registry("q_g2_collocations"),
-    "q_cohens_d_sources": _registry("q_cohens_d_sources"),
-    "q_permutation_test": _registry("q_permutation_test"),
-    "q_holt_linear_daily": _registry("q_holt_linear_daily"),
-    "q_seq_pattern_pairs": _registry("q_seq_pattern_pairs"),
-    "q_rm3_expansion": _registry("q_rm3_expansion"),
-    "q_gunning_fog": _registry("q_gunning_fog"),
-    "q_grubbs_outlier": _registry("q_grubbs_outlier"),
-    "q_keyness_terms": _registry("q_keyness_terms"),
-    "q_skew_report": _registry("q_skew_report"),
-    "q_zeta_markers": _registry("q_zeta_markers"),
-    "q_fk_integrity": _registry("q_fk_integrity"),
-    "q_mcnemar_langid": _registry("q_mcnemar_langid"),
-    "q_audio_window_energy": _registry("q_audio_window_energy"),
-    "q_log_odds_dirichlet": _registry("q_log_odds_dirichlet"),
-    "q_mantel_haenszel": _registry("q_mantel_haenszel"),
-    "q_juilland_dispersion": _registry("q_juilland_dispersion"),
-    "q_brier_decomposition": _registry("q_brier_decomposition"),
-    "q_langid_prf": _registry("q_langid_prf"),
-    "q_gain_chart": _registry("q_gain_chart"),
-    "q_ann_recall_curve": _registry("q_ann_recall_curve"),
-    "q_isotonic_bins": _registry("q_isotonic_bins"),
-    "q_von_neumann_ratio": _registry("q_von_neumann_ratio"),
-    "q_simpson_flip": _registry("q_simpson_flip"),
-    "q_odds_ratio_ci": _registry("q_odds_ratio_ci"),
-    "q_cuped_abtest": _registry("q_cuped_abtest"),
-    "q_time_to_convert": _registry("q_time_to_convert"),
-    "q_sprt_daily": _registry("q_sprt_daily"),
-    "q_theil_sen_slope": _registry("q_theil_sen_slope"),
-    "q_avg_precision": _registry("q_avg_precision"),
-    "q_bh_fdr": _registry("q_bh_fdr"),
-    "q_err_eval": _registry("q_err_eval"),
-    "q_bradley_terry": _registry("q_bradley_terry"),
-    "q_lm_jm_topk": _registry("q_lm_jm_topk"),
-    "q_shapley_attribution": _registry("q_shapley_attribution"),
-    "q_nelson_aalen": _registry("q_nelson_aalen"),
-    "q_did_readout": _registry("q_did_readout"),
-    "q_link_prediction": _registry("q_link_prediction"),
-    "q_readability_panel": _registry("q_readability_panel"),
-    "q_gries_dp": _registry("q_gries_dp"),
-    "q_eb_shrinkage": _registry("q_eb_shrinkage"),
-    "q_covariate_balance": _registry("q_covariate_balance"),
-    "q_qini_curve": _registry("q_qini_curve"),
-    "q_harmonic_centrality": _registry("q_harmonic_centrality"),
-    "q_markov_absorption": _registry("q_markov_absorption"),
-    "q_nearest_centroid_eval": _registry("q_nearest_centroid_eval"),
-    "q_keyphrase_cvalue": _registry("q_keyphrase_cvalue"),
-    "q_conformal_interval": _registry("q_conformal_interval"),
-    "q_weibull_fit": _registry("q_weibull_fit"),
-    "q_capture_recapture": _registry("q_capture_recapture"),
-    "q_abc_parts": _registry("q_abc_parts"),
-    "q_basket_rules": _registry("q_basket_rules"),
-    "q_price_elasticity": _registry("q_price_elasticity"),
-    "q_logrank_test": _registry("q_logrank_test"),
-    "q_friedman_daily": _registry("q_friedman_daily"),
-    # r7-promoted cohort (queries/promoted_r7.py)
-    "q_cox_ph": _registry("q_cox_ph"),
-    "q_pinball_quantile": _registry("q_pinball_quantile"),
-    "q_mixture_materialize": _registry("q_mixture_materialize"),
-    "q_jonckheere_trend": _registry("q_jonckheere_trend"),
-    "q_ansari_bradley": _registry("q_ansari_bradley"),
-    "q_lm_interp_tune": _registry("q_lm_interp_tune"),
-    "q_page_trend": _registry("q_page_trend"),
-    "q_dedup_threshold_curve": _registry("q_dedup_threshold_curve"),
-    # suffix-array family: the O(n log n) heavyweight — tracked so its
-    # round-count/scale path can't rot (r7: 35.8s -> 23.5s warm at sf0.1
-    # via materialized keys + broadcast join-backs + broadcast LCP walk;
-    # r8: ~27 -> ~8s warm via rank-group LCP representatives + the
-    # adaptive full-suffix seed, operators/suffix.py)
-    "q_repeated_regions": _registry("q_repeated_regions"),
-    # r8-promoted cohort (queries/promoted_r8.py — was r7 staging)
-    "q_bucketed_join_revenue": _registry("q_bucketed_join_revenue"),
-    "q_ljung_box": _registry("q_ljung_box"),
-    "q_mood_median": _registry("q_mood_median"),
-    "q_cochran_q": _registry("q_cochran_q"),
-    # r8/r9 staging (queries/staging.py)
-    "q_click_attribution_outer": _staged("q_click_attribution_outer"),
-    "q_wilcoxon_signed_rank": _staged("q_wilcoxon_signed_rank"),
-    "q_dunn_posthoc": _staged("q_dunn_posthoc"),
-    "q_cliffs_delta": _staged("q_cliffs_delta"),
+    **{name: q.spark_fn for name, q in sorted(all_queries().items())
+       if name not in HEADLINE},
 }
 
 
@@ -445,12 +186,13 @@ def main():
     load_after_timed = _loadavg()
 
     # Extras are non-judged trend rows, single-pass timed (first-touch
-    # cost included — comparable only to other extras rows).  With 125+
-    # of them a full pass is ~3.5 min, so extras ROTATE: a deterministic
-    # third of the sorted name list per round (round index = count of
-    # recorded BENCH_r*.json files), plus the always-on sentinels.  Every
-    # extra is therefore re-measured at least every third round while the
-    # whole bench stays under the driver's window as the registry grows.
+    # cost included — comparable only to other extras rows).  With every
+    # non-headline query an extra, a full pass is far longer than the
+    # headline, so extras ROTATE: a deterministic sixth of the sorted name
+    # list per round (round index = count of recorded BENCH_r*.json
+    # files), plus the always-on sentinels.  Every extra is therefore
+    # re-measured at least every sixth round while one bench run stays
+    # short.
     # Override: SPARK_GRAFT_BENCH_EXTRAS=all | none | <comma-list>.
     always_on = ["q_minhash_dedup_pairs[xxhash64]"]
     sel = os.environ.get("SPARK_GRAFT_BENCH_EXTRAS", "")
@@ -463,7 +205,7 @@ def main():
     else:
         rnd = len(list(Path(__file__).resolve().parent.glob("BENCH_r*.json")))
         rotating = sorted(n for n in EXTRA if n not in always_on)
-        extra_names = always_on + rotating[rnd % 3::3]
+        extra_names = always_on + rotating[rnd % 6::6]
     extra: dict[str, float] = {}
     warm_rows: list[str] = []
     for name in extra_names:

@@ -78,7 +78,7 @@ QUERIES = [
     "q_hll_by_group",
     "q_priority_sample_group",
     "q_k_anonymity",
-    # r4j additions (formerly r5-staged ops, promoted to queries/promoted)
+    # r4j additions
     "q_query_likelihood",
     "q_cusum_daily",
     "q_kaplan_meier",
@@ -159,7 +159,7 @@ QUERIES = [
     # r5 continuation batch K: statistical-test family completions
     "q_logrank_test",
     "q_friedman_daily",
-    # r6 staging: survival regression, quantile loss, mixture last mile
+    # r6 additions: survival regression, quantile loss, mixture last mile
     "q_cox_ph",
     "q_pinball_quantile",
     "q_ljung_box",
@@ -172,7 +172,7 @@ QUERIES = [
     "q_lm_interp_tune",
     "q_page_trend",
     "q_dedup_threshold_curve",
-    # r9 staging: the paired/post-hoc/effect-size rank additions + the
+    # r9 additions: the paired/post-hoc/effect-size rank additions + the
     # outer-attribution registry face
     "q_wilcoxon_signed_rank",
     "q_dunn_posthoc",
@@ -281,14 +281,12 @@ def main():
     if not (scaled_dir / "documents.parquet").exists():
         build(spark, k, scaled_dir)
 
-    from nonconsumptive_spark.queries.staging import STAGED
-
     reg = all_queries()
     results = {}
     for name in QUERIES:
         if only and name not in only:
             continue
-        fn = reg[name].spark_fn if name in reg else STAGED[name][0]
+        fn = reg[name].spark_fn
         timed(fn, spark, BASE)                    # warm
         base = min(timed(fn, spark, BASE) for _ in range(2))
         timed(fn, spark, str(scaled_dir))         # warm

@@ -25,16 +25,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     from nonconsumptive_spark.queries import all_queries
-    from nonconsumptive_spark.queries.staging import STAGED
     from nonconsumptive_spark.session import get_spark
 
     spark = get_spark("source-compare", cpus=8, shuffle_partitions=8)
     reg = all_queries()
 
     def run(name):
-        if name in reg:
-            return reg[name].spark_fn(spark, sf_dir).collect()
-        return STAGED[name][0](spark, sf_dir).collect()
+        return reg[name].spark_fn(spark, sf_dir).collect()
 
     print(f"# Source comparison — {sf_dir}\n")
 

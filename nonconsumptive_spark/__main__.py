@@ -73,23 +73,17 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "query":
         from nonconsumptive_spark.queries import all_queries
-        from nonconsumptive_spark.queries.staging import STAGED
         from nonconsumptive_spark.session import get_spark
 
         registry = all_queries()
         if args.name == "list":
             print("\n".join(sorted(registry)))
-            print("\n".join(f"{n}  [staged]" for n in sorted(STAGED)
-                            if n not in registry))
             return 0
-        if args.name in registry:
-            fn = registry[args.name].spark_fn
-        elif args.name in STAGED:  # staged queries are runnable too
-            fn = STAGED[args.name][0]
-        else:
+        if args.name not in registry:
             print(f"unknown query {args.name!r}; try 'list'", file=sys.stderr)
             return 2
-        df = fn(get_spark("nc-spark-cli"), args.sf_dir)
+        df = registry[args.name].spark_fn(get_spark("nc-spark-cli"),
+                                          args.sf_dir)
         df.show(args.limit, truncate=False)
         return 0
 

@@ -1,15 +1,18 @@
 """Deduplication queries, oracle-checked end-to-end (exact dedup, MinHash
 signatures, LSH candidates, verified near-dup pairs, SimHash + Hamming,
-exact n-gram Jaccard).
+exact n-gram Jaccard, suffix-array repeats), plus the threshold-tuning
+tables over near-dup candidates, pair-similarity scores (BLEU, ROUGE)
+and fuzzy record linkage (Jaro-Winkler, Fellegi-Sunter).
 """
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from nonconsumptive_spark.operators import dedup as dd
 from nonconsumptive_spark.operators import lines as _lines
-from nonconsumptive_spark.queries import load, register
+from nonconsumptive_spark.queries import _DUCK_TOKS, load, register
 
-_DUCK_TOKS = "list_filter(regexp_split_to_array(text, '[^\\pL]+'), x -> x <> '')"
 
 # Shared oracle CTEs: tokens with position -> distinct 3-shingles per doc.
 _DUCK_SHINGLES = f"""
@@ -216,10 +219,9 @@ def q_canonical_docs(spark, sf_dir):
     return dd.canonical_docs(load(spark, sf_dir, "documents"), threshold=0.5)
 
 
-# --------------------------------------------------------------------------
-@register(
-    "q_ngram_jaccard_pairs",
-    oracle=f"""
+# Exact all-pairs 3-gram Jaccard >= 0.5: one oracle for the naive shingle
+# join and PPJoin's prefix-filtered form, which must return the same set.
+_DUCK_JACCARD_PAIRS = f"""
     {_DUCK_SHINGLES},
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     inter AS (
@@ -233,7 +235,13 @@ def q_canonical_docs(spark, sf_dir):
     JOIN sizes sa ON sa.doc_id = doc_a
     JOIN sizes sb ON sb.doc_id = doc_b
     WHERE round(i * 1.0 / (sa.n + sb.n - i), 4) >= 0.5
-    """,
+    """
+
+
+# --------------------------------------------------------------------------
+@register(
+    "q_ngram_jaccard_pairs",
+    oracle=_DUCK_JACCARD_PAIRS,
     doc="Exact all-pairs 3-gram Jaccard ≥ 0.5 via shingle equi-join (the "
         "ground truth the LSH path approximates).",
 )
@@ -597,21 +605,7 @@ def q_snm_pairs(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q_ppjoin_pairs",
-    oracle=f"""
-    {_DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-      FROM shingles a JOIN shingles b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT doc_a, doc_b,
-           round(i * 1.0 / (sa.n + sb.n - i), 4) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE round(i * 1.0 / (sa.n + sb.n - i), 4) >= 0.5
-    """,
+    oracle=_DUCK_JACCARD_PAIRS,
     doc="PPJoin-style exact Jaccard ≥ 0.5 via PREFIX filtering (Xiao et "
         "al. 2008): candidates come from equi-joining only each doc's "
         "rarest n-ceil(t*n)+1 shingles plus a length filter — exact like "
@@ -815,3 +809,519 @@ def q_cdc_duplicate_chunks(spark, sf_dir):
 )
 def q_edit_distance_pairs(spark, sf_dir):
     return dd.edit_distance_pairs(load(spark, sf_dir, "documents"))
+
+
+# -- repeated regions from the suffix array ---------------------------------
+_RR_MIN = 10
+
+
+@register(
+    "q_repeated_regions",
+    f"""
+    WITH base AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+    suf AS (
+      SELECT doc_id, p AS pos, t[p:] AS s
+      FROM base, unnest(range(1, len(t) + 1)) AS r(p)),
+    ordered AS (
+      SELECT doc_id, pos, s,
+             lag(s)  OVER w AS prv,
+             lead(s) OVER w AS nxt
+      FROM suf WINDOW w AS (ORDER BY s, doc_id, pos)),
+    lcps AS (
+      SELECT doc_id, pos,
+             greatest(
+               CASE WHEN prv IS NULL THEN 0 ELSE
+                 coalesce(list_min(list_filter(
+                   range(1, least(len(s), len(prv)) + 1),
+                   i -> s[i] <> prv[i])), least(len(s), len(prv)) + 1) - 1
+               END,
+               CASE WHEN nxt IS NULL THEN 0 ELSE
+                 coalesce(list_min(list_filter(
+                   range(1, least(len(s), len(nxt)) + 1),
+                   i -> s[i] <> nxt[i])), least(len(s), len(nxt)) + 1) - 1
+               END) AS lrp
+      FROM ordered),
+    flagged AS (
+      SELECT doc_id, CAST(pos AS BIGINT) AS s,
+             CAST(pos + lrp AS BIGINT) AS e
+      FROM lcps WHERE lrp >= {_RR_MIN}),
+    runmax AS (
+      SELECT doc_id, s, e,
+             coalesce(max(e) OVER (
+               PARTITION BY doc_id ORDER BY s, e
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+               AS prev_max
+      FROM flagged),
+    grp AS (
+      SELECT doc_id, s, e,
+             sum(CASE WHEN s > prev_max THEN 1 ELSE 0 END)
+               OVER (PARTITION BY doc_id ORDER BY s, e) AS g
+      FROM runmax)
+    SELECT doc_id, min(s) AS span_start, max(e) AS span_end,
+           max(e) - min(s) AS span_len
+    FROM grp GROUP BY doc_id, g
+    """,
+    doc="Repeated substring regions from the distributed "
+        "suffix array (operators/suffix.py): prefix-doubling rank rounds, "
+        "adjacent-rank LCP, no quadratic scan.",
+)
+def q_repeated_regions(spark, sf_dir):
+    from nonconsumptive_spark.operators.suffix import repeated_regions
+
+    return repeated_regions(load(spark, sf_dir, "documents"),
+                            min_len=_RR_MIN)
+
+
+# -- Fellegi–Sunter record-linkage scoring -----------------------------------
+_FS_SCALE = 1_000_000
+_FS_M = 0.9
+
+
+def _fs_oracle(m: float, scale: int, min_agree: int) -> str:
+    fields = """SELECT c_custkey AS key, c_nationkey AS blk,
+             c_mktsegment AS seg,
+             floor(c_acctbal / 1000.0) AS bal,
+             substr(c_name, length(c_name), 1) AS dig
+      FROM customer"""
+    wq = []
+    for j in (1, 2, 3):
+        wq.append(f"""
+        CAST(round(CASE WHEN g{j}
+               THEN log2({m} * CAST(n AS DOUBLE) / CAST(cc{j} AS DOUBLE))
+               ELSE log2((1.0 - {m}) * CAST(n AS DOUBLE)
+                         / (CAST(n AS DOUBLE) - CAST(cc{j} AS DOUBLE)))
+             END * {scale}.0) AS BIGINT)""")
+    return f"""
+    WITH c AS ({fields}),
+    p AS (
+      SELECT a.key AS key_a, b.key AS key_b,
+             a.seg = b.seg AS g1, a.bal = b.bal AS g2, a.dig = b.dig AS g3
+      FROM c a JOIN c b ON a.blk = b.blk AND a.key < b.key),
+    st AS (
+      SELECT count(*) AS n,
+             greatest(least(sum(CASE WHEN g1 THEN 1 ELSE 0 END), count(*) - 1), 1) AS cc1,
+             greatest(least(sum(CASE WHEN g2 THEN 1 ELSE 0 END), count(*) - 1), 1) AS cc2,
+             greatest(least(sum(CASE WHEN g3 THEN 1 ELSE 0 END), count(*) - 1), 1) AS cc3
+      FROM p)
+    SELECT key_a, key_b,
+           CAST((CASE WHEN g1 THEN 1 ELSE 0 END)
+                + (CASE WHEN g2 THEN 1 ELSE 0 END)
+                + (CASE WHEN g3 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
+           {" + ".join(wq)} AS weight_scaled
+    FROM p CROSS JOIN st
+    WHERE (CASE WHEN g1 THEN 1 ELSE 0 END)
+          + (CASE WHEN g2 THEN 1 ELSE 0 END)
+          + (CASE WHEN g3 THEN 1 ELSE 0 END) >= {min_agree}"""
+
+
+@register("q_fs_link_scores", _fs_oracle(_FS_M, _FS_SCALE, 2),
+          doc="Fellegi-Sunter record-linkage weights over "
+              "nation-blocked customer pairs (operators/linkage.fs_link_scores): "
+              "u-rates from one corpus agg, FS_SCALE integer weights.")
+def q_fs_link_scores(spark, sf_dir):
+    from nonconsumptive_spark.operators import linkage
+
+    return linkage.fs_link_scores(load(spark, sf_dir, "customer"))
+
+
+# -- near-dup-aware sampling: cap per cluster ---------------------------------
+_CCS_CAP = 2
+
+
+def _ccs_oracle(cap: int) -> str:
+    return (
+        _DUCK_COMP
+        + f""",
+    asg AS (
+      SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster
+      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+    ranked AS (
+      SELECT doc_id, cluster,
+             row_number() OVER (PARTITION BY cluster
+                                ORDER BY md5(CAST(doc_id AS VARCHAR)),
+                                         doc_id) AS rk
+      FROM asg)
+    SELECT doc_id, CAST(cluster AS BIGINT) AS cluster,
+           CAST(rk AS BIGINT) AS rk
+    FROM ranked WHERE rk <= {cap}"""
+    )
+
+
+@register("q_cluster_capped_sample", _ccs_oracle(_CCS_CAP),
+          doc="Per-cluster capped sampling via hash-"
+              "ranked row_number within cluster keys.")
+def q_cluster_capped_sample(spark, sf_dir):
+    from nonconsumptive_spark.operators import dedup as dd
+
+    return dd.cluster_capped_sample(load(spark, sf_dir, "documents"),
+                                    cap=_CCS_CAP)
+
+
+# -- BLEU-lite pair scoring --------------------------------------------------
+def _bleu_oracle() -> str:
+    from nonconsumptive_spark.operators.evaluation import BLEU_BLOCK_MOD
+
+    return f"""
+    WITH base AS (SELECT doc_id AS doc, lang, {_DUCK_TOKS} AS t
+                  FROM documents),
+    lens AS (
+      SELECT doc, lang, CAST(len(t) AS BIGINT) AS l1,
+             CAST(greatest(len(t) - 1, 0) AS BIGINT) AS l2,
+             doc % {BLEU_BLOCK_MOD} AS blk
+      FROM base),
+    pairs AS (
+      SELECT a.doc AS doc_a, b.doc AS doc_b,
+             a.l1 AS l1_a, b.l1 AS l1_b, b.l2 AS l2_b
+      FROM lens a JOIN lens b
+        ON a.lang = b.lang AND a.blk = b.blk AND a.doc < b.doc),
+    uni AS (
+      SELECT doc, g, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT doc, unnest(t) AS g FROM base) GROUP BY doc, g),
+    big AS (
+      SELECT doc, g, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT doc, t[i] || ' ' || t[i + 1] AS g
+            FROM base,
+                 unnest(range(1, greatest(len(t) - 1, 0) + 1)) AS r(i))
+      GROUP BY doc, g),
+    c1 AS (
+      SELECT p.doc_a, p.doc_b,
+             CAST(sum(least(xa.c, xb.c)) AS BIGINT) AS clip1
+      FROM pairs p
+      JOIN uni xa ON xa.doc = p.doc_a
+      JOIN uni xb ON xb.doc = p.doc_b AND xb.g = xa.g
+      GROUP BY p.doc_a, p.doc_b),
+    c2 AS (
+      SELECT p.doc_a, p.doc_b,
+             CAST(sum(least(xa.c, xb.c)) AS BIGINT) AS clip2
+      FROM pairs p
+      JOIN big xa ON xa.doc = p.doc_a
+      JOIN big xb ON xb.doc = p.doc_b AND xb.g = xa.g
+      GROUP BY p.doc_a, p.doc_b),
+    j AS (
+      SELECT p.doc_a, p.doc_b, p.l1_a, p.l1_b, p.l2_b,
+             CAST(coalesce(c1.clip1, 0) AS BIGINT) AS clip1,
+             CAST(coalesce(c2.clip2, 0) AS BIGINT) AS clip2
+      FROM pairs p
+      LEFT JOIN c1 ON c1.doc_a = p.doc_a AND c1.doc_b = p.doc_b
+      LEFT JOIN c2 ON c2.doc_a = p.doc_a AND c2.doc_b = p.doc_b)
+    SELECT doc_a, doc_b,
+           CASE WHEN l1_b > 0
+                THEN round(CAST(clip1 AS DOUBLE) / l1_b, 6) + 0.0
+                ELSE 0.0 END AS p1,
+           CASE WHEN l2_b > 0
+                THEN round(CAST(clip2 AS DOUBLE) / l2_b, 6) + 0.0
+                ELSE 0.0 END AS p2,
+           CASE WHEN l1_a > 0 AND l1_b > 0 AND l2_b > 0
+                     AND clip1 > 0 AND clip2 > 0
+                THEN round(
+                  least(CAST(1.0 AS DOUBLE),
+                        CAST(l1_b AS DOUBLE) / l1_a)
+                  * sqrt((CAST(clip1 AS DOUBLE) / l1_b)
+                         * (CAST(clip2 AS DOUBLE) / l2_b)), 6) + 0.0
+                ELSE 0.0 END AS bleu2
+    FROM j
+    """
+
+
+@register("q_bleu_pairs", _bleu_oracle(),
+          doc="Clipped-precision BLEU-2 over blocked same-lang doc "
+              "pairs: n-gram clip sums via count-frame joins.")
+def q_bleu_pairs(spark, sf_dir):
+    from nonconsumptive_spark.operators.evaluation import bleu_pairs
+
+    return bleu_pairs(load(spark, sf_dir, "documents"))
+
+
+# -- Jaro-Winkler fuzzy-key linkage -----------------------------------------
+_JW_THRESHOLD = 0.8
+
+
+def _jw_oracle() -> str:
+    from nonconsumptive_spark.operators.linkage import JW_KEY_CHARS, JW_WINDOW
+
+    return f"""
+    WITH keyed AS (
+      SELECT doc_id AS doc, lang,
+             substr(lower(coalesce(text, '')), 1, {JW_KEY_CHARS}) AS k
+      FROM documents),
+    ranked AS (
+      SELECT doc, lang, k,
+             row_number() OVER (ORDER BY lang, k, doc) AS rnk
+      FROM keyed),
+    p AS (
+      SELECT least(a.doc, b.doc) AS doc_a,
+             greatest(a.doc, b.doc) AS doc_b,
+             round(jaro_winkler_similarity(a.k, b.k), 6) + 0.0 AS jw
+      FROM ranked a JOIN ranked b
+        ON a.lang = b.lang AND b.rnk > a.rnk
+           AND b.rnk - a.rnk < {JW_WINDOW})
+    SELECT doc_a, doc_b, jw FROM p WHERE jw >= {_JW_THRESHOLD!r}
+    """
+
+
+@register("q_jaro_winkler_links", _jw_oracle())
+def q_jaro_winkler_links(spark, sf_dir):
+    """SNM-window Jaro-Winkler linkage: candidates bounded to N*window
+    by a (lang, key, id) sorted-neighborhood rank join (see
+    operators/linkage.jaro_winkler_pairs), scored by the DuckDB-bit-
+    parity JW kernel."""
+    from nonconsumptive_spark.operators.linkage import jaro_winkler_pairs
+
+    return jaro_winkler_pairs(load(spark, sf_dir, "documents"),
+                              threshold=_JW_THRESHOLD)
+
+
+# -- ROUGE-2 between blocked pairs --------------------------------------------
+def _rouge_oracle() -> str:
+    from nonconsumptive_spark.operators.evaluation import BLEU_BLOCK_MOD
+
+    return f"""
+    WITH base AS (SELECT doc_id AS doc, lang, {_DUCK_TOKS} AS t
+                  FROM documents),
+    lens AS (
+      SELECT doc, lang, CAST(greatest(len(t) - 1, 0) AS BIGINT) AS l2,
+             doc % {BLEU_BLOCK_MOD} AS blk
+      FROM base),
+    pairs AS (
+      SELECT a.doc AS doc_a, b.doc AS doc_b,
+             a.l2 AS l2_a, b.l2 AS l2_b
+      FROM lens a JOIN lens b
+        ON a.lang = b.lang AND a.blk = b.blk AND a.doc < b.doc),
+    big AS (
+      SELECT doc, g, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT doc, t[i] || ' ' || t[i + 1] AS g
+            FROM base,
+                 unnest(range(1, greatest(len(t) - 1, 0) + 1)) AS r(i))
+      GROUP BY doc, g),
+    c2 AS (
+      SELECT p.doc_a, p.doc_b,
+             CAST(sum(least(xa.c, xb.c)) AS BIGINT) AS clip2
+      FROM pairs p
+      JOIN big xa ON xa.doc = p.doc_a
+      JOIN big xb ON xb.doc = p.doc_b AND xb.g = xa.g
+      GROUP BY p.doc_a, p.doc_b)
+    SELECT p.doc_a, p.doc_b,
+           CAST(coalesce(c2.clip2, 0) AS BIGINT) AS clip2,
+           CASE WHEN p.l2_b > 0
+                THEN round(CAST(coalesce(c2.clip2, 0) AS DOUBLE) / p.l2_b,
+                           6) + 0.0 ELSE 0.0 END AS rouge2_p,
+           CASE WHEN p.l2_a > 0
+                THEN round(CAST(coalesce(c2.clip2, 0) AS DOUBLE) / p.l2_a,
+                           6) + 0.0 ELSE 0.0 END AS rouge2_r,
+           CASE WHEN p.l2_a + p.l2_b > 0
+                THEN round(CAST(2 * coalesce(c2.clip2, 0) AS DOUBLE)
+                           / (p.l2_a + p.l2_b), 6) + 0.0
+                ELSE 0.0 END AS rouge2_f1
+    FROM pairs p
+    LEFT JOIN c2 ON c2.doc_a = p.doc_a AND c2.doc_b = p.doc_b
+    """
+
+
+@register("q_rouge2_pairs", _rouge_oracle(),
+          doc="ROUGE-2 recall over blocked same-lang doc pairs "
+              "via bigram count-frame joins.")
+def q_rouge2_pairs(spark, sf_dir):
+    from nonconsumptive_spark.operators.evaluation import rouge2_pairs
+
+    return rouge2_pairs(load(spark, sf_dir, "documents"))
+
+
+# -- dedup survivorship by source ----------------------------------------------
+def _dedup_rate_oracle() -> str:
+    return _DUCK_COMP + """,
+    asg AS (
+      SELECT d.doc_id, d.source,
+             CAST(coalesce(c.cluster, d.doc_id) AS BIGINT) AS cluster
+      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+    canon AS (
+      SELECT cluster, source AS canon_source FROM asg
+      WHERE doc_id = cluster)
+    SELECT a.source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(coalesce(sum(CASE WHEN a.doc_id = a.cluster THEN 1 END), 0)
+                AS BIGINT) AS n_kept,
+           CAST(coalesce(sum(CASE WHEN a.doc_id <> a.cluster THEN 1 END), 0)
+                AS BIGINT) AS n_removed,
+           CAST(coalesce(sum(CASE WHEN a.doc_id <> a.cluster
+                                   AND k.canon_source <> a.source
+                             THEN 1 END), 0) AS BIGINT) AS n_cross_source,
+           round(CAST(coalesce(sum(CASE WHEN a.doc_id <> a.cluster
+                                        THEN 1 END), 0) AS DOUBLE)
+                 / count(*), 6) + 0.0 AS removal_rate
+    FROM asg a JOIN canon k USING (cluster)
+    GROUP BY a.source"""
+
+
+@register("q_dedup_rate_by_source", _dedup_rate_oracle())
+def q_dedup_rate_by_source(spark, sf_dir):
+    """Near-dup survivorship per source: how many of each source's
+    documents the MinHash-cluster dedup removes, and how many of those
+    removals are CROSS-source (this source's docs losing to another
+    source's canonical copy) — the "which feed is a mirror of which"
+    diagnostic that the corpus-level q_dedup_stats histogram can't
+    answer.  Keeper = the cluster's min-id member (dedup_clusters'
+    convention), so the canonical's source comes from one equi-join on
+    the cluster label.  Plan: the shared LSH cluster machinery, then
+    two label/source-keyed joins + one source agg — nothing pairwise
+    beyond the banded candidate join."""
+    from nonconsumptive_spark.operators import dedup as dd
+
+    docs = load(spark, sf_dir, "documents")
+    cl = dd.dedup_clusters(docs, threshold=0.5)
+    asg = docs.select("doc_id", "source").join(cl, "doc_id")
+    canon = (
+        asg.filter(F.col("doc_id") == F.col("cluster"))
+        .select("cluster", F.col("source").alias("canon_source"))
+    )
+    removed = F.col("doc_id") != F.col("cluster")
+    return (
+        asg.join(canon, "cluster")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.coalesce(F.sum(F.when(~removed, 1)), F.lit(0))
+            .cast("long").alias("n_kept"),
+            F.coalesce(F.sum(F.when(removed, 1)), F.lit(0))
+            .cast("long").alias("n_removed"),
+            F.coalesce(
+                F.sum(F.when(
+                    removed & (F.col("canon_source") != F.col("source")),
+                    1)), F.lit(0)).cast("long").alias("n_cross_source"),
+        )
+        .select(
+            "source", "n_docs", "n_kept", "n_removed", "n_cross_source",
+            (F.round(F.col("n_removed").cast("double") / F.col("n_docs"),
+                     6) + F.lit(0.0)).alias("removal_rate"),
+        )
+    )
+
+
+# -- verified-Jaccard histogram over LSH candidates ------------------------------
+# The threshold-tuning table for near-dedup: every LSH candidate pair is
+# verified once, then bucketed by exact Jaccard — read it to pick the
+# dedup threshold instead of guessing (the pair counts above each bin
+# floor are the "how much would we remove at t" curve).
+def _jhist_oracle() -> str:
+    return _DUCK_BANDS + """,
+    cands AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id),
+    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
+    inter AS (
+      SELECT c.doc_a, c.doc_b, count(*) AS i
+      FROM cands c
+      JOIN shingles x ON x.doc_id = c.doc_a
+      JOIN shingles y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
+      GROUP BY c.doc_a, c.doc_b),
+    jac AS (
+      SELECT least(CAST(floor(round(coalesce(i.i, 0) * 1.0
+                                    / (sa.n + sb.n - coalesce(i.i, 0)), 4)
+                              * 10) AS BIGINT), 9) AS bin
+      FROM cands c
+      JOIN sizes sa ON sa.doc_id = c.doc_a
+      JOIN sizes sb ON sb.doc_id = c.doc_b
+      LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b),
+    hist AS (
+      SELECT bin, CAST(count(*) AS BIGINT) AS n_pairs
+      FROM jac GROUP BY bin)
+    SELECT bin,
+           round(bin / 10.0, 1) + 0.0 AS bin_floor,
+           n_pairs,
+           CAST(sum(n_pairs) OVER (ORDER BY bin DESC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) AS pairs_at_or_above
+    FROM hist"""
+
+
+@register("q_jaccard_histogram", _jhist_oracle())
+def q_jaccard_histogram(spark, sf_dir):
+    """Exact-Jaccard histogram of every LSH candidate pair (see header
+    note) — bin floors at 0.1 steps with the cumulative
+    pairs-at-or-above curve.  Reuses the shared banding machinery; the
+    verify stage runs once at threshold 0.  Plan: band equi-join ->
+    survivor verify -> 10-row frames; windows never exceed 10 rows."""
+    from pyspark.sql import Window
+    from nonconsumptive_spark.operators import dedup as dd
+
+    pairs = dd.minhash_dedup_pairs(
+        load(spark, sf_dir, "documents"), threshold=0.0)
+    hist = (
+        pairs.select(
+            F.least(F.floor(F.col("jaccard") * 10).cast("long"),
+                    F.lit(9)).alias("bin"))
+        .groupBy("bin")
+        .agg(F.count("*").cast("long").alias("n_pairs"))
+    )
+    w = (Window.orderBy(F.desc("bin"))
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return hist.select(
+        "bin",
+        (F.round(F.col("bin") / 10.0, 1) + F.lit(0.0)).alias("bin_floor"),
+        "n_pairs",
+        F.sum("n_pairs").over(w).cast("long").alias("pairs_at_or_above"),
+    )
+
+
+# -- near-dup threshold tuning curve ------------------------------------------
+def _threshold_curve_oracle() -> str:
+    return f"""
+    {_DUCK_BANDS},
+    cands AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id),
+    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
+    inter AS (
+      SELECT c.doc_a, c.doc_b, count(*) AS i
+      FROM cands c
+      JOIN shingles x ON x.doc_id = c.doc_a
+      JOIN shingles y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
+      GROUP BY c.doc_a, c.doc_b),
+    jac AS (
+      SELECT round(i.i * 1.0 / (sa.n + sb.n - i.i), 4) AS j
+      FROM inter i
+      JOIN sizes sa ON sa.doc_id = i.doc_a
+      JOIN sizes sb ON sb.doc_id = i.doc_b
+      WHERE round(i.i * 1.0 / (sa.n + sb.n - i.i), 4) >= 0.1),
+    b AS (
+      SELECT least(CAST(floor(j * 10) AS BIGINT), 9) AS bucket,
+             CAST(count(*) AS BIGINT) AS n_pairs
+      FROM jac GROUP BY 1)
+    SELECT bucket, n_pairs,
+           CAST(sum(n_pairs) OVER (
+             ORDER BY bucket DESC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             AS pairs_ge
+    FROM b
+    """
+
+
+@register("q_dedup_threshold_curve", _threshold_curve_oracle())
+def q_dedup_threshold_curve(spark, sf_dir):
+    """Near-dup pairs retained per Jaccard-threshold decile — the
+    dedup-tuning companion to q_quality_retention: before committing to
+    a cut, read how many verified LSH pairs each threshold keeps
+    (pairs_ge is the cumulative count at-or-above the bucket).  Runs the
+    full q_minhash_dedup_pairs pipeline ONCE at threshold 0.1 (>= 0.1
+    guarantees an intersecting pair, so both engines see the identical
+    pair set) and buckets the verified Jaccards; floor(j*10) operates on
+    the SAME rounded double in both engines, so bucket edges replay
+    exactly.  Plan: identical envelope to the headline minhash query
+    plus one 9-row agg + window."""
+    from pyspark.sql import Window
+
+    from nonconsumptive_spark.operators.dedup import minhash_dedup_pairs
+
+    pairs = minhash_dedup_pairs(load(spark, sf_dir, "documents"),
+                                threshold=0.1)
+    b = (pairs.select(
+            F.least(F.floor(F.col("jaccard") * 10).cast("long"), F.lit(9))
+            .cast("long").alias("bucket"))
+         .groupBy("bucket").agg(F.count("*").cast("long").alias("n_pairs")))
+    w = (Window.orderBy(F.desc("bucket"))
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return b.select("bucket", "n_pairs",
+                    F.sum("n_pairs").over(w).cast("long").alias("pairs_ge"))

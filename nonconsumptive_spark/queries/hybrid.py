@@ -9,13 +9,10 @@ cannot drift.
 from __future__ import annotations
 
 from nonconsumptive_spark.operators import hybrid as hy
-from nonconsumptive_spark.queries import load, register
+from nonconsumptive_spark.queries import _DUCK_TOKS_LOWER, load, register
 
 _N_Q = 5  # first N doc/vec ids are the query set (tables are id-aligned)
 
-_DUCK_TOKS_LOWER = (
-    "list_filter(regexp_split_to_array(lower(text), '[^\\pL]+'), x -> x <> '')"
-)
 
 # Shared CTE prefix: stop-cut bigram-shingle lexical top-N ranking (the
 # candidate generator both queries reuse).  Shingle construction mirrors

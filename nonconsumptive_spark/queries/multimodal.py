@@ -1,6 +1,6 @@
 """Multimodal plumbing under the oracle gate.
 
-There is no binary media in the driver's test tables, so the query
+There is no binary media in the test tables, so each query
 synthesizes a deterministic media payload per document (the operators'
 own NCIM header format), pushes it through the REAL Arrow-batched
 ``mapInPandas`` feature extractor (operators/multimodal.py), and the
@@ -123,3 +123,67 @@ def q_frame_sample(spark, sf_dir):
 def q_image_resize(spark, sf_dir):
     media = _synthetic_media(load(spark, sf_dir, "documents"))
     return mm.resize_images(media, max_side=256).drop("content")
+
+
+# -- audio windowed RMS energy over deterministic PCM --------------------------
+_AU_FRAME = 64
+
+
+def _audio_payload_expr() -> str:
+    """Spark SQL expression building the synthetic audio content: a
+    16-byte header + n int8 PCM samples, every sample an ASCII-safe
+    byte 32 + (doc_id*31 + j*7) % 95 so the SAME bytes are expressible
+    in both engines (UTF-8 encodes [32,126] one byte each)."""
+    n = f"(((n_chars % 4) + 1) * {_AU_FRAME})"
+    return (
+        "encode(concat('NCAU|16b-header|', array_join(transform("
+        f"sequence(0, {n} - 1), "
+        "j -> char(32 + pmod(doc_id * 31 + j * 7, 95))), '')), 'UTF-8')"
+    )
+
+
+def _audio_oracle() -> str:
+    return f"""
+    WITH dims AS (
+      SELECT doc_id, ((n_chars % 4) + 1) AS nf FROM documents),
+    frames AS (
+      SELECT doc_id, CAST(f AS INTEGER) AS frame
+      FROM dims, unnest(range(0, nf)) r(f)),
+    svals AS (
+      SELECT doc_id, frame, CAST(sum(b * b) AS BIGINT) AS s2
+      FROM (
+        SELECT doc_id, frame,
+               32 + (doc_id * 31 + j * 7) % 95 AS b
+        FROM frames,
+             unnest(range(frame * {_AU_FRAME},
+                          frame * {_AU_FRAME} + {_AU_FRAME})) u(j))
+      GROUP BY doc_id, frame)
+    SELECT doc_id AS media_id, frame,
+           CAST({_AU_FRAME} AS INTEGER) AS n_samples,
+           CAST(floor(sqrt(CAST(s2 AS DOUBLE) / 16384.0 / {_AU_FRAME})
+                      * 10000 + 0.5) AS BIGINT) AS rms_q
+    FROM svals
+    """
+
+
+@register("q_audio_window_energy", _audio_oracle())
+def q_audio_window_energy(spark, sf_dir):
+    """Windowed RMS energy over a deterministic int8-PCM audio column
+    (operators/multimodal.audio_window_energy): REAL signal math through
+    the Arrow-batched mapInPandas kernel — binary bytes for non-audio
+    rows never move.  The synthetic payload keeps every sample in the
+    ASCII range so the oracle reconstructs the identical bytes in SQL;
+    frames are always full (a multiple of the frame length), which makes
+    the mean an exact multiple of 2^-14 regardless of summation order,
+    so sqrt + the shared half-up quantization agree bit-for-bit."""
+    from nonconsumptive_spark.operators.multimodal import (
+        audio_window_energy)
+
+    docs = load(spark, sf_dir, "documents")
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("audio").alias("kind"),
+        F.lit("audio/pcm").alias("mime"),
+        F.expr(_audio_payload_expr()).alias("content"),
+    )
+    return audio_window_energy(media, frame_len=_AU_FRAME)

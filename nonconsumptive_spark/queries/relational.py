@@ -1,5 +1,6 @@
 """Relational operator queries (SURVEY.md §2.2-§2.7 [Q] rows) over the
-driver's TPC-H-ish tables.
+TPC-H-ish test tables, plus the warehouse audits (bucketed joins,
+key skew, referential integrity) and retail analytics on the star.
 
 Every query is a declarative DataFrame plan — Catalyst handles predicate
 pushdown, column pruning, join strategy selection; the explicit
@@ -13,10 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nonconsumptive_spark.queries import load, register
-
-
-def _fmt_ts(col):
-    return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
 
 
 # --------------------------------------------------------------------------
@@ -741,5 +738,406 @@ def q_cube_revenue(spark, sf_dir):
             F.coalesce("l_returnflag", F.lit("_all")).alias("returnflag"),
             F.coalesce("l_linestatus", F.lit("_all")).alias("linestatus"),
             "sum_qty", "n",
+        )
+    )
+
+
+# -- join-key skew report ------------------------------------------------------
+@register(
+    "q_skew_report",
+    """
+    WITH kc AS (
+      SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
+      FROM events GROUP BY user_id),
+    tot AS (
+      SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
+             CAST(count(*) AS BIGINT) AS n_keys
+      FROM kc),
+    hot AS (
+      SELECT user_id AS hot_key, cnt AS max_rows
+      FROM kc ORDER BY cnt DESC, user_id ASC LIMIT 1),
+    hist AS (
+      SELECT cnt, CAST(count(*) AS BIGINT) AS n_at,
+             CAST(sum(count(*)) OVER (ORDER BY cnt ASC) AS BIGINT) AS cum
+      FROM kc GROUP BY cnt),
+    p99 AS (
+      SELECT min(cnt) AS p99_rows
+      FROM hist CROSS JOIN tot
+      WHERE cum >= (99 * n_keys + 99) // 100)
+    SELECT t.n_rows, t.n_keys, h.hot_key, h.max_rows, p.p99_rows,
+           round(CAST(h.max_rows * t.n_keys AS DOUBLE) / t.n_rows, 4) + 0.0
+             AS skew_factor
+    FROM tot t CROSS JOIN hot h CROSS JOIN p99 p
+    """,
+)
+def q_skew_report(spark, sf_dir):
+    """Join-key skew diagnosis for events.user_id — the measurement step
+    BEFORE reaching for salting (operators/skew.py) or AQE skew joins:
+    one row with the key count, the hottest key (exact top-1, id
+    tiebreak), the exact p99 per-key row count (order statistic off the
+    count histogram), and skew_factor = max/avg rows per key.  Plan: one
+    key agg, then everything runs on the per-key count frame — a
+    count-valued histogram, a top-1 cut, and 1-row attaches; nothing
+    after the first agg scales with rows."""
+    from pyspark.sql import Window
+
+    ev = load(spark, sf_dir, "events")
+    kc = ev.groupBy("user_id").agg(F.count("*").cast("long").alias("cnt"))
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+    kc = materialize_once(kc, "skew_kc")
+    tot = kc.agg(F.sum("cnt").cast("long").alias("n_rows"),
+                 F.count("*").cast("long").alias("n_keys"))
+    hot = (kc.orderBy(F.desc("cnt"), F.asc("user_id")).limit(1)
+           .select(F.col("user_id").alias("hot_key"),
+                   F.col("cnt").alias("max_rows")))
+    w = Window.orderBy(F.asc("cnt")).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    hist = (kc.groupBy("cnt").agg(F.count("*").cast("long").alias("n_at"))
+            .withColumn("cum", F.sum("n_at").over(w).cast("long")))
+    p99 = (
+        hist.crossJoin(F.broadcast(tot))
+        .filter(F.col("cum")
+                >= F.expr("(99 * n_keys + 99) div 100"))  # ceil(.99*nk)
+        .agg(F.min("cnt").alias("p99_rows"))
+    )
+    return (
+        tot.crossJoin(F.broadcast(hot))
+        .crossJoin(F.broadcast(p99))
+        .select(
+            "n_rows", "n_keys", "hot_key", "max_rows", "p99_rows",
+            (F.round((F.col("max_rows") * F.col("n_keys")).cast("double")
+                     / F.col("n_rows"), 4) + F.lit(0.0))
+            .alias("skew_factor"),
+        )
+    )
+
+
+# -- referential-integrity audit ----------------------------------------------
+@register(
+    "q_fk_integrity",
+    """
+    SELECT 'orders.o_custkey->customer' AS fk_edge,
+           CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_child,
+           CAST((SELECT count(*) FROM orders o
+                 WHERE NOT EXISTS (SELECT 1 FROM customer c
+                                   WHERE c.c_custkey = o.o_custkey))
+                AS BIGINT) AS n_orphans
+    UNION ALL
+    SELECT 'lineitem.l_orderkey->orders' AS fk_edge,
+           CAST((SELECT count(*) FROM lineitem) AS BIGINT) AS n_child,
+           CAST((SELECT count(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM orders o
+                                   WHERE o.o_orderkey = l.l_orderkey))
+                AS BIGINT) AS n_orphans
+    """,
+)
+def q_fk_integrity(spark, sf_dir):
+    """Referential-integrity audit over the warehouse FK edges
+    (orders->customer, lineitem->orders): child row count + orphan count
+    per edge — the classic load-validation check.  Each orphan count is
+    one LEFT ANTI join on the key (shuffle-keyed, no row ever widens);
+    the output is two 1-row frames unioned."""
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    li = load(spark, sf_dir, "lineitem")
+
+    def edge(name, child, key_c, parent, key_p):
+        orphans = child.join(
+            parent.select(F.col(key_p).alias(key_c)), key_c, "left_anti")
+        return (
+            child.agg(F.count("*").cast("long").alias("n_child"))
+            .crossJoin(F.broadcast(
+                orphans.agg(F.count("*").cast("long").alias("n_orphans"))))
+            .select(F.lit(name).alias("fk_edge"), "n_child", "n_orphans")
+        )
+    return edge("orders.o_custkey->customer", orders, "o_custkey",
+                cust, "c_custkey").unionByName(
+        edge("lineitem.l_orderkey->orders", li, "l_orderkey",
+             orders, "o_orderkey"))
+
+
+# -- ABC (Pareto) inventory classification -----------------------------------
+@register(
+    "q_abc_parts",
+    """
+    WITH rev AS (
+      SELECT l_partkey,
+             CAST(sum(CAST(floor(100 * l_extendedprice
+                                 * (1 - l_discount) + 0.5) AS BIGINT))
+                  AS BIGINT) AS rev_c
+      FROM lineitem GROUP BY l_partkey),
+    tot AS (SELECT CAST(sum(rev_c) AS BIGINT) AS t FROM rev),
+    ranked AS (
+      SELECT l_partkey, rev_c,
+             CAST(sum(rev_c) OVER (ORDER BY rev_c DESC, l_partkey ASC
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                  AS BIGINT) AS cum_c
+      FROM rev),
+    classed AS (
+      SELECT l_partkey, rev_c,
+             CASE WHEN cum_c * 100 <= t * 80 THEN 'A'
+                  WHEN cum_c * 100 <= t * 95 THEN 'B'
+                  ELSE 'C' END AS abc
+      FROM ranked CROSS JOIN tot)
+    SELECT abc, CAST(count(*) AS BIGINT) AS n_parts,
+           CAST(sum(rev_c) AS BIGINT) AS revenue_c,
+           round(CAST(sum(rev_c) AS BIGINT)
+                 / CAST((SELECT t FROM tot) AS DOUBLE), 6) + 0.0
+             AS revenue_share
+    FROM classed GROUP BY abc
+    """,
+)
+def q_abc_parts(spark, sf_dir):
+    """ABC (Pareto) classification of parts by discounted revenue:
+    A = parts inside the first 80% of cumulative revenue, B to 95%,
+    C the tail — the inventory-analytics read of 'which 20% of SKUs
+    carry the business', here over the TPC-H star.  Revenue quantizes
+    to exact cents per row BEFORE any sum, the cumulative class test is
+    an integer cross-multiplication (cum*100 <= tot*80), and the only
+    float is the final share division.  Plan: one part-keyed agg, one
+    window over the #parts spine, a 1-row total attach."""
+    from pyspark.sql import Window
+
+    li = load(spark, sf_dir, "lineitem")
+    rev = li.groupBy("l_partkey").agg(
+        F.sum(F.floor(100 * F.col("l_extendedprice")
+                      * (1 - F.col("l_discount")) + F.lit(0.5))
+              .cast("long")).cast("long").alias("rev_c"))
+    tot = rev.agg(F.sum("rev_c").cast("long").alias("t"))
+    w = (Window.orderBy(F.desc("rev_c"), F.asc("l_partkey"))
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    ranked = rev.select(
+        "l_partkey", "rev_c",
+        F.sum("rev_c").over(w).cast("long").alias("cum_c"))
+    classed = ranked.crossJoin(F.broadcast(tot)).select(
+        "rev_c", "t",
+        F.when(F.col("cum_c") * 100 <= F.col("t") * 80, F.lit("A"))
+        .when(F.col("cum_c") * 100 <= F.col("t") * 95, F.lit("B"))
+        .otherwise(F.lit("C")).alias("abc"),
+    )
+    return (
+        classed.groupBy("abc")
+        .agg(F.count("*").cast("long").alias("n_parts"),
+             F.sum("rev_c").cast("long").alias("revenue_c"),
+             F.max("t").alias("t"))
+        .select("abc", "n_parts", "revenue_c",
+                (F.round(F.col("revenue_c") / F.col("t").cast("double"), 6)
+                 + F.lit(0.0)).alias("revenue_share"))
+    )
+
+
+# -- market-basket association rules over brand baskets ----------------------
+_MB_MIN_SUPP = 10
+_MB_TOP = 20
+
+
+@register(
+    "q_basket_rules",
+    f"""
+    WITH baskets AS (
+      SELECT DISTINCT l.l_orderkey, p.p_brand
+      FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey),
+    nb AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders
+           FROM baskets),
+    supp1 AS (
+      SELECT p_brand, CAST(count(*) AS BIGINT) AS s
+      FROM baskets GROUP BY p_brand),
+    pairs AS (
+      SELECT a.p_brand AS brand_a, b.p_brand AS brand_b,
+             CAST(count(*) AS BIGINT) AS supp_ab
+      FROM baskets a JOIN baskets b
+        ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
+      GROUP BY 1, 2
+      HAVING count(*) >= {_MB_MIN_SUPP}),
+    scored AS (
+      SELECT p.brand_a, p.brand_b, p.supp_ab,
+             sa.s AS supp_a, sb.s AS supp_b,
+             CAST(floor(1000000.0 * ((CAST(p.supp_ab AS DOUBLE) * n.n_orders)
+                  / (CAST(sa.s AS DOUBLE) * sb.s))) AS BIGINT) AS lift_q
+      FROM pairs p
+      JOIN supp1 sa ON sa.p_brand = p.brand_a
+      JOIN supp1 sb ON sb.p_brand = p.brand_b
+      CROSS JOIN nb n),
+    ranked AS (
+      SELECT *, row_number() OVER (
+               ORDER BY lift_q DESC, brand_a ASC, brand_b ASC) AS rn
+      FROM scored)
+    SELECT brand_a, brand_b, supp_ab, supp_a, supp_b,
+           round(CAST(supp_ab AS DOUBLE) / supp_a, 6) + 0.0 AS confidence,
+           round(lift_q / 1000000.0, 6) + 0.0 AS lift
+    FROM ranked WHERE rn <= {_MB_TOP}
+    """,
+)
+def q_basket_rules(spark, sf_dir):
+    """Market-basket association rules over order->brand baskets:
+    support / confidence / lift for the top-{top} brand pairs by lift —
+    the q_event_type_lift pattern applied to the TPC-H star (a brand
+    dimension join builds the baskets).  Lift floor-quantizes to 1e6
+    before the rank so the cut is deterministic; supports are exact
+    order counts.  Scale shape: baskets are one distinct projection;
+    the pair join keys on l_orderkey with fan-out bounded by basket
+    width (<= distinct brands per order); supports broadcast."""
+    from pyspark.sql import Window
+
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    li = load(spark, sf_dir, "lineitem")
+    part = load(spark, sf_dir, "part")
+    baskets = (li.join(part, li["l_partkey"] == part["p_partkey"])
+               .select("l_orderkey", "p_brand").distinct())
+    baskets = materialize_once(baskets, "mb_baskets")  # pairs + supports
+    nb = baskets.agg(F.countDistinct("l_orderkey").cast("long")
+                     .alias("n_orders"))
+    supp1 = baskets.groupBy("p_brand").agg(
+        F.count("*").cast("long").alias("s"))
+    a = baskets.select("l_orderkey", F.col("p_brand").alias("brand_a"))
+    b = baskets.select("l_orderkey", F.col("p_brand").alias("brand_b"))
+    pairs = (
+        a.join(b, "l_orderkey")
+        .filter(F.col("brand_a") < F.col("brand_b"))
+        .groupBy("brand_a", "brand_b")
+        .agg(F.count("*").cast("long").alias("supp_ab"))
+        .filter(F.col("supp_ab") >= _MB_MIN_SUPP)
+    )
+    sa = supp1.select(F.col("p_brand").alias("brand_a"),
+                      F.col("s").alias("supp_a"))
+    sb = supp1.select(F.col("p_brand").alias("brand_b"),
+                      F.col("s").alias("supp_b"))
+    scored = (
+        pairs.join(F.broadcast(sa), "brand_a")
+        .join(F.broadcast(sb), "brand_b")
+        .crossJoin(F.broadcast(nb))
+        .select(
+            "brand_a", "brand_b", "supp_ab", "supp_a", "supp_b",
+            F.floor(F.lit(1e6) * ((F.col("supp_ab").cast("double")
+                                   * F.col("n_orders"))
+                                  / (F.col("supp_a").cast("double")
+                                     * F.col("supp_b"))))
+            .cast("long").alias("lift_q"),
+        )
+    )
+    w = Window.orderBy(F.desc("lift_q"), F.asc("brand_a"), F.asc("brand_b"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _MB_TOP)
+        .select("brand_a", "brand_b", "supp_ab", "supp_a", "supp_b",
+                (F.round(F.col("supp_ab").cast("double")
+                         / F.col("supp_a"), 6) + F.lit(0.0))
+                .alias("confidence"),
+                (F.round(F.col("lift_q") / F.lit(1e6), 6) + F.lit(0.0))
+                .alias("lift"))
+    )
+
+
+# -- log-log price elasticity per return flag --------------------------------
+@register(
+    "q_price_elasticity",
+    """
+    WITH base AS (
+      SELECT l_returnflag,
+             CAST(floor(100 * l_extendedprice + 0.5) AS BIGINT) AS pc,
+             CAST(floor(l_quantity + 0.5) AS BIGINT) AS qq
+      FROM lineitem
+      WHERE l_quantity > 0 AND l_extendedprice > 0),
+    pts AS (
+      SELECT l_returnflag,
+             CAST(floor(10000.0 * ln(CAST(pc AS DOUBLE) / qq)) AS BIGINT)
+               AS xq,
+             CAST(floor(10000.0 * ln(CAST(qq AS DOUBLE))) AS BIGINT)
+               AS yq
+      FROM base),
+    ols AS (
+      SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(xq) AS BIGINT) AS sx, CAST(sum(yq) AS BIGINT) AS sy,
+             CAST(sum(xq * yq) AS BIGINT) AS sxy,
+             CAST(sum(xq * xq) AS BIGINT) AS sxx
+      FROM pts GROUP BY l_returnflag)
+    SELECT l_returnflag, n,
+           round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
+                 / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx),
+                 6) + 0.0 AS elasticity
+    FROM ols
+    """,
+)
+def q_price_elasticity(spark, sf_dir):
+    """Log-log OLS price elasticity of demand per return flag:
+    d ln(qty) / d ln(unit price) — the demand-curve slope read straight
+    off the lineitem fact table (elasticity ~ -1 means revenue-neutral
+    pricing).  ln-points floor-quantize to 1e4 BIGINTs — not the weibull
+    OLS's 1e6, so the xq^2 sums stay below 2^63 at 100x sf0.1 rows (see
+    the inline comment) — same discipline otherwise: integer
+    cross-products, ONE float division; rows with
+    zero quantity or price are excluded identically on both engines.
+    Plan: one zero-shuffle scan into a flag-keyed 1-agg."""
+    li = load(spark, sf_dir, "lineitem")
+    base = li.filter((F.col("l_quantity") > 0)
+                     & (F.col("l_extendedprice") > 0)).select(
+        "l_returnflag",
+        F.floor(100 * F.col("l_extendedprice") + F.lit(0.5)).cast("long")
+        .alias("pc"),
+        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qq"),
+    )
+    # 1e4 ln-quantization: xq^2 sums stay below 2^63 even at 100x the
+    # sf0.1 row count; the Cramer products then run in mirrored doubles
+    pts = base.select(
+        "l_returnflag",
+        F.floor(F.lit(1e4) * F.log(F.col("pc").cast("double")
+                                   / F.col("qq"))).cast("long").alias("xq"),
+        F.floor(F.lit(1e4) * F.log(F.col("qq").cast("double")))
+        .cast("long").alias("yq"),
+    )
+    ols = pts.groupBy("l_returnflag").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("xq").cast("long").alias("sx"),
+        F.sum("yq").cast("long").alias("sy"),
+        F.sum(F.col("xq") * F.col("yq")).cast("long").alias("sxy"),
+        F.sum(F.col("xq") * F.col("xq")).cast("long").alias("sxx"),
+    )
+    return ols.select(
+        "l_returnflag", "n",
+        (F.round((F.col("n").cast("double") * F.col("sxy")
+                  - F.col("sx").cast("double") * F.col("sy"))
+                 / (F.col("n").cast("double") * F.col("sxx")
+                    - F.col("sx").cast("double") * F.col("sx")), 6)
+         + F.lit(0.0)).alias("elasticity"),
+    )
+
+
+# -- bucketed-layout join elimination ----------------------------------------
+@register(
+    "q_bucketed_join_revenue",
+    """
+    SELECT o.o_orderpriority AS priority,
+           CAST(count(*) AS BIGINT) AS n_items,
+           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_orderpriority
+    """,
+)
+def q_bucketed_join_revenue(spark, sf_dir):
+    """Fact-to-fact orders⋈lineitem revenue over the BUCKETED warehouse
+    layout (sources/bucketing.py): both tables are written once,
+    bucketed AND sorted by orderkey with the same bucket count, so the
+    join is a SortMergeJoin with ZERO shuffle exchange and zero
+    per-query sort on the bucketed sides — the layout pays the shuffle
+    once, every subsequent join on the key reads co-located buckets
+    (plan asserted by tests/test_bucketed_join.py).  At 100 TB this is
+    the difference between re-shuffling two fact tables per query and
+    never shuffling them at all; the dims-broadcast star join
+    (q_star_join_revenue) covers the small-side case, this covers the
+    big⋈big case.  Results are layout-independent (the oracle runs on
+    the flat parquet); only the final priority agg exchanges."""
+    from nonconsumptive_spark.sources.bucketing import bucketed_fact_tables
+
+    o_name, l_name = bucketed_fact_tables(spark, sf_dir)
+    o = spark.table(o_name)
+    li = spark.table(l_name)
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(F.col("o_orderpriority").alias("priority"))
+        .agg(
+            F.count("*").alias("n_items"),
+            F.round(F.sum(F.col("l_extendedprice")
+                          * (1 - F.col("l_discount"))), 2).alias("revenue"),
         )
     )

@@ -1,16 +1,13 @@
 """Scalar-function and provenance queries (SURVEY §2.8 F6-F13, §2.5 W2/W4,
-plus the approximate-aggregation and SRP surfaces as rows-only entries).
+plus the approximate-aggregation, sketch and SRP surfaces).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from nonconsumptive_spark.plans.checkpoint import materialize_once
-from nonconsumptive_spark.queries import load, register
-
-_DUCK_TOKS = "list_filter(regexp_split_to_array(text, '[^\\pL]+'), x -> x <> '')"
+from nonconsumptive_spark.queries import _DUCK_TOKS, load, register
 
 
 # --------------------------------------------------------------------------
@@ -378,3 +375,39 @@ def q_zorder_curve(spark, sf_dir):
         (F.floor("value").cast("long") % (_Z_MASK + 1)).alias("yq"),
     )
     return ev.select("event_id", interleave_bits("xq", "yq", _Z_BITS).alias("z"))
+
+
+# -- AMS F2 sketch -----------------------------------------------------------
+def _ams_oracle() -> str:
+    from nonconsumptive_spark.operators.wordcount import AMS_R
+
+    xs = ", ".join(
+        f"CAST(sum(c * (((h >> {r}) & 1) * 2 - 1)) AS BIGINT) AS x{r}"
+        for r in range(AMS_R))
+    sumsq = " + ".join(f"x{r} * x{r}" for r in range(AMS_R))
+    return f"""
+    WITH counts AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY token),
+    sgn AS (
+      SELECT c, CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS h
+      FROM counts),
+    agg AS (
+      SELECT CAST(sum(c * c) AS BIGINT) AS f2, {xs}
+      FROM sgn)
+    SELECT f2 AS f2_exact,
+           round(CAST(({sumsq}) AS DOUBLE) / {AMS_R}, 4) + 0.0 AS f2_est,
+           round(abs(CAST(({sumsq}) - {AMS_R} * f2 AS DOUBLE))
+                 / (CAST({AMS_R} AS DOUBLE) * f2), 6) + 0.0 AS rel_err
+    FROM agg
+    """
+
+
+@register("q_ams_f2", _ams_oracle(),
+          doc="AMS second-moment sketch vs the exact F2 (operators/"
+              "wordcount.ams_f2): R sign-sums in one agg, abs rel_err.")
+def q_ams_f2(spark, sf_dir):
+    from nonconsumptive_spark.operators.wordcount import ams_f2
+
+    return ams_f2(load(spark, sf_dir, "documents"))

@@ -1,4 +1,6 @@
-"""Similarity-search queries over the `embeddings` table.
+"""Similarity-search queries over the `embeddings` table, and the
+embedding-space diagnostics (principal components, isotropy, bitext
+margins, label agreement).
 
 The brute-force top-k is the oracle-checked exact baseline; the LSH/IVF
 variants are the approximate scale paths, oracle-checked on QUALITY: their
@@ -471,3 +473,439 @@ _DIM = 64
 )
 def q_embedding_dim_corr(spark, sf_dir):
     return sim.embedding_dim_corr(load(spark, sf_dir, "embeddings"), dim=_DIM)
+
+
+# -- top principal component by exact-integer power iteration ---------------
+def _pca_ctes() -> tuple[str, str, int]:
+    """(WITH-body, final v CTE name, dim+1) — shared by the component and
+    the all-but-the-top residual oracles."""
+    from nonconsumptive_spark.operators.similarity import (
+        PCA_DIM,
+        PCA_ITERS,
+        PCA_SCALE,
+    )
+
+    d1 = PCA_DIM + 1
+    sc = f"{float(PCA_SCALE)!r}"
+    v0 = "[" + ", ".join([repr(1.0 / PCA_DIM ** 0.5)] * PCA_DIM) + "]"
+    cte = [f"""
+    base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x
+             FROM embeddings),
+    nn AS (SELECT count(*) AS n FROM base),
+    mq AS (
+      SELECT j, CAST(sum(CAST(floor({sc} * x[j]) AS BIGINT)) AS BIGINT) AS s
+      FROM base, unnest(range(1, {d1})) AS r(j) GROUP BY j),
+    mu AS (
+      SELECT list_transform(list(s ORDER BY j),
+                            e -> CAST(e AS DOUBLE) / (n * {sc})) AS mu
+      FROM mq CROSS JOIN nn GROUP BY n),
+    centered AS (
+      SELECT vec_id, list_transform(range(1, {d1}), j -> x[j] - mu[j]) AS xc
+      FROM base CROSS JOIN mu),
+    v0 AS (SELECT {v0}::DOUBLE[] AS v)"""]
+    for i in range(1, PCA_ITERS + 1):
+        cte.append(f"""
+    d{i} AS (
+      SELECT xc, list_reduce(list_transform(range(1, {d1}),
+                                            j -> xc[j] * v[j]),
+                             (a, b) -> a + b) AS d
+      FROM centered CROSS JOIN v{i - 1}),
+    q{i} AS (
+      SELECT j, CAST(sum(CAST(floor({sc} * d * xc[j]) AS BIGINT))
+                 AS BIGINT) AS s
+      FROM d{i}, unnest(range(1, {d1})) AS r(j) GROUP BY j),
+    v{i} AS (
+      -- mirror the Spark-side zero-variance guard (drift-trap hygiene;
+      -- inactive on the fixtures)
+      SELECT list_transform(sarr, e -> CASE WHEN n2 > 0
+                 THEN CAST(e AS DOUBLE) / sqrt(n2) ELSE 0.0 END) AS v
+      FROM (
+        SELECT list(s ORDER BY j) AS sarr,
+               list_reduce(list_transform(list(s ORDER BY j),
+                                          e -> CAST(e AS DOUBLE)
+                                               * CAST(e AS DOUBLE)),
+                           (a, b) -> a + b) AS n2
+        FROM q{i}))""")
+    return "WITH" + ",".join(cte), f"v{PCA_ITERS}", d1
+
+
+def _pca_oracle() -> str:
+    ctes, vk, d1 = _pca_ctes()
+    return ctes + f"""
+    SELECT CAST(j AS BIGINT) AS dim, round(v[j], 6) + 0.0 AS loading
+    FROM {vk}, unnest(range(1, {d1})) AS r(j)"""
+
+
+def _abtt_oracle() -> str:
+    ctes, vk, d1 = _pca_ctes()
+    return ctes + f"""
+    , pr AS (
+      SELECT vec_id,
+             list_reduce(list_transform(range(1, {d1}),
+                                        j -> xc[j] * v[j]),
+                         (a, b) -> a + b) AS p,
+             xc, v
+      FROM centered CROSS JOIN {vk}),
+    rr AS (
+      SELECT vec_id, p,
+             list_reduce(list_transform(
+               list_transform(range(1, {d1}), j -> xc[j] - p * v[j]),
+               r -> r * r), (a, b) -> a + b) AS r2
+      FROM pr)
+    SELECT vec_id, round(p, 4) + 0.0 AS proj,
+           round(sqrt(r2), 4) + 0.0 AS resid_norm
+    FROM rr"""
+
+
+@register("q_top_component", _pca_oracle(),
+          doc="Largest connected component of the token graph: "
+              "iterative min-label rounds then one size agg; lineage cut per "
+              "round.")
+def q_top_component(spark, sf_dir):
+    from nonconsumptive_spark.operators.similarity import (
+        top_principal_component,
+    )
+
+    return top_principal_component(load(spark, sf_dir, "embeddings"))
+
+
+@register("q_abtt_residuals", _abtt_oracle(),
+          doc="All-but-the-top embedding residuals: mean + top "
+              "principal direction via power iteration (1-row/64-dim attaches), "
+              "residual norms per doc.")
+def q_abtt_residuals(spark, sf_dir):
+    from nonconsumptive_spark.operators.similarity import (
+        remove_top_component,
+    )
+
+    return remove_top_component(load(spark, sf_dir, "embeddings"))
+
+
+# -- margin-based bitext mining (Artetxe & Schwenk 2019) ---------------------
+_BT_K = 4
+_BT_CAP = 128  # src batch: even vec_id below this (64 query vectors)
+_BT_GRID = 1 << 20
+_BT_SCALE = 1_000_000_000
+
+
+def _bitext_oracle(k: int, cap: int, grid: int, scale: int) -> str:
+    quant = (f"list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) "
+             f"* {grid}.0 + 0.5) AS BIGINT))")
+    return f"""
+    WITH sn AS (
+      SELECT vec_id AS src_id, xq,
+             list_sum(list_transform(xq, v -> v * v)) AS nq
+      FROM (SELECT vec_id, {quant} AS xq FROM embeddings
+            WHERE vec_id % 2 = 0 AND vec_id < {cap})),
+    tn AS (
+      SELECT vec_id AS tgt_id, xq,
+             list_sum(list_transform(xq, v -> v * v)) AS nq
+      FROM (SELECT vec_id, {quant} AS xq FROM embeddings
+            WHERE vec_id % 2 = 1)),
+    p AS (
+      SELECT sn.src_id, tn.tgt_id,
+             CAST(floor(CAST(list_sum(list_transform(list_zip(sn.xq, tn.xq),
+                                z -> z[1] * z[2])) AS DOUBLE)
+                        / (sqrt(CAST(sn.nq AS DOUBLE))
+                           * sqrt(CAST(tn.nq AS DOUBLE)))
+                        * {scale}.0 + 0.5) AS BIGINT) AS qc
+      FROM sn CROSS JOIN tn
+      WHERE sn.nq > 0 AND tn.nq > 0),
+    r AS (
+      SELECT *,
+             row_number() OVER (PARTITION BY src_id
+                                ORDER BY qc DESC, tgt_id) AS rf,
+             row_number() OVER (PARTITION BY tgt_id
+                                ORDER BY qc DESC, src_id) AS rb
+      FROM p),
+    sx AS (SELECT src_id, sum(qc) AS snn_x FROM r WHERE rf <= {k}
+           GROUP BY src_id),
+    sy AS (SELECT tgt_id, sum(qc) AS snn_y FROM r WHERE rb <= {k}
+           GROUP BY tgt_id),
+    m AS (
+      SELECT r.src_id, r.tgt_id, r.qc,
+             2 * {k} * r.qc - sx.snn_x - sy.snn_y AS margin_scaled
+      FROM r JOIN sx USING (src_id) JOIN sy USING (tgt_id)
+      WHERE r.rf <= {k})
+    SELECT src_id, tgt_id, CAST(qc AS BIGINT) AS cos_scaled,
+           CAST(margin_scaled AS BIGINT) AS margin_scaled
+    FROM m
+    QUALIFY row_number() OVER (PARTITION BY src_id
+                               ORDER BY margin_scaled DESC, tgt_id) = 1"""
+
+
+@register("q_bitext_margin", _bitext_oracle(_BT_K, _BT_CAP, _BT_GRID, _BT_SCALE),
+          doc="Margin-based bitext mining scores (forward/"
+              "backward nearest-neighbor ratio) over a bounded query batch.")
+def q_bitext_margin(spark, sf_dir):
+    from nonconsumptive_spark.operators import similarity as sim
+
+    emb = load(spark, sf_dir, "embeddings")
+    src = emb.where((F.col("vec_id") % 2 == 0) & (F.col("vec_id") < _BT_CAP))
+    tgt = emb.where(F.col("vec_id") % 2 == 1)
+    return sim.bitext_margin_pairs(src, tgt, k=_BT_K)
+
+
+# -- embedding-space isotropy --------------------------------------------------
+# Components quantize to integer 1e-4 units BEFORE any sum, so the
+# per-dimension moments are exact BIGINTs at any row count; per-dim
+# variances and the entropy terms then quantize to 1e-12 BIGINTs so the
+# cross-dimension sums are order-independent.
+_ISO_Q = 10**4
+_ISO_SCALE = 10**12
+
+
+@register(
+    "q_embedding_isotropy",
+    f"""
+    WITH comp AS (
+      SELECT generate_subscripts(embedding, 1) AS d,
+             CAST(floor(CAST(unnest(embedding) AS DOUBLE) * {_ISO_Q})
+                  AS BIGINT) AS vq
+      FROM embeddings),
+    mom AS (
+      SELECT d, CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(vq) AS BIGINT) AS s,
+             CAST(sum(vq * vq) AS BIGINT) AS ssq
+      FROM comp GROUP BY d),
+    vars_ AS (
+      SELECT d, n,
+             CAST(floor((CAST(ssq AS DOUBLE)
+                         - CAST(s AS DOUBLE) * s / n) / n
+                        / {_ISO_Q * _ISO_Q} * {_ISO_SCALE}) AS BIGINT)
+               AS var_q
+      FROM mom),
+    tot AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_dims,
+             any_value(n) AS n_vecs,
+             CAST(sum(var_q) AS BIGINT) AS vt,
+             CAST(min(var_q) AS BIGINT) AS var_min_q,
+             CAST(max(var_q) AS BIGINT) AS var_max_q
+      FROM vars_),
+    ent AS (
+      SELECT CAST(sum(CASE WHEN var_q > 0 THEN CAST(floor(
+               (CAST(var_q AS DOUBLE) / t.vt)
+               * ln(CAST(var_q AS DOUBLE) / t.vt) * {_ISO_SCALE})
+               AS BIGINT) ELSE 0 END) AS BIGINT) AS hq
+      FROM vars_ CROSS JOIN tot t)
+    SELECT n_vecs, n_dims,
+           round(var_min_q / {float(_ISO_SCALE)!r}, 8) + 0.0 AS var_min,
+           round(var_max_q / {float(_ISO_SCALE)!r}, 8) + 0.0 AS var_max,
+           CASE WHEN var_max_q > 0
+                THEN round(CAST(var_min_q AS DOUBLE) / var_max_q, 6) + 0.0
+                END AS var_ratio,
+           round(-hq / {float(_ISO_SCALE)!r}, 6) + 0.0 AS entropy,
+           round(-hq / {float(_ISO_SCALE)!r} / ln(CAST(n_dims AS DOUBLE)),
+                 6) + 0.0 AS isotropy
+    FROM tot CROSS JOIN ent
+    """,
+)
+def q_embedding_isotropy(spark, sf_dir):
+    """Isotropy of the embedding space: per-dimension variance spread
+    (min/max/ratio) and the entropy of the normalized variance
+    distribution, scaled by ln(D) to [0, 1] — 1 means every dimension
+    carries equal variance, low values mean a few rogue dimensions
+    dominate (the anisotropy problem ABTT post-processing fixes; see
+    q_abtt_residuals).  See the header note for the two quantization
+    layers that keep every cross-row and cross-dimension sum exact.
+    Plan: one posexplode + per-dim agg (64 groups), then all frames are
+    dimension-sized; two 1-row attaches."""
+    emb = load(spark, sf_dir, "embeddings")
+    comp = emb.select(
+        F.posexplode("embedding").alias("p", "v")).select(
+        (F.col("p") + 1).alias("d"),
+        F.floor(F.col("v").cast("double") * _ISO_Q).cast("long")
+        .alias("vq"))
+    mom = comp.groupBy("d").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("vq").cast("long").alias("s"),
+        F.sum(F.col("vq") * F.col("vq")).cast("long").alias("ssq"),
+    )
+    var_q = F.floor(
+        (F.col("ssq").cast("double")
+         - F.col("s").cast("double") * F.col("s") / F.col("n")) / F.col("n")
+        / (_ISO_Q * _ISO_Q) * _ISO_SCALE).cast("long")
+    vars_ = mom.select("d", "n", var_q.alias("var_q"))
+    tot = vars_.agg(
+        F.count("*").cast("long").alias("n_dims"),
+        F.first("n").alias("n_vecs"),
+        F.sum("var_q").cast("long").alias("vt"),
+        F.min("var_q").cast("long").alias("var_min_q"),
+        F.max("var_q").cast("long").alias("var_max_q"),
+    )
+    p = F.col("var_q").cast("double") / F.col("vt")
+    ent = (
+        vars_.crossJoin(F.broadcast(tot.select("vt")))
+        .agg(F.sum(F.when(F.col("var_q") > 0,
+                          F.floor(p * F.log(p) * _ISO_SCALE).cast("long"))
+                   .otherwise(F.lit(0))).cast("long").alias("hq"))
+    )
+    sc = float(_ISO_SCALE)
+    return (
+        tot.crossJoin(F.broadcast(ent))
+        .select(
+            "n_vecs", "n_dims",
+            (F.round(F.col("var_min_q") / sc, 8) + F.lit(0.0))
+            .alias("var_min"),
+            (F.round(F.col("var_max_q") / sc, 8) + F.lit(0.0))
+            .alias("var_max"),
+            F.when(F.col("var_max_q") > 0,
+                   F.round(F.col("var_min_q").cast("double")
+                           / F.col("var_max_q"), 6) + F.lit(0.0))
+            .alias("var_ratio"),
+            (F.round(-F.col("hq") / sc, 6) + F.lit(0.0)).alias("entropy"),
+            (F.round(-F.col("hq") / sc
+                     / F.log(F.col("n_dims").cast("double")), 6)
+             + F.lit(0.0)).alias("isotropy"),
+        )
+    )
+
+
+# -- 1-NN label agreement (embedding-quality probe) ---------------------------------
+def _nn_label_oracle() -> str:
+    return f"""
+    WITH q AS (
+      SELECT vec_id AS query_id, label AS own_label,
+             CAST(embedding AS DOUBLE[]) AS qvec
+      FROM embeddings WHERE vec_id < {_N_QUERIES}),
+    c AS (
+      SELECT vec_id AS neighbor_id, label AS nn_label,
+             CAST(embedding AS DOUBLE[]) AS cvec
+      FROM embeddings),
+    scored AS (
+      SELECT q.query_id, q.own_label, c.neighbor_id, c.nn_label,
+             round(list_dot_product(q.qvec, c.cvec) /
+                   (sqrt(list_dot_product(q.qvec, q.qvec)) *
+                    sqrt(list_dot_product(c.cvec, c.cvec))), 4)
+               AS cosine_sim
+      FROM q CROSS JOIN c WHERE q.query_id <> c.neighbor_id),
+    ranked AS (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+               ORDER BY cosine_sim DESC, neighbor_id ASC) AS rk
+      FROM scored)
+    SELECT query_id, CAST(own_label AS BIGINT) AS own_label,
+           neighbor_id AS nn_id, CAST(nn_label AS BIGINT) AS nn_label,
+           cosine_sim, own_label = nn_label AS agree
+    FROM ranked WHERE rk = 1
+    """
+
+
+@register("q_nn_label_agreement", _nn_label_oracle())
+def q_nn_label_agreement(spark, sf_dir):
+    """1-nearest-neighbor label agreement for the standard 10-vector
+    query set: does each query vector's closest OTHER vector carry the
+    same label — the cheapest leave-one-out probe of whether the
+    embedding space respects the labeling (the precursor to the full
+    kNN-classifier eval).  Reuses knn_bruteforce (broadcast query side,
+    deterministic rounded-sim/id ranking).  Plan: the documented
+    intentional BNLJ against the <=10-row query side + two label
+    joins."""
+    from nonconsumptive_spark.operators import similarity as sim
+    from nonconsumptive_spark.queries.similarity import _N_QUERIES
+
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
+    nn = sim.knn_bruteforce(emb, queries, k=1)
+    own = emb.select(F.col("vec_id").alias("query_id"),
+                     F.col("label").cast("long").alias("own_label"))
+    other = emb.select(F.col("vec_id").alias("neighbor_id"),
+                       F.col("label").cast("long").alias("nn_label"))
+    return (
+        nn.join(F.broadcast(own), "query_id")
+        .join(other, "neighbor_id")
+        .select(
+            "query_id", "own_label",
+            F.col("neighbor_id").alias("nn_id"), "nn_label",
+            "cosine_sim",
+            (F.col("own_label") == F.col("nn_label")).alias("agree"),
+        )
+    )
+
+
+# -- IVF recall-vs-nprobe tuning curve -----------------------------------------
+# per-nprobe recall floors (measured 0.08-0.14 / 0.22-0.44 / 0.46-0.52 / 0.78 at
+# sf0.001/sf0.01, floors set below both;
+# probe sets are nested, so recall is structurally non-decreasing in
+# n_probe up to rounding-tie displacement)
+_CURVE_BOUNDS = {1: 0.05, 2: 0.15, 4: 0.4, 8: 0.6}
+
+
+def _curve_oracle() -> str:
+    rows = " UNION ALL ".join(
+        f"""SELECT CAST({p} AS BIGINT) AS n_probe,
+               CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
+               CAST(count(*) AS BIGINT) AS n_exact,
+               TRUE AS recall_ok
+        FROM ({_DUCK_KNN})"""
+        for p in sorted(_CURVE_BOUNDS))
+    return rows
+
+
+@register("q_ann_recall_curve", _curve_oracle())
+def q_ann_recall_curve(spark, sf_dir):
+    """IVF recall-vs-n_probe tuning curve: one row per probe depth
+    (1, 2, 4, 8) with recall against the exact brute-force top-k —
+    the table that prices the ANN speed/recall dial before committing a
+    production n_probe.  The exact baseline materializes ONCE and feeds
+    all four probe levels; each level's recall must clear its measured
+    floor (the oracle asserts the flag + DuckDB-recomputed exact-side
+    counts, the q_knn_cosine_ivf discipline).  Probe cells are nested
+    across levels, so candidate sets are supersets and recall is
+    structurally non-decreasing up to rounded-cosine tie displacement.
+
+    r8 perf: probe sets are nested, so cell assignment + candidate
+    scoring run ONCE at the deepest probe (sim.ivf_probe_scored keeps
+    each candidate's probe_rank) and every level is a filter + top-k
+    window over that materialized frame — the old per-level knn_ivf
+    calls re-assigned the corpus and re-scored the nested candidates
+    4x (A/B warm sf0.1: 3.2 -> 1.3 s; results hash-identical)."""
+    from pyspark.sql import Window
+
+    from nonconsumptive_spark.operators import similarity as sim
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+    from nonconsumptive_spark.queries.similarity import _K, _N_QUERIES
+
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
+    exact = materialize_once(
+        sim.knn_bruteforce(emb, queries, k=_K), "curve_exact")
+    agg = exact.agg(
+        F.countDistinct("query_id").cast("long").alias("n_queries"),
+        F.count("*").cast("long").alias("n_exact"),
+    )
+    small = sim._small_corpus(emb)
+    if not small:
+        scored = materialize_once(
+            sim.ivf_probe_scored(emb, queries, n_centroids=16,
+                                 max_probe=max(_CURVE_BOUNDS)),
+            "curve_scored",
+        )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc("neighbor_id"))
+    out = None
+    for p, bound in sorted(_CURVE_BOUNDS.items()):
+        if small:
+            # knn_ivf's sub-MIN_ANN_CORPUS fallback is the exact scan:
+            # every level's result IS the baseline frame.
+            approx = exact
+        else:
+            approx = (
+                scored.filter(F.col("probe_rank") < p)
+                .withColumn("rank", F.row_number().over(w).cast("long"))
+                .filter(F.col("rank") <= _K)
+            )
+        hits = exact.join(
+            approx.select("query_id", "neighbor_id"),
+            ["query_id", "neighbor_id"])
+        row = (
+            agg.crossJoin(F.broadcast(
+                hits.agg(F.count("*").cast("long").alias("n_hits"))))
+            .select(
+                F.lit(p).cast("long").alias("n_probe"),
+                "n_queries", "n_exact",
+                (F.col("n_hits") / F.col("n_exact") >= bound)
+                .alias("recall_ok"),
+            )
+        )
+        out = row if out is None else out.unionByName(row)
+    return out

@@ -1,6 +1,8 @@
 """Text-pipeline queries over `documents` — the reference's core capability
 (tokenize → counts → vocabulary → encode; SURVEY §2 rows A1-A4, A8, A10,
-J1, W1, O1/O2, F1).
+J1, W1, O1/O2, F1), with the vocabulary-shape statistics (Zipf, Heaps,
+Hill tail, coverage, Good-Turing, burstiness) and the token-graph
+entries that predate ``queries/graph.py``.
 
 Oracle note: DuckDB tokenizes with RE2 ``[^\\pL]+`` which matches Spark's
 Java-regex ``[^\\p{L}]+`` exactly (both drop empty strings after split).
@@ -12,10 +14,9 @@ from pyspark.sql import functions as F
 
 from nonconsumptive_spark.operators import wordcount as wc
 from nonconsumptive_spark.plans.token_cache import tokenized_documents
-from nonconsumptive_spark.queries import load, register
+from nonconsumptive_spark.queries import _DUCK_TOKS, load, register
 
 # DuckDB-side tokenization fragments shared by the oracles.
-_DUCK_TOKS = "list_filter(regexp_split_to_array(text, '[^\\pL]+'), x -> x <> '')"
 _DUCK_TOKEN_ROWS = f"""
   SELECT doc_id, unnest({_DUCK_TOKS}) AS token
   FROM documents
@@ -1084,3 +1085,448 @@ def q_hll_by_group(spark, sf_dir):
     tok = docs.select(
         F.col("source").alias("src"), F.explode(tokenize("text")).alias("token"))
     return _wc.hll_estimate_by_group(tok, "src", "token")
+
+
+# -- unicode normalization (accents injected in SQL on both sides) ---------
+@register(
+    "q_normalize_unicode",
+    """
+    SELECT doc_id,
+           nfc_normalize(replace(text, 'a', 'a' || chr(768))) AS norm_text,
+           strip_accents(nfc_normalize(replace(text, 'a', 'a' || chr(768))))
+             AS stripped_text
+    FROM documents WHERE text IS NOT NULL
+    """,
+    doc="NFC-normalized text profile (length deltas, "
+        "changed-row flags) via a vectorized pandas UDF; DuckDB nfc_"
+        "normalize checks it bit-for-bit.",
+)
+def q_normalize_unicode(spark, sf_dir):
+    from nonconsumptive_spark.functions.text import (
+        normalize_unicode,
+        strip_accents,
+    )
+
+    docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    decorated = F.regexp_replace("text", "a", "à")
+    return docs.select(
+        "doc_id",
+        normalize_unicode(decorated).alias("norm_text"),
+        strip_accents(normalize_unicode(decorated)).alias("stripped_text"),
+    )
+
+
+# -- Good-Turing frequency-of-frequency smoothing ---------------------------
+@register(
+    "q_good_turing",
+    f"""
+    WITH counts AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY token),
+    hist AS (SELECT c AS r, CAST(count(*) AS BIGINT) AS n_r
+             FROM counts GROUP BY c)
+    SELECT h.r, h.n_r,
+           round((h.r + 1) * CAST(h2.n_r AS DOUBLE) / h.n_r, 6) + 0.0
+             AS r_star
+    FROM hist h LEFT JOIN hist h2 ON h2.r = h.r + 1
+    """,
+)
+def q_good_turing(spark, sf_dir):
+    """Good-Turing adjusted counts r* = (r+1) N_{{r+1}} / N_r over the
+    corpus frequency-of-frequencies — the classic unseen-mass smoother
+    (Good 1953) behind Katz backoff; rows where N_{{r+1}} is empty emit
+    NULL (the regime where GT hands off to raw counts).  Plan: the
+    global wordcount agg, a count-histogram agg (output is #distinct
+    frequencies, tiny), and a self-join on r+1."""
+    from nonconsumptive_spark.operators.wordcount import global_wordcount
+
+    hist = (
+        global_wordcount(load(spark, sf_dir, "documents"))
+        .groupBy(F.col("count").alias("r"))
+        .agg(F.count("*").cast("long").alias("n_r"))
+    )
+    nxt = hist.select((F.col("r") - 1).alias("r"),
+                      F.col("n_r").alias("n_r2"))
+    return (
+        hist.join(nxt, "r", "left")
+        .select(
+            "r", "n_r",
+            (F.round((F.col("r") + 1) * F.col("n_r2").cast("double")
+                     / F.col("n_r"), 6) + F.lit(0.0)).alias("r_star"),
+        )
+    )
+
+
+# -- token burstiness (Fano factor) -----------------------------------------
+_BURST_MIN_TOTAL = 50
+
+
+@register(
+    "q_token_burstiness",
+    f"""
+    WITH per AS (
+      SELECT doc_id, token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT doc_id, unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY doc_id, token),
+    tok AS (
+      SELECT token, CAST(sum(c) AS BIGINT) AS total,
+             CAST(sum(c * c) AS BIGINT) AS ssq,
+             CAST(count(*) AS BIGINT) AS n_docs
+      FROM per GROUP BY token),
+    nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents)
+    SELECT t.token, t.total, t.n_docs,
+           round(CAST(nd.n * t.ssq - t.total * t.total AS DOUBLE)
+                 / (nd.n * t.total), 6) + 0.0 AS fano
+    FROM tok t CROSS JOIN nd
+    WHERE t.total >= {_BURST_MIN_TOTAL}
+    """,
+)
+def q_token_burstiness(spark, sf_dir):
+    """Per-token burstiness as the Fano factor var/mean of per-document
+    counts (zeros included) — Church & Gale's dispersion signal: content
+    words clump (fano >> 1), function words spread (fano ~ 1).  All
+    moments exact BIGINTs off the (doc, token) count table; fano is ONE
+    float division.  Plan: one (doc, token) agg, one token agg, a 1-row
+    doc-count attach; output bounded by the >= {_BURST_MIN_TOTAL}-total
+    vocabulary cut."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    docs = load(spark, sf_dir, "documents")
+    per = (
+        docs.select("doc_id", F.explode(tokenize("text")).alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count("*").cast("long").alias("c"))
+    )
+    tok = per.groupBy("token").agg(
+        F.sum("c").cast("long").alias("total"),
+        F.sum(F.col("c") * F.col("c")).cast("long").alias("ssq"),
+        F.count("*").cast("long").alias("n_docs"),
+    )
+    nd = docs.agg(F.count("*").cast("long").alias("n"))
+    return (
+        tok.crossJoin(F.broadcast(nd))
+        .filter(F.col("total") >= _BURST_MIN_TOTAL)
+        .select(
+            "token", "total", "n_docs",
+            (F.round(
+                (F.col("n") * F.col("ssq")
+                 - F.col("total") * F.col("total")).cast("double")
+                / (F.col("n") * F.col("total")), 6) + F.lit(0.0))
+            .alias("fano"),
+        )
+    )
+
+
+# -- top-k vocabulary coverage curve -------------------------------------------
+_COV_KS = [100, 1000, 10000]
+
+
+@register(
+    "q_vocab_coverage",
+    f"""
+    WITH counts AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY token),
+    ranked AS (
+      SELECT c, CAST(row_number() OVER (ORDER BY c DESC, token ASC)
+                     AS BIGINT) AS rk
+      FROM counts),
+    tot AS (
+      SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
+             CAST(count(*) AS BIGINT) AS n_types
+      FROM ranked)
+    SELECT CAST(k AS BIGINT) AS top_k, t.n_types, t.n_tokens,
+           CAST(coalesce(sum(CASE WHEN rk <= k THEN c END), 0) AS BIGINT)
+             AS covered_tokens,
+           round(CAST(coalesce(sum(CASE WHEN rk <= k THEN c END), 0)
+                      AS DOUBLE) / t.n_tokens, 6) + 0.0 AS coverage
+    FROM ranked CROSS JOIN (SELECT unnest({_COV_KS}) AS k)
+    CROSS JOIN tot t
+    GROUP BY k, t.n_types, t.n_tokens
+    """,
+)
+def q_vocab_coverage(spark, sf_dir):
+    """Top-k vocabulary coverage curve: the fraction of all corpus
+    tokens covered by the k most frequent types, for a spine of k —
+    the Zipf-head table behind every vocabulary-size decision
+    (q_vocabulary picks the cap; this prices it).  Rank ties break on
+    the token string, so the curve replays exactly.  Plan: one global
+    wordcount agg, one vocab-bounded rank window, a 3-row literal
+    spine, one 3-group agg."""
+    from pyspark.sql import Window
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    counts = materialize_once(
+        load(spark, sf_dir, "documents")
+        .select(F.explode(tokenize("text")).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").cast("long").alias("c")),
+        "cov_counts",
+    )
+    # distributed TakeOrderedAndProject for the head, then rank INSIDE
+    # the <=max(k)-row frame — no unpartitioned window ever sees the
+    # full vocabulary (the q_vocabulary dense-id lesson)
+    top = counts.orderBy(F.desc("c"), F.asc("token")).limit(max(_COV_KS))
+    ranked = top.select(
+        "c",
+        F.row_number().over(
+            Window.orderBy(F.desc("c"), F.asc("token")))
+        .cast("long").alias("rk"),
+    )
+    tot = counts.agg(F.sum("c").cast("long").alias("n_tokens"),
+                     F.count("*").cast("long").alias("n_types"))
+    spine = spark.createDataFrame([(k,) for k in _COV_KS], "k long")
+    return (
+        ranked.crossJoin(F.broadcast(spine))
+        .crossJoin(F.broadcast(tot))
+        .groupBy("k", "n_types", "n_tokens")
+        .agg(F.coalesce(
+            F.sum(F.when(F.col("rk") <= F.col("k"), F.col("c"))),
+            F.lit(0)).cast("long").alias("covered_tokens"))
+        .select(
+            F.col("k").alias("top_k"), "n_types", "n_tokens",
+            "covered_tokens",
+            (F.round(F.col("covered_tokens").cast("double")
+                     / F.col("n_tokens"), 6) + F.lit(0.0))
+            .alias("coverage"),
+        )
+    )
+
+
+# -- OOV rate per source against the top-K corpus vocabulary -----------------------
+_OOV_K = 1000
+
+
+@register(
+    "q_oov_by_source",
+    f"""
+    WITH counts AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY token),
+    vocab AS (
+      SELECT token FROM counts
+      ORDER BY c DESC, token ASC LIMIT {_OOV_K}),
+    st AS (
+      SELECT source, token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY source, token),
+    agg AS (
+      SELECT st.source, CAST(sum(st.c) AS BIGINT) AS n_tokens,
+             CAST(coalesce(sum(CASE WHEN v.token IS NULL THEN st.c END),
+                           0) AS BIGINT) AS oov_tokens,
+             CAST(coalesce(sum(CASE WHEN v.token IS NULL THEN 1 END), 0)
+                  AS BIGINT) AS oov_types
+      FROM st LEFT JOIN vocab v USING (token)
+      GROUP BY st.source)
+    SELECT source, n_tokens, oov_tokens, oov_types,
+           round(CAST(oov_tokens AS DOUBLE) / n_tokens, 6) + 0.0
+             AS oov_rate
+    FROM agg
+    """,
+)
+def q_oov_by_source(spark, sf_dir):
+    """Out-of-vocabulary rate per source against the corpus top-K
+    vocabulary: which feeds the vocab cap hurts most — the per-source
+    refinement of q_vocab_coverage's corpus curve (and the fairness
+    check before committing a tokenizer vocab).  Vocabulary selection
+    uses the distributed sort+limit head with the deterministic
+    (count desc, token) tie-break; OOV mass is an exact BIGINT.  Plan:
+    one global wordcount agg + top-K head, one (source, token) agg, a
+    broadcast vocab anti-membership join, one source agg."""
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    toks = load(spark, sf_dir, "documents").select(
+        "source", F.explode(tokenize("text")).alias("token"))
+    toks = materialize_once(toks, "oov_toks")
+    counts = toks.groupBy("token").agg(
+        F.count("*").cast("long").alias("c"))
+    vocab = (counts.orderBy(F.desc("c"), F.asc("token")).limit(_OOV_K)
+             .select("token", F.lit(True).alias("in_vocab")))
+    st = toks.groupBy("source", "token").agg(
+        F.count("*").cast("long").alias("c"))
+    agg = (
+        st.join(F.broadcast(vocab), "token", "left")
+        .groupBy("source")
+        .agg(
+            F.sum("c").cast("long").alias("n_tokens"),
+            F.coalesce(F.sum(F.when(F.col("in_vocab").isNull(),
+                                    F.col("c"))), F.lit(0))
+            .cast("long").alias("oov_tokens"),
+            F.coalesce(F.sum(F.when(F.col("in_vocab").isNull(), 1)),
+                       F.lit(0)).cast("long").alias("oov_types"),
+        )
+    )
+    return agg.select(
+        "source", "n_tokens", "oov_tokens", "oov_types",
+        (F.round(F.col("oov_tokens").cast("double") / F.col("n_tokens"),
+                 6) + F.lit(0.0)).alias("oov_rate"),
+    )
+
+
+# -- Hill tail-index estimator over the token-frequency head -----------------------
+_HILL_K = 50
+_HILL_SCALE = 10**12
+
+
+@register(
+    "q_hill_tail",
+    f"""
+    WITH counts AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY token),
+    head AS (
+      SELECT c, CAST(row_number() OVER (ORDER BY c DESC, token ASC)
+                     AS BIGINT) AS rk
+      FROM counts ORDER BY c DESC, token ASC LIMIT {_HILL_K + 1}),
+    ref AS (
+      SELECT c AS c_ref, rk AS rk_ref FROM head
+      WHERE rk = (SELECT max(rk) FROM head)),
+    terms AS (
+      SELECT CAST(floor(ln(CAST(h.c AS DOUBLE) / r.c_ref)
+                        * {_HILL_SCALE}) AS BIGINT) AS tq
+      FROM head h CROSS JOIN ref r WHERE h.rk < r.rk_ref),
+    agg AS (SELECT CAST(sum(tq) AS BIGINT) AS sq,
+                   CAST(count(*) AS BIGINT) AS k
+            FROM terms)
+    SELECT a.k, r.c_ref,
+           CASE WHEN a.sq > 0
+                THEN round(CAST(a.k AS DOUBLE)
+                           / (a.sq / {float(_HILL_SCALE)!r}), 6) + 0.0
+                END AS hill_alpha
+    FROM agg a CROSS JOIN ref r
+    """,
+)
+def q_hill_tail(spark, sf_dir):
+    """Hill maximum-likelihood tail-index of the token-frequency
+    distribution: alpha = k / sum ln(c_i / c_(k+1)) over the k largest
+    type frequencies — the MLE twin of q_zipf_slope's regression
+    estimate (a Zipf exponent s corresponds to alpha ~ 1/s on the
+    frequency tail).  The head comes from the distributed sort+limit
+    (deterministic (count, token) tie-break), per-term logs quantize to
+    1e-12 BIGINTs before the k-term sum.  When the vocabulary has
+    fewer than k+1 types the reference falls back to the smallest
+    available order statistic (k shrinks with it).  Plan: one
+    wordcount agg + TakeOrdered(k+1); everything after is a
+    <=k+1-row frame."""
+    from pyspark.sql import Window
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    counts = (
+        load(spark, sf_dir, "documents")
+        .select(F.explode(tokenize("text")).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").cast("long").alias("c"))
+    )
+    head = materialize_once(
+        counts.orderBy(F.desc("c"), F.asc("token")).limit(_HILL_K + 1)
+        .select("c", F.row_number().over(
+            Window.orderBy(F.desc("c"), F.asc("token")))
+            .cast("long").alias("rk")),
+        "hill_head",
+    )
+    mx = head.agg(F.max("rk").alias("rk_ref"))
+    ref = (head.crossJoin(F.broadcast(mx))
+           .filter(F.col("rk") == F.col("rk_ref"))
+           .select(F.col("c").alias("c_ref"), "rk_ref"))
+    terms = (
+        head.crossJoin(F.broadcast(ref))
+        .filter(F.col("rk") < F.col("rk_ref"))
+        .select(F.floor(F.log(F.col("c").cast("double") / F.col("c_ref"))
+                        * _HILL_SCALE).cast("long").alias("tq"))
+    )
+    agg = terms.agg(F.sum("tq").cast("long").alias("sq"),
+                    F.count("*").cast("long").alias("k"))
+    return (
+        agg.crossJoin(F.broadcast(ref.select("c_ref")))
+        .select(
+            "k", "c_ref",
+            F.when(F.col("sq") > 0,
+                   F.round(F.col("k").cast("double")
+                           / (F.col("sq") / float(_HILL_SCALE)), 6)
+                   + F.lit(0.0)).alias("hill_alpha"),
+        )
+    )
+
+
+# -- positional bias of the top terms ------------------------------------------------
+# Where do frequent terms sit inside documents?  Front-loaded terms
+# (mean normalized position well under 0.5) are the lead-bias signal
+# summarization corpora must report.  Per-occurrence normalized
+# positions quantize to integer 1e-6 units (pos*1e6 div len) BEFORE the
+# cross-occurrence sum, so the mean replays exactly.
+_TPB_K = 20
+_TPB_SCALE = 10**6
+
+
+@register(
+    "q_term_position_bias",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS token,
+             len(t) AS l
+      FROM (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents)),
+    counts AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM toks GROUP BY token),
+    vocab AS (
+      SELECT token FROM counts ORDER BY c DESC, token ASC LIMIT {_TPB_K}),
+    occ AS (
+      SELECT t.token,
+             CAST((t.pos * {_TPB_SCALE}) // t.l AS BIGINT) AS npos_q
+      FROM toks t SEMI JOIN vocab v ON v.token = t.token),
+    agg AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS n_occ,
+             CAST(sum(npos_q) AS BIGINT) AS s
+      FROM occ GROUP BY token)
+    SELECT token, n_occ,
+           round(CAST(s AS DOUBLE) / n_occ / {_TPB_SCALE}, 6) + 0.0
+             AS mean_norm_pos,
+           CAST(s AS DOUBLE) / n_occ / {_TPB_SCALE} < 0.4 AS front_loaded
+    FROM agg
+    """,
+)
+def q_term_position_bias(spark, sf_dir):
+    """Mean normalized in-document position for the top-K corpus terms
+    (see header note) — terms that always appear early flag lead bias
+    and templated openings; terms pinned late flag boilerplate
+    footers.  Vocabulary selection is the deterministic sort+limit
+    head; membership rides a broadcast semi-join.  Plan: one positional
+    explode, one wordcount agg + TakeOrdered(K), one K-term agg."""
+    from pyspark.sql import Window
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id", tokenize(F.coalesce("text", F.lit(""))).alias("t"))
+    toks = materialize_once(
+        base.select(F.posexplode("t").alias("p", "token"),
+                    F.size("t").alias("l"))
+        .select("token", (F.col("p") + 1).alias("pos"), "l"),
+        "tpb_toks",
+    )
+    counts = toks.groupBy("token").agg(
+        F.count("*").cast("long").alias("c"))
+    vocab = counts.orderBy(F.desc("c"), F.asc("token")).limit(_TPB_K) \
+        .select("token")
+    occ = (
+        toks.join(F.broadcast(vocab), "token", "left_semi")
+        .select("token",
+                F.expr(f"(pos * {_TPB_SCALE}) div l").cast("long")
+                .alias("npos_q"))
+    )
+    agg = occ.groupBy("token").agg(
+        F.count("*").cast("long").alias("n_occ"),
+        F.sum("npos_q").cast("long").alias("s"))
+    mean = F.col("s").cast("double") / F.col("n_occ") / _TPB_SCALE
+    return agg.select(
+        "token", "n_occ",
+        (F.round(mean, 6) + F.lit(0.0)).alias("mean_norm_pos"),
+        (mean < 0.4).alias("front_loaded"),
+    )

@@ -1,18 +1,19 @@
-"""Text-analysis queries (language ID, quality, token counts, fingerprints)
-— the training-data-pipeline extension surface, oracle-checked.
+"""Text-analysis queries (language ID, quality, token counts, fingerprints,
+readability, lexical diversity and dispersion, keyness, collocations,
+language models, sampling and mixtures) — the training-data-pipeline
+extension surface, oracle-checked.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from nonconsumptive_spark.operators import textstats as ts
-from nonconsumptive_spark.queries import load, register
+from nonconsumptive_spark.queries import _DUCK_TOKS, load, register
 
 
 def _stoplist_sql(lang: str) -> str:
     return "[" + ", ".join(f"'{w}'" for w in ts.LANG_STOPWORDS[lang]) + "]"
-
-
-_DUCK_TOKS = "list_filter(regexp_split_to_array(text, '[^\\pL]+'), x -> x <> '')"
 
 
 # --------------------------------------------------------------------------
@@ -3159,3 +3160,2286 @@ def q_k_anonymity(spark, sf_dir):
         F.floor(F.col("n_chars") / _KANON_BIN).cast("long").alias("len_bin"),
     )
     return ts.k_anonymity_summary(docs, ["source", "len_bin"], k=_KANON_K)
+
+
+# -- per-source percentile quality thresholding ------------------------------
+_PF_P, _PF_Q = 3, 10  # keep_frac = 0.3 as the exact rational
+
+
+@register(
+    "q_percentile_filter",
+    f"""
+    WITH scored AS (
+      SELECT source, doc_id, CAST(n_chars AS BIGINT) AS score
+      FROM documents),
+    rk AS (
+      SELECT source, doc_id, score,
+             row_number() OVER (PARTITION BY source
+                                ORDER BY score DESC, doc_id ASC) AS rk,
+             count(*) OVER (PARTITION BY source) AS n
+      FROM scored)
+    SELECT source, doc_id, score
+    -- (p*n + q - 1) // q: ceil under BOTH floor and truncating division
+    -- (DuckDB // truncates toward zero; Spark floor() floors)
+    FROM rk WHERE rk <= (3 * n + 10 - 1) // 10
+    """,
+    doc="Rows above a per-group exact percentile cut, "
+        "order-statistics from a value histogram (no percentile_disc "
+        "float divergence).",
+)
+def q_percentile_filter(spark, sf_dir):
+    from nonconsumptive_spark.operators.textstats import (
+        percentile_filter_by_group,
+    )
+
+    docs = load(spark, sf_dir, "documents").select(
+        "source", "doc_id", F.col("n_chars").cast("long").alias("score"))
+    return percentile_filter_by_group(docs, "source", "score",
+                                      _PF_P / _PF_Q)
+
+
+# -- code-likeness curation signal ------------------------------------------
+@register(
+    "q_code_score",
+    """
+    WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents)
+    SELECT doc_id,
+           CAST(length(t) AS BIGINT) AS n_chars_obs,
+           CAST((length(t) - length(replace(t, '{', '')))
+              + (length(t) - length(replace(t, '}', ''))) AS BIGINT)
+             AS n_braces,
+           CAST(length(t) - length(replace(t, ';', '')) AS BIGINT)
+             AS n_semicolons,
+           CAST(len(regexp_extract_all(t, '[a-z][A-Z]')) AS BIGINT)
+             AS n_camel,
+           CAST((length(t) - length(replace(t, chr(10) || '    ', ''))) // 5
+             AS BIGINT) AS n_indent,
+           (((length(t) - length(replace(t, '{', '')))
+             + (length(t) - length(replace(t, '}', '')))
+             + (length(t) - length(replace(t, ';', '')))
+             + len(regexp_extract_all(t, '[a-z][A-Z]'))
+             + (length(t) - length(replace(t, chr(10) || '    ', ''))) // 5)
+            * 50 >= length(t) AND length(t) > 0) AS is_codey
+    FROM base
+    """,
+    doc="Code-likeness scoring (brace/indent/keyword "
+        "densities) — zero-shuffle per-row scan in builtin expressions.",
+)
+def q_code_score(spark, sf_dir):
+    from nonconsumptive_spark.operators.textstats import code_score
+
+    return code_score(load(spark, sf_dir, "documents"))
+
+
+# -- TextTiling-style lexical cohesion segmentation ------------------------
+def _tile_oracle() -> str:
+    from nonconsumptive_spark.operators.textstats import TILE_SCALE, TILE_W
+
+    w = TILE_W
+
+    def moments(x, y):
+        return (f"list_reduce(list_transform(list_distinct({x} || {y}),"
+                f" x -> CAST(len(list_filter({x}, e -> e = x))"
+                f" * len(list_filter({y}, e -> e = x)) AS BIGINT)),"
+                f" (p, q) -> p + q)")
+
+    return f"""
+    WITH base AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+    g AS (
+      SELECT doc_id, t,
+             unnest(range(1, CAST(trunc(len(t) / {w}.0 - 1) AS BIGINT) + 1))
+               AS i
+      FROM base WHERE len(t) >= {2 * w}),
+    m AS (
+      SELECT doc_id, i AS gap_idx,
+             list_slice(t, (i - 1) * {w} + 1, i * {w}) AS a,
+             list_slice(t, i * {w} + 1, (i + 1) * {w}) AS b
+      FROM g),
+    s AS (
+      SELECT doc_id, gap_idx,
+             {moments('a', 'b')} AS dot,
+             {moments('a', 'a')} AS na2,
+             {moments('b', 'b')} AS nb2
+      FROM m),
+    q AS (
+      SELECT doc_id, CAST(gap_idx AS BIGINT) AS gap_idx,
+             CAST(CASE WHEN na2 * nb2 > 0
+                  THEN (dot * dot * {TILE_SCALE}) // (na2 * nb2)
+                  ELSE 0 END AS BIGINT) AS cos2_q
+      FROM s)
+    SELECT doc_id, gap_idx, cos2_q,
+           (lag(cos2_q) OVER win IS NOT NULL
+            AND lead(cos2_q) OVER win IS NOT NULL
+            AND cos2_q < lag(cos2_q) OVER win
+            AND cos2_q < lead(cos2_q) OVER win) AS is_boundary
+    FROM q WINDOW win AS (PARTITION BY doc_id ORDER BY gap_idx)
+    """
+
+
+@register("q_lexical_cohesion", _tile_oracle(),
+          doc="Adjacent-chunk lexical cohesion per document: "
+              "chunked token sets, intra-doc adjacent-pair Jaccard (positional "
+              "zip, no self-join).")
+def q_lexical_cohesion(spark, sf_dir):
+    from nonconsumptive_spark.operators.textstats import (
+        lexical_cohesion_gaps,
+    )
+
+    return lexical_cohesion_gaps(load(spark, sf_dir, "documents"))
+
+
+# -- corpus bigram conditional entropy ---------------------------------------
+_ENT_SCALE = 1_000_000_000
+
+
+@register(
+    "q_conditional_entropy",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, generate_subscripts({_DUCK_TOKS}, 1) AS pos,
+             unnest({_DUCK_TOKS}) AS w
+      FROM documents),
+    bg AS (
+      SELECT w0, w1, count(*) AS c12 FROM (
+        SELECT w AS w0,
+               lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w1
+        FROM toks)
+      WHERE w1 IS NOT NULL GROUP BY w0, w1),
+    hb AS (
+      SELECT sum(CAST(c12 AS HUGEINT)
+                 * CAST(round(log2(c12) * {_ENT_SCALE}) AS HUGEINT)) AS hq_bi,
+             CAST(sum(c12) AS BIGINT) AS n,
+             CAST(count(*) AS BIGINT) AS n_bigrams
+      FROM bg),
+    hc AS (
+      SELECT sum(CAST(c1 AS HUGEINT)
+                 * CAST(round(log2(c1) * {_ENT_SCALE}) AS HUGEINT)) AS hq_ctx,
+             CAST(count(*) AS BIGINT) AS n_contexts
+      FROM (SELECT w0, sum(c12) AS c1 FROM bg GROUP BY w0))
+    SELECT n_bigrams, n_contexts,
+           round(CAST(hq_ctx - hq_bi AS DOUBLE)
+                 / (CAST(n AS DOUBLE) * {_ENT_SCALE}.0), 6) + 0.0
+             AS h_cond_bits
+    FROM hb CROSS JOIN hc""",
+    doc="H(event_type | user activity band): "
+        "two-level integer-count aggs, entropy from exact counts with "
+        "one log per cell.",
+)
+def q_conditional_entropy(spark, sf_dir):
+    from nonconsumptive_spark.operators import textstats as ts
+
+    return ts.bigram_conditional_entropy(load(spark, sf_dir, "documents"))
+
+
+# -- quality retention curve (filter-tuning table) ---------------------------
+@register(
+    "q_quality_retention",
+    f"""
+    WITH pd AS (
+      SELECT CASE WHEN length(coalesce(text, '')) > 0
+                  THEN least(CAST(floor(
+                         length(regexp_replace(coalesce(text, ''),
+                                               '[^\\pL]', '', 'g')) * 10
+                         / length(coalesce(text, ''))) AS BIGINT), 9)
+                  ELSE 0 END AS bucket,
+             CAST(len({_DUCK_TOKS}) AS BIGINT) AS nt
+      FROM documents),
+    pb AS (
+      SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(nt) AS BIGINT) AS n_tokens
+      FROM pd GROUP BY bucket)
+    SELECT bucket, n_docs, n_tokens,
+           CAST(sum(n_docs) OVER w AS BIGINT) AS cum_docs,
+           CAST(sum(n_tokens) OVER w AS BIGINT) AS cum_tokens,
+           round(CAST(sum(n_tokens) OVER w AS DOUBLE)
+                 / CAST(sum(n_tokens) OVER () AS DOUBLE), 6) + 0.0
+             AS retained_frac
+    FROM pb
+    WINDOW w AS (ORDER BY bucket DESC
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""",
+    doc="Quality-score deciles vs doc retention under "
+        "the curation pipeline: decile edges from exact order statistics.",
+)
+def q_quality_retention(spark, sf_dir):
+    from nonconsumptive_spark.operators import pipeline as pl
+
+    return pl.quality_retention_curve(load(spark, sf_dir, "documents"))
+
+
+# -- shuffle-quality diagnostic over the training order ----------------------
+@register(
+    "q_shuffle_quality",
+    """
+    WITH keyed AS (
+      SELECT doc_id, source, md5('42:' || CAST(doc_id AS VARCHAR)) AS k,
+             CAST(CAST(('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)), 1, 15))
+                  AS BIGINT) % 16 AS INTEGER) AS shard
+      FROM documents),
+    ordered AS (
+      SELECT doc_id, source, shard,
+             row_number() OVER (PARTITION BY shard ORDER BY k, doc_id) AS pos
+      FROM keyed),
+    pairs AS (
+      SELECT source, lag(source) OVER (PARTITION BY shard ORDER BY pos) AS prev
+      FROM ordered),
+    obs AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+             CAST(sum(CASE WHEN source = prev THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_same
+      FROM pairs WHERE prev IS NOT NULL),
+    ex AS (
+      SELECT CAST(sum(ns * (ns - 1)) AS BIGINT) AS same_ways,
+             CAST(sum(ns) AS BIGINT) AS n
+      FROM (SELECT count(*) AS ns FROM documents GROUP BY source))
+    SELECT n_pairs, n_same,
+           round(CAST(n_same AS DOUBLE) / CAST(n_pairs AS DOUBLE), 6) + 0.0
+             AS same_rate,
+           round(CAST(same_ways AS DOUBLE)
+                 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)), 6) + 0.0
+             AS expected_rate,
+           round((CAST(n_same AS DOUBLE) / CAST(n_pairs AS DOUBLE))
+                 / (CAST(same_ways AS DOUBLE)
+                    / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))), 4) + 0.0
+             AS clumping
+    FROM obs CROSS JOIN ex""",
+    doc="Training-order shuffle quality: position-vs-"
+        "source rank correlation from exact integer rank sums.",
+)
+def q_shuffle_quality(spark, sf_dir):
+    from nonconsumptive_spark.operators import textstats as ts
+
+    return ts.shuffle_quality(load(spark, sf_dir, "documents"))
+
+
+# -- token-budget allocation under temperature mixing -------------------------
+_MB_BUDGET = 1_000_000
+
+
+@register(
+    "q_mixture_budget",
+    f"""
+    WITH c AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(len({_DUCK_TOKS})) AS BIGINT) AS n_tokens
+      FROM (SELECT source, coalesce(text, '') AS text FROM documents)
+      GROUP BY source),
+    z AS (SELECT sum(sqrt(n_docs)) AS z FROM c)
+    SELECT source, n_docs, n_tokens,
+           round(sqrt(n_docs) / z, 6) + 0.0 AS mix_frac,
+           CAST(round(sqrt(n_docs) / z * {_MB_BUDGET}.0) AS BIGINT)
+             AS target_tokens,
+           round(sqrt(n_docs) / z * {_MB_BUDGET}.0
+                 / CAST(n_tokens AS DOUBLE), 4) + 0.0 AS epochs,
+           round(least(1.0, sqrt(n_docs) / z * {_MB_BUDGET}.0
+                            / CAST(n_tokens AS DOUBLE)), 6) + 0.0
+             AS sample_rate
+    FROM c CROSS JOIN z""",
+    doc="Token-budget allocation across source mixtures "
+        "with exact integer proportional rounding (largest remainder).",
+)
+def q_mixture_budget(spark, sf_dir):
+    from nonconsumptive_spark.operators import textstats as ts
+
+    return ts.mixture_budget(load(spark, sf_dir, "documents"),
+                             budget_tokens=_MB_BUDGET)
+
+
+# -- leakage-safe train/val/test split --------------------------------------
+def _lss_oracle() -> str:
+    from nonconsumptive_spark.queries.dedup import _DUCK_COMP
+
+    return (
+        _DUCK_COMP
+        + f""",
+    asg AS (
+      SELECT d.doc_id,
+             CAST(coalesce(c.cluster, d.doc_id) AS BIGINT) AS cluster
+      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
+    SELECT doc_id, cluster, {_SPLIT_CASE} AS split
+    FROM (SELECT doc_id, cluster,
+                 CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15))
+                      AS BIGINT) % 10000 AS b
+          FROM asg)"""
+    )
+
+
+@register("q_leakage_safe_split", _lss_oracle())
+def q_leakage_safe_split(spark, sf_dir):
+    """Split assignment keyed on the near-dup CLUSTER id, not the doc id —
+    the split that cannot leak a near-duplicate of a test document into
+    train (the failure mode a doc-keyed hash split has by construction).
+    Components come from the verified LSH pair graph (q_dedup_clusters);
+    the band edges are the same exact integer bands as q_dataset_split."""
+    from nonconsumptive_spark.operators import dedup as dd
+    from nonconsumptive_spark.operators import textstats as ts
+
+    cl = dd.dedup_clusters(load(spark, sf_dir, "documents"), threshold=0.5)
+    return cl.select("doc_id", "cluster",
+                     ts.split_expr("cluster").alias("split"))
+
+
+# -- per-source KL divergence from the corpus mixture ------------------------
+def _skl_oracle() -> str:
+    from nonconsumptive_spark.operators.textstats import JSD_SCALE
+
+    return f"""
+    WITH cnt AS (
+      SELECT source AS s, w, CAST(count(*) AS BIGINT) AS c FROM (
+        SELECT source, unnest({_DUCK_TOKS}) AS w FROM documents) z
+      GROUP BY source, w),
+    corpus AS (SELECT w, CAST(sum(c) AS BIGINT) AS c_all
+               FROM cnt GROUP BY w),
+    vt AS (SELECT CAST(count(*) AS BIGINT) AS v,
+                  CAST(sum(c_all) AS BIGINT) AS n_all FROM corpus),
+    strata AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_s FROM cnt GROUP BY s),
+    filled AS (
+      SELECT st.s, co.w, co.c_all, st.n_s, vt.v, vt.n_all,
+             CAST(coalesce(c.c, 0) AS BIGINT) AS c_s
+      FROM corpus co CROSS JOIN strata st CROSS JOIN vt
+      LEFT JOIN cnt c ON c.s = st.s AND c.w = co.w),
+    terms AS (
+      SELECT s, n_s, v,
+             CAST(round(((c_s + 1) / (n_s + v))
+                        * ln(((c_s + 1) / (n_s + v))
+                             / ((c_all + 1) / (n_all + v)))
+                        * {JSD_SCALE}) AS BIGINT) AS tq
+      FROM filled)
+    SELECT s AS source, max(n_s) AS n_tokens, max(v) AS v,
+           round(CAST(sum(tq) AS BIGINT) * 1.0 / {JSD_SCALE}, 6) + 0.0 AS kl
+    FROM terms GROUP BY s
+    """
+
+
+@register("q_source_kl", _skl_oracle(),
+          doc="Per-source KL divergence from the corpus unigram "
+              "distribution: vocab joins keyed on token, 1-row total attaches.")
+def q_source_kl(spark, sf_dir):
+    from nonconsumptive_spark.operators.textstats import source_kl_divergence
+
+    return source_kl_divergence(load(spark, sf_dir, "documents"))
+
+
+# -- lexical-diversity estimators: Yule's K / Simpson, Chao1 / coverage ------
+@register(
+    "q_yules_k",
+    f"""
+    WITH counts AS (
+      SELECT source, token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY source, token),
+    mom AS (
+      SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
+             CAST(count(*) AS BIGINT) AS n_types,
+             CAST(sum(c * c) AS BIGINT) AS s2
+      FROM counts GROUP BY source)
+    SELECT source, n_tokens, n_types, s2,
+           round(10000.0 * (s2 - n_tokens)
+                 / (CAST(n_tokens AS DOUBLE) * n_tokens), 4) + 0.0
+             AS yules_k,
+           CASE WHEN n_tokens > 1
+                THEN round(CAST(s2 - n_tokens AS DOUBLE)
+                           / (CAST(n_tokens AS DOUBLE) * (n_tokens - 1)), 6)
+                     + 0.0 END AS simpson_d
+    FROM mom
+    """,
+)
+def q_yules_k(spark, sf_dir):
+    """Yule's K and Simpson's D lexical diversity per source, both pure
+    functions of the frequency spectrum: K = 1e4*(S2 - N)/N^2 and
+    D = (S2 - N)/(N*(N-1)) with N = token count, S2 = sum of squared
+    type frequencies.  N and S2 are exact BIGINT aggregates off the
+    (source, token) counts, so each output is one mirrored division.
+    Plan: tokenize scan -> (source, token) agg -> per-source moment agg;
+    two shuffles on short keys, nothing pairwise."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    docs = load(spark, sf_dir, "documents")
+    counts = (
+        docs.select("source", F.explode(tokenize("text")).alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count("*").cast("long").alias("c"))
+    )
+    mom = counts.groupBy("source").agg(
+        F.sum("c").cast("long").alias("n_tokens"),
+        F.count("*").cast("long").alias("n_types"),
+        F.sum(F.col("c") * F.col("c")).cast("long").alias("s2"),
+    )
+    nt = F.col("n_tokens").cast("double")
+    return mom.select(
+        "source", "n_tokens", "n_types", "s2",
+        (F.round(1e4 * (F.col("s2") - F.col("n_tokens")) / (nt * nt), 4)
+         + F.lit(0.0)).alias("yules_k"),
+        F.when(F.col("n_tokens") > 1,
+               F.round((F.col("s2") - F.col("n_tokens"))
+                       / (nt * (F.col("n_tokens") - 1)), 6) + F.lit(0.0))
+        .alias("simpson_d"),
+    )
+
+
+@register(
+    "q_chao1_richness",
+    f"""
+    WITH counts AS (
+      SELECT source, token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY source, token),
+    spec AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS n_types,
+             CAST(sum(c) AS BIGINT) AS n_tokens,
+             CAST(coalesce(sum(CASE WHEN c = 1 THEN 1 END), 0) AS BIGINT)
+               AS f1,
+             CAST(coalesce(sum(CASE WHEN c = 2 THEN 1 END), 0) AS BIGINT)
+               AS f2
+      FROM counts GROUP BY source)
+    SELECT source, n_types, n_tokens, f1, f2,
+           round(n_types + CAST(f1 * (f1 - 1) AS DOUBLE) / (2 * (f2 + 1)),
+                 4) + 0.0 AS chao1,
+           round(1.0 - CAST(f1 AS DOUBLE) / n_tokens, 6) + 0.0 AS coverage
+    FROM spec
+    """,
+)
+def q_chao1_richness(spark, sf_dir):
+    """Chao1 vocabulary-richness estimate and Good-Turing sample coverage
+    per source: chao1 = V + f1*(f1-1)/(2*(f2+1)) (bias-corrected form,
+    Chao 1984) and coverage = 1 - f1/N, both pure functions of the hapax
+    (f1) and dis-legomena (f2) spectrum — the how-much-vocabulary-is-
+    unseen companion to q_heaps_fit.  All inputs are exact BIGINTs; one
+    mirrored division each.  Plan: identical shape to q_yules_k — two
+    short-key aggs, no joins."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    docs = load(spark, sf_dir, "documents")
+    counts = (
+        docs.select("source", F.explode(tokenize("text")).alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count("*").cast("long").alias("c"))
+    )
+    spec = counts.groupBy("source").agg(
+        F.count("*").cast("long").alias("n_types"),
+        F.sum("c").cast("long").alias("n_tokens"),
+        F.coalesce(F.sum(F.when(F.col("c") == 1, 1)), F.lit(0))
+        .cast("long").alias("f1"),
+        F.coalesce(F.sum(F.when(F.col("c") == 2, 1)), F.lit(0))
+        .cast("long").alias("f2"),
+    )
+    return spec.select(
+        "source", "n_types", "n_tokens", "f1", "f2",
+        (F.round(
+            F.col("n_types")
+            + (F.col("f1") * (F.col("f1") - 1)).cast("double")
+            / (2 * (F.col("f2") + 1)), 4) + F.lit(0.0)).alias("chao1"),
+        (F.round(1.0 - F.col("f1").cast("double") / F.col("n_tokens"), 6)
+         + F.lit(0.0)).alias("coverage"),
+    )
+
+
+# -- Flesch readability -------------------------------------------------------
+# Counting RUNS via two regexp_replace passes is engine-portable: the
+# first collapses every target run to a single marker char (any original
+# marker chars were themselves part of a run, so none survive
+# independently), the second strips everything else, and length() is the
+# run count.  No regexp_count dependency, no split-edge-case drift.
+def _runs_duck(expr: str, cls: str, marker: str) -> str:
+    return (f"length(regexp_replace(regexp_replace({expr}, '{cls}', "
+            f"'{marker}', 'g'), '[^{marker}]', '', 'g'))")
+
+
+@register(
+    "q_flesch_reading",
+    f"""
+    WITH base AS (
+      SELECT doc_id,
+             CAST(len(list_filter(regexp_split_to_array(
+                    coalesce(text, ''), '[^\\pL]+'), x -> x <> ''))
+                  AS BIGINT) AS n_words,
+             CAST(greatest(1, {_runs_duck("coalesce(text, '')",
+                                          "[.!?]+", ".")})
+                  AS BIGINT) AS n_sentences,
+             CAST({_runs_duck("lower(coalesce(text, ''))",
+                              "[aeiouy]+", "a")} AS BIGINT) AS n_syllables
+      FROM documents)
+    SELECT doc_id, n_words, n_sentences, n_syllables,
+           CASE WHEN n_words > 0
+                THEN round(206.835
+                           - 1.015 * CAST(n_words AS DOUBLE) / n_sentences
+                           - 84.6 * CAST(n_syllables AS DOUBLE) / n_words,
+                           3) + 0.0 END AS flesch,
+           CASE WHEN n_words > 0
+                THEN round(0.39 * CAST(n_words AS DOUBLE) / n_sentences
+                           + 11.8 * CAST(n_syllables AS DOUBLE) / n_words
+                           - 15.59, 3) + 0.0 END AS fk_grade
+    FROM base
+    """,
+)
+def q_flesch_reading(spark, sf_dir):
+    """Flesch reading-ease + Flesch-Kincaid grade per document, the
+    classic readability quality signal for corpus curation.  Syllables
+    are approximated as vowel-group runs and sentences as terminal-
+    punctuation runs (clamped to >=1), both counted with the portable
+    collapse-then-strip regexp_replace pair (see _runs_duck); NULL text
+    counts as empty and yields NULL scores.  All three counts are exact
+    integers, so the two score formulas are single mirrored float
+    expressions.  Plan: zero-shuffle per-row scan."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    def runs(col, cls, marker):
+        return F.length(F.regexp_replace(
+            F.regexp_replace(col, cls, marker), "[^" + marker + "]", ""))
+
+    txt = F.coalesce("text", F.lit(""))
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(tokenize(txt)).cast("long").alias("n_words"),
+        F.greatest(F.lit(1), runs(txt, "[.!?]+", ".")).cast("long")
+        .alias("n_sentences"),
+        runs(F.lower(txt), "[aeiouy]+", "a").cast("long")
+        .alias("n_syllables"),
+    )
+    ws = F.col("n_words").cast("double") / F.col("n_sentences")
+    sw = F.col("n_syllables").cast("double") / F.col("n_words")
+    return base.select(
+        "doc_id", "n_words", "n_sentences", "n_syllables",
+        F.when(F.col("n_words") > 0,
+               F.round(206.835 - 1.015 * ws - 84.6 * sw, 3) + F.lit(0.0))
+        .alias("flesch"),
+        F.when(F.col("n_words") > 0,
+               F.round(0.39 * ws + 11.8 * sw - 15.59, 3) + F.lit(0.0))
+        .alias("fk_grade"),
+    )
+
+
+# -- Theil-T inequality of token counts within each source --------------------
+_THEIL_SCALE = 10**12
+
+
+@register(
+    "q_theil_index",
+    f"""
+    WITH per AS (
+      SELECT source,
+             CAST(len(list_filter(regexp_split_to_array(
+                    coalesce(text, ''), '[^\\pL]+'), x -> x <> ''))
+                  AS BIGINT) AS x
+      FROM documents),
+    tot AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(x) AS BIGINT) AS xt,
+             CAST(coalesce(sum(CASE WHEN x = 0 THEN 1 END), 0) AS BIGINT)
+               AS n_zero
+      FROM per GROUP BY source),
+    terms AS (
+      SELECT p.source, t.n, t.xt, t.n_zero,
+             CASE WHEN p.x > 0 AND t.xt > 0
+                  THEN CAST(floor((CAST(p.x AS DOUBLE) / t.xt)
+                                  * ln(CAST(p.x AS DOUBLE) * t.n / t.xt)
+                                  * {_THEIL_SCALE}) AS BIGINT)
+                  ELSE 0 END AS tq
+      FROM per p JOIN tot t USING (source))
+    SELECT source, any_value(n) AS n_docs, any_value(xt) AS n_tokens,
+           any_value(n_zero) AS n_zero,
+           round(CAST(sum(tq) AS BIGINT) / {float(_THEIL_SCALE)!r}, 6)
+             + 0.0 AS theil_t
+    FROM terms GROUP BY source
+    """,
+)
+def q_theil_index(spark, sf_dir):
+    """Theil-T inequality of per-document token counts within each
+    source: T = sum_i (x_i/X) * ln(x_i * n / X) — 0 for perfectly even
+    contribution, ln(n) when one doc holds everything; the
+    decomposable inequality measure that complements q_gini_tokens.
+    Zero-token docs contribute 0 to T by the x*ln(x) -> 0 convention
+    (NULL text counts as empty).  Per-doc terms quantize to 1e-12
+    BIGINT units through one mirrored float chain, so the per-source
+    sum is aggregation-order independent.  Plan: per-doc scan, one
+    source agg, one broadcast totals join back, one source agg."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    per = load(spark, sf_dir, "documents").select(
+        "source",
+        F.size(tokenize(F.coalesce("text", F.lit("")))).cast("long")
+        .alias("x"),
+    )
+    tot = per.groupBy("source").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("x").cast("long").alias("xt"),
+        F.coalesce(F.sum(F.when(F.col("x") == 0, 1)), F.lit(0))
+        .cast("long").alias("n_zero"),
+    )
+    terms = per.join(F.broadcast(tot), "source").select(
+        "source", "n", "xt", "n_zero",
+        F.when((F.col("x") > 0) & (F.col("xt") > 0),
+               F.floor((F.col("x").cast("double") / F.col("xt"))
+                       * F.log(F.col("x").cast("double") * F.col("n")
+                               / F.col("xt"))
+                       * _THEIL_SCALE).cast("long"))
+        .otherwise(F.lit(0)).alias("tq"),
+    )
+    return (
+        terms.groupBy("source")
+        .agg(F.first("n").alias("n_docs"),
+             F.first("xt").alias("n_tokens"),
+             F.first("n_zero").alias("n_zero"),
+             F.sum("tq").cast("long").alias("sq"))
+        .select(
+            "source", "n_docs", "n_tokens", "n_zero",
+            (F.round(F.col("sq") / F.lit(float(_THEIL_SCALE)), 6)
+             + F.lit(0.0)).alias("theil_t"),
+        )
+    )
+
+
+# -- context-window truncation loss -------------------------------------------
+_TRUNC_LENS = [128, 256, 512, 1024]
+
+
+@register(
+    "q_truncation_loss",
+    f"""
+    WITH per AS (
+      SELECT CAST(len(list_filter(regexp_split_to_array(
+               coalesce(text, ''), '[^\\pL]+'), x -> x <> '')) AS BIGINT)
+             AS x
+      FROM documents),
+    spine AS (SELECT unnest({_TRUNC_LENS}) AS max_len)
+    SELECT CAST(max_len AS BIGINT) AS max_len,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(coalesce(sum(CASE WHEN x > max_len THEN 1 END), 0)
+                AS BIGINT) AS n_truncated,
+           CAST(sum(x) AS BIGINT) AS total_tokens,
+           CAST(sum(least(x, max_len)) AS BIGINT) AS kept_tokens,
+           CASE WHEN sum(x) > 0
+                THEN round(1.0 - CAST(sum(least(x, max_len)) AS DOUBLE)
+                                 / sum(x), 6) + 0.0
+                ELSE 0.0 END AS loss_frac
+    FROM per CROSS JOIN spine GROUP BY max_len
+    """,
+)
+def q_truncation_loss(spark, sf_dir):
+    """Token loss from truncating every document at a context window of
+    L, for a spine of candidate L values — the first question any
+    pretraining-data pipeline asks before choosing max_seq_len (kept =
+    sum min(x, L); complement of q_pack_sequences' packing view).  NULL
+    text counts as empty.  All counts are exact BIGINTs; the loss
+    fraction is one mirrored division per spine row.  Plan: one per-doc
+    scan crossed with a 4-row literal spine, one 4-group agg."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    per = load(spark, sf_dir, "documents").select(
+        F.size(tokenize(F.coalesce("text", F.lit("")))).cast("long")
+        .alias("x"))
+    spine = spark.range(0).sparkSession.createDataFrame(
+        [(v,) for v in _TRUNC_LENS], "max_len long")
+    return (
+        per.crossJoin(F.broadcast(spine))
+        .groupBy("max_len")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.coalesce(F.sum(F.when(F.col("x") > F.col("max_len"), 1)),
+                       F.lit(0)).cast("long").alias("n_truncated"),
+            F.sum("x").cast("long").alias("total_tokens"),
+            F.sum(F.least("x", "max_len")).cast("long").alias("kept_tokens"),
+        )
+        .select(
+            "max_len", "n_docs", "n_truncated", "total_tokens",
+            "kept_tokens",
+            F.when(F.col("total_tokens") > 0,
+                   F.round(1.0 - F.col("kept_tokens").cast("double")
+                           / F.col("total_tokens"), 6) + F.lit(0.0))
+            .otherwise(F.lit(0.0)).alias("loss_frac"),
+        )
+    )
+
+
+# -- T5-style span-corruption statistics ---------------------------------------
+# Mask positions chosen by an engine-portable hash (md5 of doc_id:pos,
+# first 60 bits, mod _SPAN_RATE == 0 -> ~1/_SPAN_RATE mask ratio);
+# adjacent masked positions merge into spans, T5-style.  Pure in-row
+# array math — the mask decision replays bit-for-bit in both engines.
+_SPAN_RATE = 5
+
+
+@register(
+    "q_span_corruption",
+    f"""
+    WITH base AS (
+      SELECT doc_id,
+             CAST(len(list_filter(regexp_split_to_array(
+               coalesce(text, ''), '[^\\pL]+'), x -> x <> '')) AS BIGINT)
+             AS x
+      FROM documents),
+    bits AS (
+      SELECT doc_id, x,
+             list_transform(range(1, x + 1),
+               p -> (CAST(('0x' || substr(md5(doc_id || ':' || p), 1, 15))
+                          AS BIGINT) % {_SPAN_RATE}) = 0) AS b
+      FROM base)
+    SELECT doc_id, x AS n_tokens,
+           CAST(len(list_filter(b, v -> v)) AS BIGINT) AS n_masked,
+           CAST(len(list_filter(range(1, x + 1),
+                    p -> b[p] AND (p = 1 OR NOT b[p - 1]))) AS BIGINT)
+             AS n_spans,
+           CASE WHEN x > 0
+                THEN round(CAST(len(list_filter(b, v -> v)) AS DOUBLE) / x,
+                           6) + 0.0 END AS mask_ratio
+    FROM bits
+    """,
+)
+def q_span_corruption(spark, sf_dir):
+    """T5-style span-corruption statistics per document: which positions
+    a deterministic hash masks (~20% at rate 5), how many contiguous
+    spans they merge into, and the realized mask ratio — the
+    denoising-objective shape check a pretraining pipeline runs before
+    committing a corruption config (Raffel et al. 2020).  See the
+    header note for the portable hash; NULL text counts as empty.
+    Plan: zero-shuffle per-row scan; all span math is in-row array
+    folds over the position sequence."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(tokenize(F.coalesce("text", F.lit("")))).cast("long")
+        .alias("x"),
+    )
+    seq = F.when(F.col("x") > 0,
+                 F.sequence(F.lit(1).cast("long"), F.col("x"))
+                 ).otherwise(F.array().cast("array<long>"))
+    mask_bit = lambda p: (  # noqa: E731
+        F.conv(F.substring(F.md5(F.concat(
+            F.col("doc_id").cast("string"), F.lit(":"),
+            p.cast("string"))), 1, 15), 16, 10).cast("long")
+        % _SPAN_RATE) == 0
+    bits = base.select(
+        "doc_id", "x",
+        F.transform(seq, mask_bit).alias("b"),
+        seq.alias("ps"),
+    )
+    n_masked = F.size(F.filter("b", lambda v: v)).cast("long")
+    n_spans = F.size(F.filter(
+        F.col("ps"),
+        lambda p: F.element_at(F.col("b"), p.cast("int"))
+        & ((p == 1) | ~F.element_at(F.col("b"), (p - 1).cast("int"))),
+    )).cast("long")
+    return bits.select(
+        "doc_id", F.col("x").alias("n_tokens"),
+        n_masked.alias("n_masked"), n_spans.alias("n_spans"),
+        F.when(F.col("x") > 0,
+               F.round(n_masked.cast("double") / F.col("x"), 6)
+               + F.lit(0.0)).alias("mask_ratio"),
+    )
+
+
+# -- moving-average type-token ratio (MATTR) -----------------------------------
+# Plain TTR falls with document length (Heaps); MATTR (Covington &
+# McFall 2010) fixes the window so diversity is comparable across
+# lengths: the mean TTR over all W-token sliding windows, i.e.
+# sum(distinct-per-window) / (n_windows * W) — one division of exact
+# BIGINTs.  Docs shorter than W fall back to plain TTR.
+_MATTR_W = 25
+
+
+@register(
+    "q_mattr",
+    f"""
+    WITH base AS (
+      SELECT doc_id,
+             list_filter(regexp_split_to_array(coalesce(text, ''),
+                                               '[^\\pL]+'),
+                         x -> x <> '') AS t
+      FROM documents),
+    per AS (
+      SELECT doc_id, CAST(len(t) AS BIGINT) AS x,
+             CAST(len(list_distinct(t)) AS BIGINT) AS n_types,
+             CASE WHEN len(t) >= {_MATTR_W}
+                  THEN CAST(list_sum(list_transform(
+                         range(1, len(t) - {_MATTR_W} + 2),
+                         p -> len(list_distinct(
+                                list_slice(t, p, p + {_MATTR_W} - 1)))))
+                       AS BIGINT) END AS wsum
+      FROM base)
+    SELECT doc_id, x AS n_tokens, n_types,
+           CASE WHEN x > 0
+                THEN round(CAST(n_types AS DOUBLE) / x, 6) + 0.0
+                END AS ttr,
+           CASE WHEN x >= {_MATTR_W}
+                THEN round(CAST(wsum AS DOUBLE)
+                           / ((x - {_MATTR_W} + 1) * {_MATTR_W}), 6) + 0.0
+                WHEN x > 0
+                THEN round(CAST(n_types AS DOUBLE) / x, 6) + 0.0
+                END AS mattr
+    FROM per
+    """,
+)
+def q_mattr(spark, sf_dir):
+    """Moving-average type-token ratio per document (see header note) —
+    the length-robust lexical-diversity score, alongside plain TTR and
+    the distinct-type count.  NULL text counts as empty (NULL scores).
+    All window distinct-counts are in-row integer array math; one
+    mirrored division per score.  Plan: zero-shuffle per-row scan;
+    per-row cost is O(tokens * W), embarrassingly parallel."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id", tokenize(F.coalesce("text", F.lit(""))).alias("t"))
+    x = F.size("t").cast("long")
+    wins = F.sequence(F.lit(1), F.size("t") - _MATTR_W + 1)
+    wsum = F.aggregate(
+        F.transform(wins, lambda p: F.size(F.array_distinct(
+            F.slice("t", p.cast("int"), _MATTR_W)))),
+        F.lit(0).cast("long"), lambda acc, v: acc + v)
+    per = base.select(
+        "doc_id", x.alias("x"),
+        F.size(F.array_distinct("t")).cast("long").alias("n_types"),
+        F.when(x >= _MATTR_W, wsum.cast("long")).alias("wsum"),
+    )
+    ttr = F.round(F.col("n_types").cast("double") / F.col("x"), 6) + F.lit(0.0)
+    return per.select(
+        "doc_id", F.col("x").alias("n_tokens"), "n_types",
+        F.when(F.col("x") > 0, ttr).alias("ttr"),
+        F.when(F.col("x") >= _MATTR_W,
+               F.round(F.col("wsum").cast("double")
+                       / ((F.col("x") - _MATTR_W + 1) * _MATTR_W), 6)
+               + F.lit(0.0))
+        .when(F.col("x") > 0, ttr).alias("mattr"),
+    )
+
+
+# -- Lorenz concentration curve of token mass over documents --------------------
+# Deciles are value-based: a doc's decile = 1 + #edges below its token
+# count, with the 9 edges as exact order statistics off the count
+# histogram (the RFM edge machinery) — ties share a decile, so the
+# assignment replays exactly on both engines.
+@register(
+    "q_lorenz_curve",
+    f"""
+    WITH per AS (
+      SELECT CAST(len(list_filter(regexp_split_to_array(
+               coalesce(text, ''), '[^\\pL]+'), t -> t <> '')) AS BIGINT)
+               AS x
+      FROM documents),
+    hist AS (SELECT x AS v, CAST(count(*) AS BIGINT) AS c
+             FROM per GROUP BY x),
+    cdf AS (
+      SELECT v, c,
+             CAST(sum(c) OVER (ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS BIGINT) AS cum,
+             CAST(sum(c) OVER () AS BIGINT) AS n
+      FROM hist),
+    ed AS (
+      SELECT {", ".join(
+        f"min(CASE WHEN cum >= (({j} * n + 9) // 10) THEN v END) AS e{j}"
+        for j in range(1, 10))}
+      FROM cdf),
+    dec AS (
+      SELECT CAST(1 {" ".join(
+        f"+ CASE WHEN h.v > ed.e{j} THEN 1 ELSE 0 END"
+        for j in range(1, 10))} AS BIGINT) AS decile,
+             CAST(sum(h.c) AS BIGINT) AS n_docs,
+             CAST(sum(h.v * h.c) AS BIGINT) AS tokens
+      FROM hist h CROSS JOIN ed GROUP BY 1),
+    tot AS (SELECT CAST(sum(tokens) AS BIGINT) AS tt FROM dec)
+    SELECT decile, n_docs, tokens,
+           CAST(sum(tokens) OVER (ORDER BY decile
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) AS cum_tokens,
+           CASE WHEN t.tt > 0
+                THEN round(CAST(sum(tokens) OVER (ORDER BY decile
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS DOUBLE) / t.tt, 6) + 0.0
+                ELSE 0.0 END AS cum_share
+    FROM dec CROSS JOIN tot t
+    """,
+)
+def q_lorenz_curve(spark, sf_dir):
+    """Lorenz concentration curve of token mass over documents: docs
+    bucketed into value-based deciles of their token count (see header
+    note), with each decile's token mass and the cumulative share — the
+    table behind "the longest 10% of documents hold X% of the corpus"
+    (the distributional view q_gini_tokens summarizes to one number).
+    All masses are exact BIGINTs; the share is one mirrored division.
+    Plan: per-doc scan -> count histogram -> bounded-value windows ->
+    <=10-row frames."""
+    from pyspark.sql import Window
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    per = load(spark, sf_dir, "documents").select(
+        F.size(tokenize(F.coalesce("text", F.lit(""))))
+        .cast("long").alias("x"))
+    hist = materialize_once(
+        per.groupBy(F.col("x").alias("v"))
+        .agg(F.count("*").cast("long").alias("c")),
+        "lorenz_hist",
+    )
+    w = (Window.orderBy("v")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cdf = hist.select(
+        "v", "c", F.sum("c").over(w).cast("long").alias("cum"),
+        F.sum("c").over(Window.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing))
+        .cast("long").alias("n"))
+    ed = cdf.agg(*[
+        F.min(F.when(F.col("cum") >= F.expr(f"({j} * n + 9) div 10"),
+                     F.col("v"))).alias(f"e{j}")
+        for j in range(1, 10)])
+    decile = F.lit(1)
+    for j in range(1, 10):
+        decile = decile + F.when(F.col("v") > F.col(f"e{j}"), 1).otherwise(0)
+    dec = (
+        hist.crossJoin(F.broadcast(ed))
+        .groupBy(decile.cast("long").alias("decile"))
+        .agg(F.sum("c").cast("long").alias("n_docs"),
+             F.sum(F.col("v") * F.col("c")).cast("long").alias("tokens"))
+    )
+    tot = dec.agg(F.sum("tokens").cast("long").alias("tt"))
+    wd = (Window.orderBy("decile")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return (
+        dec.crossJoin(F.broadcast(tot))
+        .select(
+            "decile", "n_docs", "tokens",
+            F.sum("tokens").over(wd).cast("long").alias("cum_tokens"),
+            F.when(F.col("tt") > 0,
+                   F.round(F.sum("tokens").over(wd).cast("double")
+                           / F.col("tt"), 6) + F.lit(0.0))
+            .otherwise(F.lit(0.0)).alias("cum_share"),
+        )
+    )
+
+
+# -- Herfindahl source concentration ----------------------------------------------
+@register(
+    "q_hhi_concentration",
+    f"""
+    WITH grp AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS d,
+             CAST(sum(len(list_filter(regexp_split_to_array(
+               coalesce(text, ''), '[^\\pL]+'), t -> t <> '')))
+               AS BIGINT) AS t
+      FROM documents GROUP BY source),
+    agg AS (
+      SELECT CAST(count(*) AS BIGINT) AS k,
+             CAST(sum(d) AS BIGINT) AS nd, CAST(sum(t) AS BIGINT) AS nt,
+             CAST(sum(d * d) AS BIGINT) AS sd2,
+             CAST(sum(t * t) AS BIGINT) AS st2
+      FROM grp)
+    SELECT k AS n_sources, nd AS n_docs, nt AS n_tokens,
+           round(CAST(sd2 AS DOUBLE) / nd / nd, 6) + 0.0 AS hhi_docs,
+           round(CAST(st2 AS DOUBLE) / nt / nt, 6) + 0.0 AS hhi_tokens,
+           round(CAST(nd AS DOUBLE) * nd / sd2, 4) + 0.0
+             AS effective_sources_docs,
+           round(CAST(nt AS DOUBLE) * nt / st2, 4) + 0.0
+             AS effective_sources_tokens
+    FROM agg
+    """,
+)
+def q_hhi_concentration(spark, sf_dir):
+    """Herfindahl-Hirschman concentration of the corpus over sources,
+    by document count and by token mass, with the effective-source
+    count 1/HHI — the one-number "is this corpus really 20 sources or
+    3 big ones" check (complements q_temperature_mix, which FIXES the
+    imbalance).  HHI = sum share^2 = sum n_i^2 / N^2, exact BIGINTs
+    and one mirrored division each; NULL text counts as empty.  Plan:
+    one source agg + one 1-row agg."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    grp = (
+        load(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(F.count("*").cast("long").alias("d"),
+             F.sum(F.size(tokenize(F.coalesce("text", F.lit("")))))
+             .cast("long").alias("t"))
+    )
+    agg = grp.agg(
+        F.count("*").cast("long").alias("k"),
+        F.sum("d").cast("long").alias("nd"),
+        F.sum("t").cast("long").alias("nt"),
+        F.sum(F.col("d") * F.col("d")).cast("long").alias("sd2"),
+        F.sum(F.col("t") * F.col("t")).cast("long").alias("st2"),
+    )
+    return agg.select(
+        F.col("k").alias("n_sources"), F.col("nd").alias("n_docs"),
+        F.col("nt").alias("n_tokens"),
+        (F.round(F.col("sd2").cast("double") / F.col("nd") / F.col("nd"),
+                 6) + F.lit(0.0)).alias("hhi_docs"),
+        (F.round(F.col("st2").cast("double") / F.col("nt") / F.col("nt"),
+                 6) + F.lit(0.0)).alias("hhi_tokens"),
+        (F.round(F.col("nd").cast("double") * F.col("nd") / F.col("sd2"),
+                 4) + F.lit(0.0)).alias("effective_sources_docs"),
+        (F.round(F.col("nt").cast("double") * F.col("nt") / F.col("st2"),
+                 4) + F.lit(0.0)).alias("effective_sources_tokens"),
+    )
+
+
+# -- character-level entropy by source ------------------------------------------
+_CHENT_SCALE = 10**12
+
+
+@register(
+    "q_char_entropy",
+    f"""
+    WITH chars AS (
+      SELECT source, unnest(regexp_split_to_array(
+               lower(regexp_replace(coalesce(text, ''), '\\s+', '', 'g')),
+               '')) AS ch
+      FROM documents),
+    counts AS (
+      SELECT source, ch, CAST(count(*) AS BIGINT) AS c
+      FROM chars WHERE ch <> '' GROUP BY source, ch),
+    tot AS (
+      SELECT source, CAST(sum(c) AS BIGINT) AS n,
+             CAST(count(*) AS BIGINT) AS n_chars_distinct
+      FROM counts GROUP BY source),
+    terms AS (
+      SELECT c.source, t.n, t.n_chars_distinct,
+             CAST(floor((CAST(c.c AS DOUBLE) / t.n)
+                        * ln(CAST(c.c AS DOUBLE) / t.n)
+                        * {_CHENT_SCALE}) AS BIGINT) AS tq
+      FROM counts c JOIN tot t USING (source))
+    SELECT source, any_value(n) AS n_chars_total,
+           any_value(n_chars_distinct) AS n_distinct,
+           round(-CAST(sum(tq) AS BIGINT) / {float(_CHENT_SCALE)!r}
+                 / ln(2.0), 6) + 0.0 AS char_entropy_bits
+    FROM terms GROUP BY source
+    """,
+)
+def q_char_entropy(spark, sf_dir):
+    """Character-level entropy per source (whitespace stripped,
+    lowercased), in bits — the alphabet-granular diversity signal that
+    flags encoding damage and boilerplate before any tokenizer runs
+    (English prose sits near 4.1 bits; mojibake and repeated templates
+    fall far outside).  Per-char p*ln(p) terms quantize to 1e-12
+    BIGINTs so per-source sums are order-independent; the bit
+    conversion is one mirrored /ln(2).  Plan: char explode -> (source,
+    char) agg (alphabet-bounded) -> source agg."""
+    docs = load(spark, sf_dir, "documents")
+    chars = docs.select(
+        "source",
+        F.explode(F.split(
+            F.lower(F.regexp_replace(
+                F.coalesce("text", F.lit("")), r"\s+", "")), ""))
+        .alias("ch"),
+    ).filter(F.col("ch") != "")
+    counts = chars.groupBy("source", "ch").agg(
+        F.count("*").cast("long").alias("c"))
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    counts = materialize_once(counts, "chent_counts")
+    tot = counts.groupBy("source").agg(
+        F.sum("c").cast("long").alias("n"),
+        F.count("*").cast("long").alias("n_chars_distinct"))
+    p = F.col("c").cast("double") / F.col("n")
+    terms = counts.join(F.broadcast(tot), "source").select(
+        "source", "n", "n_chars_distinct",
+        F.floor(p * F.log(p) * _CHENT_SCALE).cast("long").alias("tq"))
+    import math as _math
+
+    return (
+        terms.groupBy("source")
+        .agg(F.first("n").alias("n_chars_total"),
+             F.first("n_chars_distinct").alias("n_distinct"),
+             F.sum("tq").cast("long").alias("sq"))
+        .select(
+            "source", "n_chars_total", "n_distinct",
+            (F.round(-F.col("sq") / float(_CHENT_SCALE)
+                     / F.lit(_math.log(2.0)), 6) + F.lit(0.0))
+            .alias("char_entropy_bits"),
+        )
+    )
+
+
+# -- word-length profile by source ------------------------------------------------
+@register(
+    "q_word_length_profile",
+    f"""
+    WITH toks AS (
+      SELECT source, length(t) AS l
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS t FROM documents)),
+    mom AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(l) AS BIGINT) AS s,
+             CAST(sum(l * l) AS BIGINT) AS ssq,
+             CAST(coalesce(sum(CASE WHEN l >= 10 THEN 1 END), 0)
+                  AS BIGINT) AS n_long
+      FROM toks GROUP BY source)
+    SELECT source, n AS n_tokens,
+           round(CAST(s AS DOUBLE) / n, 4) + 0.0 AS mean_len,
+           round(sqrt((CAST(ssq AS DOUBLE) - CAST(s AS DOUBLE) * s / n)
+                      / n), 4) + 0.0 AS std_len,
+           round(CAST(n_long AS DOUBLE) / n, 6) + 0.0 AS long_frac
+    FROM mom
+    """,
+)
+def q_word_length_profile(spark, sf_dir):
+    """Word-length profile per source: mean/std token length and the
+    fraction of long (>=10-char) tokens — the cheap stylometric
+    fingerprint that separates technical prose from chat (complements
+    q_char_diversity and the Burrows' Delta machinery).  Exact BIGINT
+    moments, mirrored divisions.  Plan: token explode -> one source
+    moment agg."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    toks = load(spark, sf_dir, "documents").select(
+        "source", F.explode(tokenize("text")).alias("t"))
+    mom = toks.select("source", F.length("t").alias("l")).groupBy(
+        "source").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("l").cast("long").alias("s"),
+        F.sum(F.col("l") * F.col("l")).cast("long").alias("ssq"),
+        F.coalesce(F.sum(F.when(F.col("l") >= 10, 1)), F.lit(0))
+        .cast("long").alias("n_long"),
+    )
+    return mom.select(
+        "source", F.col("n").alias("n_tokens"),
+        (F.round(F.col("s").cast("double") / F.col("n"), 4) + F.lit(0.0))
+        .alias("mean_len"),
+        (F.round(F.sqrt((F.col("ssq").cast("double")
+                         - F.col("s").cast("double") * F.col("s")
+                         / F.col("n")) / F.col("n")), 4) + F.lit(0.0))
+        .alias("std_len"),
+        (F.round(F.col("n_long").cast("double") / F.col("n"), 6)
+         + F.lit(0.0)).alias("long_frac"),
+    )
+
+
+# -- boilerplate prefix detection per source ------------------------------------------
+# LCP(all docs of a source) = LCP(min(text), max(text)) — the classic
+# ordered-set identity: the lexicographic extremes bound every other
+# string, so any prefix they share is shared by all.
+@register(
+    "q_common_prefix",
+    """
+    WITH ext AS (
+      SELECT source, min(coalesce(text, '')) AS lo,
+             max(coalesce(text, '')) AS hi,
+             CAST(count(*) AS BIGINT) AS n_docs
+      FROM documents GROUP BY source),
+    lcp AS (
+      SELECT source, n_docs,
+             CAST(len(list_filter(
+               range(1, least(length(lo), length(hi)) + 1),
+               p -> substr(lo, 1, p) = substr(hi, 1, p))) AS BIGINT)
+               AS prefix_len,
+             lo
+      FROM ext)
+    SELECT source, n_docs, prefix_len,
+           substr(lo, 1, least(prefix_len, 24)) AS prefix_sample,
+           prefix_len >= 12 AS is_templated
+    FROM lcp
+    """,
+)
+def q_common_prefix(spark, sf_dir):
+    """Boilerplate-prefix detector per source: the longest common
+    prefix of ALL the source's documents, via the ordered-set identity
+    LCP(all) = LCP(min, max) (see header note) — two string aggregates
+    replace any all-pairs comparison, so the check is one groupBy at
+    any corpus size.  A long shared prefix is the signature of
+    templated/boilerplate feeds that near-dedup misses when bodies
+    differ.  NULL text counts as empty (forcing LCP 0 for that
+    source).  Plan: one (min, max) string agg + in-row prefix
+    comparison bounded by the shorter extreme."""
+    docs = load(spark, sf_dir, "documents")
+    txt = F.coalesce("text", F.lit(""))
+    ext = docs.groupBy("source").agg(
+        F.min(txt).alias("lo"), F.max(txt).alias("hi"),
+        F.count("*").cast("long").alias("n_docs"))
+    out = ext.selectExpr(
+        "source", "n_docs",
+        "CAST(size(filter(CASE WHEN least(length(lo), length(hi)) > 0 "
+        "  THEN sequence(1, least(length(lo), length(hi))) "
+        "  ELSE array() END, "
+        "  p -> substr(lo, 1, CAST(p AS INT)) = "
+        "       substr(hi, 1, CAST(p AS INT)))) AS LONG) AS prefix_len",
+        "lo",
+    )
+    return out.selectExpr(
+        "source", "n_docs", "prefix_len",
+        "substr(lo, 1, CAST(least(prefix_len, 24) AS INT)) AS prefix_sample",
+        "prefix_len >= 12 AS is_templated",
+    )
+
+
+# -- Dunning G2 log-likelihood collocations ---------------------------------
+def _g2_oracle() -> str:
+    # the four k·ln(k·N/(row·col)) terms, zero at k = 0, folded in the
+    # SAME left-to-right order as the Spark expression
+    def term(k, row, col):
+        return (f"CASE WHEN {k} > 0 THEN CAST({k} AS DOUBLE)"
+                f" * ln(CAST(({k}) * n_tot AS DOUBLE) / (({row}) * ({col})))"
+                f" ELSE 0.0 END")
+
+    t11 = term("c2", "r_tot", "c_tot")
+    t12 = term("(r_tot - c2)", "r_tot", "(n_tot - c_tot)")
+    t21 = term("(c_tot - c2)", "(n_tot - r_tot)", "c_tot")
+    t22 = term("(n_tot - r_tot - c_tot + c2)",
+               "(n_tot - r_tot)", "(n_tot - c_tot)")
+    return f"""
+    WITH tokpos AS (
+      SELECT doc_id, generate_subscripts({_DUCK_TOKS}, 1) AS pos,
+             unnest({_DUCK_TOKS}) AS token
+      FROM documents),
+    bg AS (
+      SELECT w0, w1, CAST(count(*) AS BIGINT) AS c2 FROM (
+        SELECT doc_id, token AS w0,
+               lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS w1
+        FROM tokpos) z
+      WHERE w1 IS NOT NULL GROUP BY w0, w1),
+    lm AS (SELECT w0, CAST(sum(c2) AS BIGINT) AS r_tot FROM bg GROUP BY w0),
+    rm AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c_tot FROM bg GROUP BY w1),
+    nt AS (SELECT CAST(sum(c2) AS BIGINT) AS n_tot FROM bg)
+    SELECT b.w0, b.w1, b.c2,
+           round(2.0 * ((({t11} + {t12}) + {t21}) + {t22}), 4) + 0.0 AS g2
+    FROM bg b
+    JOIN lm ON lm.w0 = b.w0
+    JOIN rm ON rm.w1 = b.w1
+    CROSS JOIN nt
+    WHERE b.c2 >= 5
+    """
+
+
+@register("q_g2_collocations", _g2_oracle())
+def q_g2_collocations(spark, sf_dir):
+    """Dunning log-likelihood-ratio collocations (operators/wordcount.
+    g2_collocations) — the third classic association measure beside PMI
+    and log-Dice; margins and N come from the bigram frame itself, so
+    one corpus pass feeds everything."""
+    from nonconsumptive_spark.operators.wordcount import g2_collocations
+
+    return g2_collocations(load(spark, sf_dir, "documents"))
+
+
+# -- Gunning fog index --------------------------------------------------------
+_FOG_RUNS = ("length(regexp_replace(regexp_replace({e}, '[aeiouy]+', 'a', "
+             "'g'), '[^a]', '', 'g'))")
+
+
+@register(
+    "q_gunning_fog",
+    f"""
+    WITH base AS (
+      SELECT doc_id,
+             list_filter(regexp_split_to_array(lower(coalesce(text, '')),
+                         '[^\\pL]+'), x -> x <> '') AS t,
+             coalesce(text, '') AS txt
+      FROM documents),
+    feat AS (
+      SELECT doc_id,
+             CAST(len(t) AS BIGINT) AS n_words,
+             CAST(greatest(1, length(regexp_replace(regexp_replace(txt,
+                    '[.!?]+', '.', 'g'), '[^.]', '', 'g'))) AS BIGINT)
+               AS n_sentences,
+             CAST(len(list_filter(t,
+                    x -> {_FOG_RUNS.format(e='x')} >= 3)) AS BIGINT)
+               AS n_complex
+      FROM base)
+    SELECT doc_id, n_words, n_sentences, n_complex,
+           CASE WHEN n_words > 0
+                THEN round(0.4 * (CAST(n_words AS DOUBLE) / n_sentences
+                           + 100.0 * CAST(n_complex AS DOUBLE) / n_words),
+                           3) + 0.0 END AS fog
+    FROM feat
+    """,
+)
+def q_gunning_fog(spark, sf_dir):
+    """Gunning fog readability per document — the second classic grade
+    formula beside Flesch-Kincaid, driven by the COMPLEX-word rate
+    (>= 3 vowel-group runs, the shared syllable proxy) instead of the
+    total syllable rate.  Sentence runs use the portable collapse-then-
+    strip regexp pair; NULL text counts as empty and scores NULL.  All
+    three counts are exact integers; zero-shuffle per-row scan."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    def runs(col, cls, marker):
+        return F.length(F.regexp_replace(
+            F.regexp_replace(col, cls, marker), "[^" + marker + "]", ""))
+
+    txt = F.coalesce("text", F.lit(""))
+    syl = lambda t: F.length(F.regexp_replace(
+        F.regexp_replace(t, "[aeiouy]+", "a"), "[^a]", ""))
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(tokenize(F.lower(txt))).cast("long").alias("n_words"),
+        F.greatest(F.lit(1), runs(txt, "[.!?]+", ".")).cast("long")
+        .alias("n_sentences"),
+        F.size(F.filter(tokenize(F.lower(txt)), lambda t: syl(t) >= 3))
+        .cast("long").alias("n_complex"),
+    )
+    return base.select(
+        "doc_id", "n_words", "n_sentences", "n_complex",
+        F.when(
+            F.col("n_words") > 0,
+            F.round(0.4 * (F.col("n_words").cast("double")
+                           / F.col("n_sentences")
+                           + 100.0 * F.col("n_complex").cast("double")
+                           / F.col("n_words")), 3) + F.lit(0.0))
+        .alias("fog"),
+    )
+
+
+# -- keyness: per-source G2 keyword extraction -------------------------------
+def _keyness_oracle() -> str:
+    from nonconsumptive_spark.operators.wordcount import KEYNESS_TOPK
+
+    def t(k, row, col):
+        return (f"CASE WHEN {k} > 0 THEN CAST({k} AS DOUBLE)"
+                f" * ln(CAST(({k}) * n_tot AS DOUBLE) / (({row}) * ({col})))"
+                f" ELSE 0.0 END")
+
+    t11 = t("c", "r_tot", "c_tot")
+    t12 = t("(r_tot - c)", "r_tot", "(n_tot - c_tot)")
+    t21 = t("(c_tot - c)", "(n_tot - r_tot)", "c_tot")
+    t22 = t("(n_tot - r_tot - c_tot + c)",
+            "(n_tot - r_tot)", "(n_tot - c_tot)")
+    return f"""
+    WITH cells AS (
+      SELECT source, token, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS token FROM documents)
+      GROUP BY source, token),
+    grp AS (SELECT source, CAST(sum(c) AS BIGINT) AS r_tot
+            FROM cells GROUP BY source),
+    term AS (SELECT token, CAST(sum(c) AS BIGINT) AS c_tot
+             FROM cells GROUP BY token),
+    nt AS (SELECT CAST(sum(c) AS BIGINT) AS n_tot FROM cells),
+    scored AS (
+      SELECT s.source, s.token, s.c,
+             round(2.0 * ((({t11} + {t12}) + {t21}) + {t22}), 4) + 0.0 AS g2,
+             s.c * (n_tot - r_tot) > (c_tot - s.c) * r_tot AS overused
+      FROM cells s
+      JOIN grp USING (source)
+      JOIN term USING (token)
+      CROSS JOIN nt
+      WHERE s.c >= 5)
+    SELECT source, token, c, g2, overused
+    FROM scored
+    QUALIFY row_number() OVER (PARTITION BY source
+                               ORDER BY g2 DESC, token ASC) <= {KEYNESS_TOPK}
+    """
+
+
+@register("q_keyness_terms", _keyness_oracle())
+def q_keyness_terms(spark, sf_dir):
+    """Per-source keyword extraction by Dunning G² keyness (operators/
+    wordcount.keyness_terms): term-in-source vs term-in-rest 2×2, the
+    corpus-linguistics keyword standard; overused decided by exact
+    integer cross-multiplication, top-10 per source."""
+    from nonconsumptive_spark.operators.wordcount import keyness_terms
+
+    return keyness_terms(load(spark, sf_dir, "documents"))
+
+
+# -- Craig's Zeta marker words -----------------------------------------------
+_ZETA_TOPK = 10
+_ZETA_MIN_DF = 3
+
+
+def _zeta_oracle() -> str:
+    return f"""
+    WITH srcs AS (
+      SELECT source FROM documents GROUP BY source ORDER BY source LIMIT 2),
+    lab AS (SELECT min(source) AS sa, max(source) AS sb FROM srcs),
+    base AS (
+      SELECT d.doc_id, d.source,
+             unnest(list_distinct({_DUCK_TOKS})) AS token
+      FROM documents d SEMI JOIN srcs s ON d.source = s.source),
+    nd AS (
+      SELECT CAST(sum(CASE WHEN source = (SELECT sa FROM lab)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+             CAST(sum(CASE WHEN source <> (SELECT sa FROM lab)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+      FROM (SELECT DISTINCT doc_id, source FROM base)),
+    dfs AS (
+      SELECT token,
+             CAST(sum(CASE WHEN source = (SELECT sa FROM lab)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS df_a,
+             CAST(sum(CASE WHEN source <> (SELECT sa FROM lab)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS df_b
+      FROM base GROUP BY token
+      HAVING count(*) >= {_ZETA_MIN_DF}),
+    scored AS (
+      SELECT token, df_a, df_b,
+             df_a * n_b - df_b * n_a AS zq,
+             round(CAST(df_a * n_b - df_b * n_a AS DOUBLE)
+                   / (n_a * n_b), 6) + 0.0 AS zeta
+      FROM dfs CROSS JOIN nd),
+    marked AS (
+      SELECT 'A' AS side, token, df_a, df_b, zeta,
+             row_number() OVER (ORDER BY zq DESC, token ASC) AS rn
+      FROM scored
+      UNION ALL
+      SELECT 'B' AS side, token, df_a, df_b, zeta,
+             row_number() OVER (ORDER BY zq ASC, token ASC) AS rn
+      FROM scored)
+    SELECT side, token, df_a, df_b, zeta
+    FROM marked WHERE rn <= {_ZETA_TOPK}
+    """
+
+
+@register("q_zeta_markers", _zeta_oracle())
+def q_zeta_markers(spark, sf_dir):
+    """Craig's Zeta marker words between the two lexicographically-first
+    sources (Burrows 2007 / Craig & Kinney): zeta(w) = the document-
+    presence rate difference df_A/n_A - df_B/n_B, the PRESENCE-based
+    stylometric discriminator beside the frequency-based keyness.  Top
+    markers of each side ranked on the EXACT integer numerator
+    df_a*n_b - df_b*n_a (no float ever orders rows), token tiebreak.
+    Plan: per-doc distinct tokens -> one (token) agg with conditional
+    sums + a 1-row (n_a, n_b) attach, materialized ONCE; each side's cut
+    is a TakeOrderedAndProject on the integer key (never a single-
+    partition window over the vocabulary-sized frame)."""
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    docs = load(spark, sf_dir, "documents")
+    srcs = (docs.groupBy("source").agg(F.lit(1).alias("__o"))
+            .orderBy("source").limit(2).select("source"))
+    lab = srcs.agg(F.min("source").alias("sa"))
+    base = (
+        docs.join(F.broadcast(srcs), "source", "left_semi")
+        .select("doc_id", "source",
+                F.explode(F.array_distinct(tokenize("text")))
+                .alias("token"))
+    )
+    base = base.crossJoin(F.broadcast(lab))
+    is_a = (F.col("source") == F.col("sa")).cast("long")
+    nd = (
+        base.select("doc_id", "source", "sa").distinct()
+        .agg(F.sum(is_a).cast("long").alias("n_a"),
+             F.sum(1 - is_a).cast("long").alias("n_b"))
+    )
+    dfs = (
+        base.groupBy("token")
+        .agg(F.sum(is_a).cast("long").alias("df_a"),
+             F.sum(1 - is_a).cast("long").alias("df_b"),
+             F.count("*").alias("n"))
+        .filter(F.col("n") >= _ZETA_MIN_DF)
+        .drop("n")
+    )
+    zq = F.col("df_a") * F.col("n_b") - F.col("df_b") * F.col("n_a")
+    scored = materialize_once(
+        dfs.crossJoin(F.broadcast(nd))  # 1-row (n_a, n_b) attach
+        .select("token", "df_a", "df_b", zq.alias("zq"),
+                (F.round(zq.cast("double") / (F.col("n_a") * F.col("n_b")),
+                         6) + F.lit(0.0)).alias("zeta")),
+        "zeta_scored",
+    )
+    a = (scored.orderBy(F.desc("zq"), F.asc("token")).limit(_ZETA_TOPK)
+         .select(F.lit("A").alias("side"), "token", "df_a", "df_b", "zeta"))
+    b = (scored.orderBy(F.asc("zq"), F.asc("token")).limit(_ZETA_TOPK)
+         .select(F.lit("B").alias("side"), "token", "df_a", "df_b", "zeta"))
+    return a.unionByName(b)
+
+
+# -- Monroe et al. log-odds with informative Dirichlet prior ------------------
+_LO_TOPK = 15
+_LO_A0 = 1000.0
+_LO_MIN = 5
+
+
+def _logodds_oracle() -> str:
+    # delta and z are per-row fixed IEEE chains over exact BIGINT counts
+    # plus the prior alpha_w = c_w * (a0 / N) — one mul+div, mirrored.
+    d = ("(ln((a + aw) / (ta + {a0} - a - aw))"
+         " - ln((b + aw) / (tb + {a0} - b - aw)))").format(a0=_LO_A0)
+    z = f"({d} / sqrt(1.0 / (a + aw) + 1.0 / (b + aw)))"
+    return f"""
+    WITH srcs AS (
+      SELECT source FROM documents GROUP BY source ORDER BY source LIMIT 2),
+    lab AS (SELECT min(source) AS sa FROM srcs),
+    toks AS (
+      SELECT d.source, unnest({_DUCK_TOKS}) AS token
+      FROM documents d SEMI JOIN srcs s ON d.source = s.source),
+    cnt AS (
+      SELECT token,
+             CAST(sum(CASE WHEN source = (SELECT sa FROM lab)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS a,
+             CAST(sum(CASE WHEN source <> (SELECT sa FROM lab)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS b
+      FROM toks GROUP BY token),
+    tot AS (
+      SELECT CAST(sum(a) AS BIGINT) AS ta, CAST(sum(b) AS BIGINT) AS tb,
+             CAST(sum(a + b) AS BIGINT) AS n
+      FROM cnt),
+    scored AS (
+      SELECT token, a, b,
+             round({z}, 6) + 0.0 AS z
+      FROM (SELECT token, a, b, ta, tb,
+                   (a + b) * ({_LO_A0} / n) AS aw
+            FROM cnt CROSS JOIN tot
+            WHERE a + b >= {_LO_MIN})),
+    marked AS (
+      SELECT 'A' AS side, token, a, b, z,
+             row_number() OVER (ORDER BY z DESC, token ASC) AS rn
+      FROM scored
+      UNION ALL
+      SELECT 'B' AS side, token, a, b, z,
+             row_number() OVER (ORDER BY z ASC, token ASC) AS rn
+      FROM scored)
+    SELECT side, token, a, b, z FROM marked WHERE rn <= {_LO_TOPK}
+    """
+
+
+@register("q_log_odds_dirichlet", _logodds_oracle())
+def q_log_odds_dirichlet(spark, sf_dir):
+    """Monroe/Colaresi/Quinn 'fightin' words' (2008): log-odds-ratio
+    difference between two sources with an informative Dirichlet prior
+    drawn from the pooled counts, z-scored by the delta's approximate
+    variance — the Bayesian-shrinkage third of the source-comparison
+    trio beside frequency keyness and presence zeta (the prior tames
+    exactly the rare-word z-inflation those suffer).  Counts are exact
+    BIGINTs; prior, delta, variance, z are one mirrored float chain per
+    term; the two marker sides are TakeOrderedAndProject cuts on
+    (round(z,6), token).  Plan: one token agg + 1-row totals attach,
+    materialized once."""
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    docs = load(spark, sf_dir, "documents")
+    srcs = (docs.groupBy("source").agg(F.lit(1).alias("__o"))
+            .orderBy("source").limit(2).select("source"))
+    lab = srcs.agg(F.min("source").alias("sa"))
+    toks = (
+        docs.join(F.broadcast(srcs), "source", "left_semi")
+        .crossJoin(F.broadcast(lab))
+        .select((F.col("source") == F.col("sa")).alias("in_a"),
+                F.explode(tokenize("text")).alias("token"))
+    )
+    cnt = toks.groupBy("token").agg(
+        F.sum(F.col("in_a").cast("long")).cast("long").alias("a"),
+        F.sum((~F.col("in_a")).cast("long")).cast("long").alias("b"),
+    )
+    tot = cnt.agg(F.sum("a").cast("long").alias("ta"),
+                  F.sum("b").cast("long").alias("tb"),
+                  F.sum(F.col("a") + F.col("b")).cast("long").alias("n"))
+    base = (
+        cnt.filter(F.col("a") + F.col("b") >= _LO_MIN)
+        .crossJoin(F.broadcast(tot))  # 1-row totals attach
+        .withColumn("aw", (F.col("a") + F.col("b"))
+                    * (F.lit(_LO_A0) / F.col("n")))
+    )
+    delta = (
+        F.log((F.col("a") + F.col("aw"))
+              / (F.col("ta") + F.lit(_LO_A0) - F.col("a") - F.col("aw")))
+        - F.log((F.col("b") + F.col("aw"))
+                / (F.col("tb") + F.lit(_LO_A0) - F.col("b") - F.col("aw")))
+    )
+    z = delta / F.sqrt(1.0 / (F.col("a") + F.col("aw"))
+                       + 1.0 / (F.col("b") + F.col("aw")))
+    scored = materialize_once(
+        base.select("token", "a", "b",
+                    (F.round(z, 6) + F.lit(0.0)).alias("z")),
+        "logodds_scored",
+    )
+    a = (scored.orderBy(F.desc("z"), F.asc("token")).limit(_LO_TOPK)
+         .select(F.lit("A").alias("side"), "token", "a", "b", "z"))
+    b = (scored.orderBy(F.asc("z"), F.asc("token")).limit(_LO_TOPK)
+         .select(F.lit("B").alias("side"), "token", "a", "b", "z"))
+    return a.unionByName(b)
+
+
+# -- Juilland's D dispersion ----------------------------------------------------
+_JD_TOPK = 20
+_JD_SCALE = 10**8  # f*f must stay within INT64 even at per-part freq 1.0
+
+
+def _juilland_oracle() -> str:
+    return f"""
+    WITH toks AS (
+      SELECT source, unnest({_DUCK_TOKS}) AS token FROM documents),
+    parts AS (SELECT source, CAST(count(*) AS BIGINT) AS t
+              FROM toks GROUP BY source),
+    k AS (SELECT CAST(count(*) AS BIGINT) AS k FROM parts),
+    top AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS c
+      FROM toks GROUP BY token
+      ORDER BY c DESC, token ASC LIMIT {_JD_TOPK}),
+    cell AS (
+      SELECT t.token, p.source, p.t,
+             CAST(count(x.token) AS BIGINT) AS c
+      FROM top t CROSS JOIN parts p
+      LEFT JOIN toks x ON x.token = t.token AND x.source = p.source
+      GROUP BY t.token, p.source, p.t),
+    fq AS (
+      SELECT token,
+             CAST(floor(CAST(c AS DOUBLE) / t * {_JD_SCALE}) AS BIGINT) AS f
+      FROM cell),
+    mom AS (
+      SELECT token, CAST(count(*) AS BIGINT) AS k,
+             CAST(sum(f) AS BIGINT) AS s,
+             CAST(sum(f * f) AS BIGINT) AS ss
+      FROM fq GROUP BY token)
+    SELECT m.token, t.c,
+           CASE WHEN s > 0
+                THEN round(1.0 - sqrt((CAST(ss AS DOUBLE) * k
+                                       - CAST(s AS DOUBLE) * s)
+                                      / (k * CAST(s AS DOUBLE) * s
+                                         / (k * 1.0)))
+                           / sqrt(k - 1.0), 6) + 0.0
+                ELSE 0.0 END AS juilland_d
+    FROM mom m JOIN top t USING (token)
+    """
+
+
+@register("q_juilland_dispersion", _juilland_oracle())
+def q_juilland_dispersion(spark, sf_dir):
+    """Juilland's D dispersion of the corpus top-20 terms across the
+    source parts: D = 1 - CV/sqrt(k-1) over per-part relative
+    frequencies — the is-this-word-everywhere-or-one-subcorpus measure
+    behind dispersion-adjusted frequency lists.  Per-part frequencies
+    quantize to 1e-8 BIGINTs (squares must fit INT64 at freq 1.0), so the cross-part moments are exact
+    integers and CV is one mirrored chain.  Plan: one (source, token)
+    agg + a top-k head + a #parts-bounded grid join."""
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    docs = load(spark, sf_dir, "documents")
+    toks = materialize_once(
+        docs.select("source", F.explode(tokenize("text")).alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count("*").cast("long").alias("c")),
+        "juilland_cells",
+    )
+    parts = toks.groupBy("source").agg(F.sum("c").cast("long").alias("t"))
+    top = (toks.groupBy("token").agg(F.sum("c").cast("long").alias("c"))
+           .orderBy(F.desc("c"), F.asc("token")).limit(_JD_TOPK))
+    grid = (
+        F.broadcast(top).crossJoin(F.broadcast(parts))
+        .join(toks.select("source", F.col("token").alias("token"),
+                          F.col("c").alias("cs")),
+              ["token", "source"], "left")
+        .select("token", "c", "t",
+                F.coalesce("cs", F.lit(0)).cast("long").alias("cs"))
+    )
+    fq = grid.select(
+        "token", "c",
+        F.floor(F.col("cs").cast("double") / F.col("t") * _JD_SCALE)
+        .cast("long").alias("f"),
+    )
+    mom = fq.groupBy("token", "c").agg(
+        F.count("*").cast("long").alias("k"),
+        F.sum("f").cast("long").alias("s"),
+        F.sum(F.col("f") * F.col("f")).cast("long").alias("ss"),
+    )
+    cv = (F.sqrt((F.col("ss").cast("double") * F.col("k")
+                  - F.col("s").cast("double") * F.col("s"))
+                 / (F.col("k") * F.col("s").cast("double") * F.col("s")
+                    / (F.col("k") * F.lit(1.0)))))
+    return mom.select(
+        "token", "c",
+        F.when(F.col("s") > 0,
+               F.round(1.0 - cv / F.sqrt(F.col("k") - F.lit(1.0)), 6)
+               + F.lit(0.0)).otherwise(F.lit(0.0)).alias("juilland_d"),
+    )
+
+
+# -- ARI + Coleman-Liau readability panel ------------------------------------
+def _ari_oracle() -> str:
+    toks = ("len(list_filter(regexp_split_to_array(coalesce(text, ''),"
+            " '[^\\pL]+'), x -> x <> ''))")
+    return f"""
+    WITH base AS (
+      SELECT doc_id,
+             CAST(length(regexp_replace(coalesce(text, ''),
+                  '[^\\pL\\pN]', '', 'g')) AS BIGINT) AS n_an,
+             CAST({toks} AS BIGINT) AS n_words,
+             CAST(greatest(1, {_runs_duck("coalesce(text, '')",
+                                          "[.!?]+", ".")})
+                  AS BIGINT) AS n_sentences
+      FROM documents)
+    SELECT doc_id, n_an, n_words, n_sentences,
+           CASE WHEN n_words > 0
+                THEN round((4.71 * CAST(n_an AS DOUBLE) / n_words
+                            + 0.5 * CAST(n_words AS DOUBLE) / n_sentences)
+                           - 21.43, 3) + 0.0 END AS ari,
+           CASE WHEN n_words > 0
+                THEN round((0.0588 * (100.0 * CAST(n_an AS DOUBLE) / n_words)
+                            - 0.296 * (100.0 * CAST(n_sentences AS DOUBLE)
+                                       / n_words))
+                           - 15.8, 3) + 0.0 END AS cli
+    FROM base
+    """
+
+
+@register("q_readability_panel", _ari_oracle())
+def q_readability_panel(spark, sf_dir):
+    """Automated Readability Index + Coleman-Liau per document — the two
+    SYLLABLE-FREE readability formulas (char/word/sentence counts only),
+    completing the panel beside Flesch/FK (vowel-run syllables) and
+    Gunning fog: ARI and CLI are the formulas of choice where syllable
+    approximation is unreliable (code-mixed or non-English text).  All
+    three counts are exact integers; both scores are single mirrored
+    float chains.  Plan: zero-shuffle per-row scan."""
+    from nonconsumptive_spark.functions.text import tokenize
+
+    def runs(col, cls, marker):
+        return F.length(F.regexp_replace(
+            F.regexp_replace(col, cls, marker), "[^" + marker + "]", ""))
+
+    txt = F.coalesce(F.col("text"), F.lit(""))
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.length(F.regexp_replace(txt, "[^\\p{L}\\p{N}]", ""))
+        .cast("long").alias("n_an"),
+        F.size(tokenize(txt)).cast("long").alias("n_words"),
+        F.greatest(F.lit(1), runs(txt, "[.!?]+", ".")).cast("long")
+        .alias("n_sentences"),
+    )
+    nw = F.col("n_words").cast("double")
+    return base.select(
+        "doc_id", "n_an", "n_words", "n_sentences",
+        F.when(F.col("n_words") > 0, F.round(
+            (F.lit(4.71) * F.col("n_an").cast("double") / F.col("n_words")
+             + F.lit(0.5) * nw / F.col("n_sentences"))
+            - F.lit(21.43), 3) + F.lit(0.0)).alias("ari"),
+        F.when(F.col("n_words") > 0, F.round(
+            (F.lit(0.0588)
+             * (F.lit(100.0) * F.col("n_an").cast("double")
+                / F.col("n_words"))
+             - F.lit(0.296)
+             * (F.lit(100.0) * F.col("n_sentences").cast("double")
+                / F.col("n_words")))
+            - F.lit(15.8), 3) + F.lit(0.0)).alias("cli"),
+    )
+
+
+# -- Gries' DP (deviation of proportions) dispersion -------------------------
+_DP_TOP = 20
+_DP_SCALE = 10**9
+
+
+@register(
+    "q_gries_dp",
+    f"""
+    WITH counts AS (
+      SELECT source, token, CAST(count(*) AS BIGINT) AS v
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS token FROM documents) z
+      GROUP BY 1, 2),
+    f AS (SELECT token, CAST(sum(v) AS BIGINT) AS f FROM counts
+          GROUP BY token),
+    top AS (
+      SELECT token, f FROM (
+        SELECT token, f,
+               row_number() OVER (ORDER BY f DESC, token ASC) AS rn
+        FROM f) z WHERE rn <= {_DP_TOP}),
+    parts AS (SELECT source, CAST(sum(v) AS BIGINT) AS p_toks
+              FROM counts GROUP BY source),
+    tot AS (SELECT CAST(sum(p_toks) AS BIGINT) AS t_toks,
+                   CAST(min(p_toks) AS BIGINT) AS min_toks FROM parts),
+    grid AS (
+      SELECT t.token, t.f, p.source, p.p_toks,
+             CAST(coalesce(c.v, 0) AS BIGINT) AS v
+      FROM top t CROSS JOIN parts p
+      LEFT JOIN counts c ON c.token = t.token AND c.source = p.source),
+    terms AS (
+      SELECT g.token, g.f, o.t_toks, o.min_toks,
+             CAST(floor({_DP_SCALE}.0
+                  * abs(CAST(g.v AS DOUBLE) / g.f
+                        - CAST(g.p_toks AS DOUBLE) / o.t_toks))
+                  AS BIGINT) AS tq
+      FROM grid g CROSS JOIN tot o),
+    agg AS (
+      SELECT token, f, t_toks, min_toks,
+             CAST(sum(tq) AS BIGINT) AS s_q
+      FROM terms GROUP BY 1, 2, 3, 4)
+    SELECT token, f,
+           round(s_q / {2 * _DP_SCALE}.0, 6) + 0.0 AS dp,
+           round((s_q / {2 * _DP_SCALE}.0)
+                 / (1.0 - CAST(min_toks AS DOUBLE) / t_toks), 6) + 0.0
+             AS dp_norm
+    FROM agg
+    """,
+)
+def q_gries_dp(spark, sf_dir):
+    """Gries' DP corpus dispersion for the top-{_DP_TOP} terms: DP =
+    0.5 * sum over parts |share-of-term-in-part - share-of-part-size|,
+    with the min-part normalization DPnorm — the modern standard beside
+    Juilland's D (q_juilland_dispersion): DP handles UNEQUAL part sizes
+    exactly, where Juilland assumes near-equal chunks.  Parts are
+    sources; every share is a single division over exact BIGINT counts
+    and the per-part deviations floor-quantize before the sum.  Plan:
+    one (source, token) agg feeds term totals, part totals AND the
+    grid; the grid itself is top-K x #sources — spine-bounded."""
+    from pyspark.sql import Window
+
+    from nonconsumptive_spark.functions.text import tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    docs = load(spark, sf_dir, "documents")
+    counts = (
+        docs.select("source", F.explode(tokenize(F.col("text")))
+                    .alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count("*").cast("long").alias("v"))
+    )
+    counts = materialize_once(counts, "dp_counts")  # f, parts AND grid
+    f = counts.groupBy("token").agg(F.sum("v").cast("long").alias("f"))
+    # head cut as orderBy + limit (r8): the rank was dropped right after
+    # the filter, so TakeOrderedAndProject replaces a single-partition
+    # row_number window over the full vocabulary (ties are impossible —
+    # token is unique — so the cut is the same deterministic set)
+    top = (f.orderBy(F.desc("f"), F.asc("token")).limit(_DP_TOP)
+           .select("token", "f"))
+    parts = counts.groupBy("source").agg(
+        F.sum("v").cast("long").alias("p_toks"))
+    tot = parts.agg(F.sum("p_toks").cast("long").alias("t_toks"),
+                    F.min("p_toks").cast("long").alias("min_toks"))
+    grid = (
+        top.crossJoin(F.broadcast(parts))
+        .join(counts, ["token", "source"], "left")
+        .select("token", "f", "p_toks",
+                F.coalesce("v", F.lit(0)).cast("long").alias("v"))
+        .crossJoin(F.broadcast(tot))
+    )
+    terms = grid.select(
+        "token", "f", "t_toks", "min_toks",
+        F.floor(F.lit(float(_DP_SCALE)) * F.abs(
+            F.col("v").cast("double") / F.col("f")
+            - F.col("p_toks").cast("double") / F.col("t_toks")))
+        .cast("long").alias("tq"),
+    )
+    agg = terms.groupBy("token", "f", "t_toks", "min_toks").agg(
+        F.sum("tq").cast("long").alias("s_q"))
+    return agg.select(
+        "token", "f",
+        (F.round(F.col("s_q") / F.lit(float(2 * _DP_SCALE)), 6)
+         + F.lit(0.0)).alias("dp"),
+        (F.round((F.col("s_q") / F.lit(float(2 * _DP_SCALE)))
+                 / (F.lit(1.0) - F.col("min_toks").cast("double")
+                    / F.col("t_toks")), 6) + F.lit(0.0)).alias("dp_norm"),
+    )
+
+
+# -- C-value multiword termhood ----------------------------------------------
+_CV_MIN_F = 3
+_CV_TOP = 20
+_CV_Q = 10**6
+_CV_LOG2_3 = 1.584963  # log2(3), shared literal (rounded once in Python)
+
+
+def _cvalue_oracle() -> str:
+    return f"""
+    WITH toks AS (
+      SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+    bi AS MATERIALIZED (
+      SELECT w0, w1, CAST(count(*) AS BIGINT) AS f FROM (
+        SELECT doc_id, t[i] AS w0, t[i + 1] AS w1
+        FROM toks, unnest(range(1, len(t))) u(i)) z
+      GROUP BY 1, 2 HAVING count(*) >= {_CV_MIN_F}),
+    tri AS MATERIALIZED (
+      SELECT w0, w1, w2, CAST(count(*) AS BIGINT) AS f FROM (
+        SELECT doc_id, t[i] AS w0, t[i + 1] AS w1, t[i + 2] AS w2
+        FROM toks, unnest(range(1, len(t) - 1)) u(i)) z
+      GROUP BY 1, 2, 3 HAVING count(*) >= {_CV_MIN_F}),
+    nests AS (
+      SELECT b.w0, b.w1,
+             CAST(sum(t.f) AS BIGINT) AS s_nest,
+             CAST(count(*) AS BIGINT) AS n_nest
+      FROM bi b JOIN tri t
+        ON (t.w0 = b.w0 AND t.w1 = b.w1) OR (t.w1 = b.w0 AND t.w2 = b.w1)
+      GROUP BY 1, 2),
+    cand AS (
+      SELECT b.w0 || ' ' || b.w1 AS term, CAST(2 AS BIGINT) AS n_words,
+             b.f,
+             CASE WHEN n.n_nest IS NULL THEN CAST(b.f * {_CV_Q} AS BIGINT)
+                  ELSE CAST(floor({_CV_Q}.0
+                       * (b.f - CAST(n.s_nest AS DOUBLE) / n.n_nest))
+                       AS BIGINT) END AS cq
+      FROM bi b LEFT JOIN nests n ON n.w0 = b.w0 AND n.w1 = b.w1
+      UNION ALL
+      SELECT w0 || ' ' || w1 || ' ' || w2, CAST(3 AS BIGINT), f,
+             -- CAST the literal: DuckDB parses 1.584963 as DECIMAL and
+             -- would multiply exactly where Spark rounds in binary
+             CAST(floor({_CV_Q}.0 * (CAST({_CV_LOG2_3} AS DOUBLE) * f))
+                  AS BIGINT)
+      FROM tri),
+    ranked AS (
+      SELECT term, n_words, f, cq,
+             row_number() OVER (ORDER BY cq DESC, term ASC) AS rn
+      FROM cand)
+    SELECT term, n_words, f AS freq,
+           round(cq / {_CV_Q}.0, 6) + 0.0 AS cvalue
+    FROM ranked WHERE rn <= {_CV_TOP}
+    """
+
+
+@register("q_keyphrase_cvalue", _cvalue_oracle())
+def q_keyphrase_cvalue(spark, sf_dir):
+    """C-value multiword termhood (Frantzi et al. 2000) over bigram and
+    trigram candidates: nested bigrams are discounted by the mean
+    frequency of the trigrams containing them, so 'machine learning'
+    scores above 'of the' fragments that only occur inside longer
+    phrases — the statistical keyphrase extractor beside RAKE's
+    stopword-delimited one.  log2(n) enters as a shared literal;
+    nested-frequency means are single divisions floor-quantized before
+    the rank.  Plan: two n-gram count aggs, one bigram-in-trigram
+    containment join (n-gram-frame-sized, both sides frequency-pruned),
+    TakeOrderedAndProject cut."""
+    from nonconsumptive_spark.functions.text import ngram_structs, tokenize
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+    from pyspark.sql import Window
+
+    docs = load(spark, sf_dir, "documents")
+    toks = tokenize(F.col("text"))
+    bi = (docs.select(F.explode(ngram_structs(toks, 2)).alias("g"))
+          .groupBy(F.col("g.w0").alias("w0"), F.col("g.w1").alias("w1"))
+          .agg(F.count("*").cast("long").alias("f"))
+          .filter(F.col("f") >= _CV_MIN_F))
+    bi = materialize_once(bi, "cv_bi")
+    tri = (docs.select(F.explode(ngram_structs(toks, 3)).alias("g"))
+           .groupBy(F.col("g.w0").alias("w0"), F.col("g.w1").alias("w1"),
+                    F.col("g.w2").alias("w2"))
+           .agg(F.count("*").cast("long").alias("f"))
+           .filter(F.col("f") >= _CV_MIN_F))
+    tri = materialize_once(tri, "cv_tri")
+    t = tri.select(F.col("w0").alias("t0"), F.col("w1").alias("t1"),
+                   F.col("w2").alias("t2"), F.col("f").alias("tf"))
+    # Containment as a UNION of two EQUI-joins (r8, guide §3): the
+    # original single join on (A | B) with A = (t0=w0 & t1=w1),
+    # B = (t1=w0 & t2=w1) has no equi keys, so Spark planned a
+    # BroadcastNestedLoopJoin — |bi| x |tri| comparisons, the one
+    # quadratic join in the census.  Splitting on the position keeps
+    # both joins hashable; a pair matching BOTH arms (an all-equal
+    # trigram like "x x x" nesting the bigram "x x") must count ONCE,
+    # exactly as the OR did, so the B-arm excludes A-matches in-row.
+    j1 = bi.join(t, (F.col("t0") == F.col("w0"))
+                 & (F.col("t1") == F.col("w1"))).select("w0", "w1", "tf")
+    j2 = (
+        bi.join(t, (F.col("t1") == F.col("w0"))
+                & (F.col("t2") == F.col("w1")))
+        .filter(~((F.col("t0") == F.col("w0"))
+                  & (F.col("t1") == F.col("w1"))))
+        .select("w0", "w1", "tf")
+    )
+    nests = (
+        j1.unionByName(j2)
+        .groupBy("w0", "w1")
+        .agg(F.sum("tf").cast("long").alias("s_nest"),
+             F.count("*").cast("long").alias("n_nest"))
+    )
+    cand_bi = (
+        bi.join(nests, ["w0", "w1"], "left")
+        .select(
+            F.concat_ws(" ", "w0", "w1").alias("term"),
+            F.lit(2).cast("long").alias("n_words"), "f",
+            F.when(F.col("n_nest").isNull(),
+                   (F.col("f") * _CV_Q).cast("long"))
+            .otherwise(F.floor(F.lit(float(_CV_Q))
+                               * (F.col("f") - F.col("s_nest")
+                                  .cast("double") / F.col("n_nest")))
+                       .cast("long")).alias("cq"),
+        )
+    )
+    cand_tri = tri.select(
+        F.concat_ws(" ", "w0", "w1", "w2").alias("term"),
+        F.lit(3).cast("long").alias("n_words"), "f",
+        F.floor(F.lit(float(_CV_Q)) * (F.lit(_CV_LOG2_3) * F.col("f")))
+        .cast("long").alias("cq"),
+    )
+    cand = cand_bi.unionByName(cand_tri)
+    # top cut as orderBy + limit (r8): the rank never reached the output,
+    # so TakeOrderedAndProject replaces a single-partition row_number
+    # window over the whole candidate gram frame (terms are unique —
+    # bigram and trigram strings differ in word count — so the
+    # (cq desc, term asc) order is total and the cut identical)
+    return (
+        cand.orderBy(F.desc("cq"), F.asc("term"))
+        .limit(_CV_TOP)
+        .select("term", "n_words", F.col("f").alias("freq"),
+                (F.round(F.col("cq") / F.lit(float(_CV_Q)), 6)
+                 + F.lit(0.0)).alias("cvalue"))
+    )
+
+
+# -- temperature-mixture materialization (hash-remainder selection) ----------
+_MM_SQ = 10**6  # sqrt-weight quantization (exact-BIGINT normalizer)
+
+
+@register(
+    "q_mixture_materialize",
+    f"""
+    WITH dt AS (
+      SELECT source, doc_id,
+             CAST(len(coalesce({_DUCK_TOKS}, [])) AS BIGINT) AS nt,
+             md5(CAST(doc_id AS VARCHAR)) AS h
+      FROM documents),
+    per AS MATERIALIZED (
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(nt) AS BIGINT) AS n_tokens,
+             CAST(floor({_MM_SQ}.0 * sqrt(CAST(sum(nt) AS DOUBLE)))
+               AS BIGINT) AS sq
+      FROM dt GROUP BY source),
+    tot AS (
+      SELECT CAST(sum(n_tokens) AS BIGINT) AS budget,
+             CAST(sum(sq) AS BIGINT) AS zq
+      FROM per),
+    tgt AS MATERIALIZED (
+      SELECT p.source, p.n_docs, p.n_tokens,
+             CAST(floor(t.budget * (CAST(p.sq AS DOUBLE) / t.zq))
+               AS BIGINT) AS target
+      FROM per p CROSS JOIN tot t),
+    plan AS MATERIALIZED (
+      SELECT source, n_docs, n_tokens, target,
+             target // greatest(n_tokens, 1) AS full_epochs,
+             target % greatest(n_tokens, 1) AS rem_budget
+      FROM tgt),
+    cum AS (
+      SELECT d.source, d.doc_id, d.nt,
+             sum(d.nt) OVER (PARTITION BY d.source
+                             ORDER BY d.h, d.doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND CURRENT ROW) AS ct
+      FROM dt d),
+    sel AS (
+      SELECT c.source,
+             CAST(count(*) AS BIGINT) AS rem_docs,
+             CAST(coalesce(sum(c.nt), 0) AS BIGINT) AS rem_tokens,
+             CAST(coalesce(sum(c.doc_id), 0) AS BIGINT) AS sel_id_sum
+      FROM cum c JOIN plan p ON p.source = c.source
+      WHERE c.ct <= p.rem_budget
+      GROUP BY c.source)
+    SELECT p.source, p.n_docs, p.n_tokens, p.target,
+           CAST(p.full_epochs AS BIGINT) AS full_epochs,
+           CAST(p.rem_budget AS BIGINT) AS rem_budget,
+           CAST(coalesce(s.rem_docs, 0) AS BIGINT) AS rem_docs,
+           CAST(coalesce(s.rem_tokens, 0) AS BIGINT) AS rem_tokens,
+           CAST(coalesce(s.sel_id_sum, 0) AS BIGINT) AS sel_id_sum
+    FROM plan p LEFT JOIN sel s ON s.source = p.source
+    """,
+)
+def q_mixture_materialize(spark, sf_dir):
+    """The missing last mile after q_temperature_mix / q_mixture_budget:
+    actually MATERIALIZE the sqrt-temperature mixture against a budget of
+    one total-corpus epoch — per source, the whole-corpus repeat count
+    (full_epochs, >0 = the standard small-source upsampling) plus a
+    deterministic md5-ordered remainder selection that fills the leftover
+    token budget, reported as exact counts AND an id-sum checksum of the
+    selected docs (so the oracle verifies WHICH docs were picked, not
+    just how many).  Exactness: sqrt weights floor-quantize to 1e6
+    BIGINTs before the normalizer sum (no cross-row double sums); the
+    target chain is one mirrored double product; everything downstream is
+    integer.  Plan: one doc scan, one source agg, broadcast plan attach,
+    one source-partitioned cumulative window (per-source sort — the
+    remainder cut needs an order; at 100 TB each source sorts in
+    parallel), one source agg."""
+    from pyspark.sql import Window
+
+    docs = load(spark, sf_dir, "documents")
+    from nonconsumptive_spark.functions.text import tokenize
+
+    dt = docs.select(
+        "source", "doc_id",
+        F.size(tokenize(F.coalesce(F.col("text"), F.lit(""))))
+        .cast("long").alias("nt"),
+        F.md5(F.col("doc_id").cast("string")).alias("h"),
+    )
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+
+    dt = materialize_once(dt, "mm_dt")  # per-source agg AND the cum window
+    per = dt.groupBy("source").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("nt").cast("long").alias("n_tokens"),
+        F.floor(F.lit(float(_MM_SQ))
+                * F.sqrt(F.sum("nt").cast("double")))
+        .cast("long").alias("sq"),
+    )
+    tot = per.agg(F.sum("n_tokens").cast("long").alias("budget"),
+                  F.sum("sq").cast("long").alias("zq"))
+    plan = (
+        per.crossJoin(F.broadcast(tot))
+        .select(
+            "source", "n_docs", "n_tokens",
+            F.floor(F.col("budget")
+                    * (F.col("sq").cast("double") / F.col("zq")))
+            .cast("long").alias("target"),
+        )
+        .select(
+            "source", "n_docs", "n_tokens", "target",
+            F.expr("target div greatest(n_tokens, 1L)").cast("long")
+            .alias("full_epochs"),
+            (F.col("target") % F.greatest("n_tokens", F.lit(1).cast("long")))
+            .cast("long").alias("rem_budget"),
+        )
+    )
+    w = (Window.partitionBy("source").orderBy("h", "doc_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cum = dt.select("source", "doc_id", "nt",
+                    F.sum("nt").over(w).alias("ct"))
+    sel = (
+        cum.join(F.broadcast(plan.select("source", "rem_budget")), "source")
+        .filter(F.col("ct") <= F.col("rem_budget"))
+        .groupBy("source")
+        .agg(F.count("*").cast("long").alias("rem_docs"),
+             F.coalesce(F.sum("nt"), F.lit(0)).cast("long")
+             .alias("rem_tokens"),
+             F.coalesce(F.sum("doc_id"), F.lit(0)).cast("long")
+             .alias("sel_id_sum"))
+    )
+    return (
+        plan.join(sel, "source", "left")
+        .select(
+            "source", "n_docs", "n_tokens", "target", "full_epochs",
+            "rem_budget",
+            F.coalesce("rem_docs", F.lit(0)).cast("long").alias("rem_docs"),
+            F.coalesce("rem_tokens", F.lit(0)).cast("long")
+            .alias("rem_tokens"),
+            F.coalesce("sel_id_sum", F.lit(0)).cast("long")
+            .alias("sel_id_sum"),
+        )
+    )
+
+
+# -- Jelinek-Mercer lambda tuner (deleted-interpolation grid) ----------------
+# ln quantization: 1e9 would overflow the BIGINT logprob.  NOTE this
+# query floor-quantizes ENGINE ln() per held-out bigram inside the
+# BIGINT sum, so it leans on JVM StrictMath.log == DuckDB libm log at
+# every evaluated point — the same libm-equality assumption the
+# weibull/logrank emit-time rounding documents, here load-bearing at a
+# floor boundary.  Verified bit-identical at sf0.001/sf0.01; a 1-ulp
+# divergence would flip one logprob_q unit and, only if two lambdas tie
+# within 1 unit, is_best.  Accepted because the lambda grid is coarse
+# (0.1 steps) and argmax gaps at both SFs are >> 1 quantum.
+_LT_Q = 10**6
+#                sum at ~100x sf0.1 held-out token counts
+
+
+@register(
+    "q_lm_interp_tune",
+    f"""
+    WITH tr_tokpos AS (
+      SELECT doc_id, generate_subscripts(toks, 1) AS pos,
+             unnest(toks) AS token
+      FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+            WHERE doc_id % 2 = 0)),
+    tr_b AS MATERIALIZED (
+      SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb FROM (
+        SELECT token AS w1,
+               lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
+        FROM tr_tokpos) z
+      WHERE w2 IS NOT NULL GROUP BY w1, w2),
+    tr_ctx AS MATERIALIZED (
+      SELECT w1, CAST(sum(cb) AS BIGINT) AS cc FROM tr_b GROUP BY w1),
+    tr_u AS MATERIALIZED (
+      SELECT token AS w, CAST(count(*) AS BIGINT) AS cu
+      FROM tr_tokpos GROUP BY token),
+    consts AS (
+      SELECT (SELECT CAST(sum(cu) AS BIGINT) FROM tr_u) AS t,
+             (SELECT CAST(count(*) AS BIGINT) FROM tr_u) AS vv),
+    he_b AS MATERIALIZED (
+      SELECT w1, w2, CAST(count(*) AS BIGINT) AS ch FROM (
+        SELECT token AS w1,
+               lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
+        FROM (SELECT doc_id, generate_subscripts(toks, 1) AS pos,
+                     unnest(toks) AS token
+              FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+                    WHERE doc_id % 2 = 1))) z
+      WHERE w2 IS NOT NULL GROUP BY w1, w2),
+    joined AS MATERIALIZED (
+      SELECT h.ch,
+             CAST(coalesce(b.cb, 0) AS BIGINT) AS cb,
+             CAST(coalesce(x.cc, 0) AS BIGINT) AS cc,
+             CAST(coalesce(u.cu, 0) AS BIGINT) AS cu
+      FROM he_b h
+      LEFT JOIN tr_b b ON b.w1 = h.w1 AND b.w2 = h.w2
+      LEFT JOIN tr_ctx x ON x.w1 = h.w1
+      LEFT JOIN tr_u u ON u.w = h.w2),
+    ks AS (SELECT unnest(range(1, 10)) AS k),
+    per AS (
+      SELECT k.k,
+             CAST(sum(j.ch * CAST(floor({_LT_Q}.0 * ln(
+                 (k.k / 10.0) * (CASE WHEN j.cc > 0
+                                      THEN CAST(j.cb AS DOUBLE) / j.cc
+                                      ELSE 0.0 END)
+                 + (1.0 - k.k / 10.0)
+                   * (CAST(j.cu + 1 AS DOUBLE) / (c.t + c.vv))))
+               AS BIGINT)) AS BIGINT) AS logprob_q,
+             CAST(sum(j.ch) AS BIGINT) AS held_bigrams
+      FROM joined j CROSS JOIN ks k CROSS JOIN consts c
+      GROUP BY k.k)
+    SELECT CAST(k AS BIGINT) AS k, round(k / 10.0, 1) + 0.0 AS lam,
+           held_bigrams, logprob_q,
+           logprob_q = max(logprob_q) OVER () AS is_best
+    FROM per
+    """,
+)
+def q_lm_interp_tune(spark, sf_dir):
+    """Deleted-interpolation lambda tuning for the Jelinek-Mercer bigram
+    LM: train on even docs, score held-out odd-doc bigrams under
+    p = lam*p_bigram + (1-lam)*p_unigram for lam in 0.1..0.9, and flag
+    the argmax — the hyperparameter-selection query the fixed-lambda
+    q_lm_jm_topk ranker reads its smoothing weight from.  The unigram
+    leg is Laplace-smoothed ((cu+1)/(T+V)) so every interpolated
+    probability is strictly positive; per-bigram ln terms floor-quantize
+    to 1e6 BIGINTs (1e9 would overflow the held-out sum ~100x sf0.1)
+    so the per-lambda totals are order-free and the argmax replays
+    exactly.  Plan: two corpus passes (train/held bigram aggs),
+    bigram-type-keyed equi-joins, a 9-row lambda spine cross join, one
+    k-group agg, one 9-row window."""
+    from pyspark.sql import Window
+
+    from nonconsumptive_spark.plans.checkpoint import materialize_once
+    from nonconsumptive_spark.plans.token_cache import tokenized_documents
+
+    # the session token cache (policy: plans/ranker_cache.py) replaces
+    # THREE tokenize corpus scans (train bigrams, train unigrams, held
+    # bigrams) with checkpoint reads.  NULL-text equivalence: the cache
+    # stores tokenize(text) (NULL stays NULL) where this query tokenized
+    # coalesce(text, '') (NULL became []); both explode to zero
+    # bigram/unigram rows, so every aggregate below is unchanged.
+    toksdf = tokenized_documents(spark, sf_dir)
+
+    def bigrams(half, cname):
+        toks = toksdf.filter(F.col("doc_id") % 2 == half).select("toks")
+        pairs = toks.select(
+            F.explode(F.arrays_zip(
+                F.expr("slice(toks, 1, greatest(size(toks) - 1, 0))")
+                .alias("wa"),
+                F.expr("slice(toks, 2, greatest(size(toks) - 1, 0))")
+                .alias("wb"),
+            )).alias("p"))
+        return (pairs.select(F.col("p.wa").alias("w1"),
+                             F.col("p.wb").alias("w2"))
+                .groupBy("w1", "w2")
+                .agg(F.count("*").cast("long").alias(cname)))
+
+    tr_b = materialize_once(bigrams(0, "cb"), "lt_trb")
+    tr_ctx = tr_b.groupBy("w1").agg(F.sum("cb").cast("long").alias("cc"))
+    tr_u = materialize_once(
+        toksdf.filter(F.col("doc_id") % 2 == 0)
+        .select(F.explode("toks").alias("w"))
+        .groupBy("w").agg(F.count("*").cast("long").alias("cu")),
+        "lt_tru")
+    consts = tr_u.agg(F.sum("cu").cast("long").alias("t"),
+                      F.count("*").cast("long").alias("vv"))
+    he_b = bigrams(1, "ch")
+    joined = (
+        he_b.join(tr_b, ["w1", "w2"], "left")
+        .join(tr_ctx, "w1", "left")
+        .join(tr_u.withColumnRenamed("w", "w2"), "w2", "left")
+        .select(
+            "ch",
+            F.coalesce("cb", F.lit(0)).cast("long").alias("cb"),
+            F.coalesce("cc", F.lit(0)).cast("long").alias("cc"),
+            F.coalesce("cu", F.lit(0)).cast("long").alias("cu"))
+    )
+    joined = materialize_once(joined, "lt_joined")
+    ks = spark.range(1, 10).select(F.col("id").alias("k"))
+    lam = F.col("k") / F.lit(10.0)
+    pb = F.when(F.col("cc") > 0,
+                F.col("cb").cast("double") / F.col("cc")).otherwise(F.lit(0.0))
+    pu = ((F.col("cu") + 1).cast("double") / (F.col("t") + F.col("vv")))
+    per = (
+        joined.crossJoin(F.broadcast(ks)).crossJoin(F.broadcast(consts))
+        .groupBy("k")
+        .agg(
+            F.sum(F.col("ch")
+                  * F.floor(F.lit(float(_LT_Q))
+                            * F.log(lam * pb + (F.lit(1.0) - lam) * pu))
+                  .cast("long")).cast("long").alias("logprob_q"),
+            F.sum("ch").cast("long").alias("held_bigrams"))
+    )
+    return per.select(
+        F.col("k").cast("long").alias("k"),
+        (F.round(F.col("k") / F.lit(10.0), 1) + F.lit(0.0)).alias("lam"),
+        "held_bigrams", "logprob_q",
+        (F.col("logprob_q")
+         == F.max("logprob_q").over(Window.partitionBy())).alias("is_best"),
+    )

@@ -1,6 +1,6 @@
 """Streaming CUSUM monitor: maintain the control-chart state of a daily
 count series across micro-batches — the live form of the batch
-changepoint detector (``queries/promoted.q_cusum_daily``), with the
+changepoint detector (``queries/events.q_cusum_daily``), with the
 FIXED reference target classical SPC assumes (in streaming the global
 mean is unknowable, so the target is a parameter, expressed as the exact
 rational ``target_num / target_den``).

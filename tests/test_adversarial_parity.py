@@ -39,8 +39,7 @@ pytestmark = pytest.mark.sweep  # whole-registry sweep: skip via -m "not sweep"
 
 from datetime import datetime
 
-from nonconsumptive_spark.queries import all_queries, Query
-from nonconsumptive_spark.queries.staging import STAGED
+from nonconsumptive_spark.queries import all_queries
 from tools.check_oracle import compare_query, duck_connection
 
 
@@ -208,8 +207,6 @@ def adv_dir(tmp_path_factory):
 def test_adversarial_full_table_parity_sweep(spark, adv_dir):
     duck = duck_connection(adv_dir)
     entries = dict(all_queries())
-    for n, (fn, o) in STAGED.items():
-        entries.setdefault(n, Query(n, fn, o))
     failures = []
     for n, q in sorted(entries.items()):
         try:

@@ -8,7 +8,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from nonconsumptive_spark.queries import all_queries
 from tests.conftest import SF_SMALL
+
+REGISTRY = all_queries()
 
 N_BUCKETS = 8
 
@@ -145,11 +148,9 @@ def test_corpus_tag_keeps_stat_string_format():
 
 
 def test_staged_bucketed_join_revenue_plan(spark):
-    from nonconsumptive_spark.queries.promoted_r8 import STAGED
-
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = STAGED["q_bucketed_join_revenue"][0](spark, SF_SMALL)
+        df = REGISTRY["q_bucketed_join_revenue"].spark_fn(spark, SF_SMALL)
         plan = df._jdf.queryExecution().executedPlan().toString()
         # the ONLY exchange is the final 5-row priority agg, never the join
         assert plan.count("Exchange hashpartitioning") <= 1, plan

@@ -88,6 +88,21 @@ def test_parity_queries_inside_driver_window():
     assert not stale, f"PRIORITY entries not in registry: {stale}"
 
 
+def test_priority_lists_every_registered_query_once():
+    from nonconsumptive_spark.queries import PRIORITY, REGISTRY, all_queries
+
+    all_queries()  # imports every query module, filling REGISTRY
+    assert len(PRIORITY) == len(set(PRIORITY))
+    assert set(PRIORITY) == set(REGISTRY)
+
+
+def test_every_query_has_docstring_or_doc():
+    from nonconsumptive_spark.queries import all_queries
+
+    for name, q in all_queries().items():
+        assert q.doc, f"{name} lacks a doc line"
+
+
 def test_register_views_enables_raw_sql(spark):
     from nonconsumptive_spark.queries import register_views
     from tests.conftest import SF_SMALL

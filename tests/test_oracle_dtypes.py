@@ -1,5 +1,5 @@
 """Oracle dtype discipline: (a) the standing DESCRIBE-level audit — no
-registered or staged oracle may emit a column class that is a
+registered oracle may emit a column class that is a
 guaranteed driver-hash divergence (DECIMAL/HUGEINT, unsigned — Spark
 never emits these, so the sides cannot agree);
 (b) the compare gate itself — the q_kcenter_select r5 bug class
@@ -14,7 +14,6 @@ import pytest
 pytestmark = pytest.mark.sweep  # whole-registry sweep: skip via -m "not sweep"
 
 from nonconsumptive_spark.queries import Query, all_queries
-from nonconsumptive_spark.queries.staging import STAGED
 from tests.conftest import SF_SMALL
 from tools.check_oracle import compare_query, duck_connection
 from tools.oracle_dtypes import audit
@@ -23,7 +22,6 @@ from tools.oracle_dtypes import audit
 def test_no_oracle_emits_unhashable_dtype():
     con = duck_connection(SF_SMALL)
     pairs = [(n, q.oracle) for n, q in all_queries().items() if q.oracle]
-    pairs += [(n, o) for n, (_f, o) in STAGED.items()]
     assert len(pairs) >= 358
     flagged = audit(con, pairs)
     assert flagged == [], flagged

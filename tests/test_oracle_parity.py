@@ -18,8 +18,3 @@ QUERIES = all_queries()
 def test_query_matches_oracle(spark, duck, name):
     res = compare_query(spark, duck, name, QUERIES[name], SF_SMALL)
     assert res["status"] in ("ok", "rows_only"), res.get("problems")
-
-
-def test_every_query_has_docstring_or_doc():
-    for name, q in QUERIES.items():
-        assert q.doc, f"{name} lacks a doc line"

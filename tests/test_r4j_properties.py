@@ -13,6 +13,10 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
+
 # ---------------------------------------------------------------------------
 # CUSUM: the closed form cum - min(0, running_min(cum)) IS the recurrence
 # s_i = max(0, s_{i-1} + y_i)  (and mirrored for the negative side)
@@ -60,9 +64,7 @@ def test_cusum_spark_matches_python_recurrence(spark):
 
 
 def test_kaplan_meier_matches_product_estimator(spark, duck):
-    from nonconsumptive_spark.queries.promoted import STAGED
-
-    fn, _ = STAGED["q_kaplan_meier"]
+    fn = REGISTRY["q_kaplan_meier"].spark_fn
     rows = sorted((r["dur"], r) for r in
                   fn(spark, "/root/testdata/sf0.001").collect())
     surv = 1.0

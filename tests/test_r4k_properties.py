@@ -13,6 +13,10 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
+
 # ---------------------------------------------------------------------------
 # Jaro-Winkler: the Python kernel the pandas UDF runs must equal DuckDB's
 # builtin BIT-FOR-BIT (that is the whole oracle contract).
@@ -275,9 +279,7 @@ def test_benford_matches_brute(spark):
 
 
 def test_leakage_safe_split_keeps_clusters_together(spark):
-    from nonconsumptive_spark.queries.promoted import STAGED
-
-    fn, _ = STAGED["q_leakage_safe_split"]
+    fn = REGISTRY["q_leakage_safe_split"].spark_fn
     rows = fn(spark, "/root/testdata/sf0.001").collect()
     by_cluster = {}
     for r in rows:
@@ -372,9 +374,7 @@ def test_calibration_bins_matches_brute(spark):
 
 
 def test_good_turing_on_hand_corpus(spark):
-    from nonconsumptive_spark.queries.promoted import STAGED
-
-    fn, _ = STAGED["q_good_turing"]
+    fn = REGISTRY["q_good_turing"].spark_fn
     rows = {r["r"]: r for r in fn(spark, "/root/testdata/sf0.001").collect()}
     # N_r are positive, r* = (r+1) N_{r+1} / N_r wherever N_{r+1} exists
     for r, row in rows.items():
@@ -538,7 +538,7 @@ def test_rbp_matches_brute(spark):
 def test_mann_kendall_matches_brute(spark):
     import datetime as dt
 
-    from nonconsumptive_spark.queries.promoted import STAGED, _MK_SCALE
+    from nonconsumptive_spark.queries.stats import _MK_SCALE
 
     rng = random.Random(31)
     rows, eid = [], 0
@@ -556,7 +556,7 @@ def test_mann_kendall_matches_brute(spark):
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/events.parquet")
         spark.read.parquet(f"{d}/events.parquet")  # materialize layout
-        fn, _ = STAGED["q_mann_kendall"]
+        fn = REGISTRY["q_mann_kendall"].spark_fn
         got = {r["event_type"]: r for r in fn(spark, d).collect()}
 
     daily = {}
@@ -595,10 +595,10 @@ def test_mann_kendall_matches_brute(spark):
 
 
 def test_neyman_allocation_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted import (
-        STAGED, _NEY_BUDGET, _NEY_SCALE)
+    from nonconsumptive_spark.queries.stats import (
+        _NEY_BUDGET, _NEY_SCALE)
 
-    fn, _ = STAGED["q_neyman_allocation"]
+    fn = REGISTRY["q_neyman_allocation"].spark_fn
     got = {r["source"]: r for r in fn(spark,
                                       "/root/testdata/sf0.001").collect()}
     import duckdb

@@ -13,6 +13,10 @@ import math
 import random
 from collections import Counter
 
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
+
 # ---------------------------------------------------------------------------
 # G²: matches the brute 2x2 log-likelihood-ratio on a constructed corpus,
 # and independence pushes G² toward 0
@@ -85,10 +89,9 @@ def test_g2_nonnegative_and_zero_under_exact_independence(spark):
 
 
 def test_cohens_d_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_cohens_d_sources"]
+    fn = REGISTRY["q_cohens_d_sources"].spark_fn
     got = {(r["source_a"], r["source_b"]): r
            for r in fn(spark, cf.SF_SMALL).collect()}
 
@@ -121,10 +124,10 @@ def test_cohens_d_matches_brute(spark):
 
 
 def test_permutation_test_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _PERM_R
+    from nonconsumptive_spark.queries.stats import _PERM_R
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_permutation_test"]
+    fn = REGISTRY["q_permutation_test"].spark_fn
     row = fn(spark, cf.SF_SMALL).collect()[0]
     assert 0.0 < row["p_value"] <= 1.0
     assert row["n_eff"] <= _PERM_R
@@ -227,8 +230,6 @@ def test_holt_tracks_linear_series(spark):
 
 
 def test_seq_pattern_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     rng = random.Random(23)
     rows = []
     eid = 0
@@ -241,7 +242,7 @@ def test_seq_pattern_matches_brute(spark):
                          rng.choice(["a", "b", "c"])))
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, ts timestamp, event_type string")
-    fn, _ = STAGED["q_seq_pattern_pairs"]
+    fn = REGISTRY["q_seq_pattern_pairs"].spark_fn
 
     # drive the spark_fn through a temp-dir parquet so load() sees it
     import tempfile
@@ -327,7 +328,6 @@ def test_rm3_matches_brute(spark):
 
 
 def test_gunning_fog_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import re
     import tempfile
 
@@ -341,7 +341,7 @@ def test_gunning_fog_matches_brute(spark):
     tmp = tempfile.mkdtemp()
     spark.createDataFrame(rows, "doc_id long, text string") \
         .coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    fn, _ = STAGED["q_gunning_fog"]
+    fn = REGISTRY["q_gunning_fog"].spark_fn
     got = {r["doc_id"]: r for r in fn(spark, tmp).collect()}
     for did, text in rows:
         t = (text or "")
@@ -369,11 +369,10 @@ def test_gunning_fog_matches_brute(spark):
 
 
 def test_grubbs_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import statistics
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_grubbs_outlier"]
+    fn = REGISTRY["q_grubbs_outlier"].spark_fn
     got = {r["source"]: r for r in fn(spark, cf.SF_SMALL).collect()}
 
     import duckdb
@@ -462,10 +461,9 @@ def test_keyness_matches_brute(spark):
 
 
 def test_skew_report_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_skew_report"]
+    fn = REGISTRY["q_skew_report"].spark_fn
     row = fn(spark, cf.SF_SMALL).collect()[0]
 
     import duckdb
@@ -492,8 +490,8 @@ def test_skew_report_matches_brute(spark):
 
 
 def test_zeta_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import (
-        STAGED, _ZETA_MIN_DF, _ZETA_TOPK)
+    from nonconsumptive_spark.queries.textstats import (
+        _ZETA_MIN_DF, _ZETA_TOPK)
     import re
     import tempfile
 
@@ -511,7 +509,7 @@ def test_zeta_matches_brute(spark):
     spark.createDataFrame(
         rows, "doc_id long, text string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    fn, _ = STAGED["q_zeta_markers"]
+    fn = REGISTRY["q_zeta_markers"].spark_fn
     got = {(r["side"], r["token"]): (r["df_a"], r["df_b"], r["zeta"])
            for r in fn(spark, tmp).collect()}
 
@@ -544,7 +542,6 @@ def test_zeta_matches_brute(spark):
 
 
 def test_fk_integrity_counts_planted_orphans(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tempfile
 
     tmp = tempfile.mkdtemp()
@@ -556,7 +553,7 @@ def test_fk_integrity_counts_planted_orphans(spark):
     li = [(i, i % 35) for i in range(70)]  # orderkeys 30..34 orphaned
     spark.createDataFrame(li, "l_linenumber long, l_orderkey long") \
         .write.mode("overwrite").parquet(f"{tmp}/lineitem.parquet")
-    fn, _ = STAGED["q_fk_integrity"]
+    fn = REGISTRY["q_fk_integrity"].spark_fn
     got = {r["fk_edge"]: (r["n_child"], r["n_orphans"])
            for r in fn(spark, tmp).collect()}
     assert got["orders.o_custkey->customer"] == (
@@ -571,12 +568,11 @@ def test_fk_integrity_counts_planted_orphans(spark):
 
 
 def test_mcnemar_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     from nonconsumptive_spark.operators.textstats import lang_id
     from nonconsumptive_spark.queries import load as _load
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_mcnemar_langid"]
+    fn = REGISTRY["q_mcnemar_langid"].spark_fn
     row = fn(spark, cf.SF_SMALL).collect()[0]
 
     docs = _load(spark, cf.SF_SMALL, "documents")
@@ -599,8 +595,8 @@ def test_mcnemar_matches_brute(spark):
 
 
 def test_log_odds_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import (
-        STAGED, _LO_A0, _LO_MIN, _LO_TOPK)
+    from nonconsumptive_spark.queries.textstats import (
+        _LO_A0, _LO_MIN, _LO_TOPK)
     import re
     import tempfile
 
@@ -616,7 +612,7 @@ def test_log_odds_matches_brute(spark):
     spark.createDataFrame(
         rows, "doc_id long, text string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    fn, _ = STAGED["q_log_odds_dirichlet"]
+    fn = REGISTRY["q_log_odds_dirichlet"].spark_fn
     got = {(r["side"], r["token"]): (r["a"], r["b"], r["z"])
            for r in fn(spark, tmp).collect()}
 
@@ -651,11 +647,11 @@ def test_log_odds_matches_brute(spark):
 
 
 def test_mantel_haenszel_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import (
-        STAGED, _MH_LONG_DOC, _MH_SCALE)
+    from nonconsumptive_spark.queries.stats import (
+        _MH_LONG_DOC, _MH_SCALE)
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_mantel_haenszel"]
+    fn = REGISTRY["q_mantel_haenszel"].spark_fn
     row = fn(spark, cf.SF_SMALL).collect()[0]
 
     import duckdb
@@ -689,7 +685,6 @@ def test_mantel_haenszel_matches_brute(spark):
 
 
 def test_juilland_extremes(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tempfile
 
     rows = []
@@ -704,7 +699,7 @@ def test_juilland_extremes(spark):
     spark.createDataFrame(
         rows, "doc_id long, text string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    fn, _ = STAGED["q_juilland_dispersion"]
+    fn = REGISTRY["q_juilland_dispersion"].spark_fn
     got = {r["token"]: r["juilland_d"] for r in fn(spark, tmp).collect()}
     assert got["every"] > 0.9
     assert got["onlyone"] < 0.1
@@ -717,10 +712,9 @@ def test_juilland_extremes(spark):
 
 
 def test_brier_decomposition_identity(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_brier_decomposition"]
+    fn = REGISTRY["q_brier_decomposition"].spark_fn
     r = fn(spark, cf.SF_SMALL).collect()[0]
     assert 0.0 <= r["brier"] <= 1.0
     assert r["reliability"] >= 0.0 and r["resolution"] >= 0.0
@@ -740,12 +734,11 @@ def test_brier_decomposition_identity(spark):
 
 
 def test_langid_prf_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     from nonconsumptive_spark.operators.textstats import lang_id
     from nonconsumptive_spark.queries import load as _load
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_langid_prf"]
+    fn = REGISTRY["q_langid_prf"].spark_fn
     got = {r["lang"]: r for r in fn(spark, cf.SF_SMALL).collect()}
     docs = _load(spark, cf.SF_SMALL, "documents")
     pred = {r["doc_id"]: r["pred_lang"] for r in lang_id(docs).collect()}
@@ -770,10 +763,9 @@ def test_langid_prf_matches_brute(spark):
 
 
 def test_gain_chart_invariants(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_gain_chart"]
+    fn = REGISTRY["q_gain_chart"].spark_fn
     rows = sorted(fn(spark, cf.SF_SMALL).collect(),
                   key=lambda r: r["decile"])
     assert [r["decile"] for r in rows] == list(range(10))
@@ -822,10 +814,10 @@ def _brute_pava(ns, ps):
 
 
 def test_isotonic_minimax_equals_classic_pava(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _ISO_SCALE
+    from nonconsumptive_spark.queries.evaluation import _ISO_SCALE
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_isotonic_bins"]
+    fn = REGISTRY["q_isotonic_bins"].spark_fn
     rows = sorted(fn(spark, cf.SF_SMALL).collect(), key=lambda r: r["bin"])
     iso = [r["iso_rate"] for r in rows]
     assert iso == sorted(iso)  # monotone fit
@@ -845,10 +837,9 @@ def test_isotonic_minimax_equals_classic_pava(spark):
 
 @pytest.mark.sweep  # deep property sweep (>=10s); runs at round close
 def test_von_neumann_extremes(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tempfile
 
-    fn, _ = STAGED["q_von_neumann_ratio"]
+    fn = REGISTRY["q_von_neumann_ratio"].spark_fn
 
     def series(counts):
         rows = []
@@ -878,7 +869,6 @@ def test_von_neumann_extremes(spark):
 
 @pytest.mark.sweep  # deep property sweep (>=10s); runs at round close
 def test_simpson_flip_detects_planted_paradox(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tempfile
 
     # classic construction: exposed ('aaa', sorts first) wins INSIDE each
@@ -905,7 +895,7 @@ def test_simpson_flip_detects_planted_paradox(spark):
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    fn, _ = STAGED["q_simpson_flip"]
+    fn = REGISTRY["q_simpson_flip"].spark_fn
     got = {r["lang"]: r for r in fn(spark, tmp).collect()}
     # exposed wins both strata...
     assert got["L1"]["stratum_favors_exposed"] is True
@@ -922,10 +912,10 @@ def test_simpson_flip_detects_planted_paradox(spark):
 
 
 def test_odds_ratio_ci_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _OR_Z
+    from nonconsumptive_spark.queries.stats import _OR_Z
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_odds_ratio_ci"]
+    fn = REGISTRY["q_odds_ratio_ci"].spark_fn
     got = {r["lang"]: r for r in fn(spark, cf.SF_SMALL).collect()}
 
     import duckdb
@@ -959,10 +949,10 @@ def test_odds_ratio_ci_matches_brute(spark):
 
 
 def test_cuped_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _CUPED_CUT
+    from nonconsumptive_spark.queries.stats import _CUPED_CUT
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_cuped_abtest"]
+    fn = REGISTRY["q_cuped_abtest"].spark_fn
     row = fn(spark, cf.SF_SMALL).collect()[0]
     assert row["mde_cuped"] <= row["mde_raw"] + 1e-9
     assert 0.0 <= row["rho2"] <= 1.0
@@ -1004,10 +994,9 @@ def test_cuped_matches_brute(spark):
 
 
 def test_time_to_convert_matches_brute(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     import tests.conftest as cf
 
-    fn, _ = STAGED["q_time_to_convert"]
+    fn = REGISTRY["q_time_to_convert"].spark_fn
     row = fn(spark, cf.SF_SMALL).collect()[0]
 
     import duckdb
@@ -1044,11 +1033,11 @@ def test_time_to_convert_matches_brute(spark):
 
 @pytest.mark.sweep  # deep property sweep (>=10s); runs at round close
 def test_sprt_detects_rate_jump(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import (
-        STAGED, _SPRT_LO_Q, _SPRT_SCALE, _SPRT_UP_Q)
+    from nonconsumptive_spark.queries.stats import (
+        _SPRT_LO_Q, _SPRT_SCALE, _SPRT_UP_Q)
     import tempfile
 
-    fn, _ = STAGED["q_sprt_daily"]
+    fn = REGISTRY["q_sprt_daily"].spark_fn
 
     def run(counts):
         rows = []
@@ -1064,7 +1053,7 @@ def test_sprt_detects_rate_jump(spark):
             .parquet(f"{tmp}/events.parquet")
         return sorted(fn(spark, tmp).collect(), key=lambda r: r["day"])
 
-    from nonconsumptive_spark.queries.promoted_r6 import _SPRT_BASE_DAYS
+    from nonconsumptive_spark.queries.stats import _SPRT_BASE_DAYS
 
     # brute LLR replay on a mixed series (baseline = first 7 days)
     rng = random.Random(59)

@@ -11,6 +11,10 @@ import pytest
 
 import math
 
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -41,9 +45,8 @@ def test_theil_sen_exact_on_linear_series(spark, tmp_path):
         "props": [r[5] for r in rows],
     })
     pq.write_table(tb, str(tmp_path / "events.parquet"))
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
 
-    out = STAGED["q_theil_sen_slope"][0](spark, str(tmp_path)).collect()[0]
+    out = REGISTRY["q_theil_sen_slope"].spark_fn(spark, str(tmp_path)).collect()[0]
     assert out["n_days"] == 12
     assert out["n_pairs"] == 12 * 11 // 2
     assert out["ts_slope"] == 3.0
@@ -98,9 +101,9 @@ def test_average_precision_perfect_ranking(spark):
 
 
 def test_bh_fdr_stepup_prefix(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _BH_R
+    from nonconsumptive_spark.queries.stats import _BH_R
 
-    rows = STAGED["q_bh_fdr"][0](spark, SF).collect()
+    rows = REGISTRY["q_bh_fdr"].spark_fn(spark, SF).collect()
     assert rows, "expected one row per event type"
     by_rank = sorted(rows, key=lambda r: r["bh_rank"])
     for r in by_rank:
@@ -118,9 +121,7 @@ def test_bh_fdr_stepup_prefix(spark):
 
 
 def test_err_bounds_on_testdata(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    rows = STAGED["q_err_eval"][0](spark, SF).collect()
+    rows = REGISTRY["q_err_eval"].spark_fn(spark, SF).collect()
     assert rows
     hmax = sum(1.0 / r for r in range(1, 11))
     for r in rows:
@@ -165,12 +166,12 @@ def test_bradley_terry_dominance_and_normalization(spark):
 
 
 def test_shapley_efficiency_axiom(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import (
-        STAGED, _SHAP_CHANNELS, _SHAP_CONV)
+    from nonconsumptive_spark.queries.events import (
+        _SHAP_CHANNELS, _SHAP_CONV)
     from nonconsumptive_spark.queries import load
     from pyspark.sql import functions as F
 
-    phis = STAGED["q_shapley_attribution"][0](spark, SF).collect()
+    phis = REGISTRY["q_shapley_attribution"].spark_fn(spark, SF).collect()
     assert len(phis) == len(_SHAP_CHANNELS)
     total_phi = sum(r["phi_num"] for r in phis)
 
@@ -193,11 +194,10 @@ def test_shapley_efficiency_axiom(spark):
 
 
 def test_nelson_aalen_dominates_km(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
     from nonconsumptive_spark.queries import all_queries
 
     na = {r["dur"]: r for r in
-          STAGED["q_nelson_aalen"][0](spark, SF).collect()}
+          REGISTRY["q_nelson_aalen"].spark_fn(spark, SF).collect()}
     km = {r["dur"]: r for r in
           all_queries()["q_kaplan_meier"].spark_fn(spark, SF).collect()}
     assert set(na) == set(km)
@@ -218,9 +218,7 @@ def test_nelson_aalen_dominates_km(spark):
 def test_did_cells_and_estimate(spark):
     import duckdb
 
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    got = STAGED["q_did_readout"][0](spark, SF).collect()[0]
+    got = REGISTRY["q_did_readout"].spark_fn(spark, SF).collect()[0]
     con = duckdb.connect()
     n_total = con.execute(
         f"SELECT count(*) FROM '{SF}/events.parquet'").fetchone()[0]
@@ -249,9 +247,7 @@ def test_did_cells_and_estimate(spark):
 
 
 def test_link_prediction_invariants(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    rows = STAGED["q_link_prediction"][0](spark, SF).collect()
+    rows = REGISTRY["q_link_prediction"].spark_fn(spark, SF).collect()
     assert rows
     for r in rows:
         assert r["common_neighbors"] >= 2
@@ -270,9 +266,7 @@ def test_gries_dp_bounds_and_uniform_case(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    rows = STAGED["q_gries_dp"][0](spark, SF).collect()
+    rows = REGISTRY["q_gries_dp"].spark_fn(spark, SF).collect()
     assert len(rows) == 20
     for r in rows:
         assert 0.0 <= r["dp"] < 1.0
@@ -288,7 +282,7 @@ def test_gries_dp_bounds_and_uniform_case(spark, tmp_path):
         "n_chars": [len(text)] * 2,
     })
     pq.write_table(tb, str(tmp_path / "documents.parquet"))
-    for r in STAGED["q_gries_dp"][0](spark, str(tmp_path)).collect():
+    for r in REGISTRY["q_gries_dp"].spark_fn(spark, str(tmp_path)).collect():
         assert r["dp"] == 0.0 and r["dp_norm"] == 0.0
 
 
@@ -301,8 +295,6 @@ def test_readability_hand_computed(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     text = "The cat sat. The dog ran fast!"
     # letters+digits = 22, words = 7, sentences = 2
     nc, nw, ns = 22, 7, 2
@@ -312,8 +304,8 @@ def test_readability_hand_computed(spark, tmp_path):
     tb = pa.table({"doc_id": [0], "text": [text], "lang": ["en"],
                    "source": ["s0"], "n_chars": [len(text)]})
     pq.write_table(tb, str(tmp_path / "documents.parquet"))
-    got = STAGED["q_readability_panel"][0](spark,
-                                           str(tmp_path)).collect()[0]
+    got = REGISTRY["q_readability_panel"].spark_fn(spark,
+                                                   str(tmp_path)).collect()[0]
     assert (got["n_an"], got["n_words"], got["n_sentences"]) == (nc, nw, ns)
     assert abs(got["ari"] - ari) < 1e-9
     assert abs(got["cli"] - cli) < 1e-9

@@ -7,6 +7,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -33,9 +37,7 @@ def _write_events(tmp_path, rows):
 
 
 def test_eb_shrinkage_pulls_toward_mean(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    rows = STAGED["q_eb_shrinkage"][0](spark, SF).collect()
+    rows = REGISTRY["q_eb_shrinkage"].spark_fn(spark, SF).collect()
     assert rows
     mbar = sum(r["x"] for r in rows) / sum(r["n"] for r in rows)
     for r in rows:
@@ -52,9 +54,9 @@ def test_eb_shrinkage_pulls_toward_mean(spark):
 def test_covariate_balance_partitions_users(spark):
     import duckdb
 
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _CB_COVS
+    from nonconsumptive_spark.queries.stats import _CB_COVS
 
-    rows = STAGED["q_covariate_balance"][0](spark, SF).collect()
+    rows = REGISTRY["q_covariate_balance"].spark_fn(spark, SF).collect()
     assert sorted(r["covariate"] for r in rows) == sorted(_CB_COVS)
     n_users = duckdb.connect().execute(
         f"SELECT count(DISTINCT user_id) FROM '{SF}/events.parquet'"
@@ -74,9 +76,7 @@ def test_covariate_balance_partitions_users(spark):
 
 
 def test_qini_monotone_and_total(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    rows = sorted(STAGED["q_qini_curve"][0](spark, SF).collect(),
+    rows = sorted(REGISTRY["q_qini_curve"].spark_fn(spark, SF).collect(),
                   key=lambda r: r["decile"])
     assert [r["decile"] for r in rows] == list(range(1, 11))
     for a, b in zip(rows, rows[1:]):
@@ -97,15 +97,13 @@ def test_harmonic_centrality_star_graph(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     text = "hub aa hub bb hub cc hub dd"
     tb = pa.table({"doc_id": [0], "text": [text], "lang": ["en"],
                    "source": ["s0"], "n_chars": [len(text)]})
     pq.write_table(tb, str(tmp_path / "documents.parquet"))
     got = {r["seed"]: r for r in
-           STAGED["q_harmonic_centrality"][0](spark,
-                                              str(tmp_path)).collect()}
+           REGISTRY["q_harmonic_centrality"].spark_fn(spark,
+                                                      str(tmp_path)).collect()}
     assert set(got) == {"hub", "aa", "bb", "cc", "dd"}
     assert got["hub"]["deg"] == 4 and got["hub"]["harmonic"] == 4.0
     for leaf in ("aa", "bb", "cc", "dd"):
@@ -121,8 +119,6 @@ def test_harmonic_centrality_star_graph(spark, tmp_path):
 
 
 def test_markov_absorption_deterministic_chain(spark, tmp_path):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     rows, eid = [], 0
     for u in range(20):
         t0 = dt.datetime(2024, 1, 1, 0, 0, 0) + dt.timedelta(hours=u)
@@ -131,8 +127,8 @@ def test_markov_absorption_deterministic_chain(spark, tmp_path):
             eid += 1
     _write_events(tmp_path, rows)
     got = {r["state"]: r for r in
-           STAGED["q_markov_absorption"][0](spark,
-                                            str(tmp_path)).collect()}
+           REGISTRY["q_markov_absorption"].spark_fn(spark,
+                                                    str(tmp_path)).collect()}
     assert got["click"]["exp_steps"] == 1.0
     assert got["click"]["p_direct"] == 1.0
     assert got["view"]["exp_steps"] == 2.0
@@ -149,8 +145,6 @@ def test_nearest_centroid_separated_labels(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     vecs, labels = [], []
     for i in range(40):
         lbl = i % 2
@@ -164,17 +158,15 @@ def test_nearest_centroid_separated_labels(spark, tmp_path):
         "label": pa.array(labels, pa.int32()),
     })
     pq.write_table(tb, str(tmp_path / "embeddings.parquet"))
-    got = STAGED["q_nearest_centroid_eval"][0](spark,
-                                               str(tmp_path)).collect()
+    got = REGISTRY["q_nearest_centroid_eval"].spark_fn(spark,
+                                                       str(tmp_path)).collect()
     assert len(got) == 2
     for r in got:
         assert r["acc"] == 1.0 and r["n_correct"] == r["n"] == 20
 
 
 def test_nearest_centroid_real_table_rates(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    got = STAGED["q_nearest_centroid_eval"][0](spark, SF).collect()
+    got = REGISTRY["q_nearest_centroid_eval"].spark_fn(spark, SF).collect()
     assert sum(r["n"] for r in got) == 500
     for r in got:
         assert 0.0 <= r["acc"] <= 1.0
@@ -191,8 +183,8 @@ def test_cvalue_trigram_scale_and_full_nesting(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nonconsumptive_spark.queries.promoted_r6 import (
-        STAGED, _CV_LOG2_3, _CV_MIN_F)
+    from nonconsumptive_spark.queries.textstats import (
+        _CV_LOG2_3, _CV_MIN_F)
 
     # "aa bb cc" x 5, separated by unique LETTER-ONLY fillers (digits are
     # token separators) so no other n-gram repeats
@@ -203,7 +195,7 @@ def test_cvalue_trigram_scale_and_full_nesting(spark, tmp_path):
                    "source": ["s0"], "n_chars": [len(docs[0])]})
     pq.write_table(tb, str(tmp_path / "documents.parquet"))
     got = {r["term"]: r for r in
-           STAGED["q_keyphrase_cvalue"][0](spark, str(tmp_path)).collect()}
+           REGISTRY["q_keyphrase_cvalue"].spark_fn(spark, str(tmp_path)).collect()}
     assert got["aa bb cc"]["cvalue"] == round(_CV_LOG2_3 * 5, 6)
     # 'aa bb' and 'bb cc' occur only inside 'aa bb cc' -> discount to 0
     assert got["aa bb"]["cvalue"] == 0.0
@@ -219,9 +211,7 @@ def test_cvalue_trigram_scale_and_full_nesting(spark, tmp_path):
 
 
 def test_conformal_coverage_guarantee(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    got = STAGED["q_conformal_interval"][0](spark, SF).collect()[0]
+    got = REGISTRY["q_conformal_interval"].spark_fn(spark, SF).collect()[0]
     assert got["q_hat"] > 0
     assert got["n_covered"] <= got["n_test"]
     # guarantee is >= 0.9 in expectation; allow exchange-half noise
@@ -235,8 +225,6 @@ def test_conformal_coverage_guarantee(spark):
 
 
 def test_capture_recapture_hand_computed(spark, tmp_path):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     rows, eid = [], 0
     day_a, day_b = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 21)
     for u in range(10):           # A only
@@ -247,7 +235,7 @@ def test_capture_recapture_hand_computed(spark, tmp_path):
         rows.append((eid, day_a, u, "view", 1.0)); eid += 1
         rows.append((eid, day_b, u, "view", 1.0)); eid += 1
     _write_events(tmp_path, rows)
-    got = STAGED["q_capture_recapture"][0](spark, str(tmp_path)).collect()[0]
+    got = REGISTRY["q_capture_recapture"].spark_fn(spark, str(tmp_path)).collect()[0]
     assert (got["n1"], got["n2"], got["m"], got["n_seen"]) == (15, 15, 5, 25)
     assert got["n_chapman"] == round(16 * 16 / 6 - 1, 6)
     assert got["n_lincoln_petersen"] == 45.0
@@ -261,10 +249,8 @@ def test_capture_recapture_hand_computed(spark, tmp_path):
 
 
 def test_abc_parts_partition(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     rows = {r["abc"]: r for r in
-            STAGED["q_abc_parts"][0](spark, SF).collect()}
+            REGISTRY["q_abc_parts"].spark_fn(spark, SF).collect()}
     assert set(rows) == {"A", "B", "C"}
     assert abs(sum(r["revenue_share"] for r in rows.values()) - 1.0) < 1e-4
     # Pareto shape: A has at least the revenue of B, B of C
@@ -278,13 +264,13 @@ def test_abc_parts_partition(spark):
 
 
 def test_basket_rules_identities(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED, _MB_MIN_SUPP
+    from nonconsumptive_spark.queries.relational import _MB_MIN_SUPP
     import duckdb
 
     n_orders = duckdb.connect().execute(
         f"""SELECT count(DISTINCT l_orderkey)
             FROM '{SF}/lineitem.parquet'""").fetchone()[0]
-    rows = STAGED["q_basket_rules"][0](spark, SF).collect()
+    rows = REGISTRY["q_basket_rules"].spark_fn(spark, SF).collect()
     assert rows
     for r in rows:
         assert r["supp_ab"] >= _MB_MIN_SUPP
@@ -304,8 +290,6 @@ def test_basket_rules_identities(spark):
 def test_price_elasticity_power_law(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
 
     rows = []
     # prices chosen so qty = 1600/p^2 is integral (qty is rounded to an
@@ -328,7 +312,7 @@ def test_price_elasticity_power_law(spark, tmp_path):
         "l_shipdate": [r[10] for r in rows],
     })
     pq.write_table(tb, str(tmp_path / "lineitem.parquet"))
-    got = STAGED["q_price_elasticity"][0](spark, str(tmp_path)).collect()
+    got = REGISTRY["q_price_elasticity"].spark_fn(spark, str(tmp_path)).collect()
     assert len(got) == 1
     assert abs(got[0]["elasticity"] - (-2.0)) < 0.01
 
@@ -340,8 +324,6 @@ def test_price_elasticity_power_law(spark, tmp_path):
 
 
 def test_logrank_identical_cohorts_null(spark, tmp_path):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     # users u and u+1 (one odd, one even) get IDENTICAL lifetimes
     rows, eid = [], 0
     for pair in range(15):
@@ -354,7 +336,7 @@ def test_logrank_identical_cohorts_null(spark, tmp_path):
     # observation tail so early pairs are uncensored
     rows.append((eid, dt.datetime(2024, 2, 15), 998, "view", 1.0))
     _write_events(tmp_path, rows)
-    got = STAGED["q_logrank_test"][0](spark, str(tmp_path)).collect()[0]
+    got = REGISTRY["q_logrank_test"].spark_fn(spark, str(tmp_path)).collect()[0]
     assert got["v_s"] > 0
     # identical survival (up to the one tail-marker user) => |O-E| < 1
     assert abs(got["oe_s"]) < 10**9
@@ -362,9 +344,7 @@ def test_logrank_identical_cohorts_null(spark, tmp_path):
 
 
 def test_logrank_real_table_sane(spark):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
-    got = STAGED["q_logrank_test"][0](spark, SF).collect()[0]
+    got = REGISTRY["q_logrank_test"].spark_fn(spark, SF).collect()[0]
     assert got["n_treat"] + got["n_control"] > 0
     if got["v_s"] > 0:
         assert got["chi2"] >= 0.0
@@ -390,24 +370,20 @@ def _friedman_events(tmp_path, day_counts):
 
 
 def test_friedman_all_tied_is_zero(spark, tmp_path):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     days = [{"click": 3, "view": 3, "error": 3} for _ in range(6)]
     _friedman_events(tmp_path, days)
-    got = STAGED["q_friedman_daily"][0](spark, str(tmp_path)).collect()[0]
+    got = REGISTRY["q_friedman_daily"].spark_fn(spark, str(tmp_path)).collect()[0]
     assert (got["n_days"], got["k_types"]) == (6, 3)
     assert got["q_stat"] == 0.0
 
 
 def test_friedman_perfect_ordering_closed_form(spark, tmp_path):
-    from nonconsumptive_spark.queries.promoted_r6 import STAGED
-
     n, k = 7, 4
     types = ["a", "b", "c", "d"]
     days = [{t: 10 * (j + 1) for j, t in enumerate(types)}
             for _ in range(n)]
     _friedman_events(tmp_path, days)
-    got = STAGED["q_friedman_daily"][0](spark, str(tmp_path)).collect()[0]
+    got = REGISTRY["q_friedman_daily"].spark_fn(spark, str(tmp_path)).collect()[0]
     expect = round(12.0 * n * sum(j * j for j in range(1, k + 1))
                    / (k * (k + 1)) - 3.0 * n * (k + 1), 6)
     assert got["q_stat"] == expect

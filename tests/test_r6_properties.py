@@ -1,7 +1,9 @@
-"""Property tests for the round-6 staging cohort (queries/promoted_r7.py):
-Cox PH recovers a closed-form hazard ratio on a constructed two-cohort
-conversion table, the pinball readout's quantile actually minimizes the
-loss, and the mixture materialization's integer accounting closes."""
+"""Property tests for Cox PH, the rank trend tests (queries/stats.py),
+pinball loss (queries/evaluation.py) and mixture materialization
+(queries/textstats.py): Cox PH recovers a closed-form hazard ratio on a
+constructed two-cohort conversion table, the pinball readout's quantile
+actually minimizes the loss, and the mixture materialization's integer
+accounting closes."""
 
 from __future__ import annotations
 
@@ -10,7 +12,9 @@ from datetime import datetime, timedelta
 import duckdb
 import pytest
 
-from nonconsumptive_spark.queries.promoted_r7 import STAGED
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,7 +68,7 @@ def test_cox_fully_censored_is_identity(spark):
 def test_pinball_quantile_minimizes_loss(spark):
     """The ceil(tau*n) order statistic minimizes pinball loss: shifting
     the pivot by +-1 cent can never do better (ties allowed)."""
-    rows = STAGED["q_pinball_quantile"][0](spark, SF).collect()
+    rows = REGISTRY["q_pinball_quantile"].spark_fn(spark, SF).collect()
     assert rows
     con = duckdb.connect()
     con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{SF}/lineitem.parquet'")
@@ -87,7 +91,7 @@ def test_mixture_materialize_accounting_closes(spark):
     remainder never exceeds its budget; sqrt-temperature upsamples the
     smallest source harder than the largest (ratio ordering)."""
     rows = {r["source"]: r for r in
-            STAGED["q_mixture_materialize"][0](spark, SF).collect()}
+            REGISTRY["q_mixture_materialize"].spark_fn(spark, SF).collect()}
     assert rows
     budget = sum(r["n_tokens"] for r in rows.values())
     assert sum(r["target"] for r in rows.values()) <= budget
@@ -118,7 +122,7 @@ def test_jonckheere_exact_on_perfect_trend(spark, tmp_path):
     rows = [(1, "w", "a"), (2, "w w", "a"),
             (3, "w w w", "b"), (4, "w w w w", "b"),
             (5, "w w w w w", "c"), (6, "w w w w w w", "c")]
-    out = STAGED["q_jonckheere_trend"][0](
+    out = REGISTRY["q_jonckheere_trend"].spark_fn(
         spark, _docs_dir(spark, tmp_path, rows)).collect()[0]
     assert out["n_total"] == 6 and out["n_groups"] == 3
     assert out["u2"] == 24
@@ -132,7 +136,7 @@ def test_ansari_bradley_exact_scores(spark, tmp_path):
             (6, " ".join(["w"] * 9), "s"), (8, " ".join(["w"] * 9), "s"),
             (1, "w w w w w", "s"), (3, "w w w w w", "s"),
             (5, "w w w w w", "s"), (7, "w w w w w", "s")]
-    out = STAGED["q_ansari_bradley"][0](
+    out = REGISTRY["q_ansari_bradley"].spark_fn(
         spark, _docs_dir(spark, tmp_path, rows)).collect()[0]
     assert out["n_total"] == 8 and out["n_treat"] == 4
     assert out["a2"] == 36 and out["s1"] == 48 and out["sq"] == 360
@@ -144,7 +148,7 @@ def test_lm_interp_prefers_bigram_on_structured_text(spark, tmp_path):
     held-out likelihood monotone in lambda -> argmax at k = 9."""
     txt = "a b " * 20
     rows = [(i, txt, "s") for i in range(1, 9)]
-    out = STAGED["q_lm_interp_tune"][0](
+    out = REGISTRY["q_lm_interp_tune"].spark_fn(
         spark, _docs_dir(spark, tmp_path, rows)).collect()
     assert len(out) == 9
     assert sum(1 for r in out if r["is_best"]) == 1
@@ -169,7 +173,7 @@ def test_page_trend_perfect_ordering(spark):
     import tempfile
     d = tempfile.mkdtemp(prefix="page_")
     ev.coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    out = STAGED["q_page_trend"][0](spark, d).collect()[0]
+    out = REGISTRY["q_page_trend"].spark_fn(spark, d).collect()[0]
     assert out["n_days"] == 5 and out["k_types"] == 3
     assert out["l2"] == 5 * 28
     assert out["z"] > 0
@@ -182,7 +186,7 @@ def test_threshold_curve_consistent_with_minhash_pairs(spark):
     from nonconsumptive_spark.queries import all_queries
 
     curve = {r["bucket"]: r for r in
-             STAGED["q_dedup_threshold_curve"][0](spark, SF).collect()}
+             REGISTRY["q_dedup_threshold_curve"].spark_fn(spark, SF).collect()}
     assert curve
     total = 0
     for b in sorted(curve, reverse=True):

@@ -1,4 +1,5 @@
-"""Property tests for the round-7 staging cohort (queries/promoted_r8.py):
+"""Property tests for Ljung-Box, Mood's median and Cochran's Q
+(queries/stats.py) and the bucketed join (queries/relational.py):
 Ljung-Box vanishes on a constant series and grows on a constructed
 alternating one, Mood's median test hits its closed-form extremes on
 identical / disjoint samples, Cochran's Q matches a hand-computed value
@@ -10,7 +11,9 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from nonconsumptive_spark.queries.promoted_r8 import STAGED
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,7 +34,7 @@ def test_ljung_box_constant_series_is_zero(spark, tmp_path):
     rows = [(i * 100 + j, t0 + timedelta(days=i), 1, "view", 1.0)
             for i in range(30) for j in range(5)]
     d = _events_dir(spark, tmp_path, rows)
-    out = {r["lag"]: r for r in STAGED["q_ljung_box"][0](spark, d).collect()}
+    out = {r["lag"]: r for r in REGISTRY["q_ljung_box"].spark_fn(spark, d).collect()}
     assert set(out) == {1, 2, 3, 4, 5, 6, 7}
     for r in out.values():
         assert r["cq"] == 0 and r["q_stat"] == 0.0
@@ -48,7 +51,7 @@ def test_ljung_box_alternating_series_detects_autocorrelation(spark, tmp_path):
             rows.append((eid, t0 + timedelta(days=i), 1, "view", 1.0))
             eid += 1
     d = _events_dir(spark, tmp_path, rows)
-    out = sorted(STAGED["q_ljung_box"][0](spark, d).collect(),
+    out = sorted(REGISTRY["q_ljung_box"].spark_fn(spark, d).collect(),
                  key=lambda r: r["lag"])
     # per-lag ACF signs via the exact integers: reconstruct r_k = num/den
     # indirectly through cq (= floor(1e12 * r_k^2 / n_pairs)): every lag
@@ -79,7 +82,7 @@ def test_mood_median_identical_groups_is_zero(spark, tmp_path):
         texts.append("a b c d e f")
         texts.append("a b c d e f")
     d = _docs_dir(spark, tmp_path, texts)
-    row = STAGED["q_mood_median"][0](spark, d).collect()[0]
+    row = REGISTRY["q_mood_median"].spark_fn(spark, d).collect()[0]
     assert row["a"] == row["c"] and row["b"] == row["d"]
     assert row["chi2"] == 0.0
 
@@ -93,7 +96,7 @@ def test_mood_median_disjoint_groups_hits_max(spark, tmp_path):
         texts.append("a b")                    # even: 2 tokens
         texts.append("a b c d e f g h i j")    # odd: 10 tokens
     d = _docs_dir(spark, tmp_path, texts)
-    row = STAGED["q_mood_median"][0](spark, d).collect()[0]
+    row = REGISTRY["q_mood_median"].spark_fn(spark, d).collect()[0]
     assert row["med"] == 2          # lower median of {2 x12, 10 x12}
     assert row["a"] == 0 and row["b"] == 12   # evens at/below median
     assert row["c"] == 12 and row["d"] == 0   # odds above
@@ -107,7 +110,7 @@ def test_cochran_q_degenerate_design_is_null(spark, tmp_path):
     rows = [(i * 10 + j, t0 + timedelta(days=i), 1, t, 1.0)
             for i in range(5) for j, t in enumerate(["a", "b", "c"])]
     d = _events_dir(spark, tmp_path, rows)
-    row = STAGED["q_cochran_q"][0](spark, d).collect()[0]
+    row = REGISTRY["q_cochran_q"].spark_fn(spark, d).collect()[0]
     assert row["k"] == 3 and row["n_days"] == 5
     assert row["q"] is None
 
@@ -124,7 +127,7 @@ def test_cochran_q_matches_hand_computation(spark, tmp_path):
     rows = [(i, t0 + timedelta(days=day), 1, t, 1.0)
             for i, (t, day) in enumerate(design)]
     d = _events_dir(spark, tmp_path, rows)
-    row = STAGED["q_cochran_q"][0](spark, d).collect()[0]
+    row = REGISTRY["q_cochran_q"].spark_fn(spark, d).collect()[0]
     assert (row["k"], row["n_days"], row["n_present"]) == (3, 4, 7)
     assert (row["sum_r2"], row["sum_c2"]) == (15, 21)
     assert row["q"] == 4.6667
@@ -135,7 +138,7 @@ def test_bucketed_join_equals_flat_join(spark):
     from pyspark.sql import functions as F
 
     got = {tuple(r) for r in
-           STAGED["q_bucketed_join_revenue"][0](spark, SF).collect()}
+           REGISTRY["q_bucketed_join_revenue"].spark_fn(spark, SF).collect()}
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     o = spark.read.parquet(f"{SF}/orders.parquet")
     flat = (li.join(o, li.l_orderkey == o.o_orderkey)

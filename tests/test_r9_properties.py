@@ -1,14 +1,16 @@
-"""Property tests for the round-9 staging cohort (queries/staging.py):
-Wilcoxon signed-rank hits its closed-form extreme when every user
-shifts the same way, Dunn's z vanishes on identically-distributed
-sources and signs correctly on disjoint ones, and Cliff's delta hits
-+1 / 0 on disjoint / identical groups."""
+"""Property tests for the paired / post-hoc / effect-size rank tests
+(queries/stats.py): Wilcoxon signed-rank hits its closed-form extreme
+when every user shifts the same way, Dunn's z vanishes on
+identically-distributed sources and signs correctly on disjoint ones,
+and Cliff's delta hits +1 / 0 on disjoint / identical groups."""
 
 from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from nonconsumptive_spark.queries.staging import STAGED
+from nonconsumptive_spark.queries import all_queries
+
+REGISTRY = all_queries()
 
 
 def _events_dir(spark, tmp_path, rows):
@@ -43,7 +45,7 @@ def test_wilcoxon_all_positive_shift(spark, tmp_path):
             rows.append((eid, t0 + timedelta(days=30, hours=j), u,
                          "view", 1.0)); eid += 1
     d = _events_dir(spark, tmp_path, rows)
-    out = STAGED["q_wilcoxon_signed_rank"][0](spark, d).collect()[0]
+    out = REGISTRY["q_wilcoxon_signed_rank"].spark_fn(spark, d).collect()[0]
     n = out["n_pairs"]
     assert n == 10
     assert out["w2_minus"] == 0
@@ -69,7 +71,7 @@ def test_wilcoxon_symmetric_shift_is_zero(spark, tmp_path):
             rows.append((eid, t0 + timedelta(hours=j), u,
                          "view", 1.0)); eid += 1
     d = _events_dir(spark, tmp_path, rows)
-    out = STAGED["q_wilcoxon_signed_rank"][0](spark, d).collect()[0]
+    out = REGISTRY["q_wilcoxon_signed_rank"].spark_fn(spark, d).collect()[0]
     assert out["n_pairs"] == 10
     assert out["w2_plus"] == out["w2_minus"]
     assert out["z"] == 0.0
@@ -81,7 +83,7 @@ def test_dunn_identical_sources_z_zero(spark, tmp_path):
     rows = [(i, "t", "a", 10 + (i % 5)) for i in range(50)]
     rows += [(100 + i, "t", "b", 10 + (i % 5)) for i in range(50)]
     d = _docs_dir(spark, tmp_path, rows)
-    out = STAGED["q_dunn_posthoc"][0](spark, d).collect()
+    out = REGISTRY["q_dunn_posthoc"].spark_fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["source_a"], r["source_b"]) == ("a", "b")
@@ -94,7 +96,7 @@ def test_dunn_disjoint_sources_sign(spark, tmp_path):
     rows = [(i, "t", "a", 10 + i) for i in range(20)]
     rows += [(100 + i, "t", "b", 1000 + i) for i in range(20)]
     d = _docs_dir(spark, tmp_path, rows)
-    r = STAGED["q_dunn_posthoc"][0](spark, d).collect()[0]
+    r = REGISTRY["q_dunn_posthoc"].spark_fn(spark, d).collect()[0]
     assert r["z"] < 0
     # closed form: mean doubled-ranks are n+1 and 3n+1 for two disjoint
     # equal-size groups of n
@@ -109,7 +111,7 @@ def test_cliffs_delta_extremes(spark, tmp_path):
     rows = [(2 * i, "t", "s", 1000 + i) for i in range(30)]       # a: big
     rows += [(2 * i + 1, "t", "s", 10 + i) for i in range(30)]    # b: small
     d = _docs_dir(spark, tmp_path, rows)
-    r = STAGED["q_cliffs_delta"][0](spark, d).collect()[0]
+    r = REGISTRY["q_cliffs_delta"].spark_fn(spark, d).collect()[0]
     assert (r["na"], r["nb"]) == (30, 30)
     assert r["lt"] == 0 and r["ties"] == 0
     assert r["delta"] == 1.0
@@ -117,6 +119,6 @@ def test_cliffs_delta_extremes(spark, tmp_path):
     rows = [(2 * i, "t", "s", 10 + (i % 3)) for i in range(30)]
     rows += [(2 * i + 1, "t", "s", 10 + (i % 3)) for i in range(30)]
     d = _docs_dir(spark, tmp_path.joinpath("eq"), rows)
-    r = STAGED["q_cliffs_delta"][0](spark, d).collect()[0]
+    r = REGISTRY["q_cliffs_delta"].spark_fn(spark, d).collect()[0]
     assert r["gt"] == r["lt"]
     assert r["delta"] == 0.0

@@ -17,8 +17,7 @@ import pytest
 
 pytestmark = pytest.mark.sweep  # whole-registry sweep: skip via -m "not sweep"
 
-from nonconsumptive_spark.queries import Query, all_queries
-from nonconsumptive_spark.queries.staging import STAGED
+from nonconsumptive_spark.queries import all_queries
 from tools.check_oracle import compare_query, duck_connection
 
 ROWS = [
@@ -54,8 +53,6 @@ def uni_dir(tmp_path_factory):
 def test_adversarial_text_oracle_parity_sweep(spark, uni_dir):
     duck = duck_connection(uni_dir)
     entries = dict(all_queries())
-    for n, (fn, o) in STAGED.items():
-        entries.setdefault(n, Query(n, fn, o))
     covered, failures = 0, []
     for n, q in sorted(entries.items()):
         try:

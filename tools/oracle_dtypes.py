@@ -1,5 +1,5 @@
 """Standing oracle dtype audit (VERDICT r5 item 2): bind every
-registered + staged oracle in DuckDB (DESCRIBE-level — no execution)
+registered oracle in DuckDB (DESCRIBE-level — no execution)
 and flag any output column whose type the driver's value-hash cannot
 normalize against Spark's schema.
 
@@ -54,12 +54,10 @@ def audit(con, pairs):
 
 def main():
     from nonconsumptive_spark.queries import all_queries
-    from nonconsumptive_spark.queries.staging import STAGED
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     con = duck_connection(sf_dir)
     pairs = [(n, q.oracle) for n, q in all_queries().items() if q.oracle]
-    pairs += [(n, o) for n, (_f, o) in STAGED.items()]
     flagged = audit(con, pairs)
     print(f"audited {len(pairs)} oracles")
     for name, col, canon, raw in flagged:

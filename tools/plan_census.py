@@ -205,13 +205,8 @@ BNLJ_WHITELIST = {
 def census(spark, sf_dir: str, only=None):
     from nonconsumptive_spark.plans import checkpoint as ckpt
     from nonconsumptive_spark.queries import all_queries
-    from nonconsumptive_spark.queries.staging import STAGED
 
     entries = {name: q.spark_fn for name, q in all_queries().items()}
-    # staged-but-unregistered queries face the same structural gate, so
-    # promotion cannot surprise the census
-    for name, (fn, _oracle) in STAGED.items():
-        entries.setdefault(name, fn)
 
     rows = []
     for name, spark_fn in sorted(entries.items()):
